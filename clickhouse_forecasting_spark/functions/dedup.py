@@ -13,10 +13,9 @@ Scale design (the whole point of these at 100 TB):
   hashes — computed row-local with array expressions (no shuffle), then
   grouped on the signature (near-dups collide exactly or at small Hamming
   distance via rotated bands).
-- **ngram_jaccard**: exact verification join — explode distinct shingles,
-  equi-join on shingle, count common / union. Used to verify LSH candidates
-  (or alone at small scale); the explode keys are md5-hashed shingles so
-  shuffle rows stay narrow.
+- **Jaccard verification**: each LSH candidate pair is joined back to the
+  two per-doc shingle sets and scored row-locally (common / union), so the
+  cost follows the candidate count, never an all-pairs shingle join.
 - **embedding near-dup**: cosine over `array<float>` with JVM-side
   `aggregate`/`zip_with`; pair generation via LSH-ish bucketing or an
   id-sampled blocklist at verification time.
@@ -30,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .text import char_shingles, char_shingles_of_norm, fingerprint, normalize_text, tokens
+from .text import char_shingles_of_norm, fingerprint, normalize_text, tokens
 
 
 def _exploded_shingles(
@@ -122,19 +121,6 @@ def minhash_signatures(
         for i in range(num_hashes)
     ]
     return sh.groupBy(id_col).agg(*aggs)
-
-
-def minhash_bands(sig: Column, bands: int, rows_per_band: int) -> Column:
-    """Split a signature into band keys: array of (band_id || joined rows).
-    Docs sharing any band key become candidate pairs."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(bands - 1)),
-        lambda b: F.concat(
-            b.cast("string"),
-            F.lit("|"),
-            F.concat_ws(",", F.slice(sig, b * rows_per_band + 1, rows_per_band)),
-        ),
-    )
 
 
 # Hash family for the numeric MinHash: h_i(x) = (a_i*x + b_i) mod P, with
@@ -460,50 +446,8 @@ def containment_pairs(
 
 
 # --------------------------------------------------------------------------
-# n-gram Jaccard (exact verification)
+# connected components
 # --------------------------------------------------------------------------
-
-
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_size: int = 5,
-    threshold: float = 0.8,
-) -> DataFrame:
-    """Exact Jaccard-similar pairs via shingle equi-join.
-
-    explode(distinct shingles) -> join on shingle -> |A∩B| per pair ->
-    jaccard = common / (|A| + |B| - common). Shuffle rows are (md5(shingle),
-    id): narrow and uniformly distributed, so the join parallelizes cleanly;
-    hot shingles (stop-phrases) are the skew risk — AQE skew-join splits
-    them. Returns (id_a, id_b, jaccard >= threshold)."""
-    sh = df.select(
-        F.col(id_col),
-        F.explode(char_shingles(F.col(text_col), shingle_size)).alias("sh"),
-    ).withColumn("sh", F.md5(F.col("sh")))
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("n_sh"))
-    a, b = sh.alias("a"), sh.alias("b")
-    common = (
-        a.join(b, "sh")
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .groupBy(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
-        .agg(F.count("*").alias("common"))
-    )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"))
-    return (
-        common.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn(
-            "jaccard",
-            F.col("common") / (F.col("n_a") + F.col("n_b") - F.col("common")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
 
 
 def connected_components(
@@ -691,16 +635,6 @@ def simhash_signatures(
         )
         sig = term if sig is None else sig + term
     return agg.select(F.col(id_col), sig.alias("simhash"))
-
-
-def simhash_duplicates(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Docs sharing an identical 32-bit SimHash (strong near-dup signal)."""
-    return (
-        df.select(F.col(id_col), simhash32(F.col(text_col)).alias("simhash"))
-        .groupBy("simhash")
-        .agg(F.count("*").alias("n_docs"), F.min(id_col).alias("keeper_id"))
-        .filter(F.col("n_docs") > 1)
-    )
 
 
 # --------------------------------------------------------------------------

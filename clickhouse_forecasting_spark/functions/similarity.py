@@ -508,28 +508,10 @@ def lsh_topk(
     )
 
 
-def _cell_dists(iv_col: Column, centroids: list[list[int]]) -> Column:
-    """Array of EXACT integer squared-L2 distances to each centroid."""
-    return F.array(
-        *[
-            F.aggregate(
-                F.zip_with(
-                    iv_col,
-                    F.array(*[F.lit(int(c)).cast("bigint") for c in cent]),
-                    lambda x, c: (x - c) * (x - c),
-                ),
-                F.lit(0).cast("bigint"),
-                lambda acc, v: acc + v,
-            )
-            for cent in centroids
-        ]
-    )
-
-
 def _iv_exactness_bound(dim: int) -> int:
     """Largest max|iv| for which _assign_cells_arrow's expanded-form
-    float64 distance is EXACT (and hence bit-identical to the bigint
-    HOF fold and the SQL twins): every intermediate of
+    float64 distance is EXACT (and hence bit-identical to the SQL
+    twins' bigint arithmetic): every intermediate of
     ||x||² − 2⟨x,c⟩ + ||c||² is bounded by 4·dim·M² (|c| ≤ M because
     centroids are floor-means of assigned vectors), so requiring
     4·dim·M² ≤ 2^53 ⇒ M ≤ isqrt(2^51/dim) keeps every value exactly
@@ -558,17 +540,6 @@ def _exactness_guard(iv_col: Column, dim: int) -> Column:
     )
 
 
-def _argmin_cell(iv_col: Column, centroids: list[list[int]]) -> Column:
-    """0-based index of the nearest centroid by EXACT integer squared-L2
-    distance; ties resolve to the lowest cell index (array_position
-    returns the first match — the SQL twin orders by (d, j)).
-
-    Interpreted-HOF reference form (the Arrow path below is the hot
-    path); kept because it is trivially auditable against the SQL."""
-    dists = _cell_dists(iv_col, centroids)
-    return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
-
-
 def _assign_cells_arrow(
     centroids: list[list[int]], n_assign: int = 1
 ) -> "Column":
@@ -578,12 +549,11 @@ def _assign_cells_arrow(
     one numpy matmul per Arrow batch, ~1000× fewer Python dispatches at
     30k×240 cells).
 
-    EXACTNESS (what makes this interchangeable with the HOF form and
-    the SQL twins): inputs are integer-valued; ||x−c||² is expanded as
+    EXACTNESS (what makes this interchangeable with the SQL twins): inputs are integer-valued; ||x−c||² is expanded as
     ||x||² − 2⟨x,c⟩ + ||c||², every intermediate (≤ dim·scale²·4 ≈
     2.6e8 ≪ 2^53) is exactly representable in float64, and float64
     integer arithmetic is exact — so the distances are the SAME
-    integers the bigint fold produces. Ties: np.argmin takes the first
+    integers the twins' bigint arithmetic produces. Ties: np.argmin takes the first
     occurrence; the n_assign>1 path uses a stable argsort — both equal
     ROW_NUMBER ORDER BY (d, j)."""
     from pyspark.sql.functions import pandas_udf

@@ -26,10 +26,6 @@ def scan_read_schemas(df: DataFrame) -> list[str]:
     return re.findall(r"ReadSchema: (\S+)", physical_plan(df))
 
 
-def pushed_filters(df: DataFrame) -> list[str]:
-    return re.findall(r"PushedFilters: (\[[^\]]*\])", physical_plan(df))
-
-
 def plan_summary(df: DataFrame, run: bool = False) -> dict[str, int]:
     """Operator census of the physical plan — the numbers to watch when
     reviewing an operator for 100 TB viability."""

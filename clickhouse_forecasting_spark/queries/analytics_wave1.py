@@ -1404,30 +1404,43 @@ FROM calc
 """
 
 
+def _parquet_files(path: str) -> list[str]:
+    """Data files of a parquet dataset: the file itself, or every part
+    file of a directory (`_`/`.`-prefixed markers skipped)."""
+    import pyarrow.dataset as ds
+
+    return ds.dataset(path, format="parquet").files
+
+
 def _parquet_key_bounds(path: str, column: str) -> tuple[int, int] | None:
     """(min, max) of an integer column from the parquet FOOTER statistics
     — the same row-group stats predicate pushdown reads, folded across
-    row groups in the driver with no Spark job. None when the file or
-    its statistics are unavailable (caller falls back to sampling)."""
-    try:
-        import pyarrow.parquet as pq
+    every row group of every file of the dataset in the driver with no
+    Spark job. None when the dataset cannot be read or a file lacks the
+    column or its statistics (caller falls back to sampling)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-        meta = pq.ParquetFile(path).metadata
-        idx = {
-            meta.schema.column(i).name: i for i in range(meta.num_columns)
-        }[column]
-        mn = mx = None
-        for rg in range(meta.num_row_groups):
-            st = meta.row_group(rg).column(idx).statistics
-            if st is None or not st.has_min_max:
+    mn = mx = None
+    try:
+        for f in _parquet_files(path):
+            meta = pq.read_metadata(f)
+            idx = {
+                meta.schema.column(i).name: i for i in range(meta.num_columns)
+            }.get(column)
+            if idx is None:
                 return None
-            mn = st.min if mn is None else min(mn, st.min)
-            mx = st.max if mx is None else max(mx, st.max)
-        if mn is None:
-            return None
-        return int(mn), int(mx)
-    except Exception:
+            for rg in range(meta.num_row_groups):
+                st = meta.row_group(rg).column(idx).statistics
+                if st is None or not st.has_min_max:
+                    return None
+                mn = st.min if mn is None else min(mn, st.min)
+                mx = st.max if mx is None else max(mx, st.max)
+    except (OSError, pa.ArrowInvalid):
         return None
+    if mn is None:
+        return None
+    return int(mn), int(mx)
 
 
 def q_encoding_advisor_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1461,14 +1474,15 @@ def q_encoding_advisor_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
     cols = ["l_returnflag", "l_linestatus", "l_quantity", "l_discount",
             "l_suppkey", "l_shipdate"]
-    bounds = _parquet_key_bounds(f"{sf_dir}/lineitem.parquet", "l_orderkey")
+    src = f"{sf_dir}/lineitem.parquet"
+    bounds = _parquet_key_bounds(src, "l_orderkey")
     if bounds is not None:
         import os as _os
 
         mn, mx = bounds
         mb = float(_os.environ.get("SPARK_GRAFT_RUNPASS_MB", "2"))
         try:
-            src_bytes = _os.path.getsize(f"{sf_dir}/lineitem.parquet")
+            src_bytes = sum(_os.path.getsize(f) for f in _parquet_files(src))
         except OSError:
             src_bytes = 0
         n_parts = max(4, int(src_bytes / (mb * 1024 * 1024)) + 1)

@@ -19,6 +19,52 @@ from .catalog_relational import _dsum, _orders_daily, _t
 # forecasting (core capability; structurally checked, not SQL-expressible)
 # --------------------------------------------------------------------------
 
+# series count of the seriesgen corpus behind the two fan-out scale rows
+# (forecast_scale_series, forecast_backtest_scale) and their audits
+N_SCALE_SERIES = 2500
+
+
+def _scale_series_and_forecaster(
+    spark: SparkSession,
+) -> tuple[DataFrame, SeriesForecaster]:
+    """The scale rows' shared input — N_SCALE_SERIES deterministic 30-day
+    seriesgen series as a long (ds, metric, y) frame — and their 7-day
+    only-future forecaster."""
+    from ..forecast.forecaster import series_proportional_fanout
+    from ..sources import seriesgen as _sg
+
+    _sg.register(spark)
+    # scan partitions sized to cluster width, not series count: each
+    # Python-source task carries fixed worker-roundtrip overhead, so the
+    # source's 512-partition default (right for a wide cluster) costs
+    # ~4.9s of pure task launch on local[32]. 1x parallelism, not 2x:
+    # the generator's tasks are deterministic and perfectly uniform, so
+    # the extra width buys no balancing — only task launches (measured
+    # 0.89s vs 1.17s warm for the 75k-row scan).
+    n_scan = spark.sparkContext.defaultParallelism
+    df = (
+        spark.read.format("seriesgen")
+        .option("series", str(N_SCALE_SERIES))
+        .option("days", "30")
+        .option("partitions", str(n_scan))
+        .load()
+    )
+    long_df = df.select(
+        F.col("date").alias("ds"),
+        F.col("series_id").cast("string").alias("metric"),
+        F.col("y"),
+    )
+    # fit-stage width ∝ series count, not cluster width (r12, guide
+    # §2.1): the session-width inherit made the backtest row SLOWER on
+    # 32 cores than 8 (PERF_r11 scaling 0.61) — the per-task constant
+    # (worker round-trip + per-cutoff axis prep) dominated 78-series
+    # partitions
+    fc = SeriesForecaster(
+        interval=7, only_future=True,
+        fanout_partitions=series_proportional_fanout(N_SCALE_SERIES),
+    )
+    return long_df, fc
+
 
 def q_forecast_daily_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = _orders_daily(spark, sf_dir)
@@ -91,41 +137,7 @@ def q_forecast_backtest_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-gated twin and forecast_backtest_constant_exact value-gates the
     fused scorer. Cutoffs leave ≥7 held-out days inside the 30-day
     history, so every fit scores exactly `interval` actuals."""
-    from ..sources import seriesgen as _sg
-
-    _sg.register(spark)
-    # scan partitions sized to cluster width, not series count: each
-    # Python-source task carries fixed worker-roundtrip overhead, so the
-    # source's 512-partition default (right for a wide cluster) costs
-    # ~4.9s of pure task launch on local[32]. 1x parallelism here (not
-    # the 2x the fit-only scale query uses): the generator's tasks are
-    # deterministic and perfectly uniform, so the extra width buys no
-    # balancing — only task launches — and this query is scan-bound now
-    # that the cutoff fan-out and scoring are fused into the fit worker
-    # (measured 0.89s vs 1.17s warm for the 75k-row scan).
-    n_scan = spark.sparkContext.defaultParallelism
-    df = (
-        spark.read.format("seriesgen")
-        .option("series", "2500")
-        .option("days", "30")
-        .option("partitions", str(n_scan))
-        .load()
-    )
-    long_df = df.select(
-        F.col("date").alias("ds"),
-        F.col("series_id").cast("string").alias("metric"),
-        F.col("y"),
-    )
-    # fit-stage width ∝ series count, not cluster width (r12, guide
-    # §2.1): the session-width inherit made this row SLOWER on 32 cores
-    # than 8 (PERF_r11 scaling 0.61) — the per-task constant (worker
-    # round-trip + per-cutoff axis prep) dominated 78-series partitions
-    from ..forecast.forecaster import series_proportional_fanout
-
-    fc = SeriesForecaster(
-        interval=7, only_future=True,
-        fanout_partitions=series_proportional_fanout(2500),
-    )
+    long_df, fc = _scale_series_and_forecaster(spark)
     return fc.backtest(
         long_df, ["2024-01-16", "2024-01-19", "2024-01-22", "2024-01-23"]
     )
@@ -167,9 +179,9 @@ def q_forecast_backtest_scale_contract_audit(
     )
 
 
-_FORECAST_BACKTEST_SCALE_AUDIT_SQL = """
-SELECT CAST(2500 * 4 AS BIGINT) AS n_rows,
-  CAST(2500 AS BIGINT) AS n_series,
+_FORECAST_BACKTEST_SCALE_AUDIT_SQL = f"""
+SELECT CAST({N_SCALE_SERIES} * 4 AS BIGINT) AS n_rows,
+  CAST({N_SCALE_SERIES} AS BIGINT) AS n_series,
   CAST(4 AS BIGINT) AS n_cutoffs,
   CAST(7 AS BIGINT) AS n_scored_min,
   CAST(7 AS BIGINT) AS n_scored_max,
@@ -305,32 +317,7 @@ def q_forecast_scale_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     forecast_scale_contract_audit is the hash-gated twin. At 100 TB
     this exact plan is the engine's core primitive: per-partition cost
     is constant, width is the cluster."""
-    from ..sources import seriesgen as _sg
-
-    _sg.register(spark)
-    # scan width = 1x parallelism (see q_forecast_backtest_scale note:
-    # the generator's tasks are deterministic and uniform, so 2x width
-    # bought only task launches)
-    n_scan = spark.sparkContext.defaultParallelism
-    df = (
-        spark.read.format("seriesgen")
-        .option("series", "2500")
-        .option("days", "30")
-        .option("partitions", str(n_scan))
-        .load()
-    )
-    long_df = df.select(
-        F.col("date").alias("ds"),
-        F.col("series_id").cast("string").alias("metric"),
-        F.col("y"),
-    )
-    # width ∝ series count (r12, guide §2.1) — see q_forecast_backtest_scale
-    from ..forecast.forecaster import series_proportional_fanout
-
-    fc = SeriesForecaster(
-        interval=7, only_future=True,
-        fanout_partitions=series_proportional_fanout(2500),
-    )
+    long_df, fc = _scale_series_and_forecaster(spark)
     return fc.transform_long(long_df).orderBy("metric", "ds")
 
 
@@ -532,9 +519,9 @@ def q_forecast_scale_contract_audit(
     )
 
 
-_FORECAST_SCALE_AUDIT_SQL = """
-SELECT CAST(2500 * 7 AS BIGINT) AS n_rows,
-  CAST(2500 AS BIGINT) AS n_series,
+_FORECAST_SCALE_AUDIT_SQL = f"""
+SELECT CAST({N_SCALE_SERIES} * 7 AS BIGINT) AS n_rows,
+  CAST({N_SCALE_SERIES} AS BIGINT) AS n_series,
   DATE '2024-01-31' AS min_ds,
   DATE '2024-02-06' AS max_ds,
   CAST(7 AS BIGINT) AS rows_per_series_min,

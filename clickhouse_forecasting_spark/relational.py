@@ -45,13 +45,9 @@ def last_known_date(df: DataFrame, axis: str = DATE_AXIS_COLUMN):
     return df.agg(F.max(axis).alias("last_known_date")).collect()[0][0]
 
 
-# R6 — wide -> long model frame. Single metric = rename (forecast_script.py:172);
-# all metrics at once = unpivot, the spine of the distributed design
+# R6 — wide -> long model frame (forecast_script.py:172): all metrics at once
+# in one unpivot, the spine of the distributed design
 # (SURVEY §7.1): one shuffle by (metric) replaces the reference's column loop.
-def to_model_frame(df: DataFrame, metric: str, axis: str = DATE_AXIS_COLUMN) -> DataFrame:
-    return df.select(F.col(axis).alias("ds"), F.col(metric).cast("double").alias("y"))
-
-
 def unpivot_metrics(df: DataFrame, metrics: list[str], axis: str = DATE_AXIS_COLUMN) -> DataFrame:
     """Wide table -> long (ds, metric, y). Uses the built-in unpivot
     (Spark 3.4+) so values never pass through Python."""
@@ -80,16 +76,6 @@ def future_date_axis(df: DataFrame, periods: int, axis: str = DATE_AXIS_COLUMN) 
 # R8 — strictly-after range filter (--only-future, forecast_script.py:175-176)
 def only_future(df: DataFrame, last_date, ds_col: str = "ds") -> DataFrame:
     return df.filter(F.col(ds_col) > F.lit(last_date))
-
-
-# R10 — derived interval columns (forecast_script.py:183-185)
-def derive_bounds(df: DataFrame, metric: str) -> DataFrame:
-    return df.select(
-        F.col("ds"),
-        F.col("yhat").alias(metric),
-        F.col("yhat_lower").alias(f"{metric}_min"),
-        F.col("yhat_upper").alias(f"{metric}_max"),
-    )
 
 
 # R11/R12 — k-way full outer join on the date axis with NULL fill

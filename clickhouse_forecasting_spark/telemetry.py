@@ -89,58 +89,6 @@ def _walk_executed_plan(node):
         yield from _walk_executed_plan(children.apply(i))
 
 
-def query_metrics(df) -> dict:
-    """O-family extension: physical execution metrics for an ALREADY
-    EXECUTED DataFrame (run an action first; metrics are zero before).
-
-    Returns the numbers a 100 TB operator actually watches — scan
-    selectivity (did pruning/pushdown work?), shuffle volume (is the
-    plan moving the narrow projection or the whole row?), and
-    per-operator output rows — summarized from the executed plan's
-    SQLMetrics:
-
-        rows_scanned / files_read / bytes_scanned   (FileSourceScan)
-        shuffle_bytes_written / shuffle_records     (ShuffleExchange)
-        output_rows                                 (root operator)
-        nodes: [{node, metrics}, ...]               (full detail)
-
-    The reference's only observability is wall-clock + run counters in
-    a log (forecast_script.py:67,244-247); this is the engine-native
-    equivalent of its ``Dauer`` line, at per-operator grain.
-    """
-    ep = df._jdf.queryExecution().executedPlan()
-    summary = {
-        "rows_scanned": 0,
-        "files_read": 0,
-        "bytes_scanned": 0,
-        "shuffle_bytes_written": 0,
-        "shuffle_records": 0,
-        "output_rows": None,
-        "nodes": [],
-    }
-    for node in _walk_executed_plan(ep):
-        cls = node.getClass().getSimpleName()
-        vals = {}
-        it = node.metrics().iterator()
-        while it.hasNext():
-            kv = it.next()
-            vals[kv._1()] = kv._2().value()
-        if vals:
-            summary["nodes"].append({"node": cls, "metrics": vals})
-        if cls == "FileSourceScanExec":
-            summary["rows_scanned"] += vals.get("numOutputRows", 0)
-            summary["files_read"] += vals.get("numFiles", 0)
-            summary["bytes_scanned"] += vals.get("filesSize", 0)
-        elif cls == "ShuffleExchangeExec":
-            summary["shuffle_bytes_written"] += vals.get(
-                "shuffleBytesWritten", 0
-            )
-            summary["shuffle_records"] += vals.get("shuffleRecordsWritten", 0)
-        if summary["output_rows"] is None and "numOutputRows" in vals:
-            summary["output_rows"] = vals["numOutputRows"]
-    return summary
-
-
 # --- runtime single-partition audit (r7 VERDICT #2) -----------------------
 #
 # The static census (plans.single_partition_collapses + PLANS.md) proves
@@ -157,56 +105,18 @@ def query_metrics(df) -> dict:
 RUNTIME_SINGLEPART_CAP = 100_000
 
 
-def runtime_single_partition_audit(df, query: str | None = None) -> list[dict]:
-    """Every SinglePartition shuffle in an ALREADY EXECUTED DataFrame's
-    final (AQE) plan, with the record count it actually moved:
+def _read_executed_plan(df, query: str | None = None) -> tuple[list[dict], dict, list[dict]]:
+    """The one metric read of an ALREADY EXECUTED DataFrame's final (AQE)
+    plan, shared by every public read below:
 
-        [{"query": ..., "records": n, "ok": n <= cap, "node": <line>}]
+        (singlepart_rows, volume, nodes)
 
     Run an action first — an unexecuted plan has zero metrics and, under
-    AQE, no final stages to walk."""
-    ep = df._jdf.queryExecution().executedPlan()
-    found: list[dict] = []
-    for node in _walk_executed_plan(ep):
-        cls = node.getClass().getSimpleName()
-        if cls != "ShuffleExchangeExec":
-            continue
-        if node.outputPartitioning().toString() != "SinglePartition":
-            continue
-        vals = {}
-        it = node.metrics().iterator()
-        while it.hasNext():
-            kv = it.next()
-            vals[kv._1()] = kv._2().value()
-        recs = int(vals.get("shuffleRecordsWritten", 0))
-        found.append(
-            {
-                "query": query,
-                "records": recs,
-                "ok": recs <= RUNTIME_SINGLEPART_CAP,
-                "node": node.toString().splitlines()[0][:200],
-            }
-        )
-    return found
-
-
-def runtime_plan_audit(df, query: str | None = None) -> tuple[list[dict], dict]:
-    """One executed-plan walk returning BOTH bench telemetry reads:
-
-        (singlepart_rows, volume)
-
-    ``singlepart_rows`` is exactly runtime_single_partition_audit's
-    output; ``volume`` is query_metrics' scan/shuffle summary WITHOUT
-    the per-node detail — the numbers that answer "is there a shuffle
-    here that becomes the bottleneck at 100x" with measurements instead
-    of plan reading. Shuffle metric caveat: AQE reused exchanges report
-    under the stage that materialized them, so a query riding a
-    session-cached stage shows ~zero shuffle (it read InMemoryTableScan)
-    — attribution follows execution, which is the number that matters.
-    Fused here because each walk costs one py4j round-trip per metric
-    (~100ms on a deep plan); the bench runs it for every query."""
-    ep = df._jdf.queryExecution().executedPlan()
+    AQE, no final stages to walk. Every metric read is a py4j
+    round-trip (~100ms per walk of a deep plan), which is why the bench
+    takes both of its reads from one walk (runtime_plan_audit)."""
     singlepart_rows: list[dict] = []
+    nodes: list[dict] = []
     volume = {
         "rows_scanned": 0,
         "files_read": 0,
@@ -215,13 +125,15 @@ def runtime_plan_audit(df, query: str | None = None) -> tuple[list[dict], dict]:
         "shuffle_records": 0,
         "output_rows": None,
     }
-    for node in _walk_executed_plan(ep):
+    for node in _walk_executed_plan(df._jdf.queryExecution().executedPlan()):
         cls = node.getClass().getSimpleName()
         vals = {}
         it = node.metrics().iterator()
         while it.hasNext():
             kv = it.next()
             vals[kv._1()] = kv._2().value()
+        if vals:
+            nodes.append({"node": cls, "metrics": vals})
         if cls == "FileSourceScanExec":
             volume["rows_scanned"] += vals.get("numOutputRows", 0)
             volume["files_read"] += vals.get("numFiles", 0)
@@ -241,6 +153,54 @@ def runtime_plan_audit(df, query: str | None = None) -> tuple[list[dict], dict]:
                 )
         if volume["output_rows"] is None and "numOutputRows" in vals:
             volume["output_rows"] = vals["numOutputRows"]
+    return singlepart_rows, volume, nodes
+
+
+def query_metrics(df) -> dict:
+    """O-family extension: physical execution metrics for an ALREADY
+    EXECUTED DataFrame (run an action first; metrics are zero before).
+
+    Returns the numbers a 100 TB operator actually watches — scan
+    selectivity (did pruning/pushdown work?), shuffle volume (is the
+    plan moving the narrow projection or the whole row?), and
+    per-operator output rows — summarized from the executed plan's
+    SQLMetrics:
+
+        rows_scanned / files_read / bytes_scanned   (FileSourceScan)
+        shuffle_bytes_written / shuffle_records     (ShuffleExchange)
+        output_rows                                 (root operator)
+        nodes: [{node, metrics}, ...]               (full detail)
+
+    The reference's only observability is wall-clock + run counters in
+    a log (forecast_script.py:67,244-247); this is the engine-native
+    equivalent of its ``Dauer`` line, at per-operator grain.
+    """
+    _, volume, nodes = _read_executed_plan(df)
+    return {**volume, "nodes": nodes}
+
+
+def runtime_single_partition_audit(df, query: str | None = None) -> list[dict]:
+    """Every SinglePartition shuffle in an ALREADY EXECUTED DataFrame's
+    final (AQE) plan, with the record count it actually moved:
+
+        [{"query": ..., "records": n, "ok": n <= cap, "node": <line>}]"""
+    return _read_executed_plan(df, query)[0]
+
+
+def runtime_plan_audit(df, query: str | None = None) -> tuple[list[dict], dict]:
+    """Both bench telemetry reads from one executed-plan walk:
+
+        (singlepart_rows, volume)
+
+    ``singlepart_rows`` is exactly runtime_single_partition_audit's
+    output; ``volume`` is query_metrics' scan/shuffle summary WITHOUT
+    the per-node detail — the numbers that answer "is there a shuffle
+    here that becomes the bottleneck at 100x" with measurements instead
+    of plan reading. Shuffle metric caveat: AQE reused exchanges report
+    under the stage that materialized them, so a query riding a
+    session-cached stage shows ~zero shuffle (it read InMemoryTableScan)
+    — attribution follows execution, which is the number that matters."""
+    singlepart_rows, volume, _ = _read_executed_plan(df, query)
     return singlepart_rows, volume
 
 

@@ -10,9 +10,15 @@
 2. connected_components_star frees each round's large-star intermediate
    once the round's result is materialized (ADVICE r11): after the call
    no persisted RDDs attributable to the call may remain.
+3. encoding_advisor_lineitem's footer key bounds fold across EVERY file
+   of a multi-file lineitem.parquet/ directory (the single-file read
+   returned None there and silently fell back to the sampler route),
+   and the advisor's rows are unchanged by the split.
 """
 
 from __future__ import annotations
+
+import os
 
 from clickhouse_forecasting_spark.operators.graph import (
     connected_components_star,
@@ -58,3 +64,38 @@ def test_components_star_releases_round_intermediates(spark):
     # persist and superseded round checkpoint must be released
     # synchronously — with >= 2 rounds the r11 code left >= 2 extra.
     assert len(leaked) <= 2, f"round intermediates leaked: {leaked}"
+
+
+def test_key_bounds_fold_multi_file_dataset(spark, sf_dir, tmp_path):
+    import pyarrow.parquet as pq
+
+    from clickhouse_forecasting_spark import queries as _q
+    from clickhouse_forecasting_spark.queries import _parquet_key_bounds
+
+    src = os.path.join(sf_dir, "lineitem.parquet")
+    table = pq.read_table(src).sort_by("l_orderkey")
+    keys = table.column("l_orderkey").to_pylist()
+    # a copy of the star whose lineitem is a 2-file dataset directory,
+    # split so neither file alone holds both bounds
+    split_dir = tmp_path / "sf"
+    split_dir.mkdir()
+    for name in os.listdir(sf_dir):
+        if name != "lineitem.parquet":
+            os.symlink(os.path.join(sf_dir, name), split_dir / name)
+    li_dir = split_dir / "lineitem.parquet"
+    li_dir.mkdir()
+    half = table.num_rows // 2
+    pq.write_table(table.slice(0, half), li_dir / "part-00000.parquet")
+    pq.write_table(table.slice(half), li_dir / "part-00001.parquet")
+    (li_dir / "_SUCCESS").touch()
+
+    assert _parquet_key_bounds(src, "l_orderkey") == (min(keys), max(keys))
+    assert _parquet_key_bounds(str(li_dir), "l_orderkey") == (
+        min(keys), max(keys))
+    assert _parquet_key_bounds(str(li_dir), "no_such_column") is None
+
+    def rows(d):
+        return sorted(
+            _q.q_encoding_advisor_lineitem(spark, str(d)).collect())
+
+    assert rows(split_dir) == rows(sf_dir)

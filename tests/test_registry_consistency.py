@@ -143,11 +143,12 @@ def test_profile_columns_match_fixture_schema():
 
 
 def test_no_direct_part_module_imports():
-    """The queries part files execute into __init__'s shared namespace
-    and are NOT standalone modules (a later part's names resolve only
-    after the whole chain runs) — importing one directly would execute
-    it in isolation and NameError on any cross-part helper. Pin the
-    convention: nothing in the repo imports `queries.<part>` directly."""
+    """The queries part files are real importable modules with explicit
+    imports, but the package's public surface is `queries` itself: its
+    loader merges every part's names into one namespace and builds
+    SPARK_QUERIES from the parts' `q_` functions. Pin the convention
+    that callers go through that surface: nothing outside the package
+    imports `queries.<part>` directly."""
     import glob
     import re as _re
 
