@@ -37,6 +37,9 @@ from .model import batched_fit_predict_long
 
 _LONG_OUT_SCHEMA = "metric string, ds date, yhat double, yhat_lower double, yhat_upper double"
 
+# Target series per fit partition (see series_proportional_fanout).
+SERIES_PER_PART = 192
+
 
 def series_proportional_fanout(n_series: int) -> int:
     """Fit-stage width ∝ SERIES COUNT, independent of cluster width
@@ -47,17 +50,15 @@ def series_proportional_fanout(n_series: int) -> int:
     the per-series solve, so inheriting the session's core count makes
     the fit stage SLOWER on more cores at modest series counts
     (PERF_r11 scaling: forecast_backtest_scale 0.61, 8→32 cores at
-    sf0.1). Target series-per-partition is `SPARK_GRAFT_SERIES_PER_PART`
-    (default 192 — the measured overhead/parallelism knee at sf0.1 on
+    sf0.1). Target series-per-partition is `SERIES_PER_PART`
+    (192 — the measured overhead/parallelism knee at sf0.1 on
     BOTH 8 and 32 cores: widths {8,13,26} bracket the minimum on both,
     width 52 loses on both). At production scale the same formula keeps
     partitions ~constant-sized: 1M series → ~5.2k fit partitions,
     however wide the cluster."""
     import math
-    import os
 
-    per = int(os.environ.get("SPARK_GRAFT_SERIES_PER_PART", "192"))
-    return max(1, math.ceil(int(n_series) / max(1, per)))
+    return max(1, math.ceil(int(n_series) / SERIES_PER_PART))
 
 
 @dataclass

@@ -139,11 +139,6 @@ def char_shingles_of_norm(norm: Column, n: int = 5) -> Column:
     return F.array_distinct(F.transform(idx, lambda i: F.substring(norm, i, n)))
 
 
-def char_shingles(col: Column, n: int = 5) -> Column:
-    """Distinct character n-grams of the normalized text (near-dup unit)."""
-    return char_shingles_of_norm(normalize_text(col), n)
-
-
 def word_shingles(col: Column, n: int = 3) -> Column:
     """Distinct word n-grams (joined by single spaces)."""
     toks = tokens(col)

@@ -29,13 +29,42 @@ Semantics provenance: these back the rank/ntile surfaces ClickHouse exposes
 as ``row_number() OVER (ORDER BY ...)`` / ``ntile`` — used by the registry's
 curriculum/quantile/drift queries (the reference's forecast_script.py has no
 ranking; this is part of the LLM-data-pipeline extension surface).
+
+Size-adaptive dispatch
+----------------------
+The distributed machinery's constant overhead (ranged shuffle + eager
+localCheckpoint + broadcast rebase, measured median ~4x at 1-8M rows —
+NOTES_r7.md §7) never amortizes on small frames.  ``global_row_number``,
+``global_ntile``, ``global_running_sum``, ``global_running_max``,
+``global_rank``, ``grouped_row_number``, ``grouped_top_k`` and
+``grouped_running_sum`` therefore take ``dispatch=True``: one
+persist-then-count probe (``dispatch_small``) compares the input's row
+count with the single cap ``FASTPATH_MAX_ROWS``, read at call time.  Under
+the cap the plain window runs (``PARTITION BY`` the group keys, or
+unpartitioned for a global order); over it, the distributed machinery.
+Each decision is logged at INFO on the ``clickhouse_forecasting_spark``
+logger with the caller, probed row count, cap and route.
+
+The fast path re-proves the bound IN-PLAN (``_rowcap_guarded``): a
+broadcast scalar count capped by an assert_true that wraps the first group
+key, or for a global order the first plain-string order key — a
+load-bearing column the window evaluates, so Catalyst cannot prune the
+assert.  The count column carries the census's ``__bounded_`` marker, so
+the single-partition census classifies the frame bounded, and an
+oversized input fails loudly instead of collapsing into one task.  A
+global order with no plain-string key raises ``ValueError`` before the
+probe runs; pass names plus ``ascending=[...]`` instead of Column
+expressions.  Enable dispatch only on AGGREGATE-grain inputs: the probe's
+cache write is the dominant cost on a fact-grain frame (see
+``dispatch_small``).
 """
 
 from __future__ import annotations
 
+import logging
 from typing import Iterable, Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
 _PID = "__rk_pid"
@@ -47,12 +76,13 @@ _CNT = "__rk_cnt"
 _MID_SHIFT = 33
 _MID_MASK = (1 << _MID_SHIFT) - 1
 
-# Default dispatch cap for the plain-window fast path: with |domain|
-# group-tasks each sorting at most this many rows, the worst single task
-# holds ~4M rows (a few hundred MB of sort) — executor-safe on any
-# reasonable config, while the grouped machinery's constant overhead
-# (ranged shuffle + eager localCheckpoint + broadcast rebase, measured
-# median ~4x at 1-8M rows — NOTES_r7.md §7) never amortizes below it.
+logger = logging.getLogger("clickhouse_forecasting_spark")
+
+# The one dispatch cap (probe and in-plan rowcap guard both read it at
+# call time): with |domain| group-tasks each sorting at most this many
+# rows, the worst single task holds ~4M rows (a few hundred MB of sort) —
+# executor-safe on any reasonable config, while the machinery's constant
+# overhead never amortizes below it (see the module docstring).
 FASTPATH_MAX_ROWS = 4_000_000
 
 # Upper bound on live dispatch probe persists (one per distinct plan
@@ -87,26 +117,22 @@ def _ordered_cols_with_asc(
     ]
 
 
-def _first_str_key(order_by: Sequence) -> str | None:
-    """First plain-string order key — the rowcap guard's wrap target for
-    the global fast paths (the guard must replace a LOAD-BEARING column
-    the window evaluates; an order key qualifies, an expression does
-    not, because _rowcap_guarded rewrites columns by name)."""
+def _guard_key(group_by: Sequence[str], order_by: Sequence, caller: str) -> str:
+    """The column the fast path's rowcap guard wraps: the first group key
+    (the window partition key), or for a global order the first
+    plain-string order key.  The guard must replace a LOAD-BEARING column
+    the window evaluates, and _rowcap_guarded rewrites columns by name, so
+    an expression-only global order is rejected."""
+    if group_by:
+        return group_by[0]
     for k in order_by:
         if isinstance(k, str):
             return k
-    return None
-
-
-def _global_dispatch_key(order_by: Sequence, caller: str) -> str:
-    key = _first_str_key(order_by)
-    if key is None:
-        raise ValueError(
-            f"{caller}: dispatch_max_rows requires at least one plain "
-            "column name in order_by (the in-plan rowcap guard wraps it);"
-            " pass names + ascending=[...] instead of Column expressions"
-        )
-    return key
+    raise ValueError(
+        f"{caller}: dispatch requires at least one plain column name in "
+        "order_by (the in-plan rowcap guard wraps it); pass names + "
+        "ascending=[...] instead of Column expressions"
+    )
 
 
 def ranged_with_local_index(
@@ -179,7 +205,7 @@ def global_row_number(
     order_by: Sequence,
     col_name: str = "rn",
     num_partitions: int | None = None,
-    dispatch_max_rows: int | None = None,
+    dispatch: bool = False,
     ascending: Sequence[bool] | None = None,
 ) -> DataFrame:
     """df + a global 1-based row_number over ``order_by`` — the distributed
@@ -196,25 +222,12 @@ def global_row_number(
     result, but it lets the ranged shuffle split the tied run across
     partitions.  Pinned by test_ranking.test_tied_keys_split_with_tiebreak.
 
-    ``dispatch_max_rows`` opts into the size-adaptive dispatch the grouped
-    primitives have had since r7 (see grouped_row_number / dispatch_small's
-    persist-then-count cost model: enable only where the input is an
-    AGGREGATE of the fact, never on fact-grain frames — an over-cap probe
-    pays one full cache write of the input): under the cap the plain
-    single-partition window runs, re-proving the bound IN-PLAN
-    (bounded_global_row_number's rowcap assert — the census recognizes the
-    ``__bounded_`` marker feeding the Exchange SinglePartition); over it,
-    this distributed machinery.  Per-key direction for the dispatch form
-    comes from ``ascending`` (plain names only), the global_rank
-    convention."""
-    if dispatch_max_rows is not None:
-        _global_dispatch_key(order_by, "global_row_number")
-        if dispatch_small(df, dispatch_max_rows):
-            return bounded_global_row_number(
-                df, order_by, col_name=col_name,
-                max_rows=int(dispatch_max_rows), ascending=ascending,
-                caller="global_row_number",
-            )
+    ``dispatch``: see the module docstring.  ``ascending`` gives per-key
+    direction for plain-name order keys (the global_rank convention)."""
+    fast = _dispatched(df, dispatch, (), order_by, ascending, "global_row_number")
+    if fast is not None:
+        guarded, w = fast
+        return guarded.withColumn(col_name, F.row_number().over(w).cast("bigint"))
     local = ranged_with_local_index(
         df, _ordered_cols_with_asc(order_by, ascending), num_partitions
     )
@@ -226,57 +239,36 @@ def global_row_number(
     )
 
 
-def bounded_global_row_number(
-    df: DataFrame,
-    order_by: Sequence,
-    col_name: str = "rn",
-    max_rows: int = FASTPATH_MAX_ROWS,
-    ascending: Sequence[bool] | None = None,
-    caller: str = "bounded_global_row_number",
-) -> DataFrame:
-    """Plain ``row_number() OVER (ORDER BY ...)`` over a frame PROVEN
-    small at execution time — the size-adaptive fast path of
-    global_row_number, guarded by the same in-plan rowcap assert as the
-    bounded_rows_* forms (_rowcap_guarded wraps the first plain-string
-    order key, so the ``__bounded_rowcap_asserted`` marker survives into
-    the plan feeding the single-partition exchange and the census
-    classifies it bounded — backed by the runtime assert, which fails
-    loudly on any oversized input)."""
-    key = _global_dispatch_key(order_by, caller)
-    guarded = _rowcap_guarded(df, [key], max_rows, caller)
-    w = Window.orderBy(*_ordered_cols_with_asc(order_by, ascending))
-    return guarded.withColumn(
-        col_name, F.row_number().over(w).cast("bigint")
-    )
-
-
 def global_ntile(
     df: DataFrame,
     order_by: Sequence,
     n_tiles: int,
     col_name: str = "tile",
     num_partitions: int | None = None,
-    dispatch_max_rows: int | None = None,
+    dispatch: bool = False,
     ascending: Sequence[bool] | None = None,
 ) -> DataFrame:
     """df + SQL-exact NTILE(n) over a global order: the first (total % n)
     tiles get ceil(total/n) rows, the rest floor(total/n) — bit-identical to
     ANSI/DuckDB NTILE, computed from the distributed row number + one scalar
-    total (broadcast 1-row aggregate), never a single-partition window.
+    total (broadcast 1-row aggregate) via with_ntile_from_rn, never a
+    single-partition window.  ``dispatch``: see the module docstring (the
+    fast path's native ``F.ntile`` IS the same ANSI NTILE)."""
+    k = int(n_tiles)
 
-    ``dispatch_max_rows`` opts into the size-adaptive dispatch (see
-    global_row_number: aggregate-grain inputs only): under the cap the
-    assert-guarded plain NTILE window runs (bounded_global_ntile —
-    native ``F.ntile`` IS the same ANSI NTILE the arithmetic here
-    reproduces), over it this distributed machinery."""
-    if dispatch_max_rows is not None:
-        _global_dispatch_key(order_by, "global_ntile")
-        if dispatch_small(df, dispatch_max_rows):
-            return bounded_global_ntile(
-                df, order_by, n_tiles, col_name=col_name,
-                max_rows=int(dispatch_max_rows), ascending=ascending,
-                caller="global_ntile",
-            )
+    def clamp(tile: Column) -> Column:
+        # identity clamp: tile ∈ 1..k by construction, so pmod(tile−1, k)+1
+        # == tile — but it makes the 1..k domain VISIBLE to plan analysis
+        # (plans._spc_key_bounded), so an aggregate grouped on the ntile
+        # output is provably bounded in the single-partition census
+        return (
+            F.pmod(tile.cast("bigint") - 1, F.lit(k).cast("bigint")) + 1
+        ).cast("int")
+
+    fast = _dispatched(df, dispatch, (), order_by, ascending, "global_ntile")
+    if fast is not None:
+        guarded, w = fast
+        return guarded.withColumn(col_name, clamp(F.ntile(k).over(w)))
     local = ranged_with_local_index(
         df, _ordered_cols_with_asc(order_by, ascending), num_partitions
     )
@@ -286,70 +278,15 @@ def global_ntile(
     total = off.agg(
         F.max(F.col(_OFF) + F.col(_CNT)).cast("bigint").alias("__rk_total")
     )
-    # all tile arithmetic in bigint `div` (never Column `/`, which is a
-    # DOUBLE divide and can round across an integer boundary near 2^53)
-    k = int(n_tiles)
-    joined = (
+    rn = (
         local.join(F.broadcast(off), _PID)
         .crossJoin(F.broadcast(total))
         .withColumn("__rk_rn", (F.col(_OFF) + F.col(_LRN)).cast("bigint"))
-        .withColumn("__rk_base", F.expr(f"__rk_total div {k}"))
-        .withColumn("__rk_rem", F.expr(f"__rk_total % {k}"))
     )
-    big = F.col("__rk_base") + 1  # size of the first `rem` (larger) tiles
-    cut = big * F.col("__rk_rem")  # rows covered by the larger tiles
-    tile = (
-        F.when(F.col("__rk_base") == 0, F.col("__rk_rn"))
-        .when(
-            F.col("__rk_rn") <= cut,
-            # ceil(rn / big) with big = base + 1, all-integer
-            F.expr("(__rk_rn + __rk_base) div (__rk_base + 1)"),
-        )
-        .otherwise(
-            F.col("__rk_rem")
-            + F.expr(
-                "(__rk_rn - (__rk_base + 1) * __rk_rem + __rk_base - 1)"
-                " div __rk_base"
-            )
-        )
+    tiled = with_ntile_from_rn(rn, "__rk_rn", "__rk_total", k, col_name)
+    return tiled.withColumn(col_name, clamp(F.col(col_name))).drop(
+        _PID, _LRN, _OFF, _CNT, "__rk_total", "__rk_rn"
     )
-    # identity clamp: tile ∈ 1..k by construction, so pmod(tile−1, k)+1
-    # == tile — but it makes the 1..k domain VISIBLE to plan analysis
-    # (plans._spc_key_bounded), so an aggregate grouped on the ntile
-    # output is provably bounded in the single-partition census
-    tile = F.pmod(tile - 1, F.lit(int(n_tiles)).cast("bigint")) + 1
-    return joined.withColumn(col_name, tile.cast("int")).drop(
-        _PID, _LRN, _OFF, _CNT, "__rk_total", "__rk_rn", "__rk_base", "__rk_rem"
-    )
-
-
-def bounded_global_ntile(
-    df: DataFrame,
-    order_by: Sequence,
-    n_tiles: int,
-    col_name: str = "tile",
-    max_rows: int = FASTPATH_MAX_ROWS,
-    ascending: Sequence[bool] | None = None,
-    caller: str = "bounded_global_ntile",
-) -> DataFrame:
-    """Plain ``NTILE(n) OVER (ORDER BY ...)`` over a frame proven small
-    at execution time — the size-adaptive fast path of global_ntile
-    (same rowcap-assert proof machinery as bounded_global_row_number).
-    Keeps global_ntile's pmod identity clamp so the 1..n tile domain
-    stays visible to the plan census (downstream aggregates grouped on
-    the tile remain provably bounded)."""
-    key = _global_dispatch_key(order_by, caller)
-    guarded = _rowcap_guarded(df, [key], max_rows, caller)
-    w = Window.orderBy(*_ordered_cols_with_asc(order_by, ascending))
-    k = int(n_tiles)
-    tile = (
-        F.pmod(
-            F.ntile(k).over(w).cast("bigint") - 1,
-            F.lit(k).cast("bigint"),
-        )
-        + 1
-    )
-    return guarded.withColumn(col_name, tile.cast("int"))
 
 
 def global_rank(
@@ -359,7 +296,7 @@ def global_rank(
     dense: bool = False,
     num_partitions: int | None = None,
     ascending: Sequence[bool] | None = None,
-    dispatch_max_rows: int | None = None,
+    dispatch: bool = False,
 ) -> DataFrame:
     """df + SQL RANK() (gaps after ties) or DENSE_RANK() over a global
     order — distributed: global_row_number with an arbitrary tie order,
@@ -373,11 +310,9 @@ def global_rank(
     e.g. ``global_rank(df, ["n"], ascending=[False])`` for
     ``RANK() OVER (ORDER BY n DESC)``.
 
-    ``dispatch_max_rows`` passes through to the internal per-key frames
-    (the per-key count aggregate / the distinct-key frame — both
-    aggregate-grain by construction, the documented dispatch cost-model
-    fit): under the cap they take the assert-guarded plain-window fast
-    path instead of the ranged machinery."""
+    ``dispatch`` (see the module docstring) applies to the internal
+    per-key frames — the per-key count aggregate / the distinct-key
+    frame, both aggregate-grain by construction."""
     keys = [c for c in order_by if isinstance(c, str)]
     if len(keys) != len(list(order_by)):
         # Column expressions (e.g. F.desc) have no stable name to group
@@ -389,9 +324,6 @@ def global_rank(
     asc = list(ascending) if ascending is not None else [True] * len(keys)
     if len(asc) != len(keys):
         raise ValueError("ascending must match order_by length")
-    ordered = [
-        F.col(k) if a else F.col(k).desc() for k, a in zip(keys, asc)
-    ]
     if not dense:
         # RANK is key-grain: rank(v) = 1 + count of strictly-preceding
         # rows. Aggregate to per-key counts FIRST (the hash shuffle
@@ -404,8 +336,7 @@ def global_rank(
         vals = df.groupBy(*keys).agg(F.count("*").alias("__rk_kc"))
         cum = global_running_sum(
             vals, keys, ["__rk_kc"], ["__rk_kcum"],
-            num_partitions=num_partitions, ascending=asc,
-            dispatch_max_rows=dispatch_max_rows,
+            num_partitions=num_partitions, ascending=asc, dispatch=dispatch,
         )
         ranks = cum.select(
             *keys,
@@ -419,8 +350,7 @@ def global_rank(
     distinct_keys = df.select(*keys).distinct()
     dense_idx = global_row_number(
         distinct_keys, keys, col_name=col_name,
-        num_partitions=num_partitions, ascending=asc,
-        dispatch_max_rows=dispatch_max_rows,
+        num_partitions=num_partitions, ascending=asc, dispatch=dispatch,
     )
     return _join_back_null_safe(df, dense_idx, keys)
 
@@ -527,12 +457,13 @@ def probe_rows(df: DataFrame, cap: int) -> list | None:
     return rows if len(rows) <= cap else None
 
 
-def dispatch_small(df: DataFrame, max_rows: int) -> bool:
-    """Routing probe for the size-adaptive dispatch. The driver-side
-    count would otherwise recompute the (often aggregate) input once for
-    routing and once for the query — so the frame persists FIRST, the
-    count materializes the cache, and the fast path reads it back
-    (measured ~2x on quantiles_exact_weighted at sf0.1).
+def dispatch_small(df: DataFrame, caller: str = "dispatch_small") -> bool:
+    """Routing probe for the size-adaptive dispatch: True iff ``df`` has at
+    most ``FASTPATH_MAX_ROWS`` rows.  The driver-side count would otherwise
+    recompute the (often aggregate) input once for routing and once for the
+    query — so the frame persists FIRST, the count materializes the cache,
+    and the fast path reads it back (measured ~2x on
+    quantiles_exact_weighted at sf0.1).
 
     Over the cap the entry is KEPT too (r12, ADVICE r11): the
     distributed machinery the caller falls back to starts with
@@ -559,15 +490,109 @@ def dispatch_small(df: DataFrame, max_rows: int) -> bool:
     ``runtime_cache.release("dispatch")`` drops them all. A 32-bit
     semanticHash collision could at worst misroute (return a wrong
     count); the fast path's in-plan rowcap assert still fails loudly on
-    any oversized input, so correctness never rides the hash."""
+    any oversized input, so correctness never rides the hash.
+
+    Every decision is logged at INFO with ``caller`` (the primitive or
+    query that asked), the probed row count, the cap and the route."""
     from .. import runtime_cache as _rc
 
     h = int(df._jdf.queryExecution().analyzed().semanticHash())
     key = ("dispatch", h)
     cached = _rc.cached_frame(df, key, lambda: df)
-    small = cached.count() <= int(max_rows)
+    n = cached.count()
+    small = n <= FASTPATH_MAX_ROWS
     _rc.cap_family("dispatch", DISPATCH_CACHE_MAX)
+    logger.info(
+        "dispatch: caller=%s rows=%d cap=%d route=%s",
+        caller, n, FASTPATH_MAX_ROWS, "fast" if small else "distributed",
+    )
     return small
+
+
+def _rowcap_guarded(df: DataFrame, key: str, caller: str) -> DataFrame:
+    """The in-plan row-count proof behind every fast path: a scalar count
+    of the input is cross-joined back (broadcast) and an assert_true caps
+    it at ``FASTPATH_MAX_ROWS``, wrapping column ``key`` (see _guard_key:
+    unprunable in any window-executing plan — same fail-loud idiom as
+    _guard_group_cardinality and the dedup/ANN occupancy caps).  The count
+    column is NAMED with the census's ``__bounded_`` marker prefix
+    (``__bounded_rowcap_asserted``): it is referenced by the assert inside
+    the guarded key, so it survives column pruning into the plan text, and
+    the census recognizes the guarded frame as bounded — unlike the
+    checkpoint markers this one is BACKED by the runtime assert."""
+    cap = int(FASTPATH_MAX_ROWS)
+    cnt = df.groupBy().agg(
+        F.count("*").alias("__bounded_rowcap_asserted")
+    )
+    guarded_key = F.when(
+        F.assert_true(
+            F.col("__bounded_rowcap_asserted") <= F.lit(cap),
+            F.lit(
+                f"{caller}: input frame exceeds max_rows={cap}"
+                " — the plain-window fast path is only safe for frames "
+                "proven small; use the distributed grouped machinery "
+                "for data-proportional inputs"
+            ),
+        ).isNull(),
+        F.col(key),
+    )
+    return (
+        df.crossJoin(F.broadcast(cnt))
+        .withColumn(key, guarded_key)
+        .drop("__bounded_rowcap_asserted")
+    )
+
+
+def _fastpath(
+    df: DataFrame,
+    group_by: Sequence[str],
+    order_by: Sequence,
+    ascending: Sequence[bool] | None,
+    caller: str,
+) -> tuple[DataFrame, WindowSpec]:
+    """The plain-window fast path every primitive shares: the rowcap-guarded
+    frame and ``Window.partitionBy(group_by).orderBy(order_by)`` (no
+    partition keys for a global order)."""
+    guarded = _rowcap_guarded(df, _guard_key(group_by, order_by, caller), caller)
+    spec = Window.partitionBy(*group_by).orderBy(
+        *_ordered_cols_with_asc(order_by, ascending)
+    )
+    return guarded, spec
+
+
+def _dispatched(
+    df: DataFrame,
+    dispatch: bool,
+    group_by: Sequence[str],
+    order_by: Sequence,
+    ascending: Sequence[bool] | None,
+    caller: str,
+) -> tuple[DataFrame, WindowSpec] | None:
+    """The one dispatch point: the fast path when ``dispatch`` is on and
+    the probe proves the input small, else None (run the distributed
+    machinery).  The guard key resolves before the probe, so a global
+    order without a plain-string key raises before any job runs."""
+    if not dispatch:
+        return None
+    _guard_key(group_by, order_by, caller)
+    if not dispatch_small(df, caller=caller):
+        return None
+    return _fastpath(df, group_by, order_by, ascending, caller)
+
+
+def _running_sums(
+    df: DataFrame,
+    w: WindowSpec,
+    value_cols: Sequence[str],
+    out_names: Sequence[str],
+) -> DataFrame:
+    """Plain ``SUM(c) OVER (w ROWS UNBOUNDED PRECEDING)`` per value column —
+    the native window's NULL semantics ARE the SQL semantics the
+    distributed machinery reproduces with its NULL-carry."""
+    w = w.rowsBetween(Window.unboundedPreceding, 0)
+    for c, name in zip(value_cols, out_names):
+        df = df.withColumn(name, F.sum(c).over(w))
+    return df
 
 
 def bounded_rows_row_number(
@@ -575,67 +600,15 @@ def bounded_rows_row_number(
     group_by: Sequence[str],
     order_by: Sequence,
     col_name: str = "rn",
-    max_rows: int = FASTPATH_MAX_ROWS,
     caller: str = "bounded_rows_row_number",
 ) -> DataFrame:
     """Plain ``row_number() OVER (PARTITION BY groups ORDER BY order)``
-    over a frame PROVEN small at execution time — the size-adaptive fast
-    path of the grouped primitives (r7 VERDICT #3).
-
-    The proof is in-plan, not declared: a scalar count of the input is
-    cross-joined back (broadcast) and an assert_true caps it at
-    ``max_rows``, wrapping the FIRST GROUP KEY — the window partition
-    key, so Catalyst cannot prune the assert out of any consumer plan
-    (same fail-loud idiom as _guard_group_cardinality and the dedup/ANN
-    occupancy caps).  The count column is NAMED with the census's
-    ``__bounded_`` marker prefix (``__bounded_rowcap_asserted``): it is
-    referenced by the assert inside the guarded key, so it survives
-    column pruning into the plan text, and the census recognizes the
-    guarded frame as bounded — unlike the checkpoint markers this one
-    is BACKED by the runtime assert: feed it more than max_rows and the
-    query fails loudly instead of fanning a fact into ≤|domain| tasks.
-
-    Use via ``grouped_row_number(..., dispatch_max_rows=...)``, which
-    only takes this path after a driver-side count confirms the bound
-    (a persist-then-count probe — see dispatch_small's cost model);
-    calling it directly on an
-    oversized frame is the negative control — the assert fires."""
-    gcols = list(group_by)
-    guarded = _rowcap_guarded(df, gcols, max_rows, caller)
-    w = Window.partitionBy(*gcols).orderBy(*_order_cols(order_by))
-    return guarded.withColumn(
-        col_name, F.row_number().over(w).cast("bigint")
-    )
-
-
-def _rowcap_guarded(
-    df: DataFrame, gcols: Sequence[str], max_rows: int, caller: str
-) -> DataFrame:
-    """The in-plan row-count proof behind every bounded_rows_* fast path:
-    broadcast scalar count + assert_true wrapping the first group key
-    (the window partition key — unprunable in any window-executing
-    plan); the count column carries the census's ``__bounded_`` marker
-    prefix so the guarded frame classifies as bounded."""
-    cnt = df.groupBy().agg(
-        F.count("*").alias("__bounded_rowcap_asserted")
-    )
-    guarded_key = F.when(
-        F.assert_true(
-            F.col("__bounded_rowcap_asserted") <= F.lit(int(max_rows)),
-            F.lit(
-                f"{caller}: input frame exceeds max_rows={int(max_rows)}"
-                " — the plain-window fast path is only safe for frames "
-                "proven small; use the distributed grouped machinery "
-                "for data-proportional inputs"
-            ),
-        ).isNull(),
-        F.col(gcols[0]),
-    )
-    return (
-        df.crossJoin(F.broadcast(cnt))
-        .withColumn(gcols[0], guarded_key)
-        .drop("__bounded_rowcap_asserted")
-    )
+    over a frame PROVEN small at execution time — the grouped fast path,
+    for callers that route several primitives off one ``dispatch_small``
+    probe.  Calling it on a frame over ``FASTPATH_MAX_ROWS`` is the
+    negative control: the in-plan assert fires."""
+    guarded, w = _fastpath(df, list(group_by), order_by, None, caller)
+    return guarded.withColumn(col_name, F.row_number().over(w).cast("bigint"))
 
 
 def bounded_rows_running_sum(
@@ -644,25 +617,13 @@ def bounded_rows_running_sum(
     order_by: Sequence,
     value_cols: Sequence[str],
     out_names: Sequence[str],
-    max_rows: int = FASTPATH_MAX_ROWS,
     caller: str = "bounded_rows_running_sum",
 ) -> DataFrame:
     """Plain ``SUM(c) OVER (PARTITION BY groups ORDER BY order ROWS
     UNBOUNDED PRECEDING)`` over a frame proven small at execution time —
-    the size-adaptive fast path of grouped_running_sum, same proof
-    machinery as bounded_rows_row_number (_rowcap_guarded). The plain
-    window's native NULL semantics ARE the SQL semantics the grouped
-    machinery reproduces with its NULL-carry, so values match exactly."""
-    gcols = list(group_by)
-    guarded = _rowcap_guarded(df, gcols, max_rows, caller)
-    w = (
-        Window.partitionBy(*gcols)
-        .orderBy(*_order_cols(order_by))
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    for c, name in zip(value_cols, out_names):
-        guarded = guarded.withColumn(name, F.sum(c).over(w))
-    return guarded
+    the running-sum twin of bounded_rows_row_number."""
+    guarded, w = _fastpath(df, list(group_by), order_by, None, caller)
+    return _running_sums(guarded, w, value_cols, out_names)
 
 
 def grouped_row_number(
@@ -672,7 +633,7 @@ def grouped_row_number(
     col_name: str = "rn",
     num_partitions: int | None = None,
     max_groups: int = 1_000_000,
-    dispatch_max_rows: int | None = None,
+    dispatch: bool = False,
 ) -> DataFrame:
     """df + ``row_number() OVER (PARTITION BY groups ORDER BY order)``
     for bounded-domain groups, without fanning the fact into ≤|domain|
@@ -680,26 +641,12 @@ def grouped_row_number(
     each group rebases by its broadcast min-rn (null-safe join — NULL is
     an ordinary group value).  Group cardinality is enforced in-plan at
     ``max_groups`` (the rebase frame is force-broadcast — see
-    _guard_group_cardinality).
-
-    ``dispatch_max_rows`` opts into size-adaptive dispatch: a
-    persist-then-count probe of the input (dispatch_small: the cache
-    write is the point — the fast path reads it back instead of
-    recomputing an aggregate input)
-    picks the plain-window fast path when the frame is within the cap —
-    recovering the 1-to-2-task cost the distributed machinery's
-    constant overhead dwarfs at local scale — and this machinery
-    otherwise.  The fast path re-proves the bound IN-PLAN
-    (bounded_rows_row_number's assert), so the census's boundedness
-    claim holds at execution time, not just at dispatch time."""
+    _guard_group_cardinality).  ``dispatch``: see the module docstring."""
     gcols = list(group_by)
-    if dispatch_max_rows is not None:
-        if dispatch_small(df, dispatch_max_rows):
-            return bounded_rows_row_number(
-                df, gcols, order_by, col_name=col_name,
-                max_rows=int(dispatch_max_rows),
-                caller="grouped_row_number",
-            )
+    fast = _dispatched(df, dispatch, gcols, order_by, None, "grouped_row_number")
+    if fast is not None:
+        guarded, w = fast
+        return guarded.withColumn(col_name, F.row_number().over(w).cast("bigint"))
     rn = global_row_number(
         df, [*gcols, *order_by], col_name="__rk_grn",
         num_partitions=num_partitions,
@@ -721,16 +668,14 @@ def grouped_top_k(
     k: int,
     col_name: str = "rn",
     num_partitions: int | None = None,
-    dispatch_max_rows: int | None = None,
+    dispatch: bool = False,
 ) -> DataFrame:
     """Top-k rows PER GROUP (the LIMIT ... BY / lateral-top-k shape)
     with the per-group row number attached — grouped_row_number +
-    filter.  ``dispatch_max_rows`` passes through to the size-adaptive
-    fast-path dispatch."""
+    filter.  ``dispatch`` passes through (see the module docstring)."""
     return grouped_row_number(
         df, group_by, order_by, col_name=col_name,
-        num_partitions=num_partitions,
-        dispatch_max_rows=dispatch_max_rows,
+        num_partitions=num_partitions, dispatch=dispatch,
     ).filter(F.col(col_name) <= int(k))
 
 
@@ -742,9 +687,11 @@ def with_ntile_from_rn(
     out_col: str = "tile",
 ) -> DataFrame:
     """SQL-exact NTILE(k) computed from a 1-based row number column and
-    its partition-total column — the same all-bigint `div` tile
-    arithmetic as global_ntile, reusable for grouped forms (attach
-    grouped_row_number + a broadcast per-group total, then this).
+    its partition-total column, in all-bigint `div` arithmetic (never
+    Column `/`, a DOUBLE divide that can round across an integer boundary
+    near 2^53) — global_ntile's distributed route, and reusable for
+    grouped forms (attach grouped_row_number + a broadcast per-group
+    total, then this).
     Column names are backtick-quoted into the generated expression
     (embedded backticks doubled, Spark's quoted-identifier escape), so
     non-identifier names (dots, spaces, hyphens, backticks) bind
@@ -772,7 +719,7 @@ def grouped_running_sum(
     out_names: Sequence[str],
     num_partitions: int | None = None,
     max_groups: int = 1_000_000,
-    dispatch_max_rows: int | None = None,
+    dispatch: bool = False,
 ) -> DataFrame:
     """df + per-group inclusive running sums —
     ``SUM(c) OVER (PARTITION BY groups ORDER BY order ROWS UNBOUNDED
@@ -791,17 +738,11 @@ def grouped_running_sum(
     Group cardinality is enforced in-plan at ``max_groups`` (the rebase
     frame is force-broadcast — see _guard_group_cardinality).
 
-    ``dispatch_max_rows`` opts into the size-adaptive dispatch (see
-    grouped_row_number): a driver-side count picks the assert-guarded
-    plain-window fast path (bounded_rows_running_sum) under the cap."""
+    ``dispatch``: see the module docstring."""
     gcols = list(group_by)
-    if dispatch_max_rows is not None:
-        if dispatch_small(df, dispatch_max_rows):
-            return bounded_rows_running_sum(
-                df, gcols, order_by, value_cols, out_names,
-                max_rows=int(dispatch_max_rows),
-                caller="grouped_running_sum",
-            )
+    fast = _dispatched(df, dispatch, gcols, order_by, None, "grouped_running_sum")
+    if fast is not None:
+        return _running_sums(*fast, value_cols, out_names)
     ind = {c: f"__rk_gnn_{c}" for c in value_cols}
     src = df
     for c in value_cols:
@@ -880,7 +821,7 @@ def global_running_sum(
     value_cols: Sequence[str],
     out_names: Sequence[str],
     num_partitions: int | None = None,
-    dispatch_max_rows: int | None = None,
+    dispatch: bool = False,
     ascending: Sequence[bool] | None = None,
 ) -> DataFrame:
     """df + inclusive running sums of ``value_cols`` over the global
@@ -895,19 +836,10 @@ def global_running_sum(
     non-null count — also carried in the offsets frame — decides the
     NULL-vs-0 edge.)
 
-    ``dispatch_max_rows`` opts into the size-adaptive dispatch (see
-    global_row_number: aggregate-grain inputs only): under the cap the
-    assert-guarded plain window runs (bounded_global_running_sum — the
-    native window's NULL semantics ARE the semantics above), over it
-    this distributed machinery."""
-    if dispatch_max_rows is not None:
-        _global_dispatch_key(order_by, "global_running_sum")
-        if dispatch_small(df, dispatch_max_rows):
-            return bounded_global_running_sum(
-                df, order_by, value_cols, out_names,
-                max_rows=int(dispatch_max_rows), ascending=ascending,
-                caller="global_running_sum",
-            )
+    ``dispatch``: see the module docstring."""
+    fast = _dispatched(df, dispatch, (), order_by, ascending, "global_running_sum")
+    if fast is not None:
+        return _running_sums(*fast, value_cols, out_names)
     local = ranged_with_local_index(
         df, _ordered_cols_with_asc(order_by, ascending), num_partitions
     )
@@ -932,32 +864,6 @@ def global_running_sum(
     return out.drop(*drop)
 
 
-def bounded_global_running_sum(
-    df: DataFrame,
-    order_by: Sequence,
-    value_cols: Sequence[str],
-    out_names: Sequence[str],
-    max_rows: int = FASTPATH_MAX_ROWS,
-    ascending: Sequence[bool] | None = None,
-    caller: str = "bounded_global_running_sum",
-) -> DataFrame:
-    """Plain global ``SUM(c) OVER (ORDER BY ... ROWS UNBOUNDED
-    PRECEDING)`` over a frame proven small at execution time — the
-    size-adaptive fast path of global_running_sum (same rowcap-assert
-    proof machinery as bounded_global_row_number; the native window's
-    NULL semantics are exactly the SQL semantics the distributed
-    machinery reproduces with its NULL-carry)."""
-    key = _global_dispatch_key(order_by, caller)
-    guarded = _rowcap_guarded(df, [key], max_rows, caller)
-    w = (
-        Window.orderBy(*_ordered_cols_with_asc(order_by, ascending))
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    for c, name in zip(value_cols, out_names):
-        guarded = guarded.withColumn(name, F.sum(c).over(w))
-    return guarded
-
-
 def global_running_max(
     df: DataFrame,
     order_by: Sequence,
@@ -965,7 +871,7 @@ def global_running_max(
     col_name: str,
     num_partitions: int | None = None,
     exclusive: bool = False,
-    dispatch_max_rows: int | None = None,
+    dispatch: bool = False,
     ascending: Sequence[bool] | None = None,
 ) -> DataFrame:
     """df + running max of ``value_col`` over the global ``order_by`` —
@@ -979,23 +885,21 @@ def global_running_max(
     the first global row yields NULL — identical to the SQL form's empty
     frame.
 
-    ``dispatch_max_rows`` opts into the size-adaptive dispatch (see
-    global_row_number: aggregate-grain inputs only)."""
-    if dispatch_max_rows is not None:
-        _global_dispatch_key(order_by, "global_running_max")
-        if dispatch_small(df, dispatch_max_rows):
-            return bounded_global_running_max(
-                df, order_by, value_col, col_name,
-                max_rows=int(dispatch_max_rows), ascending=ascending,
-                exclusive=exclusive, caller="global_running_max",
-            )
+    ``dispatch``: see the module docstring."""
+    hi = -1 if exclusive else 0
+    fast = _dispatched(df, dispatch, (), order_by, ascending, "global_running_max")
+    if fast is not None:
+        guarded, w = fast
+        return guarded.withColumn(
+            col_name,
+            F.max(value_col).over(w.rowsBetween(Window.unboundedPreceding, hi)),
+        )
     local = ranged_with_local_index(
         df, _ordered_cols_with_asc(order_by, ascending), num_partitions
     )
     pmax = local.groupBy(_PID).agg(F.max(value_col).alias("__rk_pm"))
     wp = Window.orderBy(_PID).rowsBetween(Window.unboundedPreceding, -1)
     pre = pmax.select(_PID, F.max("__rk_pm").over(wp).alias("__rk_prem"))
-    hi = -1 if exclusive else 0
     wl = (
         Window.partitionBy(_PID)
         .orderBy(_LRN)
@@ -1009,31 +913,6 @@ def global_running_max(
         )
         .drop(_PID, _LRN, "__rk_prem")
     )
-
-
-def bounded_global_running_max(
-    df: DataFrame,
-    order_by: Sequence,
-    value_col: str,
-    col_name: str,
-    max_rows: int = FASTPATH_MAX_ROWS,
-    ascending: Sequence[bool] | None = None,
-    exclusive: bool = False,
-    caller: str = "bounded_global_running_max",
-) -> DataFrame:
-    """Plain global running max over a frame proven small at execution
-    time — the size-adaptive fast path of global_running_max (same
-    rowcap-assert proof machinery as bounded_global_row_number; the
-    exclusive form's empty first frame yields NULL, identical to the
-    stitched form's NULL prefix)."""
-    key = _global_dispatch_key(order_by, caller)
-    guarded = _rowcap_guarded(df, [key], max_rows, caller)
-    hi = -1 if exclusive else 0
-    w = (
-        Window.orderBy(*_ordered_cols_with_asc(order_by, ascending))
-        .rowsBetween(Window.unboundedPreceding, hi)
-    )
-    return guarded.withColumn(col_name, F.max(value_col).over(w))
 
 
 def top_k(df: DataFrame, order_by: Sequence, k: int) -> DataFrame:

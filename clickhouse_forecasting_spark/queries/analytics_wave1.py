@@ -7,6 +7,8 @@
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -16,6 +18,10 @@ from ..operators import ranking as RK
 from .catalog_relational import _dsum, _orders_daily, _t
 from .sketches_analytics import _daily_cents
 from .text_analysis import _TOKS_SQL
+
+logger = logging.getLogger("clickhouse_forecasting_spark")
+
+
 def q_ch_array_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ClickHouse array-function parity pack over each doc's token-length
     sequence: arraySum (total chars), arrayDistinct (distinct lengths),
@@ -1496,6 +1502,10 @@ def q_encoding_advisor_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
             bucket_by=F.expr(f"CAST((l_orderkey - {mn}) DIV {span} AS INT)"),
         )
     else:
+        logger.info(
+            "encoding_advisor_lineitem: no l_orderkey footer bounds in %s;"
+            " falling back to the sampled ranged route", src,
+        )
         runs_wide = RK.partitioned_run_counts(
             li, ["l_orderkey", "l_linenumber"], cols
         )

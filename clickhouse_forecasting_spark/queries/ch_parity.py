@@ -1328,7 +1328,7 @@ def q_quantiles_exact_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     # p_brand, not an ad-hoc alias) — the round-6 red-gate finding.
     cum = RK.grouped_running_sum(
         per_val, ["p_brand"], ["cents"], ["sw"], ["cw"],
-        dispatch_max_rows=RK.FASTPATH_MAX_ROWS,
+        dispatch=True,
     ).withColumnRenamed("p_brand", "brand")
     tot = cum.groupBy("brand").agg(F.sum("sw").alias("w_total"))
     cum = cum.join(F.broadcast(tot), "brand")
@@ -3382,7 +3382,7 @@ def q_top_customers_with_ties(spark: SparkSession, sf_dir: str) -> DataFrame:
     vals = per.groupBy("n_orders").agg(F.count("*").alias("cnt"))
     cum = RK.global_running_sum(
         vals, ["n_orders"], ["cnt"], ["cum_cnt"], ascending=[False],
-        dispatch_max_rows=RK.FASTPATH_MAX_ROWS,
+        dispatch=True,
     )
     kept = cum.select(
         "n_orders", (F.col("cum_cnt") - F.col("cnt") + 1).alias("rnk")

@@ -1261,9 +1261,12 @@ def q_stream_lateness_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     cm = RK.global_running_max(ev, ["event_id"], "us", "cummax_us")
     late = cm.select((F.col("cummax_us") - F.col("us")).alias("late_us"))
     cnt = late.groupBy("late_us").agg(F.count("*").alias("__lc"))
+    # worst case, every event's lateness is distinct and this frame has
+    # one row per event: past FASTPATH_MAX_ROWS the dispatch then routes
+    # it to the ranged machinery, never to one single-partition task
     cum = RK.global_running_sum(
         cnt, ["late_us"], ["__lc"], ["__lcum"],
-        dispatch_max_rows=RK.FASTPATH_MAX_ROWS,
+        dispatch=True,
     )
     total = cum.agg(F.max("__lcum").cast("bigint").alias("__ln"))
 

@@ -631,7 +631,7 @@ def q_nation_top_customers_listagg(spark: SparkSession, sf_dir: str) -> DataFram
         [F.col("c_acctbal").desc(), F.col("c_custkey")],
         3,
         col_name="rank",
-        dispatch_max_rows=RK.FASTPATH_MAX_ROWS,
+        dispatch=True,
     ).join(F.broadcast(nation), F.col("c_nationkey") == nation.n_nationkey)
     return (
         top3.groupBy("n_name")
@@ -837,7 +837,7 @@ def q_skyline_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         "max_size_at_price",
         "cheaper_max_size",
         exclusive=True,
-        dispatch_max_rows=RK.FASTPATH_MAX_ROWS,
+        dispatch=True,
     ).select("p_retailprice", "cheaper_max_size")
     return (
         part.join(cheaper, "p_retailprice")
@@ -1132,15 +1132,15 @@ def q_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = RK.global_ntile(
         scored, ["recency_days", "o_custkey"], 5, col_name="r_score",
-        dispatch_max_rows=RK.FASTPATH_MAX_ROWS,
+        dispatch=True,
     )
     out = RK.global_ntile(
         out, ["frequency", "o_custkey"], 5, col_name="f_score",
-        ascending=[False, True], dispatch_max_rows=RK.FASTPATH_MAX_ROWS,
+        ascending=[False, True], dispatch=True,
     )
     out = RK.global_ntile(
         out, ["monetary", "o_custkey"], 5, col_name="m_score",
-        ascending=[False, True], dispatch_max_rows=RK.FASTPATH_MAX_ROWS,
+        ascending=[False, True], dispatch=True,
     )
     return out.select(
         F.col("o_custkey").alias("custkey"),
@@ -2821,7 +2821,7 @@ def q_pareto_revenue_concentration(spark: SparkSession, sf_dir: str) -> DataFram
     # one driver-side count routes BOTH primitives (row_number preserves
     # the row count, so the proof extends; each fast path still re-proves
     # its bound in-plan via the rowcap assert)
-    if RK.dispatch_small(per_cust, RK.FASTPATH_MAX_ROWS):
+    if RK.dispatch_small(per_cust, caller="pareto_revenue_concentration"):
         rked = RK.bounded_rows_row_number(
             per_cust, ["n_name"], order, "rk",
             caller="pareto_revenue_concentration",
@@ -3584,7 +3584,7 @@ def q_lateral_top_balances(spark: SparkSession, sf_dir: str) -> DataFrame:
     top = RK.grouped_top_k(
         base, ["n_name"], [F.desc("bal"), F.col("c_name")], 2,
         col_name="__rk_lat",
-        dispatch_max_rows=RK.FASTPATH_MAX_ROWS,
+        dispatch=True,
     )
     return top.select("n_name", "c_name", "bal")
 
@@ -3629,7 +3629,7 @@ def q_ks_test_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # was fact-grain and the write itself was the measured regression.
     cum = RK.global_running_sum(
         counts, ["v"], ["c1", "c2"], ["cum1", "cum2"],
-        dispatch_max_rows=RK.FASTPATH_MAX_ROWS,
+        dispatch=True,
     )
     tot = cum.agg(
         F.max("cum1").cast("bigint").alias("n1"),
@@ -3705,7 +3705,7 @@ def q_mannwhitney_u_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shuffle, so the cache write of the aggregate is repaid either way.
     cum = RK.global_running_sum(
         counts, ["v"], ["c"], ["cumc"],
-        dispatch_max_rows=RK.FASTPATH_MAX_ROWS,
+        dispatch=True,
     )
     terms = cum.select(
         "c1", "c2", "c",
@@ -4143,7 +4143,7 @@ def q_lorenz_curve_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     # back off the same frame (≤5 rows)
     order = ["cents", "c_custkey"]
     # single count routes both primitives (see pareto_revenue_concentration)
-    if RK.dispatch_small(per_cust, RK.FASTPATH_MAX_ROWS):
+    if RK.dispatch_small(per_cust, caller="lorenz_curve_points"):
         rked = RK.bounded_rows_row_number(
             per_cust, ["r_name"], order, "rk", caller="lorenz_curve_points"
         )
@@ -4225,7 +4225,7 @@ def q_weighted_median_price_by_brand(spark: SparkSession, sf_dir: str) -> DataFr
     )
     cum = RK.grouped_running_sum(
         grain, ["p_brand"], ["cents"], ["w"], ["cumw"],
-        dispatch_max_rows=RK.FASTPATH_MAX_ROWS,
+        dispatch=True,
     )
     tot = cum.groupBy("p_brand").agg(F.sum("w").alias("totw"))
     ranked = cum.join(F.broadcast(tot), "p_brand")

@@ -157,7 +157,7 @@ def q_window_top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         [F.col("c_acctbal").desc(), F.col("c_custkey")],
         3,
         col_name="rank",
-        dispatch_max_rows=RK.FASTPATH_MAX_ROWS,
+        dispatch=True,
     )
     return top.select(
         "c_mktsegment", F.col("rank").cast("int").alias("rank"),

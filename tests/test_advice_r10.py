@@ -29,7 +29,7 @@ def _app_entries(spark):
     return [k for k in runtime_cache.entries() if k[0] == app]
 
 
-def test_dispatch_overcap_keeps_own_entry_spares_other_family(spark):
+def test_dispatch_overcap_keeps_own_entry_spares_other_family(spark, monkeypatch):
     """A foreign-family frame whose key embeds the SAME integer as the
     dispatch probe's semanticHash must survive an over-cap dispatch
     (ADVICE r9: bare-token release matched the hash at any position).
@@ -37,14 +37,15 @@ def test_dispatch_overcap_keeps_own_entry_spares_other_family(spark):
     distributed fallback's repartitionByRange executes the input twice
     (sampler + shuffle) and the materialized probe frame feeds both via
     plan-cache substitution instead of being thrown away."""
-    from clickhouse_forecasting_spark.operators.ranking import dispatch_small
+    from clickhouse_forecasting_spark.operators import ranking as R
 
+    monkeypatch.setattr(R, "FASTPATH_MAX_ROWS", 10)
     df = spark.range(100).withColumnRenamed("id", "v")
     h = int(df._jdf.queryExecution().analyzed().semanticHash())
     foreign_key = ("ivfcells", "corpus-x", h)  # h at a non-tag position
     runtime_cache.cached_frame(df, foreign_key, lambda: df.limit(5))
     try:
-        assert dispatch_small(df, max_rows=10) is False  # 100 > 10: over cap
+        assert R.dispatch_small(df) is False  # 100 > 10: over cap
         app = spark.sparkContext.applicationId
         keys = _app_entries(spark)
         assert (app, *foreign_key) in keys, "foreign entry was dropped"
@@ -67,7 +68,7 @@ def test_dispatch_family_capped_fifo(spark):
     for i in range(R.DISPATCH_CACHE_MAX + 5):
         df = spark.range(i + 1).selectExpr(f"id + {i} AS v{i}")
         hashes.append(int(df._jdf.queryExecution().analyzed().semanticHash()))
-        assert R.dispatch_small(df, max_rows=1_000_000) is True
+        assert R.dispatch_small(df) is True
     try:
         live = [k for k in _app_entries(spark) if "dispatch" in k]
         assert len(live) == R.DISPATCH_CACHE_MAX

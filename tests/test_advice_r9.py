@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from clickhouse_forecasting_spark import runtime_cache as rc
 from clickhouse_forecasting_spark.functions.dedup import numeric_signatures
 from clickhouse_forecasting_spark.functions.similarity import ivf_exact_cells
+from clickhouse_forecasting_spark.operators import ranking as RK
 from clickhouse_forecasting_spark.operators.ranking import dispatch_small
 
 
@@ -80,23 +81,25 @@ def test_released_ivf_key_retrains(emb):
     rc.release(token)
 
 
-def test_dispatch_persists_are_registered_and_releasable(spark):
+def test_dispatch_persists_are_registered_and_releasable(spark, monkeypatch):
     """ADVICE r8 (ranking.py): the routing persists register under the
     "dispatch" tag — observable via entries(), reused per distinct plan,
     dropped by release("dispatch"); the over-cap path leaves no entry."""
     df = spark.range(100).withColumn("g", F.col("id") % 5)
     before = sum(1 for k in rc.entries() if "dispatch" in k)
-    assert dispatch_small(df, max_rows=1000) is True
+    monkeypatch.setattr(RK, "FASTPATH_MAX_ROWS", 1000)
+    assert dispatch_small(df) is True
     mid = sum(1 for k in rc.entries() if "dispatch" in k)
     assert mid == before + 1
-    assert dispatch_small(df, max_rows=1000) is True  # same plan: same entry
+    assert dispatch_small(df) is True  # same plan: same entry
     assert sum(1 for k in rc.entries() if "dispatch" in k) == mid
     dropped = rc.release("dispatch")
     assert dropped >= 1
     assert sum(1 for k in rc.entries() if "dispatch" in k) == 0
 
     big = spark.range(5000)
-    assert dispatch_small(big, max_rows=10) is False
+    monkeypatch.setattr(RK, "FASTPATH_MAX_ROWS", 10)
+    assert dispatch_small(big) is False
     # over-cap (r12, ADVICE r11): the probe entry is KEPT — the
     # distributed fallback's repartitionByRange runs the input through
     # a sampler job AND the shuffle, and both read the materialized

@@ -173,9 +173,10 @@ def test_backtest_fanout_width_survives_aqe(spark):
 
 def test_series_proportional_fanout_is_input_derived(spark, monkeypatch):
     """r12: the scale queries size the fit stage from the SERIES COUNT
-    (env-overridable target per partition), never the core count — and
+    (SERIES_PER_PART target per partition), never the core count — and
     an explicit fanout_partitions is respected end-to-end by the
     batched fit stage (the knob the formula feeds)."""
+    from clickhouse_forecasting_spark.forecast import forecaster
     from clickhouse_forecasting_spark.forecast.forecaster import (
         series_proportional_fanout,
     )
@@ -184,9 +185,9 @@ def test_series_proportional_fanout_is_input_derived(spark, monkeypatch):
     assert series_proportional_fanout(1) == 1
     assert series_proportional_fanout(192) == 1
     assert series_proportional_fanout(193) == 2
-    monkeypatch.setenv("SPARK_GRAFT_SERIES_PER_PART", "100")
+    monkeypatch.setattr(forecaster, "SERIES_PER_PART", 100)
     assert series_proportional_fanout(2500) == 25
-    monkeypatch.delenv("SPARK_GRAFT_SERIES_PER_PART")
+    monkeypatch.undo()
     seriesgen.register(spark)
     df = (
         spark.read.format("seriesgen")

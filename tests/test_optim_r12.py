@@ -13,11 +13,18 @@
 3. encoding_advisor_lineitem's footer key bounds fold across EVERY file
    of a multi-file lineitem.parquet/ directory (the single-file read
    returned None there and silently fell back to the sampler route),
-   and the advisor's rows are unchanged by the split.
+   and the advisor's rows are unchanged by the split.  A footer without
+   statistics returns None, and the advisor logs its fallback to the
+   sampled ranged route and still returns the same rows.
+4. stream_lateness_profile's CDF fold in its worst case: every lateness
+   value distinct, so the distinct-value frame is fact-grain and the
+   dispatch cap routes it to the ranged machinery; the result (and the
+   empty-table result) equals the DuckDB twin.
 """
 
 from __future__ import annotations
 
+import logging
 import os
 
 from clickhouse_forecasting_spark.operators.graph import (
@@ -66,7 +73,25 @@ def test_components_star_releases_round_intermediates(spark):
     assert len(leaked) <= 2, f"round intermediates leaked: {leaked}"
 
 
-def test_key_bounds_fold_multi_file_dataset(spark, sf_dir, tmp_path):
+def _info_records(caplog, prefix: str) -> list[str]:
+    return [
+        r.getMessage() for r in caplog.records
+        if r.name == "clickhouse_forecasting_spark"
+        and r.getMessage().startswith(prefix)
+    ]
+
+
+def _star_copy(sf_dir, dest, replace: str):
+    """``dest`` holding symlinks to every table of ``sf_dir`` except
+    ``replace``, which the caller writes."""
+    dest.mkdir()
+    for name in os.listdir(sf_dir):
+        if name != replace:
+            os.symlink(os.path.join(sf_dir, name), dest / name)
+    return dest
+
+
+def test_key_bounds_fold_multi_file_dataset(spark, sf_dir, tmp_path, caplog):
     import pyarrow.parquet as pq
 
     from clickhouse_forecasting_spark import queries as _q
@@ -77,11 +102,7 @@ def test_key_bounds_fold_multi_file_dataset(spark, sf_dir, tmp_path):
     keys = table.column("l_orderkey").to_pylist()
     # a copy of the star whose lineitem is a 2-file dataset directory,
     # split so neither file alone holds both bounds
-    split_dir = tmp_path / "sf"
-    split_dir.mkdir()
-    for name in os.listdir(sf_dir):
-        if name != "lineitem.parquet":
-            os.symlink(os.path.join(sf_dir, name), split_dir / name)
+    split_dir = _star_copy(sf_dir, tmp_path / "sf", "lineitem.parquet")
     li_dir = split_dir / "lineitem.parquet"
     li_dir.mkdir()
     half = table.num_rows // 2
@@ -98,4 +119,54 @@ def test_key_bounds_fold_multi_file_dataset(spark, sf_dir, tmp_path):
         return sorted(
             _q.q_encoding_advisor_lineitem(spark, str(d)).collect())
 
-    assert rows(split_dir) == rows(sf_dir)
+    want = rows(sf_dir)
+    assert rows(split_dir) == want
+
+    # a footer without statistics: no bounds, the advisor logs its
+    # fallback to the sampled ranged route and returns the same rows
+    nostats_dir = _star_copy(sf_dir, tmp_path / "nostats", "lineitem.parquet")
+    nostats = nostats_dir / "lineitem.parquet"
+    pq.write_table(table, nostats, write_statistics=False)
+    assert _parquet_key_bounds(str(nostats), "l_orderkey") is None
+    caplog.set_level(logging.INFO, logger="clickhouse_forecasting_spark")
+    caplog.clear()
+    assert rows(nostats_dir) == want
+    assert len(_info_records(caplog, "encoding_advisor_lineitem:")) == 1
+
+
+def test_lateness_cdf_distinct_worst_case(spark, tmp_path, monkeypatch, caplog):
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from clickhouse_forecasting_spark import queries as _q
+    from clickhouse_forecasting_spark.operators import ranking as RK
+    from clickhouse_forecasting_spark.queries import _LATENESS_SQL
+
+    n = 40
+    t0 = 1_700_000_000_000_000
+    # event 0 carries the latest timestamp, so event i arrives i * 7 s
+    # late: n distinct lateness values, some of them over 60 s
+    cases = {"distinct": [t0 - i * 7_000_000 for i in range(n)], "empty": []}
+    monkeypatch.setattr(RK, "FASTPATH_MAX_ROWS", n - 1)
+    caplog.set_level(logging.INFO, logger="clickhouse_forecasting_spark")
+    for name, us in cases.items():
+        d = tmp_path / name
+        d.mkdir()
+        pq.write_table(
+            pa.table({
+                "event_id": pa.array(range(len(us)), pa.int64()),
+                "ts": pa.array(us, pa.timestamp("us")),
+            }),
+            d / "events.parquet",
+        )
+        caplog.clear()
+        got = [tuple(r) for r in _q.q_stream_lateness_profile(spark, str(d)).collect()]
+        con = duckdb.connect()
+        con.execute(f"CREATE VIEW events AS SELECT * FROM '{d}/events.parquet'")
+        assert got == con.execute(_LATENESS_SQL).fetchall(), name
+        route = "distributed" if us else "fast"
+        assert _info_records(caplog, "dispatch:") == [
+            f"dispatch: caller=global_running_sum rows={len(us)} cap={n - 1}"
+            f" route={route}"
+        ], name

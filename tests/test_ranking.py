@@ -9,6 +9,8 @@ detector classifies as bounded).
 
 from __future__ import annotations
 
+import logging
+
 import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
@@ -319,9 +321,7 @@ def test_bounded_rows_fastpath_matches_grouped(spark, docs):
     from clickhouse_forecasting_spark.plans import bounded_key_fanins
 
     d = docs.select("doc_id", "lang", "n_chars")
-    fast = RK.bounded_rows_row_number(
-        d, ["lang"], ["n_chars", "doc_id"], "rn", max_rows=10_000_000
-    )
+    fast = RK.bounded_rows_row_number(d, ["lang"], ["n_chars", "doc_id"], "rn")
     slow = RK.grouped_row_number(d, ["lang"], ["n_chars", "doc_id"], "rn")
     ref = d.withColumn(
         "rn",
@@ -341,14 +341,15 @@ def test_bounded_rows_fastpath_matches_grouped(spark, docs):
     assert bounded_key_fanins(fast) == []
 
 
-def test_bounded_rows_fastpath_refuses_oversized_input(spark):
+def test_bounded_rows_fastpath_refuses_oversized_input(spark, monkeypatch):
     """Negative control: the fast path's in-plan assert fires on a frame
-    larger than max_rows — it cannot silently fan a fact into |domain|
-    tasks."""
+    larger than FASTPATH_MAX_ROWS — it cannot silently fan a fact into
+    |domain| tasks."""
     df = spark.range(1000).select(
         (F.col("id") % 5).alias("g"), F.col("id").alias("v")
     )
-    bad = RK.bounded_rows_row_number(df, ["g"], ["v"], max_rows=10)
+    monkeypatch.setattr(RK, "FASTPATH_MAX_ROWS", 10)
+    bad = RK.bounded_rows_row_number(df, ["g"], ["v"])
     # count() alone prunes the window (row-preserving, output unused) and
     # with it the fan-in the guard exists to police — no window, no risk.
     # Any plan that EXECUTES the window keeps the assert, because the
@@ -359,15 +360,31 @@ def test_bounded_rows_fastpath_refuses_oversized_input(spark):
         bad.select("rn").collect()
 
 
-def test_dispatch_routes_by_size(spark):
-    """grouped_row_number(dispatch_max_rows=...) picks the plain-window
-    fast path under the cap and the distributed machinery above it —
-    identical values either way."""
+def _dispatch_log(caplog) -> list[str]:
+    return [
+        r.getMessage() for r in caplog.records
+        if r.name == "clickhouse_forecasting_spark"
+        and r.getMessage().startswith("dispatch:")
+    ]
+
+
+def test_dispatch_routes_by_size(spark, monkeypatch, caplog):
+    """grouped_row_number(dispatch=True) picks the plain-window fast path
+    under FASTPATH_MAX_ROWS and the distributed machinery above it —
+    identical values either way, one INFO record per routing decision."""
+    caplog.set_level(logging.INFO, logger="clickhouse_forecasting_spark")
     df = spark.range(200).select(
         (F.col("id") % 4).alias("g"), F.col("id").alias("v")
     )
-    fast = RK.grouped_row_number(df, ["g"], ["v"], dispatch_max_rows=1000)
-    slow = RK.grouped_row_number(df, ["g"], ["v"], dispatch_max_rows=100)
+    monkeypatch.setattr(RK, "FASTPATH_MAX_ROWS", 1000)
+    fast = RK.grouped_row_number(df, ["g"], ["v"], dispatch=True)
+    monkeypatch.setattr(RK, "FASTPATH_MAX_ROWS", 100)
+    slow = RK.grouped_row_number(df, ["g"], ["v"], dispatch=True)
+    assert _dispatch_log(caplog) == [
+        "dispatch: caller=grouped_row_number rows=200 cap=1000 route=fast",
+        "dispatch: caller=grouped_row_number rows=200 cap=100"
+        " route=distributed",
+    ]
     # fast plan carries the rowcap marker; the machinery plan does not
     fast_plan = fast._jdf.queryExecution().executedPlan().toString()
     slow_plan = slow._jdf.queryExecution().executedPlan().toString()
@@ -389,9 +406,7 @@ def test_bounded_rows_running_sum_matches_grouped_and_window(spark):
         v = None if (g == 1 or i % 7 == 3) else i * 1.0
         rows.append((g, i, v))
     df = spark.createDataFrame(rows, "g int, o int, v double")
-    fast = RK.bounded_rows_running_sum(
-        df, ["g"], ["o"], ["v"], ["cum"], max_rows=10_000
-    )
+    fast = RK.bounded_rows_running_sum(df, ["g"], ["o"], ["v"], ["cum"])
     slow = RK.grouped_running_sum(df, ["g"], ["o"], ["v"], ["cum"])
     ref = df.withColumn(
         "cum",
@@ -406,36 +421,55 @@ def test_bounded_rows_running_sum_matches_grouped_and_window(spark):
         assert have == want
 
 
-def test_bounded_rows_running_sum_refuses_oversized_input(spark):
+def test_bounded_rows_running_sum_refuses_oversized_input(spark, monkeypatch):
     df = spark.range(500).select(
         (F.col("id") % 3).alias("g"), F.col("id").alias("o"),
         F.col("id").cast("double").alias("v"),
     )
-    bad = RK.bounded_rows_running_sum(
-        df, ["g"], ["o"], ["v"], ["cum"], max_rows=50
-    )
+    monkeypatch.setattr(RK, "FASTPATH_MAX_ROWS", 50)
+    bad = RK.bounded_rows_running_sum(df, ["g"], ["o"], ["v"], ["cum"])
     with pytest.raises(Exception, match="max_rows"):
         bad.collect()
 
 
-def test_grouped_running_sum_dispatch_routes_by_size(spark):
-    df = spark.range(300).select(
+def _both_routes(monkeypatch, df, build):
+    """``build(df)`` on the fast route (FASTPATH_MAX_ROWS == the frame's
+    row count, the inclusive edge) and on the distributed route (one
+    below it); each plan is checked for the rowcap marker."""
+    n = df.count()
+    out = []
+    for cap, marked in ((n, True), (n - 1, False)):
+        monkeypatch.setattr(RK, "FASTPATH_MAX_ROWS", cap)
+        got = build(df)
+        plan = got._jdf.queryExecution().executedPlan().toString()
+        assert ("__bounded_rowcap_asserted" in plan) == marked, (n, cap)
+        out.append(got)
+    return out
+
+
+def test_grouped_running_sum_dispatch_routes_by_size(spark, monkeypatch):
+    """Both routes match the plain SQL window, on a 300-row frame and on
+    the degenerate empty and one-row frames."""
+    base = spark.range(300).select(
         (F.col("id") % 5).alias("g"), F.col("id").alias("o"),
         F.col("id").cast("double").alias("v"),
     )
-    fast = RK.grouped_running_sum(
-        df, ["g"], ["o"], ["v"], ["cum"], dispatch_max_rows=1000
+    w = (
+        Window.partitionBy("g").orderBy("o")
+        .rowsBetween(Window.unboundedPreceding, 0)
     )
-    slow = RK.grouped_running_sum(
-        df, ["g"], ["o"], ["v"], ["cum"], dispatch_max_rows=100
-    )
-    fast_plan = fast._jdf.queryExecution().executedPlan().toString()
-    slow_plan = slow._jdf.queryExecution().executedPlan().toString()
-    assert "__bounded_rowcap_asserted" in fast_plan
-    assert "__bounded_rowcap_asserted" not in slow_plan
-    a = {(r.g, r.o): r.cum for r in fast.collect()}
-    b = {(r.g, r.o): r.cum for r in slow.collect()}
-    assert a == b
+    for df in (base, base.where("o < 1"), base.where("o < 0")):
+        want = {
+            (r.g, r.o): r.cum
+            for r in df.withColumn("cum", F.sum("v").over(w)).collect()
+        }
+        for got in _both_routes(
+            monkeypatch, df,
+            lambda d: RK.grouped_running_sum(
+                d, ["g"], ["o"], ["v"], ["cum"], dispatch=True
+            ),
+        ):
+            assert {(r.g, r.o): r.cum for r in got.collect()} == want
 
 
 def test_probe_rows_routing(spark):
@@ -451,60 +485,66 @@ def test_probe_rows_routing(spark):
     assert probe_rows(df.where("v < 0"), 5) == []  # empty is NOT overflow
 
 
-def test_global_primitives_dispatch_route_by_size(spark):
+def test_global_primitives_dispatch_route_by_size(spark, monkeypatch):
     """r11: the global total-order primitives gained the same
     size-adaptive dispatch the grouped forms have had since r7 — under
     the cap the assert-guarded plain window runs (rowcap marker in
-    plan), over it the ranged machinery — identical values either way,
-    including mixed-direction orders via ``ascending``."""
-    df = spark.range(300).select(
+    plan), over it the ranged machinery — and both routes match the
+    plain SQL window, including mixed-direction orders via
+    ``ascending``, on a 300-row frame and on empty and one-row frames."""
+    base = spark.range(300).select(
         F.col("id").alias("k"),
         (F.col("id") % 7).cast("double").alias("v"),
     )
+    by_v_desc = Window.orderBy(F.desc("v"), "k")
+    by_k = Window.orderBy("k")
     cases = [
         (
-            lambda cap: RK.global_row_number(
-                df, ["v", "k"], "rn", ascending=[False, True],
-                dispatch_max_rows=cap,
+            lambda df: RK.global_row_number(
+                df, ["v", "k"], "rn", ascending=[False, True], dispatch=True,
             ),
+            F.row_number().over(by_v_desc).cast("bigint"),
             "rn",
         ),
         (
-            lambda cap: RK.global_ntile(
+            lambda df: RK.global_ntile(
                 df, ["v", "k"], 5, col_name="t",
-                ascending=[False, True], dispatch_max_rows=cap,
+                ascending=[False, True], dispatch=True,
             ),
+            F.ntile(5).over(by_v_desc),
             "t",
         ),
         (
-            lambda cap: RK.global_running_sum(
-                df, ["k"], ["v"], ["cum"], dispatch_max_rows=cap
+            lambda df: RK.global_running_sum(
+                df, ["k"], ["v"], ["cum"], dispatch=True
             ),
+            F.sum("v").over(by_k.rowsBetween(Window.unboundedPreceding, 0)),
             "cum",
         ),
         (
-            lambda cap: RK.global_running_max(
-                df, ["k"], "v", "m", exclusive=True, dispatch_max_rows=cap
+            lambda df: RK.global_running_max(
+                df, ["k"], "v", "m", exclusive=True, dispatch=True
             ),
+            F.max("v").over(by_k.rowsBetween(Window.unboundedPreceding, -1)),
             "m",
         ),
     ]
-    for build, out in cases:
-        fast, slow = build(1000), build(100)
-        fast_plan = fast._jdf.queryExecution().executedPlan().toString()
-        slow_plan = slow._jdf.queryExecution().executedPlan().toString()
-        assert "__bounded_rowcap_asserted" in fast_plan, out
-        assert "__bounded_rowcap_asserted" not in slow_plan, out
-        a = {r.k: r[out] for r in fast.collect()}
-        b = {r.k: r[out] for r in slow.collect()}
-        assert a == b, out
+    for df in (base, base.where("k < 1"), base.where("k < 0")):
+        for build, sql_window, out in cases:
+            want = {r.k: r[out] for r in df.withColumn(out, sql_window).collect()}
+            for got in _both_routes(monkeypatch, df, build):
+                assert {r.k: r[out] for r in got.collect()} == want, out
 
 
-def test_bounded_global_fastpath_refuses_oversized_input(spark):
+def test_bounded_global_fastpath_refuses_oversized_input(spark, monkeypatch):
+    """Negative control: a probe that misroutes an oversized frame to the
+    global fast path still fails loudly on the in-plan rowcap assert."""
     df = spark.range(500).select(
         F.col("id").alias("k"), F.col("id").cast("double").alias("v")
     )
-    bad = RK.bounded_global_row_number(df, ["k"], "rn", max_rows=50)
+    monkeypatch.setattr(RK, "dispatch_small", lambda *a, **kw: True)
+    monkeypatch.setattr(RK, "FASTPATH_MAX_ROWS", 50)
+    bad = RK.global_row_number(df, ["k"], "rn", dispatch=True)
     with pytest.raises(Exception, match="max_rows"):
         bad.collect()
 
@@ -514,9 +554,7 @@ def test_bounded_global_running_sum_null_semantics(spark):
     — the fast path must reproduce the distributed NULL-carry exactly."""
     rows = [(0, None), (1, None), (2, 2.0), (3, None), (4, 4.0)]
     df = spark.createDataFrame(rows, "k int, v double")
-    fast = RK.global_running_sum(
-        df, ["k"], ["v"], ["cum"], dispatch_max_rows=1000
-    )
+    fast = RK.global_running_sum(df, ["k"], ["v"], ["cum"], dispatch=True)
     slow = RK.global_running_sum(df, ["k"], ["v"], ["cum"])
     want = {0: None, 1: None, 2: 2.0, 3: 2.0, 4: 6.0}
     for got in (fast, slow):
@@ -524,7 +562,7 @@ def test_bounded_global_running_sum_null_semantics(spark):
 
 
 def test_global_rank_dispatch_matches_window(spark):
-    """global_rank(dispatch_max_rows=...) threads dispatch into its
+    """global_rank(dispatch=True) threads dispatch into its
     internal per-key aggregate frames — values identical to the
     undispatched form and to the SQL window, both rank flavors, DESC."""
     df = spark.range(400).select(
@@ -532,8 +570,7 @@ def test_global_rank_dispatch_matches_window(spark):
     )
     for dense in (False, True):
         disp = RK.global_rank(
-            df, ["n"], "r", dense=dense, ascending=[False],
-            dispatch_max_rows=100_000,
+            df, ["n"], "r", dense=dense, ascending=[False], dispatch=True,
         )
         ref = df.withColumn(
             "r",
@@ -546,9 +583,13 @@ def test_global_rank_dispatch_matches_window(spark):
         assert a == b, dense
 
 
-def test_global_dispatch_rejects_expression_only_order(spark):
+def test_global_dispatch_rejects_expression_only_order(spark, monkeypatch):
+    """The guard-key check raises before the routing probe runs a job."""
+
+    def no_probe(*a, **kw):
+        raise AssertionError("probe ran before the order-key check")
+
+    monkeypatch.setattr(RK, "dispatch_small", no_probe)
     df = spark.range(10).select(F.col("id").alias("k"))
     with pytest.raises(ValueError, match="plain"):
-        RK.global_row_number(
-            df, [F.desc("k")], "rn", dispatch_max_rows=100
-        )
+        RK.global_row_number(df, [F.desc("k")], "rn", dispatch=True)

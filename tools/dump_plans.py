@@ -2,11 +2,16 @@
 
 Usage: python tools/dump_plans.py <tag> <suffix> <query> [query ...]
        (sf_dir from $SPARK_GRAFT_SF_DIR, default /root/testdata/sf0.1)
+
+Exchange ids are written as ``plan_id=N``: Spark numbers them from a
+session-wide counter, so the raw value shifts with whatever ran earlier in
+the session and two dumps of one plan would not compare equal with ``cmp``.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -56,6 +61,7 @@ def main() -> None:
                 failures.append(name)
                 continue
             txt = f"<no batch plan: {exc}>\n"
+        txt = re.sub(r"plan_id=\d+", "plan_id=N", txt)
         with open(path, "w") as fh:
             fh.write(f"# {name} @ {sf_dir} ({suffix})\n{txt}")
         print(f"wrote {path}", file=sys.stderr)
