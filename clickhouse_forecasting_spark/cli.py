@@ -30,10 +30,6 @@ def main(argv: list[str] | None = None) -> int:
     parser.add_argument("specific_tables", nargs="?", default=None, help="comma-separated table subset")
     parser.add_argument("--only-future", action="store_true", help="emit only strictly-future rows")
     parser.add_argument("--backend", default="auto", choices=["auto", "prophet", "fourier_ridge"])
-    parser.add_argument(
-        "--max-concurrent", type=int, default=1,
-        help="tables submitted concurrently (each under its own Spark job group)",
-    )
     args = parser.parse_args(argv)
 
     logger = configure_logging()
@@ -43,7 +39,7 @@ def main(argv: list[str] | None = None) -> int:
     tables = args.specific_tables.split(",") if args.specific_tables else None
     counters = run_forecast_pipeline(
         catalog, args.interval, specific_tables=tables, only_future=args.only_future,
-        backend=args.backend, max_concurrent=args.max_concurrent,
+        backend=args.backend,
     )
     print(counters.summary())
     return 0 if not counters.failed else 1

@@ -325,8 +325,13 @@ class SeriesForecaster:
         metrics = metric_columns(df.schema, axis=axis)
         if not metrics:
             raise ValueError("no forecastable metric columns")
-        long_df = unpivot_metrics(
-            df.withColumn(axis, F.to_date(F.col(axis))), metrics, axis=axis
-        ).dropna(subset=["ds"])
-        forecasts = self.transform_long(long_df)
+        forecasts = self.transform_long(wide_to_long(df, metrics, axis))
         return pivot_forecasts_wide(forecasts, metrics)
+
+
+def wide_to_long(df: DataFrame, metrics: list[str], axis: str = DATE_AXIS_COLUMN) -> DataFrame:
+    """A wide daily table as the fitter's long input (ds, metric, y): the
+    axis cast to a date, rows without a date dropped."""
+    return unpivot_metrics(
+        df.withColumn(axis, F.to_date(F.col(axis))), metrics, axis=axis
+    ).dropna(subset=["ds"])

@@ -24,6 +24,14 @@ distributed win is that thousands of series fit in parallel.
 
 from __future__ import annotations
 
+import ctypes
+import functools
+import glob
+import logging
+import os
+import threading
+from contextlib import contextmanager
+
 import numpy as np
 import pandas as pd
 
@@ -40,6 +48,74 @@ INTERVAL_HI_Q = 0.90
 # tiny ridge term: numerical conditioning only (lstsq handles the rest);
 # anything large visibly shrinks trend/seasonal amplitudes
 _RIDGE_ALPHA = 1e-6
+
+logger = logging.getLogger("clickhouse_forecasting_spark")
+
+
+@functools.lru_cache(maxsize=1)
+def _openblas_thread_calls():
+    """(get, set) thread-count calls of the OpenBLAS numpy links, or None.
+
+    numpy's wheels ship OpenBLAS in ``numpy.libs``; the library is already
+    loaded, so ``CDLL`` returns the live handle. The 64-bit-integer build
+    suffixes its symbols with ``64_``."""
+    libs = os.path.join(os.path.dirname(np.__file__), os.pardir, "numpy.libs")
+    for path in sorted(glob.glob(os.path.join(libs, "*openblas*.so*"))):
+        try:
+            lib = ctypes.CDLL(path)
+        except OSError:
+            continue
+        for prefix in ("openblas", "scipy_openblas"):
+            for suffix in ("64_", ""):
+                try:
+                    get = getattr(lib, f"{prefix}_get_num_threads{suffix}")
+                    set_ = getattr(lib, f"{prefix}_set_num_threads{suffix}")
+                except AttributeError:
+                    continue
+                get.argtypes, get.restype = [], ctypes.c_int
+                set_.argtypes, set_.restype = [ctypes.c_int], None
+                return get, set_
+    logger.info("no OpenBLAS thread control found; BLAS thread count left as is")
+    return None
+
+
+class _SingleBlasThread:
+    """Process-wide OpenBLAS pin to one thread, re-entrant across threads:
+    the first entry saves the count and sets 1, the last exit restores it.
+
+    LAPACK's least-squares solve returns different last-ulp coefficients
+    for one BLAS thread and for several, so a fit must run at the thread
+    count Spark's Python workers use (``OMP_NUM_THREADS=1``) for an
+    in-process fit to reproduce a worker's output bit for bit."""
+
+    def __init__(self):
+        self._lock = threading.Lock()
+        self._depth = 0
+        self._saved = 1
+
+    @contextmanager
+    def __call__(self):
+        calls = _openblas_thread_calls()
+        if calls is None:
+            yield
+            return
+        get, set_ = calls
+        with self._lock:
+            if self._depth == 0:
+                self._saved = get()
+                if self._saved != 1:
+                    set_(1)
+            self._depth += 1
+        try:
+            yield
+        finally:
+            with self._lock:
+                self._depth -= 1
+                if self._depth == 0 and self._saved != 1:
+                    set_(self._saved)
+
+
+single_blas_thread = _SingleBlasThread()
 
 
 class AdditiveForecastModel:
@@ -144,6 +220,7 @@ def make_future_axis(history_ds: pd.Series, periods: int) -> pd.DataFrame:
     return pd.DataFrame({"ds": pd.concat([hist, pd.Series(fut)], ignore_index=True)})
 
 
+@single_blas_thread()
 def fit_predict_frame(
     pdf: pd.DataFrame,
     periods: int,
@@ -174,6 +251,7 @@ def fit_predict_frame(
     return model.predict(future)
 
 
+@single_blas_thread()
 def batched_fit_predict_long(
     pdf: pd.DataFrame,
     key_cols: list[str],
@@ -206,6 +284,10 @@ def batched_fit_predict_long(
 
     Input: long frame (key_cols..., ds, y). Output: (key_cols..., ds
     [datetime.date], yhat, yhat_lower, yhat_upper), ready for Arrow.
+
+    Both fit entry points run with OpenBLAS pinned to one thread (see
+    ``single_blas_thread``), so an in-process call matches a Spark
+    worker's output bit for bit whatever the caller's thread count.
     """
     out_cols = [*key_cols, "ds", "yhat", "yhat_lower", "yhat_upper"]
     empty = pd.DataFrame({c: pd.Series(dtype=object) for c in out_cols})

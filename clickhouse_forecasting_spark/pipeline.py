@@ -1,4 +1,4 @@
-"""Per-table orchestration — the engine's equivalent of the reference main().
+"""Catalog orchestration — the engine's equivalent of the reference main().
 
 Reproduces the observable run semantics of forecast_script.py:220-247:
 enumerate tables (or take an explicit list), skip derived
@@ -6,86 +6,148 @@ enumerate tables (or take an explicit list), skip derived
 drop+recreate the forecast table, fit+predict every metric, sink wide rows
 keyed by date, and log a run summary.
 
+Execution shape: the reference loops one table at a time, and a per-table
+loop pays Spark job latency per table (an emptiness probe, the write, a
+readback), which dominates the run at small model cost. Here a run is
+three steps:
+
+1. vet every table on the driver (name, existence, date axis, metric
+   columns — schema only);
+2. unpivot every candidate table, union the long frames keyed by
+   ``table`` and fit them in ONE keyed ``mapInPandas`` stage
+   (``SeriesForecaster.transform_long(group_cols=["table"])``); the
+   result is persisted, and one aggregate over it both materialises it
+   and yields the per-(table, metric) forecast counts. Each table's
+   input row count is observed (``DataFrame.observe``) on its source
+   branch in the same job;
+3. pivot and write each non-empty table from the persisted frame, the
+   writes submitted from a thread pool of min(#tables, defaultParallelism)
+   whose threads inherit the caller's Spark local properties.
+
+Per table that is the input's schema read plus the write's jobs; per run,
+the fit's one aggregate. No emptiness probe and no readback of the
+written table run.
+
 Differences by design (all documented in SURVEY §7.5 / §2.5):
-- tables are processed through Spark, so each table's (metric-count) series
-  fit in parallel; independent tables can ALSO run concurrently via
-  ``max_concurrent`` (r7 VERDICT #7) — each table is submitted from its own
-  thread under its own Spark job group, so the cluster stays busy between
-  small tables instead of idling through a sequential driver loop;
 - the non-``bucket_`` naming crash of the reference (:156) is fixed — the
   C6 rule (catalog.forecast_table_name) is used everywhere;
-- counters are disjoint; failed metrics are reported per table.
+- counters are disjoint and folded in input order, so they and the summary
+  line do not depend on write completion order; failed metrics are reported
+  per table.
 """
 
 from __future__ import annotations
 
 import logging
+from concurrent.futures import ThreadPoolExecutor
+from functools import reduce
+from typing import Callable
 
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
+from . import runtime_cache
 from .catalog import ParquetCatalog, forecast_table_name, is_forecast_output
 from .forecast import SeriesForecaster
-from .relational import ordered_for_sink
+from .forecast.forecaster import wide_to_long
+from .relational import ordered_for_sink, pivot_forecasts_wide
 from .schema import DATE_AXIS_COLUMN, metric_columns, skipped_columns
 from .telemetry import RunCounters
 
 logger = logging.getLogger("clickhouse_forecasting_spark")
 
 
-def _process_table(
-    catalog: ParquetCatalog, forecaster: SeriesForecaster, table: str
-) -> dict:
-    """One table through the full reference flow; returns a result record
-    the caller folds into RunCounters IN INPUT ORDER (so counters and the
-    summary line are deterministic even when tables run concurrently).
-
-    status: skipped | failed | ok;  ok carries existed + failed_metrics."""
+def _vet_table(catalog: ParquetCatalog, table: str) -> tuple[str, DataFrame | None, list[str]]:
+    """Driver-side checks of one input table: (status, frame, metrics).
+    status is skipped | failed | candidate; only a candidate has a frame."""
     if is_forecast_output(table):  # R14 (forecast_script.py:234-236)
-        return {"table": table, "status": "skipped"}
-
+        return "skipped", None, []
     logger.info("processing table %s", table)
     if not catalog.table_exists(table):
         logger.warning("table %s does not exist", table)
-        return {"table": table, "status": "failed"}
+        return "failed", None, []
     df = catalog.table(table)
     if DATE_AXIS_COLUMN not in df.columns:
         # input contract: a `date` axis column is required (README.md:33)
         logger.warning("table %s has no '%s' column", table, DATE_AXIS_COLUMN)
-        return {"table": table, "status": "failed"}
+        return "failed", None, []
     for name, typ in skipped_columns(df.schema):
         logger.info("skipping column with non-forecastable type: %s: %s", name, typ)
     metrics = metric_columns(df.schema)
-    out_name = forecast_table_name(table)
-    existed = catalog.table_exists(out_name)
-
     if not metrics:
         logger.warning("no forecastable columns in %s", table)
-        return {"table": table, "status": "failed"}
-    if df.select(DATE_AXIS_COLUMN).isEmpty():  # R3 (forecast_script.py:160-163)
-        logger.warning("missing data in %s", table)
-        return {"table": table, "status": "failed"}
+        return "failed", None, []
+    return "candidate", df, metrics
 
-    wide = forecaster.transform(df)
-    catalog.write_table(ordered_for_sink(wide, metrics), out_name, order_by=DATE_AXIS_COLUMN)
 
-    # M4 surfacing: metrics whose series failed have all-NULL value columns
-    null_counts = (
-        catalog.table(out_name)
-        .agg(*[F.count(m).alias(m) for m in metrics])
-        .collect()[0]
-        .asDict()
+def _catalog_forecasts(
+    forecaster: SeriesForecaster, candidates: dict[str, tuple[DataFrame, list[str]]]
+) -> tuple[DataFrame, dict[str, Observation]]:
+    """Every candidate table unpivoted, unioned under a ``table`` key and
+    fitted in one stage: the long forecast frame (table, metric, ds, yhat,
+    yhat_lower, yhat_upper) and, per table, an observation of its source
+    row count, filled by the frame's first action."""
+    observed: dict[str, Observation] = {}
+    branches = []
+    for t, (df, metrics) in candidates.items():
+        observed[t] = Observation()
+        src = df.observe(observed[t], F.count(F.lit(1)).alias("rows"))
+        branches.append(
+            wide_to_long(src, metrics).select(F.lit(t).alias("table"), "ds", "metric", "y")
+        )
+    long_df = reduce(DataFrame.unionByName, branches)
+    return forecaster.transform_long(long_df, group_cols=["table"]), observed
+
+
+def _process_table(
+    catalog: ParquetCatalog, forecasts: DataFrame, table: str, metrics: list[str]
+) -> None:
+    """Pivot one table's forecasts out of the run's long forecast frame and
+    sink them to ``bucket_forecast_*`` (drop + recreate, clustered by date)."""
+    wide = pivot_forecasts_wide(forecasts.filter(F.col("table") == table), metrics)
+    catalog.write_table(
+        ordered_for_sink(wide, metrics), forecast_table_name(table), order_by=DATE_AXIS_COLUMN
     )
-    failed_metrics = [m for m, n in null_counts.items() if n == 0]
-    if failed_metrics:
-        logger.error("series failed for %s: %s", table, failed_metrics)
 
-    logger.info("wrote %s", out_name)
-    return {
-        "table": table,
-        "status": "ok",
-        "existed": existed,
-        "failed_metrics": failed_metrics,
-    }
+
+def _sink_tables(
+    catalog: ParquetCatalog,
+    forecasts: DataFrame,
+    metrics: dict[str, list[str]],
+    release: Callable[[str], None],
+) -> dict[str, bool]:
+    """Write every table of ``metrics`` (table -> its metrics) from a thread
+    pool of min(#tables, defaultParallelism); ``release(table)`` runs after
+    each table's write. The pool threads inherit the caller's Spark local
+    properties (job group, scheduler pool). Returns, per table, whether its
+    output existed before the write."""
+    existed: dict[str, bool] = {}
+
+    def _sink(group: list[str]) -> None:
+        for t in group:
+            out_name = forecast_table_name(t)
+            existed[t] = catalog.table_exists(out_name)
+            try:
+                _process_table(catalog, forecasts, t, metrics[t])
+            finally:
+                release(t)
+            logger.info("wrote %s", out_name)
+
+    # tables sharing an output name are written by one task, in input order
+    groups: dict[str, list[str]] = {}
+    for t in metrics:
+        groups.setdefault(forecast_table_name(t), []).append(t)
+    if groups:
+        width = min(len(groups), catalog.spark.sparkContext.defaultParallelism)
+        with ThreadPoolExecutor(max_workers=width) as pool:
+            futures = [
+                pool.submit(inheritable_thread_target(catalog.spark)(_sink), g)
+                for g in groups.values()
+            ]
+            for f in futures:
+                f.result()
+    return existed
 
 
 def run_forecast_pipeline(
@@ -94,16 +156,17 @@ def run_forecast_pipeline(
     specific_tables: list[str] | None = None,
     only_future: bool = False,
     backend: str = "auto",
-    max_concurrent: int = 1,
     release_caches: bool = False,
 ) -> RunCounters:
-    """``max_concurrent`` > 1 submits that many tables at once, each from
-    its own thread under its own Spark job group (Spark job submission is
-    thread-safe; local properties are thread-scoped, so cancellation and
-    the UI stay per-table). Results fold into the counters in INPUT
-    order, so counter contents and the summary line match the sequential
-    run exactly — only wall-clock changes. Table-level log lines may
-    interleave across tables under concurrency.
+    """Forecast every table of the catalog (or ``specific_tables``) into
+    its ``bucket_forecast_*`` table; returns the run's counters.
+
+    A skipped, missing, date-less, metric-less or empty table fails alone
+    and gets no output. A metric whose series failed is listed in
+    ``failed_metrics``; its sink columns are all NULL. One INFO record per
+    fitted table reads ``table=… rows=… series=… failed=… out=…``: input
+    rows, metric series, series without a forecast, and the table written
+    (``-`` when none).
 
     ``release_caches=True`` drops every ``runtime_cache`` entry keyed by a
     table's name as that table finishes — the unpersist-after-consume hook
@@ -114,50 +177,68 @@ def run_forecast_pipeline(
     tables = specific_tables if specific_tables else catalog.list_tables()
     forecaster = SeriesForecaster(interval=interval, only_future=only_future, backend=backend)
 
-    def _maybe_release(table: str) -> None:
+    def _release(table: str) -> None:
         if release_caches:
-            from . import runtime_cache
-
             n = runtime_cache.release(table)
             if n:
                 logger.info("released %d cached stage(s) for %s", n, table)
 
     # R15 exact-membership selection happens in the `tables` assignment
     # above (the reference's substring-membership quirk at :231 is a
-    # documented deviation — we take the explicit list as-is)
-    if int(max_concurrent) > 1 and len(tables) > 1:
-        from concurrent.futures import ThreadPoolExecutor
+    # documented deviation — we take the explicit list as-is). A name
+    # listed twice is fitted and written once, and counted twice.
+    status: dict[str, str] = {}
+    candidates: dict[str, tuple[DataFrame, list[str]]] = {}
+    for t in tables:
+        if t not in status:
+            status[t], df, metrics = _vet_table(catalog, t)
+            if df is not None:
+                candidates[t] = (df, metrics)
 
-        sc = catalog.spark.sparkContext
-
-        def _run(table: str) -> dict:
-            sc.setJobGroup(
-                f"forecast:{table}", f"forecast pipeline table {table}"
+    failed_metrics: dict[str, list[str]] = {}  # per table to write
+    existed: dict[str, bool] = {}
+    if candidates:
+        forecasts, observed = _catalog_forecasts(forecaster, candidates)
+        forecasts.persist()
+        try:
+            # the fit's one action: it fills the cache and the observations.
+            # M4 surfacing: a failed series has no forecast rows
+            per_series = forecasts.groupBy("table", "metric").agg(F.count("yhat").alias("n"))
+            counts = {(r["table"], r["metric"]): r["n"] for r in per_series.collect()}
+            for t, (_, metrics) in candidates.items():
+                rows = observed[t].get["rows"]
+                failed = [m for m in metrics if counts.get((t, m), 0) == 0]
+                if rows == 0:  # R3 (forecast_script.py:160-163)
+                    logger.warning("missing data in %s", t)
+                    status[t] = "failed"
+                else:
+                    status[t] = "ok"
+                    failed_metrics[t] = failed
+                    if failed:
+                        logger.error("series failed for %s: %s", t, failed)
+                logger.info(
+                    "table=%s rows=%d series=%d failed=%d out=%s",
+                    t, rows, len(metrics), len(failed), forecast_table_name(t) if rows else "-",
+                )
+            existed = _sink_tables(
+                catalog, forecasts, {t: candidates[t][1] for t in failed_metrics}, _release
             )
-            try:
-                return _process_table(catalog, forecaster, table)
-            finally:
-                sc.setJobGroup("", "")
-                _maybe_release(table)
+        finally:
+            forecasts.unpersist()
 
-        with ThreadPoolExecutor(max_workers=int(max_concurrent)) as pool:
-            results = list(pool.map(_run, tables))
-    else:
-        results = []
-        for t in tables:
-            results.append(_process_table(catalog, forecaster, t))
-            _maybe_release(t)
-
-    for r in results:
-        if r["status"] == "skipped":
-            counters.skipped.append(r["table"])
-        elif r["status"] == "failed":
-            counters.failed.append(r["table"])
+    for t in status:
+        if t not in failed_metrics:
+            _release(t)
+    for t in tables:
+        if status[t] == "skipped":
+            counters.skipped.append(t)
+        elif status[t] == "failed":
+            counters.failed.append(t)
         else:
-            if r["failed_metrics"]:
-                counters.failed_metrics[r["table"]] = r["failed_metrics"]
-            (counters.updated if r["existed"] else counters.new).append(r["table"])
-            counters.successful.append(r["table"])
+            if failed_metrics[t]:
+                counters.failed_metrics[t] = failed_metrics[t]
+            (counters.updated if existed[t] else counters.new).append(t)
+            counters.successful.append(t)
 
     logger.info(counters.summary())
     return counters

@@ -34,9 +34,9 @@ from pyspark.sql import DataFrame
 _FRAMES: dict[tuple, DataFrame] = {}
 # small driver-side artifacts (e.g. trained centroids), same key shape
 _VALUES: dict[tuple, object] = {}
-# Registry mutations come from worker threads too (pipeline
-# max_concurrent>1 with release_caches=True releases per-table tokens
-# while sibling threads register via cached_frame — ADVICE r10: unlocked
+# Registry mutations come from worker threads too (the pipeline's sink
+# pool with release_caches=True releases per-table tokens while sibling
+# threads register via cached_frame — ADVICE r10: unlocked
 # iterate-and-mutate risks "dictionary changed size during iteration" /
 # lost entries). One module lock guards every _FRAMES/_VALUES touch;
 # build() runs OUTSIDE it (it triggers Spark jobs and may re-enter).

@@ -107,8 +107,8 @@ def test_batched_prep_poisoned_partition_fails_alone():
 
 
 def test_pipeline_release_caches_flag(spark, tmp_path):
-    """3-table concurrent run with release_caches=True: table-keyed cache
-    entries are gone afterward; the default (False) run leaves them."""
+    """3-table run with release_caches=True: table-keyed cache entries are
+    gone afterward; the default (False) run leaves them."""
     from clickhouse_forecasting_spark.catalog import ParquetCatalog
     from clickhouse_forecasting_spark.pipeline import run_forecast_pipeline
 
@@ -137,7 +137,6 @@ def test_pipeline_release_caches_flag(spark, tmp_path):
     register_stages()
     run_forecast_pipeline(
         cat, 5, specific_tables=tables, backend="fourier_ridge",
-        max_concurrent=3,
     )
     app = spark.sparkContext.applicationId
     assert all((app, "stage", t) in runtime_cache.entries() for t in tables), (
@@ -146,7 +145,7 @@ def test_pipeline_release_caches_flag(spark, tmp_path):
 
     counters = run_forecast_pipeline(
         cat, 5, specific_tables=tables, backend="fourier_ridge",
-        max_concurrent=3, release_caches=True,
+        release_caches=True,
     )
     assert sorted(counters.successful) == sorted(tables)
     left = [k for k in runtime_cache.entries() if k[0] == app and "stage" in k]

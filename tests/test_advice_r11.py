@@ -11,7 +11,7 @@
 3. pagerank(max_driver_nodes=0) on an empty graph does not leak a
    persisted empty-nodes frame.
 4. runtime_cache survives concurrent cached_frame/release from worker
-   threads (pipeline max_concurrent>1 with release_caches=True) without
+   threads (the pipeline's sink pool with release_caches=True) without
    "dictionary changed size during iteration" or lost entries.
 """
 

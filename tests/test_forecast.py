@@ -133,6 +133,47 @@ def test_batched_matches_per_series_bit_for_bit():
         assert {"gapped", "yearly", "const", "poison"}.issubset(got)
 
 
+def test_in_process_fit_matches_worker_under_multithreaded_blas(spark):
+    """A Spark worker fits with one BLAS thread (OMP_NUM_THREADS=1). An
+    in-process fit must give the same bits while the caller's OpenBLAS runs
+    several threads: LAPACK's least-squares solve differs in the last ulp
+    between one thread and several, so the fit pins one thread and then
+    restores the caller's count."""
+    from clickhouse_forecasting_spark.forecast import model
+
+    calls = model._openblas_thread_calls()
+    if calls is None:
+        pytest.skip("numpy here exposes no OpenBLAS thread control")
+    get, set_ = calls
+    rng = np.random.default_rng(812)
+    pdf = _series(n=730, start="2022-03-01")
+    pdf["y"] = pdf["y"] + rng.normal(0.0, 2.0, len(pdf))
+    long_pdf = pdf.assign(metric="m")
+    worker = (
+        SeriesForecaster(interval=30, backend="fourier_ridge")
+        .transform_long(spark.createDataFrame(long_pdf.assign(ds=pdf["ds"].dt.date)))
+        .toPandas()
+        .sort_values("ds", ignore_index=True)
+    )
+
+    before = get()
+    set_(4)
+    try:
+        if get() < 2:
+            pytest.skip("OpenBLAS here runs one thread only")
+        batched = model.batched_fit_predict_long(
+            long_pdf, ["metric"], periods=30, backend="fourier_ridge"
+        )
+        single = fit_predict_frame(pdf, periods=30, backend="fourier_ridge")
+        assert get() == 4  # the caller's count is restored
+    finally:
+        set_(before)
+    assert len(worker) == 760
+    for col in ("yhat", "yhat_lower", "yhat_upper"):
+        assert np.array_equal(batched[col].to_numpy(), worker[col].to_numpy()), col
+        assert np.array_equal(single[col].to_numpy(), worker[col].to_numpy()), col
+
+
 def test_distributed_matches_local(spark):
     """Distributed applyInPandas output == single-machine model run (SURVEY §5.2c):
     the local fit of the same series IS the oracle for M1/M2."""
