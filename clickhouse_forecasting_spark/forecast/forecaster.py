@@ -5,9 +5,9 @@ column, fit Prophet and predict (forecast_script.py:229,169-177) — one core,
 one series at a time, with the whole table materialized in driver pandas
 (:158). The Spark-native design inverts this:
 
-    wide table --unpivot--> long (ds, metric, y)      [no Python, one narrow shuffle]
+    wide table --stack--> long (ds, metric, y)        [no Python, one narrow projection]
         --repartition(series key).mapInPandas(batched fit+predict)--> long forecasts
-        --pivot(metric)--> wide (date, m, m_min, m_max, ...)
+        --groupBy(ds) map of metric -> forecast--> wide (date, m..., m_min..., m_max...)
 
 Each partition holds many whole series (keyed repartition) and the worker
 fits them batched, sharing the per-axis work (model.batched_fit_predict_long)
@@ -28,10 +28,10 @@ from dataclasses import dataclass
 
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..relational import pivot_forecasts_wide, unpivot_metrics
+from ..relational import pivot_forecasts_wide, sql_ident, unpivot_metrics
 from ..schema import DATE_AXIS_COLUMN, metric_columns
 from .model import batched_fit_predict_long
 
@@ -319,9 +319,9 @@ class SeriesForecaster:
         )
 
     def transform(self, df: DataFrame, axis: str = DATE_AXIS_COLUMN) -> DataFrame:
-        """Forecast a wide daily table -> wide forecast table
-        (date, m, m_min, m_max per metric), the reference's per-table output
-        (forecast_script.py:134-145 schema, :187-194 pivot)."""
+        """Forecast a wide daily table -> wide forecast table in sink column
+        order (date, m..., m_min..., m_max...), the reference's per-table
+        output (forecast_script.py:134-145 schema, :187-194 pivot)."""
         metrics = metric_columns(df.schema, axis=axis)
         if not metrics:
             raise ValueError("no forecastable metric columns")
@@ -329,9 +329,11 @@ class SeriesForecaster:
         return pivot_forecasts_wide(forecasts, metrics)
 
 
-def wide_to_long(df: DataFrame, metrics: list[str], axis: str = DATE_AXIS_COLUMN) -> DataFrame:
-    """A wide daily table as the fitter's long input (ds, metric, y): the
-    axis cast to a date, rows without a date dropped."""
-    return unpivot_metrics(
-        df.withColumn(axis, F.to_date(F.col(axis))), metrics, axis=axis
-    ).dropna(subset=["ds"])
+def wide_to_long(
+    df: DataFrame, metrics: list[str], axis: str = DATE_AXIS_COLUMN, keys: tuple[Column, ...] = ()
+) -> DataFrame:
+    """A wide daily table as the fitter's long input (*keys, ds, metric, y):
+    rows without a date dropped, then one projection that casts the axis to
+    a date and unpivots every metric (relational.unpivot_metrics)."""
+    ds = F.to_date(F.col(sql_ident(axis)))
+    return unpivot_metrics(df.filter(ds.isNotNull()), metrics, ds=ds, keys=keys)

@@ -24,9 +24,9 @@ three steps:
    writes submitted from a thread pool of min(#tables, defaultParallelism)
    whose threads inherit the caller's Spark local properties.
 
-Per table that is the input's schema read plus the write's jobs; per run,
-the fit's one aggregate. No emptiness probe and no readback of the
-written table run.
+Per table that is the input's schema read plus the write's two jobs (the
+pivot's one shuffle and the write); per run, the fit's one aggregate. No
+emptiness probe and no readback of the written table run.
 
 Differences by design (all documented in SURVEY §7.5 / §2.5):
 - the non-``bucket_`` naming crash of the reference (:156) is fixed — the
@@ -93,9 +93,7 @@ def _catalog_forecasts(
     for t, (df, metrics) in candidates.items():
         observed[t] = Observation()
         src = df.observe(observed[t], F.count(F.lit(1)).alias("rows"))
-        branches.append(
-            wide_to_long(src, metrics).select(F.lit(t).alias("table"), "ds", "metric", "y")
-        )
+        branches.append(wide_to_long(src, metrics, keys=(F.lit(t).alias("table"),)))
     long_df = reduce(DataFrame.unionByName, branches)
     return forecaster.transform_long(long_df, group_cols=["table"]), observed
 

@@ -45,14 +45,47 @@ def last_known_date(df: DataFrame, axis: str = DATE_AXIS_COLUMN):
     return df.agg(F.max(axis).alias("last_known_date")).collect()[0][0]
 
 
-# R6 — wide -> long model frame (forecast_script.py:172): all metrics at once
-# in one unpivot, the spine of the distributed design
-# (SURVEY §7.1): one shuffle by (metric) replaces the reference's column loop.
-def unpivot_metrics(df: DataFrame, metrics: list[str], axis: str = DATE_AXIS_COLUMN) -> DataFrame:
-    """Wide table -> long (ds, metric, y). Uses the built-in unpivot
-    (Spark 3.4+) so values never pass through Python."""
-    casted = df.select(F.col(axis).alias("ds"), *[F.col(m).cast("double").alias(m) for m in metrics])
-    return casted.unpivot("ds", metrics, "metric", "y")
+def sql_ident(name: str) -> str:
+    """``name`` as a Spark SQL identifier: backtick-quoted, so dots, spaces
+    and quotes are part of the name, never a struct path or a SQL token."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_string(value: str) -> str:
+    """``value`` as a Spark SQL string literal (backslash escapes)."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+# R6 — wide -> long model frame (forecast_script.py:172): all metrics at once,
+# the spine of the distributed design (SURVEY §7.1) — one narrow projection
+# replaces the reference's column loop.
+def unpivot_metrics(
+    df: DataFrame,
+    metrics: list[str],
+    axis: str = DATE_AXIS_COLUMN,
+    ds: Column | None = None,
+    keys: tuple[Column, ...] = (),
+) -> DataFrame:
+    """Wide table -> long (*keys, ds, metric, y) in ONE projection whose
+    ``stack`` generator emits a (metric, CAST(metric AS DOUBLE)) row per
+    metric; values never pass through Python and NULL cells are kept.
+    ``ds`` replaces the plain axis column (e.g. a date cast); ``keys`` are
+    leading columns of the same projection (e.g. a table literal).
+
+    Spark's built-in ``unpivot`` plans an ``Expand``, which outside
+    whole-stage codegen (inputs wider than ``spark.sql.codegen.maxFields``)
+    compiles one projection class per metric; ``stack`` is evaluated in
+    place, so a wide table compiles no per-metric code. The generator is
+    one SQL expression (one driver round trip, not several per metric);
+    metric names enter it quoted and escaped."""
+    if not metrics:
+        raise ValueError("unpivot_metrics needs at least one metric")
+    pairs = ", ".join(f"{sql_string(m)}, CAST({sql_ident(m)} AS DOUBLE)" for m in metrics)
+    return df.select(
+        *keys,
+        (F.col(sql_ident(axis)) if ds is None else ds).alias("ds"),
+        F.expr(f"stack({len(metrics)}, {pairs}) AS (metric, y)"),
+    )
 
 
 # R7 — date-axis generation (forecast_script.py:174, make_future_dataframe):
@@ -80,28 +113,33 @@ def only_future(df: DataFrame, last_date, ds_col: str = "ds") -> DataFrame:
 
 # R11/R12 — k-way full outer join on the date axis with NULL fill
 # (forecast_script.py:168,187-194,207-211). Two strategies:
-#   pivot: one shuffle, best when the metric list is known (it is, from R2)
-#   reduce-outer-join: for very wide tables where pivot's column explosion
-#                      in a single stage is worse than k joins
+#   pivot: one aggregation (one exchange on ds), used whenever the metric
+#          list is known (it is, from R2)
+#   reduce-outer-join: k joins, each its own shuffle
 def pivot_forecasts_wide(long_df: DataFrame, metrics: list[str]) -> DataFrame:
-    """long (ds, metric, yhat, yhat_lower, yhat_upper) -> wide
-    (date, m, m_min, m_max ...). Explicit pivot value list avoids the extra
-    distinct scan Spark otherwise runs to discover pivot keys."""
-    wide = (
-        long_df.groupBy("ds")
-        .pivot("metric", metrics)
-        .agg(
-            F.first("yhat").alias("v"),
-            F.first("yhat_lower").alias("min"),
-            F.first("yhat_upper").alias("max"),
-        )
+    """long (ds, metric, yhat, yhat_lower, yhat_upper) -> wide, in sink
+    column order (date, m..., m_min..., m_max...; see sink_column_order).
+
+    ONE aggregation: ``groupBy(ds)`` collects each metric's (yhat,
+    yhat_lower, yhat_upper) into a map keyed by metric, and the map is
+    projected straight into the sink columns. (``groupBy.pivot`` plans two
+    aggregations, two exchanges.) A metric without a row for a date reads
+    NULL there. A (ds, metric) pair present twice fails with Spark's
+    ``DUPLICATED_MAP_KEY`` error instead of silently keeping one of its
+    values."""
+    wide = long_df.groupBy("ds").agg(
+        F.map_from_entries(
+            F.collect_list(F.struct("metric", F.struct("yhat", "yhat_lower", "yhat_upper")))
+        ).alias("f")
     )
-    cols = [F.col("ds").alias(DATE_AXIS_COLUMN)]
-    for m in metrics:
-        # single-metric pivot drops the prefix; normalize both cases
-        v, lo, hi = (f"{m}_v", f"{m}_min", f"{m}_max") if f"{m}_v" in wide.columns else ("v", "min", "max")
-        cols += [F.col(v).alias(m), F.col(lo).alias(f"{m}_min"), F.col(hi).alias(f"{m}_max")]
-    return wide.select(*cols)
+    # one SQL projection: a Column per sink column costs several driver
+    # round trips each (~1.5 s for 128 metrics)
+    cols = [f"ds AS {sql_ident(DATE_AXIS_COLUMN)}"] + [
+        f"f[{sql_string(m)}].{field} AS {sql_ident(m + suffix)}"
+        for field, suffix in (("yhat", ""), ("yhat_lower", "_min"), ("yhat_upper", "_max"))
+        for m in metrics
+    ]
+    return wide.selectExpr(*cols)
 
 
 def outer_join_on_date(frames: list[DataFrame], key: str = "ds") -> DataFrame:
@@ -116,7 +154,8 @@ def sink_column_order(metrics: list[str], axis: str = DATE_AXIS_COLUMN) -> list[
 
 
 def ordered_for_sink(df: DataFrame, metrics: list[str], axis: str = DATE_AXIS_COLUMN) -> DataFrame:
-    return df.select(*sink_column_order(metrics, axis))
+    cols = sink_column_order(metrics, axis)
+    return df if df.columns == cols else df.selectExpr(*map(sql_ident, cols))
 
 
 # Bonus combinator used by extension queries: strictly-typed daily rollup of a

@@ -315,3 +315,58 @@ def test_extra_table_adds_at_most_five_jobs(spark, tmp_path):
 
     two, four = jobs_for(2), jobs_for(4)
     assert four - two <= 2 * 5, (two, four)
+
+
+def _run_jobs_and_compiles(spark, cat: ParquetCatalog, group: str) -> tuple[int, int]:
+    """(Spark jobs, generated classes compiled) of one pipeline run."""
+    sc = spark.sparkContext
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiled = codegen.METRIC_COMPILATION_TIME().getCount()
+    sc.setJobGroup(group, "pipeline run")
+    try:
+        counters = run_forecast_pipeline(cat, interval=7, backend="fourier_ridge")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert not counters.failed and not counters.failed_metrics
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    return jobs, codegen.METRIC_COMPILATION_TIME().getCount() - compiled
+
+
+def _write_catalog(spark, root, n_tables: int, n_metrics: int, days: int) -> ParquetCatalog:
+    cat = ParquetCatalog(spark, str(root))
+    for i in range(n_tables):
+        cat.write_table(
+            spark.createDataFrame(
+                [
+                    (
+                        dt.date(2024, 1, 1) + dt.timedelta(days=d),
+                        *[float(d % (7 + j) + i) for j in range(n_metrics)],
+                    )
+                    for d in range(days)
+                ],
+                "date date, " + ", ".join(f"m{j:03d} double" for j in range(n_metrics)),
+            ),
+            f"t{i}",
+        )
+    return cat
+
+
+def test_extra_table_adds_at_most_three_jobs(spark, tmp_path):
+    """A table adds its schema read and two sink jobs: the one-aggregation
+    pivot leaves one exchange before each write."""
+    two = _run_jobs_and_compiles(spark, _write_catalog(spark, tmp_path / "c2", 2, 2, 60), "jobs-2")[0]
+    four = _run_jobs_and_compiles(spark, _write_catalog(spark, tmp_path / "c4", 4, 2, 60), "jobs-4")[0]
+    assert four - two <= 2 * 3, (two, four)
+
+
+def test_wide_table_rerun_compiles_no_new_classes(spark, tmp_path):
+    """A 128-metric table is wider than ``spark.sql.codegen.maxFields``, so
+    its stages run without whole-stage codegen. The reshapes must not
+    compile a class per metric: a run's classes must fit the session's
+    code cache, so that a second run of the same catalog compiles none
+    (an ``unpivot``/``pivot`` run compiled 165 again)."""
+    cat = _write_catalog(spark, tmp_path, 1, 128, 40)
+    _run_jobs_and_compiles(spark, cat, "wide-cold")
+    assert _run_jobs_and_compiles(spark, cat, "wide-warm")[1] == 0

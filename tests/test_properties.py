@@ -66,7 +66,7 @@ def test_pivot_unpivot_roundtrip(spark, frame):
 
     def eq(a, b):
         if a is None or b is None:
-            # unpivot drops NULL cells; pivot restores them as NULL
+            # unpivot keeps NULL cells as NULL y; pivot carries them back
             return a is None and b is None
         return math.isclose(a, b, rel_tol=1e-12)
 

@@ -56,6 +56,68 @@ def test_unpivot_roundtrip_pivot(spark):
     assert orig == got
 
 
+# a dot, a space, a single quote, a backtick and a backslash in names
+_ODD_NAMES = ["a.b", "c d", "it's", "x`y", "back\\slash"]
+
+
+def _odd_wide(spark, n=40):
+    rows = [
+        (dt.date(2024, 1, 1) + dt.timedelta(days=i), *[float(i * (j + 1) + j) for j in range(5)])
+        for i in range(n)
+    ]
+    schema = "date date, " + ", ".join(f"m{j} double" for j in range(5))
+    plain = spark.createDataFrame(rows, schema)
+    odd = plain.toDF("date", *_ODD_NAMES)
+    return plain, odd
+
+
+def test_unpivot_pivot_roundtrip_with_names_that_need_quoting(spark):
+    plain, odd = _odd_wide(spark, n=6)
+    long_df = R.unpivot_metrics(odd, _ODD_NAMES)
+    assert sorted({r.metric for r in long_df.collect()}) == sorted(_ODD_NAMES)
+    wide = R.pivot_forecasts_wide(
+        long_df.select("ds", "metric", *[F.col("y").alias(c) for c in ("yhat", "yhat_lower", "yhat_upper")]),
+        _ODD_NAMES,
+    )
+    assert wide.columns == R.sink_column_order(_ODD_NAMES)
+    got = sorted(tuple(r)[: 1 + len(_ODD_NAMES)] for r in wide.collect())
+    assert got == sorted(tuple(r) for r in plain.collect())
+    shuffled = wide.selectExpr(*reversed([R.sql_ident(c) for c in wide.columns]))
+    assert R.ordered_for_sink(shuffled, _ODD_NAMES).columns == wide.columns
+
+
+def test_transform_with_names_that_need_quoting_matches_plain_names(spark):
+    from clickhouse_forecasting_spark.forecast import SeriesForecaster
+
+    plain, odd = _odd_wide(spark)
+    fc = SeriesForecaster(interval=4, backend="fourier_ridge")
+    want = sorted(tuple(r) for r in fc.transform(plain).collect())
+    got = fc.transform(odd)
+    assert got.columns == R.sink_column_order(_ODD_NAMES)
+    assert sorted(tuple(r) for r in got.collect()) == want
+    assert len(want) == 40 + 4
+
+
+def test_pivot_rejects_duplicated_ds_metric_by_name(spark):
+    long_df = spark.createDataFrame(
+        [(dt.date(2024, 1, 1), "a", 1.0), (dt.date(2024, 1, 1), "a", 2.0)],
+        "ds date, metric string, yhat double",
+    ).select("ds", "metric", "yhat", F.col("yhat").alias("yhat_lower"), F.col("yhat").alias("yhat_upper"))
+    with pytest.raises(Exception, match="DUPLICATED_MAP_KEY"):
+        R.pivot_forecasts_wide(long_df, ["a"]).collect()
+
+
+def test_pivot_plans_one_aggregation(spark):
+    df = _daily(spark, n=4)
+    long_df = R.unpivot_metrics(df, ["a", "b"]).select(
+        "ds", "metric", *[F.col("y").alias(c) for c in ("yhat", "yhat_lower", "yhat_upper")]
+    )
+    qe = R.pivot_forecasts_wide(long_df, ["a", "b"])._jdf.queryExecution()
+    assert qe.optimizedPlan().toString().count("Aggregate [") == 1
+    assert qe.executedPlan().toString().count("Exchange ") == 1
+    assert "Expand" not in qe.optimizedPlan().toString()
+
+
 def test_future_date_axis(spark):
     df = _daily(spark, n=5)
     axis = R.future_date_axis(df, periods=3)

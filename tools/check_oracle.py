@@ -76,6 +76,7 @@ def main() -> int:
     for name, fn in qs.items():
         if only and name not in only:
             continue
+        n_total += name in oracles  # a Spark-side error still counts
         t0 = time.time()
         try:
             df = fn(spark, sf_dir)
@@ -90,7 +91,6 @@ def main() -> int:
             n_rows_only += 1
             print(f"rows  {name}: {len(rows)} rows [{dt:.1f}s] (rows-only check)")
             continue
-        n_total += 1
         try:
             res = con.execute(oracles[name])
             ocols = [d[0] for d in res.description]
