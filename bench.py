@@ -111,142 +111,132 @@ HEADLINE = [
     "peak_open_orders",
 ]
 
-# Round-2 additions, reported inside the same total but also split out as
-# extensions_r2_sec so BENCH_rN stays comparable to the round-1 68-query
-# baseline subtotal (suite_r1_sec vs BASELINE.md).
-EXTENSIONS_R2 = [
-    "dedup_near_projection",  # shares the persisted banded-signature stage
-    "dedup_components",
-    "pagerank_trade_graph",
-    "multimodal_image_features",
-    "similarity_lsh_topk",
-    "corpus_pack_chunks",
-    "corpus_pack_firstfit",
-    "minhash_estimate_error",  # rides the shared dedup stages
-    "bloom_semi_join_audit",
-    "dedup_containment_pairs",  # rides the shared dedup stages
-    "bigram_lm_quality",
-    "curation_funnel_report",  # composes LM + persisted-LSH dup set
-    "corpus_novelty_decay",  # rides the persisted shingle stage
-    "source_domain_similarity",
-    "corpus_chunk_overlap",
-    "multimodal_audio_features",
-    "epoch_shuffle_manifest",
-    "blocklist_filter_report",
-    "dup_span_report",  # substring-level spans: the heavy new shingle pass
-    "domain_temperature_mix",
-    "shard_js_divergence",
-    "bpe_merge_candidates",
-    "dedup_incremental_batch",  # rides the shared dedup stages
-    "window_funnel_levels",
-    "multimodal_video_features",  # real AVI codec round-trip
-    "pii_redaction_report",  # regex detect+redact corpus pass
-    "sequence_count_chains",  # window-only greedy sequence matching
-    "rrf_fusion_search",  # one tf pass feeding two rankers + fusion
-    "kalman_local_level",  # bit-exact recursive filter (applyInPandas)
-]
-
-# Round-3 additions, split out as extensions_r3_sec.
-EXTENSIONS_R3 = [
-    "semdedup_clusters",  # IVF assignment + within-cluster pairwise pass
-    "theils_u_association",
-    "sequence_next_node",
-    "geohash_grid_rollup",
-    "any_heavy_daily_majority",
-    "ngram_distance_names",
-    "delta_sum_report",
-    "edit_distance_names",  # 25x50 levenshtein grid, codegen'd
-    "dsir_importance_weights",  # hashed-ngram importance reweighting pass
-    "quantiles_exact_weighted",
-    "with_fill_interpolate",
-    "url_functions_report",
-    "topk_weighted_spacesaving",  # per-day Space-Saving fold
-    "dedup_paragraph_ccnet",  # cross-doc chunk-hash dedup corpus pass
-    "moments_skew_kurt",
-    "corr_matrix_lineitem",  # 14 sufficient stats in one lineitem pass
-    "aggregating_merge_states",  # two-level -State/-Merge equivalence
-    "max_intersections_yearly",  # clipped sweep-line concurrency
-    "time_slots_expansion",  # bounded interval explode + slot rollup
-    "quantile_timing_buckets",  # bucketed timing percentiles, no raw sort
-    "gopher_quality_rules",  # row-local quality rule corpus pass
-    "vector_distance_family",  # 5 distance folds per embedding
-    "ann_hard_negatives",  # 20-query broadcast hard-negative mining
-    "gd_linreg_daily",  # one-pass sufficient-stats GD trace
-    "asof_join_directions",  # two bucketed as-of passes + inline nearest
-    "cdc_chunk_dedup",  # content-defined chunk fingerprint pass
-    "dedup_threshold_sweep",  # 5-threshold ROI from one LSH verify pass
-    "streaming_window_topk",  # sliding-window count + bounded rank
-    "sliding_distinct_users",  # explode-to-window exact sliding distinct
-    "sequence_match_flags",  # per-user array pattern matchers
-    "hll_manual_audit",  # exact-integer-register HLL estimate
-    "ccnet_perplexity_buckets",  # corpus LM build + doc scoring pass
-    "rolling_beta_30d",  # windowed sufficient-stats OLS
-]
-
-# Round-4 additions, split out as extensions_r4_sec.
-EXTENSIONS_R4: list[str] = [
-    "forecast_scale_series",  # 2500-series batched-mapInPandas fan-out, one job
-    "streaming_closed_counts",  # real availableNow append-mode replay
-    "interval_length_sum",  # union-of-intervals sweep, one window pass
-]
-
-# Round-5 additions, split out as extensions_r5_sec.
-EXTENSIONS_R5: list[str] = [
-    "dedup_scale_audit",  # 60k-doc planted-dup LSH end-to-end scale proof
-    "curriculum_phases",  # distributed global ntile (operators/ranking)
-    "encoding_advisor_lineitem",  # boundary-stitched per-partition lag runs
-    "stream_lateness_profile",  # distributed cummax + rank picks
-]
-
-# Round-6 additions, split out as extensions_r6_sec: the ANN scale proof
-# plus representative members of the 17 de-collapsed rewrites (distributed
-# ntile ×3, distributed running sums, two-pass rank threshold).
-EXTENSIONS_R6: list[str] = [
-    "ann_scale_audit",  # 30k-vector planted-neighbor LSH end-to-end proof
-    "rfm_segmentation",  # 3× global_ntile off one checkpointed frame
-    "ks_test_segments",  # distributed running-sum CDFs over distinct prices
-    "top_customers_with_ties",  # rank WITH TIES via two-pass threshold
-]
-
-# Round-7 additions, split out as extensions_r7_sec: the learned-cell
-# (integer-Lloyd IVF) pair-mining default and its 30k scale proof.
-EXTENSIONS_R7: list[str] = [
-    "ann_ivf_scale_audit",  # 30k-vector learned-cell end-to-end proof
-    "ivf_near_dup_pairs",  # embeddings pair mining through learned cells
-    "lateral_top_balances",  # enum top-k now on grouped_top_k (r7 rewrite)
-]
-
-# Round-8 additions, split out as extensions_r8_sec: the frozen-index
-# incremental admission path and the re-expressed (now hash-gated)
-# Lloyd-trained IVF probe.
-EXTENSIONS_R8: list[str] = [
-    "ann_incremental_batch",  # batch admission against a frozen IVF index
-    "stream_ann_admission",  # the same semantics as a stream-static replay
-    "similarity_ivf_topk",  # Lloyd-trained 4-probe top-10 (r8 rewrite)
-]
-
-# Round-9 additions, split out as extensions_r9_sec: the hash-gated
-# (value-exact, not just shape-gated) production-fit forecast row.
-EXTENSIONS_R9: list[str] = [
-    "forecast_constant_series_exact",
-]
-
-# Round-10 additions, split out as extensions_r10_sec: the fused-scoring
-# backtest at fan-out scale (now one shuffle, cutoffs fanned out inside
-# the worker) and its value-exact constant-series oracle row.
-EXTENSIONS_R10: list[str] = [
-    "forecast_backtest_scale",
-    "forecast_backtest_constant_exact",
-]
-
-# Round-11 additions, split out as extensions_r11_sec: the
-# forced-distributed pagerank loop (max_driver_nodes=0) — the 100x-scale
-# path the bounded numpy dispatch replaced on the suite row (r10 VERDICT
-# #5: keep the loop's checkpoint/persist economics performance-tracked).
-EXTENSIONS_R11: list[str] = [
-    "pagerank_trade_graph_distributed",
-    "forecast_wide_constant_exact",  # value-gated wide transform() route
-]
+# Queries added after round 1, keyed by round. Each round is reported
+# inside the same total but also split out as extensions_<round>_sec, so
+# BENCH_rN stays comparable to the round-1 68-query baseline subtotal
+# (suite_r1_sec vs BASELINE.md).
+EXTENSIONS: dict[str, list[str]] = {
+    "r2": [
+        "dedup_near_projection",  # shares the persisted banded-signature stage
+        "dedup_components",
+        "pagerank_trade_graph",
+        "multimodal_image_features",
+        "similarity_lsh_topk",
+        "corpus_pack_chunks",
+        "corpus_pack_firstfit",
+        "minhash_estimate_error",  # rides the shared dedup stages
+        "bloom_semi_join_audit",
+        "dedup_containment_pairs",  # rides the shared dedup stages
+        "bigram_lm_quality",
+        "curation_funnel_report",  # composes LM + persisted-LSH dup set
+        "corpus_novelty_decay",  # rides the persisted shingle stage
+        "source_domain_similarity",
+        "corpus_chunk_overlap",
+        "multimodal_audio_features",
+        "epoch_shuffle_manifest",
+        "blocklist_filter_report",
+        "dup_span_report",  # substring-level spans: the heavy new shingle pass
+        "domain_temperature_mix",
+        "shard_js_divergence",
+        "bpe_merge_candidates",
+        "dedup_incremental_batch",  # rides the shared dedup stages
+        "window_funnel_levels",
+        "multimodal_video_features",  # real AVI codec round-trip
+        "pii_redaction_report",  # regex detect+redact corpus pass
+        "sequence_count_chains",  # window-only greedy sequence matching
+        "rrf_fusion_search",  # one tf pass feeding two rankers + fusion
+        "kalman_local_level",  # bit-exact recursive filter (applyInPandas)
+    ],
+    "r3": [
+        "semdedup_clusters",  # IVF assignment + within-cluster pairwise pass
+        "theils_u_association",
+        "sequence_next_node",
+        "geohash_grid_rollup",
+        "any_heavy_daily_majority",
+        "ngram_distance_names",
+        "delta_sum_report",
+        "edit_distance_names",  # 25x50 levenshtein grid, codegen'd
+        "dsir_importance_weights",  # hashed-ngram importance reweighting pass
+        "quantiles_exact_weighted",
+        "with_fill_interpolate",
+        "url_functions_report",
+        "topk_weighted_spacesaving",  # per-day Space-Saving fold
+        "dedup_paragraph_ccnet",  # cross-doc chunk-hash dedup corpus pass
+        "moments_skew_kurt",
+        "corr_matrix_lineitem",  # 14 sufficient stats in one lineitem pass
+        "aggregating_merge_states",  # two-level -State/-Merge equivalence
+        "max_intersections_yearly",  # clipped sweep-line concurrency
+        "time_slots_expansion",  # bounded interval explode + slot rollup
+        "quantile_timing_buckets",  # bucketed timing percentiles, no raw sort
+        "gopher_quality_rules",  # row-local quality rule corpus pass
+        "vector_distance_family",  # 5 distance folds per embedding
+        "ann_hard_negatives",  # 20-query broadcast hard-negative mining
+        "gd_linreg_daily",  # one-pass sufficient-stats GD trace
+        "asof_join_directions",  # two bucketed as-of passes + inline nearest
+        "cdc_chunk_dedup",  # content-defined chunk fingerprint pass
+        "dedup_threshold_sweep",  # 5-threshold ROI from one LSH verify pass
+        "streaming_window_topk",  # sliding-window count + bounded rank
+        "sliding_distinct_users",  # explode-to-window exact sliding distinct
+        "sequence_match_flags",  # per-user array pattern matchers
+        "hll_manual_audit",  # exact-integer-register HLL estimate
+        "ccnet_perplexity_buckets",  # corpus LM build + doc scoring pass
+        "rolling_beta_30d",  # windowed sufficient-stats OLS
+    ],
+    "r4": [
+        "forecast_scale_series",  # 2500-series batched-mapInPandas fan-out, one job
+        "streaming_closed_counts",  # real availableNow append-mode replay
+        "interval_length_sum",  # union-of-intervals sweep, one window pass
+    ],
+    "r5": [
+        "dedup_scale_audit",  # 60k-doc planted-dup LSH end-to-end scale proof
+        "curriculum_phases",  # distributed global ntile (operators/ranking)
+        "encoding_advisor_lineitem",  # boundary-stitched per-partition lag runs
+        "stream_lateness_profile",  # distributed cummax + rank picks
+    ],
+    # The ANN scale proof plus representative members of the 17
+    # de-collapsed rewrites (distributed ntile ×3, distributed running sums,
+    # two-pass rank threshold).
+    "r6": [
+        "ann_scale_audit",  # 30k-vector planted-neighbor LSH end-to-end proof
+        "rfm_segmentation",  # 3× global_ntile off one checkpointed frame
+        "ks_test_segments",  # distributed running-sum CDFs over distinct prices
+        "top_customers_with_ties",  # rank WITH TIES via two-pass threshold
+    ],
+    # The learned-cell (integer-Lloyd IVF) pair-mining default and its 30k
+    # scale proof.
+    "r7": [
+        "ann_ivf_scale_audit",  # 30k-vector learned-cell end-to-end proof
+        "ivf_near_dup_pairs",  # embeddings pair mining through learned cells
+        "lateral_top_balances",  # enum top-k now on grouped_top_k (r7 rewrite)
+    ],
+    # The frozen-index incremental admission path and the re-expressed (now
+    # hash-gated) Lloyd-trained IVF probe.
+    "r8": [
+        "ann_incremental_batch",  # batch admission against a frozen IVF index
+        "stream_ann_admission",  # the same semantics as a stream-static replay
+        "similarity_ivf_topk",  # Lloyd-trained 4-probe top-10 (r8 rewrite)
+    ],
+    # The hash-gated (value-exact, not just shape-gated) production-fit
+    # forecast row.
+    "r9": [
+        "forecast_constant_series_exact",
+    ],
+    # The fused-scoring backtest at fan-out scale (now one shuffle, cutoffs
+    # fanned out inside the worker) and its value-exact constant-series
+    # oracle row.
+    "r10": [
+        "forecast_backtest_scale",
+        "forecast_backtest_constant_exact",
+    ],
+    # The forced-distributed pagerank loop (max_driver_nodes=0) — the
+    # 100x-scale path the bounded numpy dispatch replaced on the suite row
+    # (r10 VERDICT #5: keep the loop's checkpoint/persist economics
+    # performance-tracked).
+    "r11": [
+        "pagerank_trade_graph_distributed",
+        "forecast_wide_constant_exact",  # value-gated wide transform() route
+    ],
+}
 
 # Queries re-run in a FRESH session each (subprocess, clean JVM/storage)
 # after the in-suite passes — the rows whose in-suite numbers drift with
@@ -298,12 +288,7 @@ def main() -> None:
     )
     _SF(interval=2, only_future=True).transform_long(_warm).collect()
 
-    blocks = [
-        HEADLINE, EXTENSIONS_R2, EXTENSIONS_R3, EXTENSIONS_R4,
-        EXTENSIONS_R5, EXTENSIONS_R6, EXTENSIONS_R7, EXTENSIONS_R8,
-        EXTENSIONS_R9, EXTENSIONS_R10, EXTENSIONS_R11,
-    ]
-    bench_set = [q for block in blocks for q in block]
+    bench_set = HEADLINE + [q for block in EXTENSIONS.values() for q in block]
     from clickhouse_forecasting_spark import runtime_cache as _rc
 
     per_iter: list[dict[str, float]] = []
@@ -445,16 +430,10 @@ def main() -> None:
     subtotals = {
         "suite_r1_sec": suite_r1,
         "suite_r1_min_sec": round(sum(timings_min[q] for q in HEADLINE), 3),
-        "extensions_r2_sec": round(sum(timings[q] for q in EXTENSIONS_R2), 3),
-        "extensions_r3_sec": round(sum(timings[q] for q in EXTENSIONS_R3), 3),
-        "extensions_r4_sec": round(sum(timings[q] for q in EXTENSIONS_R4), 3),
-        "extensions_r5_sec": round(sum(timings[q] for q in EXTENSIONS_R5), 3),
-        "extensions_r6_sec": round(sum(timings[q] for q in EXTENSIONS_R6), 3),
-        "extensions_r7_sec": round(sum(timings[q] for q in EXTENSIONS_R7), 3),
-        "extensions_r8_sec": round(sum(timings[q] for q in EXTENSIONS_R8), 3),
-        "extensions_r9_sec": round(sum(timings[q] for q in EXTENSIONS_R9), 3),
-        "extensions_r10_sec": round(sum(timings[q] for q in EXTENSIONS_R10), 3),
-        "extensions_r11_sec": round(sum(timings[q] for q in EXTENSIONS_R11), 3),
+        **{
+            f"extensions_{r}_sec": round(sum(timings[q] for q in block), 3)
+            for r, block in EXTENSIONS.items()
+        },
     }
     per_iter_suite_r1 = [
         round(sum(t[q] for q in HEADLINE), 3) for t in per_iter

@@ -18,7 +18,7 @@ from __future__ import annotations
 
 import os
 import shutil
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -55,7 +55,6 @@ class ParquetCatalog:
 
     spark: SparkSession
     root: str
-    _registered: set[str] = field(default_factory=set)
 
     # C1 — SHOW TABLES (forecast_script.py:97-101)
     def list_tables(self) -> list[str]:
@@ -97,9 +96,3 @@ class ParquetCatalog:
         if order_by is not None and order_by in df.columns:
             out = df.sortWithinPartitions(order_by)
         out.write.mode("overwrite").parquet(self.path(table))
-
-    def register_all(self, names: list[str] | None = None) -> None:
-        """Register tables as temp views so spark.sql sees the namespace."""
-        for t in names if names is not None else self.list_tables():
-            self.table(t).createOrReplaceTempView(t)
-            self._registered.add(t)

@@ -24,6 +24,7 @@ per-column try/except + NULL fill.
 
 from __future__ import annotations
 
+import functools
 from dataclasses import dataclass
 
 import pandas as pd
@@ -103,35 +104,45 @@ class SeriesForecaster:
         size, exactly how the shuffle-partition knob is already sized.
         """
         groups = (group_cols or []) + ["metric"]
-        n_parts = self.fanout_partitions
-        if n_parts is None:
-            n_parts = long_df.sparkSession.sparkContext.defaultParallelism
-        # keyed repartition on the group columns: co-locates each series'
-        # rows in one partition for the batched fitter, and AQE does not
-        # coalesce an explicit user repartition — the fit stage keeps
-        # n_parts-wide parallelism regardless of byte size (the per-group
-        # cost is model CPU, invisible to AQE's byte-based coalescer)
-        long_df = long_df.repartition(n_parts, *groups)
         interval, only_fut, backend = self.interval, self.only_future, self.backend
         out_schema = (
             ", ".join(f"{c} string" for c in (group_cols or [])) + ", " if group_cols else ""
         ) + _LONG_OUT_SCHEMA
 
-        def _fit_partition(batches):
-            # a series may straddle ARROW BATCHES within the partition, so
-            # concatenate first; the partition is the memory unit (see
-            # docstring). Empty partitions yield nothing.
-            chunks = list(batches)
-            if not chunks:
-                return
-            pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
+        def _fit_partition(pdf):
             out = batched_fit_predict_long(
                 pdf, groups, periods=interval, only_future=only_fut, backend=backend
             )
             if len(out):
                 yield out
 
-        return long_df.mapInPandas(_fit_partition, schema=out_schema)
+        return self._fit_stage(long_df, groups, _fit_partition, out_schema)
+
+    def _fit_stage(self, long_df: DataFrame, groups: list[str], fit, schema: str) -> DataFrame:
+        """The keyed fit stage of transform_long and backtest: ``fit(pdf)``
+        yields output frames from one partition's rows as ONE pandas frame.
+
+        A keyed repartition on ``groups`` co-locates each series' rows in
+        one partition, and AQE does not coalesce an explicit user
+        repartition — the stage keeps ``fanout_partitions`` (default: the
+        session's parallelism) width regardless of byte size (the
+        per-group cost is model CPU, invisible to AQE's byte-based
+        coalescer). A series may straddle ARROW BATCHES within the
+        partition, so they are concatenated first; the partition is the
+        memory unit. Empty partitions yield nothing."""
+        n_parts = self.fanout_partitions
+        if n_parts is None:
+            n_parts = long_df.sparkSession.sparkContext.defaultParallelism
+
+        # the plan names the Python function after ``fit``
+        @functools.wraps(fit)
+        def _partition(batches):
+            chunks = list(batches)
+            if not chunks:
+                return
+            yield from fit(chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True))
+
+        return long_df.repartition(n_parts, *groups).mapInPandas(_partition, schema=schema)
 
     def watermarks(self, long_df: DataFrame, group_cols: list[str] | None = None) -> DataFrame:
         """Per-series fit watermark: (group..., metric, last_max_ds). Persist
@@ -224,10 +235,6 @@ class SeriesForecaster:
         # poison the means (NaN > x is true in Spark SQL) — through Arrow
         # the NULL/NaN distinction does not survive, so the fused scorer
         # standardizes on the NULL semantics.
-        n_parts = self.fanout_partitions
-        if n_parts is None:
-            n_parts = long_df.sparkSession.sparkContext.defaultParallelism
-        part = long_df.repartition(n_parts, *groups)
         interval, backend = self.interval, self.backend
         cutoffs_str = [str(c) for c in cutoffs]
         out_schema = (
@@ -236,13 +243,9 @@ class SeriesForecaster:
             " mape double, coverage double"
         )
 
-        def _backtest_partition(batches):
+        def _backtest_partition(pdf):
             import numpy as np
 
-            chunks = list(batches)
-            if not chunks:
-                return
-            pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
             ds_dt = pd.to_datetime(pdf["ds"])
             # r12 (guide §4.5 pattern): rewrite pdf's ds as the parsed
             # datetime64 ONCE — every per-cutoff batched_fit_predict_long
@@ -314,7 +317,7 @@ class SeriesForecaster:
                     ],
                 )
 
-        return part.mapInPandas(_backtest_partition, schema=out_schema).orderBy(
+        return self._fit_stage(long_df, groups, _backtest_partition, out_schema).orderBy(
             *groups, "cutoff"
         )
 

@@ -16,10 +16,11 @@ This module provides the same contract with a swappable backend:
   documented surrogate of SURVEY §7.5 — same model family as Prophet's MAP
   fit minus changepoints, fully deterministic, no native deps.
 
-Both backends are **driver-free**: they run inside ``applyInPandas`` workers,
-one (table, metric) series per group (see forecaster.py). Each series must
-fit one worker's memory — the same constraint Prophet itself has; the
-distributed win is that thousands of series fit in parallel.
+Both backends are **driver-free**: they run inside ``mapInPandas`` workers,
+many whole (table, metric) series per partition, fitted batched (see
+forecaster.py and ``batched_fit_predict_long``). One partition of series
+must fit one worker's memory; the distributed win is that thousands of
+series fit in parallel.
 """
 
 from __future__ import annotations

@@ -52,54 +52,8 @@ def _exploded_shingles(
     )
 
 # --------------------------------------------------------------------------
-# exact dedup
-# --------------------------------------------------------------------------
-
-
-def exact_duplicates(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Groups of byte-identical (normalized) documents with >1 member.
-
-    Returns (fp, n_docs, keeper_id): keeper = min id, the deterministic
-    canonical representative. Shuffle carries only (fp, id)."""
-    return (
-        df.select(fingerprint(F.col(text_col)).alias("fp"), F.col(id_col))
-        .groupBy("fp")
-        .agg(F.count("*").alias("n_docs"), F.min(id_col).alias("keeper_id"))
-        .filter(F.col("n_docs") > 1)
-    )
-
-
-def dedup_exact(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Keep one row (min id) per distinct normalized text — the actual
-    drop-duplicates pass a training pipeline runs."""
-    w_fp = df.withColumn("fp", fingerprint(F.col(text_col)))
-    keepers = w_fp.groupBy("fp").agg(F.min(id_col).alias(id_col))
-    return w_fp.join(keepers, ["fp", id_col], "inner").drop("fp")
-
-
-# --------------------------------------------------------------------------
 # MinHash + LSH
 # --------------------------------------------------------------------------
-
-
-def minhash_signature(shingles: Column, num_hashes: int = 16) -> Column:
-    """MinHash signature as an array of md5-minima (array-column form).
-
-    hash_i(s) = md5(i || s); the signature element i is the minimum over the
-    document's shingles — the classic permutation-free MinHash construction.
-    md5 hex strings compare lexicographically identically in any engine,
-    which keeps the DuckDB twin exact.
-
-    NOTE: nested higher-order functions are interpreted (not codegen'd) and
-    re-evaluate the shingle subtree once per hash index — fine for small k,
-    but the scale path is :func:`minhash_signatures` (explode + groupBy),
-    which hashes each shingle exactly once inside whole-stage codegen."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-        lambda i: F.array_min(
-            F.transform(shingles, lambda s: F.md5(F.concat(i.cast("string"), s)))
-        ),
-    )
 
 
 def minhash_signatures(
@@ -114,7 +68,10 @@ def minhash_signatures(
     explode(shingles) -> one md5 per (doc, shingle, hash-index) -> groupBy-min.
     Everything is built-in + codegen'd; the shuffle carries (id, k mins) after
     partial aggregation, so network volume is O(docs * k), never O(shingles).
-    Values are identical to :func:`minhash_signature` (min over md5(i||s))."""
+    hash_i(s) = md5(i || s) and sig_i is its minimum over the document's
+    shingles — the permutation-free MinHash construction; md5 hex strings
+    compare lexicographically identically in any engine, which keeps the
+    DuckDB twin exact."""
     sh = _exploded_shingles(df, text_col, id_col, shingle_size)
     aggs = [
         F.min(F.md5(F.concat(F.lit(str(i)), F.col("sh")))).alias(f"sig_{i}")

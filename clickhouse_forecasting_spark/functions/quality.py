@@ -63,16 +63,3 @@ def check_expectations(df: DataFrame, rules: dict[str, Column]) -> DataFrame:
         )
         .orderBy("rule")
     )
-
-
-def duplicate_keys(df: DataFrame, keys: list[str]) -> DataFrame:
-    """Key-uniqueness check: groups with multiplicity > 1.
-
-    One shuffle on the key columns; the output carries only violating
-    keys (empty when the constraint holds), so collecting it is safe.
-    """
-    return (
-        df.groupBy(*keys)
-        .agg(F.count("*").alias("multiplicity"))
-        .filter(F.col("multiplicity") > 1)
-    )

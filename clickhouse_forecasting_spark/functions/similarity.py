@@ -1,20 +1,21 @@
 """Similarity search over embedding columns (BASELINE.json extension).
 
-Two tiers, same contract:
-
 - **brute_force_topk** — exact cosine top-k: one scan, a JVM-side
   zip_with/aggregate dot product against a broadcast query vector, then a
   global top-k (TakeOrdered — no full sort). The O(n·d) baseline and the
-  verifier for the approximate tier.
-- **hyperplane_lsh** — sign-random-projection LSH: h hyperplanes (seeded
+  verifier for the approximate paths.
+- **quantized_topk** — int8 scalar quantization with asymmetric distance.
+- **hyperplane LSH** — sign-random-projection LSH: h hyperplanes (seeded
   numpy, broadcast as literals) -> per-row bit signature (row-local, no
-  shuffle) -> candidates share a bucket; queries probe only their bucket.
-  At 100 TB the bucket column is also the natural parquet partition key so
-  probes prune to a handful of files.
+  shuffle) -> candidates share a bucket (``lsh_bucket_assignments``,
+  ``multi_probe_buckets``, ``hyperplane_near_dup_pairs``). At 100 TB the
+  bucket column is also the natural parquet partition key so probes prune
+  to a handful of files.
+- **learned IVF cells** — a deterministic integer Lloyd pass in place of
+  random planes (``ivf_exact_cells``, ``assign_to_cells``,
+  ``ivf_near_dup_pairs``); every step replays exactly in the DuckDB twins.
 
-An IVF-style variant (cluster centroids instead of random planes) drops in
-by replacing the plane matrix with learned centroids + argmin assignment;
-kept out of round 1 since MLlib KMeans adds an iterative training pass.
+The top-k probe queries themselves are built in queries/ from these parts.
 """
 
 from __future__ import annotations
@@ -151,101 +152,6 @@ def quantized_topk(
     )
 
 
-def pq_train(
-    df: DataFrame,
-    m: int = 8,
-    k: int = 16,
-    seed: int = 42,
-    vec_col: str = "nvec",
-) -> np.ndarray:
-    """Product-quantization codebooks: split the vector into m subspaces,
-    KMeans(k) per subspace (MLlib, seeded). Returns (m, k, dim/m)
-    centroids. Training cost is m small fits — at 100 TB train on a
-    sample; codes are 4 bits per subspace here (k=16), a 32x compression
-    of float32x64 vectors."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    first = df.select(vec_col).head()
-    if first is None:
-        raise ValueError("pq_train: input frame is empty")
-    dim = len(first[0])
-    assert dim % m == 0, (dim, m)
-    d_sub = dim // m
-    books = []
-    for s in range(m):
-        sub = df.select(
-            array_to_vector(
-                F.slice(F.col(vec_col), s * d_sub + 1, d_sub).cast("array<double>")
-            ).alias("features")
-        )
-        model = KMeans(k=k, seed=seed + s, featuresCol="features").fit(sub)
-        books.append(np.vstack([np.asarray(c) for c in model.clusterCenters()]))
-    return np.stack(books)  # (m, k, d_sub)
-
-
-def pq_encode(df: DataFrame, codebooks: np.ndarray, vec_col: str = "nvec") -> DataFrame:
-    """Assign each subvector to its nearest codebook centroid — adds
-    int columns code_0..code_{m-1}. Pure JVM expressions: the per-subspace
-    argmin expands ||x-c||² = ||c||² - 2<x,c> (+ rank-constant ||x||²)
-    over literal centroids; no Python in the row path."""
-    m, k, d_sub = codebooks.shape
-    out = df
-    for s in range(m):
-        sub = F.slice(F.col(vec_col), s * d_sub + 1, d_sub)
-        dists = F.array(
-            *[
-                F.lit(float(np.dot(codebooks[s, j], codebooks[s, j])))
-                - 2.0
-                * F.aggregate(
-                    F.zip_with(
-                        sub,
-                        F.array(*[F.lit(float(v)) for v in codebooks[s, j]]),
-                        lambda x, c: x.cast("double") * c,
-                    ),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                )
-                for j in range(k)
-            ]
-        )
-        out = out.withColumn(
-            f"code_{s}", (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
-        )
-    return out
-
-
-def pq_topk(
-    encoded: DataFrame,
-    query: list[float],
-    codebooks: np.ndarray,
-    topk: int = 10,
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """ADC scoring over PQ codes: the query precomputes an (m x k) lookup
-    table of subspace dot products; each row's score is m table lookups —
-    no float vector is ever read. This is the memory-bound ANN tier: at
-    100 TB the codes table is 32x smaller than the embeddings and the
-    scan is pure integer indexing."""
-    m, k, d_sub = codebooks.shape
-    q = np.asarray(query, dtype=float)
-    score = None
-    for s in range(m):
-        lut = F.array(
-            *[
-                F.lit(float(np.dot(q[s * d_sub : (s + 1) * d_sub], codebooks[s, j])))
-                for j in range(k)
-            ]
-        )
-        term = F.element_at(lut, F.col(f"code_{s}") + 1)
-        score = term if score is None else score + term
-    return (
-        encoded.select(F.col(id_col), F.round(score, 6).alias("pq_score"))
-        .orderBy(F.col("pq_score").desc(), F.col(id_col))
-        .limit(topk)
-    )
-
-
 def pairwise_topk(
     df: DataFrame,
     queries: DataFrame,
@@ -349,9 +255,10 @@ def hyperplane_near_dup_pairs(
     of silently running its n² join. Compare embedding_near_dup_pairs
     (brute force) for audits.
 
-    The probe-side top-k paths (lsh_topk / ivf_topk) carry NO guard on
-    purpose: they are scan + TakeOrdered — a hot bucket degrades them
-    toward brute-force COST (linear), never a quadratic blow-up."""
+    The probe-side top-k queries (similarity_lsh_topk and the IVF probes)
+    carry NO guard on purpose: they are scan + TakeOrdered — a hot bucket
+    degrades them toward brute-force COST (linear), never a quadratic
+    blow-up."""
     from pyspark.sql import Window
 
     bucketed = lsh_bucket_assignments(df, dim, n_planes, seed, vec_col, id_col)
@@ -410,62 +317,6 @@ def hyperplane_near_dup_pairs(
     )
 
 
-def ivf_index(
-    df: DataFrame,
-    n_clusters: int = 16,
-    seed: int = 42,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> tuple[DataFrame, np.ndarray]:
-    """IVF index build: MLlib KMeans centroids + per-row cluster assignment.
-
-    Returns (assigned frame with a `cluster` column, centroid matrix).
-    The learned-centroid twin of hyperplane LSH: buckets follow the data
-    distribution, so occupancy is balanced even for clustered corpora where
-    random hyperplanes overload one bucket. At 100 TB: fit on a sample,
-    write the assigned frame partitioned by `cluster`; queries read only
-    probed partitions."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector, vector_to_array
-
-    feats = df.select(
-        F.col(id_col),
-        F.col(vec_col),
-        array_to_vector(F.col(vec_col).cast("array<double>")).alias("features"),
-    )
-    model = KMeans(k=n_clusters, seed=seed, featuresCol="features").fit(feats)
-    assigned = model.transform(feats).select(
-        F.col(id_col), F.col(vec_col), F.col("prediction").alias("cluster")
-    )
-    centroids = np.vstack([np.asarray(c) for c in model.clusterCenters()])
-    return assigned, centroids
-
-
-def ivf_topk(
-    assigned: DataFrame,
-    centroids: np.ndarray,
-    query: list[float],
-    k: int = 10,
-    n_probe: int = 4,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """IVF probe: score only the n_probe clusters whose centroids are
-    nearest the query (cosine). n_probe = n_clusters degrades to exact
-    brute force — the recall knob."""
-    q = np.asarray(query, dtype=np.float64)
-    sims = (centroids @ q) / (
-        np.linalg.norm(centroids, axis=1) * np.linalg.norm(q) + 1e-12
-    )
-    probe = [int(i) for i in np.argsort(-sims)[:n_probe]]
-    return (
-        assigned.filter(F.col("cluster").isin(probe))
-        .select(F.col(id_col), cosine_with_literal(F.col(vec_col), query).alias("cosine"))
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
-        .limit(k)
-    )
-
-
 def multi_probe_buckets(
     query: list[float], planes: np.ndarray, n_probes: int
 ) -> list[int]:
@@ -478,34 +329,6 @@ def multi_probe_buckets(
     qsig = int(np.sum((margins > 0) * (1 << np.arange(len(planes)))))
     flips = np.argsort(np.abs(margins))[: max(0, n_probes - 1)]
     return [qsig] + [qsig ^ (1 << int(i)) for i in flips]
-
-
-def lsh_topk(
-    df: DataFrame,
-    query: list[float],
-    k: int = 10,
-    n_planes: int = 8,
-    seed: int = 42,
-    n_probes: int = 1,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Approximate top-k: score only the query's LSH bucket(s).
-
-    n_probes > 1 enables multi-probe — union in the neighbor buckets whose
-    defining hyperplane the query is closest to. Recall rises toward exact
-    brute force as n_probes -> 2^n_planes while the scanned fraction stays
-    ~n_probes / 2^n_planes; the bucket IN-list prunes partitions when the
-    index is stored partitioned-by-bucket."""
-    planes = random_hyperplanes(len(query), n_planes, seed)
-    probes = multi_probe_buckets(query, planes, n_probes)
-    bucketed = lsh_bucket_assignments(df, len(query), n_planes, seed, vec_col, id_col)
-    return (
-        bucketed.filter(F.col("bucket").isin(probes))
-        .select(F.col(id_col), cosine_with_literal(F.col(vec_col), query).alias("cosine"))
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
-        .limit(k)
-    )
 
 
 def _iv_exactness_bound(dim: int) -> int:
@@ -633,9 +456,9 @@ def ivf_exact_cells(
     lloyd_iters: int = 1,
     cache_key=None,
 ) -> tuple[DataFrame, list[list[int]]]:
-    """Deterministic learned-centroid cell assignment — the hash-gateable
-    twin of ivf_index (whose MLlib KMeans centroids depend on sampling
-    and parallelism, so its consumers are rows-only).
+    """Deterministic learned-centroid cell assignment — hash-gateable,
+    unlike MLlib KMeans, whose centroids depend on sampling and
+    parallelism.
 
     Vectors quantize to integers (round(x·scale) — exact for the audit
     corpora and a pure geometry choice for float embeddings), seeds are
@@ -648,8 +471,7 @@ def ivf_exact_cells(
     n_cells·dim aggregate rows per iteration (the classic
     train-tiny/apply-everywhere split — quantization_stats precedent);
     the final assignment is a row-local literal-centroid argmin, no
-    shuffle. At 100 TB: fit on a sample exactly like ivf_index, write
-    partitioned by cell."""
+    shuffle. At 100 TB: fit on a sample, write partitioned by cell."""
     from .. import runtime_cache as _rc
     from .dedup import _cached_stage
 
@@ -869,46 +691,3 @@ def ivf_near_dup_pairs(
         # collapses the duplicates exactly
         out = out.distinct()
     return out
-
-
-def ivf_write_index(
-    assigned: DataFrame,
-    path: str,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> None:
-    """Persist an IVF index partitioned by cluster: one parquet directory
-    per centroid. This is the 100 TB layout — a probe's `cluster IN (...)`
-    predicate becomes a partition filter, so Spark lists and reads ONLY the
-    probed clusters' files; the other (n_clusters - n_probe)/n_clusters of
-    the corpus is never opened."""
-    assigned.select(id_col, vec_col, "cluster").write.mode("overwrite").partitionBy(
-        "cluster"
-    ).parquet(path)
-
-
-def ivf_probe_persisted(
-    spark,
-    path: str,
-    centroids: np.ndarray,
-    query: list[float],
-    k: int = 10,
-    n_probe: int = 4,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Top-k against a persisted IVF index: centroid argsort picks the
-    probe clusters driver-side (centroids are tiny), the IN-list filter
-    prunes to those partitions, and only the surviving files are scanned."""
-    q = np.asarray(query, dtype=np.float64)
-    sims = (centroids @ q) / (
-        np.linalg.norm(centroids, axis=1) * np.linalg.norm(q) + 1e-12
-    )
-    probe = [int(i) for i in np.argsort(-sims)[:n_probe]]
-    return (
-        spark.read.parquet(path)
-        .filter(F.col("cluster").isin(probe))
-        .select(F.col(id_col), cosine_with_literal(F.col(vec_col), query).alias("cosine"))
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
-        .limit(k)
-    )

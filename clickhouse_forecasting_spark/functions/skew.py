@@ -33,36 +33,6 @@ def with_salt(df: DataFrame, n_salts: int = 16, salt_col: str = "_salt") -> Data
     )
 
 
-def salted_join(
-    facts: DataFrame,
-    dim: DataFrame,
-    key: str,
-    n_salts: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Skew-safe equi-join: salt the (hot) fact side, replicate the dim side
-    across all salt shards, join on (key, salt).
-
-    Complements AQE skew splitting: AQE subdivides oversized sort-merge
-    partitions at runtime, but when one key dominates BOTH the shuffle AND
-    the reducer's build side, pre-spreading it over n_salts reducers keeps
-    every task bounded. The dim side is replicated n_salts x — use only
-    when dim is small relative to the fact table (the same precondition as
-    a broadcast, which this generalizes when dim exceeds the broadcast
-    threshold but still fits n_salts-way replication through the shuffle).
-
-    Join-key columns from both inputs are preserved (the dim's key is
-    dropped post-join as redundant); supported `how`: inner / left."""
-    if how not in ("inner", "left"):
-        raise ValueError(f"salted_join supports inner/left, got {how!r}")
-    salted = with_salt(facts, n_salts)
-    replicated = dim.withColumn(
-        "_salt", F.explode(F.array(*[F.lit(i) for i in range(n_salts)]))
-    )
-    out = salted.join(replicated, on=[key, "_salt"], how=how)
-    return out.drop("_salt")
-
-
 def salted_agg(
     df: DataFrame,
     keys: list[str],

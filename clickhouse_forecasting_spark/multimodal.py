@@ -659,94 +659,3 @@ def sample_frames(df: DataFrame, n_frames: int = 4) -> DataFrame:
             yield pd.DataFrame(out, columns=[f.name for f in FRAME_SCHEMA.fields])
 
     return df.select("doc_id", "payload").mapInPandas(_explode_frames, schema=FRAME_SCHEMA)
-
-
-def resize_payloads(df: DataFrame, target_bytes: int = 64) -> DataFrame:
-    """Resize via mapInPandas — the payload->payload (1:1, bytes-in/bytes-out)
-    shape. STUB: truncation/padding stands in for PIL resize; a real decoder
-    swaps _resize only. Output schema mirrors input so resize composes with
-    attach_payload/extract_features pipelines."""
-
-    def _resize(payload: bytes) -> bytes:
-        if not payload:
-            raise ValueError("empty payload")
-        return payload[:target_bytes].ljust(target_bytes, b"\x00")
-
-    out_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-            T.StructField("resized", T.BooleanType()),
-        ]
-    )
-
-    def _apply(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    out.append({"doc_id": doc_id, "payload": _resize(bytes(payload)), "resized": True})
-                except Exception:
-                    out.append({"doc_id": doc_id, "payload": bytes(payload), "resized": False})
-            yield pd.DataFrame(out, columns=[f.name for f in out_schema.fields])
-
-    return df.select("doc_id", "payload").mapInPandas(_apply, schema=out_schema)
-
-
-def resize_images(df: DataFrame, target_w: int = 8, target_h: int = 8) -> DataFrame:
-    """Pixel-accurate image resize via mapInPandas: BMP payloads are
-    decoded, nearest-neighbor resampled to (target_w, target_h), and
-    re-encoded as BMP — the real payload->payload shape (compare
-    resize_payloads, the byte-level stub twin for codec-less formats).
-    Non-decodable payloads pass through with resized=False."""
-
-    out_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("resized", T.BooleanType()),
-        ]
-    )
-
-    def _apply(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                raw = bytes(payload)
-                try:
-                    w, h, rgb = decode_bmp(raw)
-                    resized = resize_rgb(rgb, w, h, target_w, target_h)
-                    out.append(
-                        {
-                            "doc_id": doc_id,
-                            "payload": encode_bmp(target_w, target_h, resized),
-                            "width": target_w,
-                            "height": target_h,
-                            "resized": True,
-                        }
-                    )
-                except Exception:
-                    out.append(
-                        {
-                            "doc_id": doc_id,
-                            "payload": raw,
-                            "width": None,
-                            "height": None,
-                            "resized": False,
-                        }
-                    )
-            yield pd.DataFrame(out, columns=[f.name for f in out_schema.fields])
-
-    return df.select("doc_id", "payload").mapInPandas(_apply, schema=out_schema)
-
-
-def media_stats(df: DataFrame) -> DataFrame:
-    """Metadata-only aggregation — runs entirely on the struct projection;
-    parquet column pruning means payload bytes are never read."""
-    return df.groupBy(F.col("media.kind").alias("kind")).agg(
-        F.count("*").alias("n_items"),
-        F.sum("media.byte_len").alias("total_bytes"),
-        F.avg("media.byte_len").alias("avg_bytes"),
-    )

@@ -41,13 +41,11 @@ from __future__ import annotations
 import logging
 from concurrent.futures import ThreadPoolExecutor
 from functools import reduce
-from typing import Callable
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.util import inheritable_thread_target
 
-from . import runtime_cache
 from .catalog import ParquetCatalog, forecast_table_name, is_forecast_output
 from .forecast import SeriesForecaster
 from .forecast.forecaster import wide_to_long
@@ -113,23 +111,18 @@ def _sink_tables(
     catalog: ParquetCatalog,
     forecasts: DataFrame,
     metrics: dict[str, list[str]],
-    release: Callable[[str], None],
 ) -> dict[str, bool]:
     """Write every table of ``metrics`` (table -> its metrics) from a thread
-    pool of min(#tables, defaultParallelism); ``release(table)`` runs after
-    each table's write. The pool threads inherit the caller's Spark local
-    properties (job group, scheduler pool). Returns, per table, whether its
-    output existed before the write."""
+    pool of min(#tables, defaultParallelism). The pool threads inherit the
+    caller's Spark local properties (job group, scheduler pool). Returns,
+    per table, whether its output existed before the write."""
     existed: dict[str, bool] = {}
 
     def _sink(group: list[str]) -> None:
         for t in group:
             out_name = forecast_table_name(t)
             existed[t] = catalog.table_exists(out_name)
-            try:
-                _process_table(catalog, forecasts, t, metrics[t])
-            finally:
-                release(t)
+            _process_table(catalog, forecasts, t, metrics[t])
             logger.info("wrote %s", out_name)
 
     # tables sharing an output name are written by one task, in input order
@@ -154,7 +147,6 @@ def run_forecast_pipeline(
     specific_tables: list[str] | None = None,
     only_future: bool = False,
     backend: str = "auto",
-    release_caches: bool = False,
 ) -> RunCounters:
     """Forecast every table of the catalog (or ``specific_tables``) into
     its ``bucket_forecast_*`` table; returns the run's counters.
@@ -164,22 +156,10 @@ def run_forecast_pipeline(
     ``failed_metrics``; its sink columns are all NULL. One INFO record per
     fitted table reads ``table=… rows=… series=… failed=… out=…``: input
     rows, metric series, series without a forecast, and the table written
-    (``-`` when none).
-
-    ``release_caches=True`` drops every ``runtime_cache`` entry keyed by a
-    table's name as that table finishes — the unpersist-after-consume hook
-    for long-lived sessions whose operators registered per-table stages
-    (r9 VERDICT #6). Default off: a session that re-runs tables (bench
-    iterations, incremental refits) wants the cache hits."""
+    (``-`` when none). The run leaves ``runtime_cache`` untouched."""
     counters = RunCounters()
     tables = specific_tables if specific_tables else catalog.list_tables()
     forecaster = SeriesForecaster(interval=interval, only_future=only_future, backend=backend)
-
-    def _release(table: str) -> None:
-        if release_caches:
-            n = runtime_cache.release(table)
-            if n:
-                logger.info("released %d cached stage(s) for %s", n, table)
 
     # R15 exact-membership selection happens in the `tables` assignment
     # above (the reference's substring-membership quirk at :231 is a
@@ -219,14 +199,11 @@ def run_forecast_pipeline(
                     t, rows, len(metrics), len(failed), forecast_table_name(t) if rows else "-",
                 )
             existed = _sink_tables(
-                catalog, forecasts, {t: candidates[t][1] for t in failed_metrics}, _release
+                catalog, forecasts, {t: candidates[t][1] for t in failed_metrics}
             )
         finally:
             forecasts.unpersist()
 
-    for t in status:
-        if t not in failed_metrics:
-            _release(t)
     for t in tables:
         if status[t] == "skipped":
             counters.skipped.append(t)

@@ -711,7 +711,7 @@ def q_semdedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup (Abbas et al. 2023) over the embedding corpus, scale-
     parameterized: k(n) = max(16, n // 64) centroids sampled on an even
     vec_id stride (the deterministic, oracle-replayable surrogate for
-    the learned-KMeans path in similarity.ivf_index — same k ∝ n rule,
+    learned k-means centroids — same k ∝ n rule,
     E[cluster] = 64 vectors at EVERY corpus size, so the per-cluster
     pairwise pass stays O(n·64) total instead of quadratic-in-corpus).
     Every vector joins the broadcast centroid frame (O(k) rows — no

@@ -964,10 +964,8 @@ def q_ivf_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     full-corpus miner: measured candidate growth is ~linear with
     n_cells ∝ n vs the hyperplane path's ~n^1.5
     (tests/test_ann_scale.py). The deterministic integer Lloyd trainer
-    makes this row hash-gateable end-to-end — the MLlib-KMeans trainer
-    (similarity.ivf_index) stays out of the registry because its
-    centroids depend on sampling/parallelism (covered by
-    tests/test_extensions.py instead)."""
+    makes this row hash-gateable end-to-end (MLlib KMeans centroids
+    depend on sampling/parallelism, so no SQL twin could replay them)."""
     emb = _t(spark, sf_dir, "embeddings")
     pairs = SIM.ivf_near_dup_pairs(
         emb, n_cells=16, threshold=0.3, scale=1000, cache_key=sf_dir

@@ -39,9 +39,7 @@ def q_similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     train+probe dataflow hash-gates against a DuckDB replay (r7 VERDICT
     #4) — this was the last MLlib-KMeans registry row, rows-only because
     k-means|| init sampling makes the centroids JVM engine state no SQL
-    twin can replay. The MLlib path itself (similarity.ivf_index /
-    ivf_topk) stays in the package, proven full-probe == brute-force and
-    partition-pruning in tests/test_extensions.py. Differs from
+    twin can replay; that MLlib path is gone from the package. Differs from
     similarity_ivf_det_topk, whose centroids are data-PICKED (vectors of
     vec_id 0..15, no training): this row exercises the Lloyd-trained
     probe path a production IVF deploys."""
@@ -131,7 +129,7 @@ def q_similarity_ivf_det_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     argmin assignment via ||c||^2 - 2<x,c>, in-probe cosine top-10 — is
     replayed by the DuckDB twin with the identical sequential-sum float
     algebra, so the whole IVF dataflow is hash-gated. Assignment runs
-    in-plan against literal centroids (the pq_encode recipe); ties break
+    in-plan against literal centroids; ties break
     to the lowest centroid id in both engines."""
     import math
 

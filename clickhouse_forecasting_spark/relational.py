@@ -1,5 +1,10 @@
 """Relational operators R1-R13 (SURVEY §2.2) as DataFrame combinators.
 
+R1 (projection) and R4 (the date cast, undated rows dropped) live in
+``forecast.forecaster.wide_to_long``, R3 (empty-input guard) in the
+pipeline's observed row count, and R5 (last known date) per series inside
+the fitter; this module holds the rest.
+
 Each function is a thin, declarative combinator — the point is to hand
 Catalyst a logical plan it can optimize (projection pruning into the parquet
 scan, predicate pushdown, broadcast joins for small frames), never to
@@ -9,40 +14,10 @@ being reproduced, not code being translated.
 
 from __future__ import annotations
 
-from functools import reduce
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .schema import DATE_AXIS_COLUMN
-
-
-# R1 — scan + projection + sort (forecast_script.py:157-158).
-# Catalyst pushes the projection into the parquet scan (ReadSchema); the
-# global sort is usually unnecessary (per-group sort happens inside the
-# forecaster), so callers should pass sort=False in the distributed path —
-# a 100 TB global sort is a full range-shuffle we never need for modeling.
-def scan_metrics(df: DataFrame, metrics: list[str], axis: str = DATE_AXIS_COLUMN, sort: bool = True) -> DataFrame:
-    out = df.select(axis, *metrics)
-    return out.orderBy(axis) if sort else out
-
-
-# R3 — empty-input guard (forecast_script.py:160-163)
-def is_empty(df: DataFrame) -> bool:
-    return df.isEmpty()
-
-
-# R4 — cast-to-date with coerce-on-error semantics (forecast_script.py:165,181):
-# try_to_date yields NULL for unparseable input, matching pandas
-# errors='coerce' (plain to_date throws under Spark 4's default ANSI mode).
-def cast_axis_to_date(df: DataFrame, axis: str = DATE_AXIS_COLUMN) -> DataFrame:
-    return df.withColumn(axis, F.try_to_date(F.col(axis)))
-
-
-# R5 — max aggregate (forecast_script.py:166). One-row driver fetch; at scale
-# this is parquet-stat-answerable (aggregate pushdown reads footers only).
-def last_known_date(df: DataFrame, axis: str = DATE_AXIS_COLUMN):
-    return df.agg(F.max(axis).alias("last_known_date")).collect()[0][0]
 
 
 def sql_ident(name: str) -> str:
@@ -111,11 +86,9 @@ def only_future(df: DataFrame, last_date, ds_col: str = "ds") -> DataFrame:
     return df.filter(F.col(ds_col) > F.lit(last_date))
 
 
-# R11/R12 — k-way full outer join on the date axis with NULL fill
-# (forecast_script.py:168,187-194,207-211). Two strategies:
-#   pivot: one aggregation (one exchange on ds), used whenever the metric
-#          list is known (it is, from R2)
-#   reduce-outer-join: k joins, each its own shuffle
+# R11/R12 — the reference's k-way full outer join of per-metric forecasts on
+# the date axis with NULL fill (forecast_script.py:168,187-194,207-211), as
+# one aggregation: the metric list is known (R2), so no join is needed.
 def pivot_forecasts_wide(long_df: DataFrame, metrics: list[str]) -> DataFrame:
     """long (ds, metric, yhat, yhat_lower, yhat_upper) -> wide, in sink
     column order (date, m..., m_min..., m_max...; see sink_column_order).
@@ -140,11 +113,6 @@ def pivot_forecasts_wide(long_df: DataFrame, metrics: list[str]) -> DataFrame:
         for m in metrics
     ]
     return wide.selectExpr(*cols)
-
-
-def outer_join_on_date(frames: list[DataFrame], key: str = "ds") -> DataFrame:
-    """k-way FULL OUTER JOIN on the date axis; absent cells stay NULL (R12)."""
-    return reduce(lambda a, b: a.join(b, key, "full_outer"), frames)
 
 
 # R13 — ordered sink projection: date, all cols, all _min, all _max

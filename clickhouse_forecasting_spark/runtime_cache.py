@@ -34,12 +34,11 @@ from pyspark.sql import DataFrame
 _FRAMES: dict[tuple, DataFrame] = {}
 # small driver-side artifacts (e.g. trained centroids), same key shape
 _VALUES: dict[tuple, object] = {}
-# Registry mutations come from worker threads too (the pipeline's sink
-# pool with release_caches=True releases per-table tokens while sibling
-# threads register via cached_frame — ADVICE r10: unlocked
-# iterate-and-mutate risks "dictionary changed size during iteration" /
-# lost entries). One module lock guards every _FRAMES/_VALUES touch;
-# build() runs OUTSIDE it (it triggers Spark jobs and may re-enter).
+# The registry is shared by every driver thread of the process, and a
+# caller may build or release frames from a thread pool (ADVICE r10:
+# unlocked iterate-and-mutate risks "dictionary changed size during
+# iteration" / lost entries). One module lock guards every _FRAMES/_VALUES
+# touch; build() runs OUTSIDE it (it triggers Spark jobs and may re-enter).
 _LOCK = threading.Lock()
 
 
@@ -100,28 +99,6 @@ def release(token=None) -> int:
             frame.unpersist()
         except Exception:
             pass  # session already stopped: the JVM cache died with it
-        n += 1
-    return n
-
-
-def release_exact(df: DataFrame, key: tuple) -> int:
-    """Drop exactly ``(applicationId, *key)`` — the precise-release twin
-    of ``release(token)`` for callers that hold the full key (ADVICE r9:
-    releasing by a bare int token matches that int at ANY key position,
-    so a semanticHash equal to, say, an ivfcells n_cells parameter would
-    unpersist an unrelated family's stage)."""
-    full = (df.sparkSession.sparkContext.applicationId, *key)
-    n = 0
-    with _LOCK:
-        frame = _FRAMES.pop(full, None)
-        if full in _VALUES:
-            del _VALUES[full]
-            n += 1
-    if frame is not None:
-        try:
-            frame.unpersist()
-        except Exception:
-            pass
         n += 1
     return n
 

@@ -30,6 +30,23 @@ def default_parallelism() -> int:
     return os.cpu_count() or 8
 
 
+def default_driver_memory() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM``, else 24g capped at 40% of the host's
+    physical memory. In local mode the driver IS the executor: 8g left only
+    ~2.3 GB for the storage pool, and the persisted family stages (dedup
+    banded/sets at sf0.1 + the 60k dedup-scale corpus) churned it — r4/r5
+    bench showed 1-8 s eviction swings on UNRELATED queries. The cap keeps
+    two sessions (a test run and an oracle check) inside a small host's
+    memory: an uncapped 24g heap on a 15 GiB host grew until the kernel
+    killed the JVM. On a real cluster you size executors, not this."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    mib = int(phys * 0.4) // 2**20
+    return "24g" if mib >= 24 * 1024 else f"{mib}m"
+
+
 def build_session(
     app_name: str = DEFAULT_APP_NAME,
     master: str | None = None,
@@ -61,13 +78,7 @@ def build_session(
         .config("spark.sql.parquet.aggregatePushdown", "true")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
-        # local mode: the driver IS the executor. 8g left only ~2.3 GB for
-        # the storage pool, and the persisted family stages (dedup banded/
-        # sets at sf0.1 + the 60k dedup-scale corpus) churned it — r4/r5
-        # bench showed 1-8 s eviction swings on UNRELATED queries. The
-        # container has 128 GiB; on a real cluster you size executors, not
-        # this default.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", default_driver_memory())
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -1,13 +1,7 @@
-"""Heterogeneous lake ingestion + sink writers.
+"""Parquet dataset helpers: an existence probe, a partition-scoped upsert
+and the sink writer.
 
-The canonical store is parquet (catalog.py / __init__.read_table); these
-cover the other formats a lake feeds in, and the write path out.
-
-Scale notes:
-- CSV/JSON readers take an EXPLICIT schema: schema inference is a full
-  extra pass over the data (at 100 TB, a second scan), and inferred types
-  drift between samples. Inference is allowed only behind `infer=True`
-  for exploration.
+The canonical store is parquet (catalog.py). Scale notes:
 - The sink writer sorts within partitions (parquet min/max page stats ->
   the same pruning MergeTree's ORDER BY provides, forecast_script.py:143)
   and optionally partitions by a coarse key (date bucket) for partition
@@ -19,86 +13,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-
-def read_csv(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType | str | None = None,
-    header: bool = True,
-    infer: bool = False,
-    **options: str,
-) -> DataFrame:
-    if schema is None and not infer:
-        raise ValueError("pass a schema, or infer=True for exploration only")
-    reader = spark.read.option("header", str(header).lower())
-    if schema is not None:
-        reader = reader.schema(schema)
-    else:
-        reader = reader.option("inferSchema", "true")
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    return reader.csv(path)
-
-
-def read_jsonl(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType | str | None = None,
-    infer: bool = False,
-    **options: str,
-) -> DataFrame:
-    if schema is None and not infer:
-        raise ValueError("pass a schema, or infer=True for exploration only")
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    return reader.json(path)
-
-
-def read_orc(spark: SparkSession, path: str, **options: str) -> DataFrame:
-    """ORC lake ingestion (the other columnar format a warehouse feeds
-    in). ORC carries its schema, so no explicit-schema requirement —
-    column pruning and predicate pushdown work exactly as with parquet
-    (Spark's native vectorized ORC reader)."""
-    reader = spark.read
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    return reader.orc(path)
-
-
-def read_text_lines(spark: SparkSession, path: str) -> DataFrame:
-    """ClickHouse ``LineAsString`` input format: one row per line with a
-    single ``value`` string column — the raw-corpus ingestion shape for
-    text pipelines (split downstream with the engine's own expressions,
-    never driver-side)."""
-    return spark.read.text(path)
-
-
-def write_bucketed_table(
-    df: DataFrame,
-    name: str,
-    bucket_col: str,
-    n_buckets: int,
-    sort_col: str | None = None,
-    path: str | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Bucketed table write: pre-shuffles data into `n_buckets` files by
-    hash(bucket_col) so future equi-joins/aggregations on that key need NO
-    exchange — both sides arrive co-partitioned (the Hive-bucketing
-    equivalent of co-located MergeTree parts). The big-fact-join strategy
-    at 100 TB: pay the shuffle once at write time, never per query.
-    Requires saveAsTable (bucket metadata lives in the catalog)."""
-    writer = df.write.mode(mode).bucketBy(n_buckets, bucket_col)
-    if sort_col:
-        writer = writer.sortBy(sort_col)
-    if path:
-        writer = writer.option("path", path)
-    writer.format("parquet").saveAsTable(name)
 
 
 def path_exists(spark: SparkSession, path: str) -> bool:
@@ -145,30 +59,6 @@ def upsert_partitioned(
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy(partition_col)
         .parquet(path)
-    )
-
-
-def compact_files(
-    spark: SparkSession,
-    path: str,
-    target_files: int,
-    sort_within: str | list[str] | None = None,
-) -> int:
-    """Small-file compaction: rewrite a parquet dataset into `target_files`
-    files (optionally re-sorted so min/max page stats stay tight).
-
-    Streaming sinks and incremental upserts accrete small files; at 100 TB
-    scan parallelism and footer-read overhead degrade with file count, so
-    periodic compaction is part of table maintenance. coalesce() (no
-    shuffle) merges partitions; a localCheckpoint materializes the data
-    before the self-overwrite. Returns the new file count."""
-    df = spark.read.parquet(path).coalesce(target_files)
-    if sort_within:
-        cols = [sort_within] if isinstance(sort_within, str) else sort_within
-        df = df.sortWithinPartitions(*cols)
-    df.localCheckpoint().write.mode("overwrite").parquet(path)
-    return len(
-        [f for f in spark.read.parquet(path).inputFiles() if f.endswith(".parquet")]
     )
 
 

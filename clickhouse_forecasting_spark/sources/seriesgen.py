@@ -39,7 +39,6 @@ from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
     InputPartition,
-    SimpleDataSourceStreamReader,
 )
 
 
@@ -107,55 +106,6 @@ class SeriesGenReader(DataSourceReader):
         yield batch
 
 
-class SeriesGenStreamReader(SimpleDataSourceStreamReader):
-    """Streaming half of the source (Spark 4 Python DataSource stream
-    API): each micro-batch emits the NEXT ``batch_days`` days for every
-    series — a replayable, deterministic message-bus double with a real
-    offset contract. The offset is ``{"day": k}`` (days emitted so
-    far); ``readBetweenOffsets`` regenerates any [start, end) range
-    bit-identically (the generator is a pure hash formula), which is
-    exactly the replay property Structured Streaming's WAL recovery
-    relies on. ``max_days`` bounds the stream so availableNow-style
-    drains terminate."""
-
-    def __init__(self, options: dict):
-        self.start = _dt.date.fromisoformat(options.get("start", "2024-01-01"))
-        self.series = int(options.get("series", "4"))
-        self.amplitude = float(options.get("amplitude", "10.0"))
-        self.batch_days = int(options.get("batch_days", "7"))
-        self.max_days = int(options.get("max_days", "28"))
-
-    def initialOffset(self) -> dict:
-        return {"day": 0}
-
-    def _rows(self, d0: int, d1: int):
-        for d in range(d0, d1):
-            day = self.start + _dt.timedelta(days=d)
-            for sid in range(self.series):
-                base = 100.0 + 10.0 * sid
-                y = (
-                    base
-                    + 0.05 * d
-                    + self.amplitude * math.sin(2 * math.pi * (d % 7) / 7.0)
-                    + 2.0 * _noise(sid, d)
-                )
-                yield (day, sid, y)
-
-    def read(self, start: dict):
-        d0 = int(start["day"])
-        d1 = min(d0 + self.batch_days, self.max_days)
-        # materialized list, not a generator: the engine's prefetch
-        # cache copy.copy()s the returned iterator (generators can't be
-        # copied); a micro-batch is series x batch_days rows — small
-        return list(self._rows(d0, d1)), {"day": d1}
-
-    def readBetweenOffsets(self, start: dict, end: dict):
-        return list(self._rows(int(start["day"]), int(end["day"])))
-
-    def commit(self, end: dict) -> None:  # offsets are pure replay state
-        pass
-
-
 class SeriesGenDataSource(DataSource):
     @classmethod
     def name(cls) -> str:
@@ -166,9 +116,6 @@ class SeriesGenDataSource(DataSource):
 
     def reader(self, schema) -> SeriesGenReader:
         return SeriesGenReader(self.options)
-
-    def simpleStreamReader(self, schema) -> SeriesGenStreamReader:
-        return SeriesGenStreamReader(self.options)
 
 
 def register(spark) -> None:

@@ -2,20 +2,17 @@
 
 The reference is batch-only (its only source is a ClickHouse HTTP
 client, forecast_script.py:82-94); this module is the extension-surface
-message-bus entry point. It is deliberately split in two layers:
-
-1. ``parse_events_payload`` — the WIRE-to-events transformation: takes
-   any frame in the Kafka source's fixed wire schema (key/value binary,
-   topic, partition, offset, timestamp, timestampType — the schema the
-   built-in ``format("kafka")`` source emits) and parses the JSON value
-   payload into the canonical events schema. Pure column expressions
-   (from_json, casts) — no Python, streaming- and batch-applicable.
-2. ``read_kafka_events`` — the thin production binding that plugs layer
-   1 onto ``readStream.format("kafka")``. It needs the Kafka connector
-   jar and a broker, neither of which exists in this container, so
-   tests exercise layer 1 through a FILE-BACKED wire double
-   (``events_to_wire``) replayed with availableNow — the identical
-   parse/rollup plan the Kafka binding would run.
+message-bus entry point: ``parse_events_payload``, the WIRE-to-events
+transformation. It takes any frame in the Kafka source's fixed wire schema
+(``KAFKA_WIRE_SCHEMA``: key/value binary, topic, partition, offset,
+timestamp, timestampType — the schema the built-in ``format("kafka")``
+source emits) and parses the JSON value payload into the canonical events
+schema. Pure column expressions (from_json, casts) — no Python, streaming-
+and batch-applicable. A deployment applies it to
+``readStream.format("kafka")``, which needs the Kafka connector jar and a
+broker; neither ships with the engine, so the parse is exercised through a
+FILE-BACKED wire double (``events_to_wire``) replayed as a parquet stream —
+the identical parse/rollup plan.
 
 Scale notes: the wire parse is row-local (whole-stage codegen) and the
 downstream rollup is the shared ``daily_rollup_stream`` plan, so a
@@ -26,14 +23,14 @@ structs (from_json semantics) and are counted, not dropped silently.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .rollup import EVENTS_SCHEMA
 
 # the fixed schema the built-in kafka source emits (Spark docs; the
-# double below must match it field-for-field so layer 1 is identical
+# double below must match it field-for-field so the parse is identical
 # in tests and production)
 KAFKA_WIRE_SCHEMA = T.StructType(
     [
@@ -66,30 +63,6 @@ def parse_events_payload(raw: DataFrame) -> DataFrame:
     return parsed.select("e.*", "broker_ts", "kafka_partition", "kafka_offset")
 
 
-def read_kafka_events(
-    spark: SparkSession,
-    bootstrap_servers: str,
-    topic: str,
-    starting_offsets: str = "earliest",
-) -> DataFrame:
-    """Production binding: readStream.format("kafka") -> parsed events.
-
-    Requires the spark-sql-kafka connector on the classpath and a
-    reachable broker — neither exists in this container, so this
-    function is exercised only through its layer-1 parse (see module
-    docstring). maxOffsetsPerTrigger is the backpressure dial at real
-    scale; partitions map 1:1 onto source tasks.
-    """
-    raw = (
-        spark.readStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("subscribe", topic)
-        .option("startingOffsets", starting_offsets)
-        .load()
-    )
-    return parse_events_payload(raw)
-
-
 def events_to_wire(events: DataFrame, topic: str = "events") -> DataFrame:
     """Batch helper: encode canonical events AS the Kafka wire schema —
     the file-backed test double. key = user_id bytes (the partition key
@@ -114,9 +87,3 @@ def events_to_wire(events: DataFrame, topic: str = "events") -> DataFrame:
         F.col("ts").alias("timestamp"),
         F.lit(0).cast("int").alias("timestampType"),
     )
-
-
-def stream_wire_files(spark: SparkSession, path: str) -> DataFrame:
-    """readStream over a directory of wire-schema parquet — the replay
-    entry point tests use in place of a broker."""
-    return spark.readStream.schema(KAFKA_WIRE_SCHEMA).parquet(path)

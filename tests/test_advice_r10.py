@@ -9,9 +9,8 @@
 3. batched_fit_predict_long survives a partition whose whole-frame prep
    is poisoned by ONE series: the bad series fails alone, co-located
    series still forecast (ADVICE r9 #3, M4 contract for direct callers).
-4. run_forecast_pipeline(release_caches=True) drops table-keyed
-   runtime_cache entries as each table finishes; default leaves them
-   (r9 VERDICT #6).
+4. run_forecast_pipeline leaves runtime_cache entries keyed by its
+   tables' names in place (r9 VERDICT #6).
 """
 
 from __future__ import annotations
@@ -54,8 +53,10 @@ def test_dispatch_overcap_keeps_own_entry_spares_other_family(spark, monkeypatch
             "fallback's sampler+shuffle reuse"
         )
     finally:
-        runtime_cache.release_exact(df, foreign_key)
-        runtime_cache.release_exact(df, ("dispatch", h))
+        # tokens only this test creates: the foreign corpus tag and the
+        # probe's plan hash
+        runtime_cache.release("corpus-x")
+        runtime_cache.release(h)
 
 
 def test_dispatch_family_capped_fifo(spark):
@@ -106,9 +107,8 @@ def test_batched_prep_poisoned_partition_fails_alone():
     assert len(out[out["metric"] == "good"]) == 13  # 10 history + 3 future
 
 
-def test_pipeline_release_caches_flag(spark, tmp_path):
-    """3-table run with release_caches=True: table-keyed cache entries are
-    gone afterward; the default (False) run leaves them."""
+def test_pipeline_preserves_cache_entries(spark, tmp_path):
+    """3-table run: cache entries keyed by the tables' names survive it."""
     from clickhouse_forecasting_spark.catalog import ParquetCatalog
     from clickhouse_forecasting_spark.pipeline import run_forecast_pipeline
 
@@ -128,25 +128,16 @@ def test_pipeline_release_caches_flag(spark, tmp_path):
             t,
         )
 
-    def register_stages():
-        for t in tables:
-            runtime_cache.cached_frame(
-                spark.range(1), ("stage", t), lambda: spark.range(3)
-            )
-
-    register_stages()
-    run_forecast_pipeline(
-        cat, 5, specific_tables=tables, backend="fourier_ridge",
-    )
-    app = spark.sparkContext.applicationId
-    assert all((app, "stage", t) in runtime_cache.entries() for t in tables), (
-        "default run must PRESERVE cache entries (bench cache hits)"
-    )
-
-    counters = run_forecast_pipeline(
-        cat, 5, specific_tables=tables, backend="fourier_ridge",
-        release_caches=True,
-    )
-    assert sorted(counters.successful) == sorted(tables)
-    left = [k for k in runtime_cache.entries() if k[0] == app and "stage" in k]
-    assert left == [], f"release_caches=True left entries: {left}"
+    for t in tables:
+        runtime_cache.cached_frame(spark.range(1), ("stage", t), lambda: spark.range(3))
+    try:
+        counters = run_forecast_pipeline(
+            cat, 5, specific_tables=tables, backend="fourier_ridge",
+        )
+        assert sorted(counters.successful) == sorted(tables)
+        app = spark.sparkContext.applicationId
+        assert all((app, "stage", t) in runtime_cache.entries() for t in tables), (
+            "the run must PRESERVE cache entries (bench cache hits)"
+        )
+    finally:
+        runtime_cache.release("stage")

@@ -10,9 +10,9 @@
    identically.
 3. pagerank(max_driver_nodes=0) on an empty graph does not leak a
    persisted empty-nodes frame.
-4. runtime_cache survives concurrent cached_frame/release from worker
-   threads (the pipeline's sink pool with release_caches=True) without
-   "dictionary changed size during iteration" or lost entries.
+4. runtime_cache survives concurrent cached_frame/release from several
+   driver threads without "dictionary changed size during iteration" or
+   lost entries.
 """
 
 from __future__ import annotations

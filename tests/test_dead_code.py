@@ -1,0 +1,97 @@
+"""Guard against library code that nothing calls.
+
+Every public module-level def (function or class) of the package must be
+referenced from the package, ``bench.py``, ``__spark_entry__.py``,
+``tools/`` or ``perfbench/``. A reference is a name or attribute in the
+source (an import counts); string constants and docstrings do not, and
+neither does a def's own body. Tests are not callers: a def only a test
+reaches is dead code with a test attached. ``q_*`` functions are reached
+through the query registry, which collects them by prefix.
+
+No Spark: the check reads source files only.
+"""
+
+from __future__ import annotations
+
+import ast
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parent.parent
+PACKAGE = "clickhouse_forecasting_spark"
+
+# unreached defs that stay on purpose, each with its reason
+ALLOWED = {
+    f"{PACKAGE}.functions.similarity.brute_force_topk":
+        "exact verifier of the approximate top-k tests (test_quantized_topk_recall_vs_exact)",
+    f"{PACKAGE}.functions.dedup.simhash32":
+        "column twin that test_simhash_frame_matches_column_impl checks simhash_signatures against",
+    f"{PACKAGE}.plans.bounded_key_fanins":
+        "plan census audit of bounded-key fan-ins (test_plans, test_ranking)",
+    f"{PACKAGE}.plans.scan_read_schemas":
+        "scan ReadSchema audit of projection pushdown (test_plans)",
+    f"{PACKAGE}.telemetry.assert_runtime_single_partitions_bounded":
+        "runtime single-partition audit (test_runtime_singlepart)",
+}
+
+
+def _caller_files() -> list[Path]:
+    files = sorted((ROOT / PACKAGE).rglob("*.py"))
+    files += [ROOT / "bench.py", ROOT / "__spark_entry__.py"]
+    for d in ("tools", "perfbench"):
+        files += sorted((ROOT / d).rglob("*.py"))
+    return files
+
+
+def unreached_defs() -> set[str]:
+    """Dotted names of the package's public module-level defs that no
+    caller references outside the def's own body."""
+    trees = {p: ast.parse(p.read_text(), filename=str(p)) for p in _caller_files()}
+    defs: dict[str, list[tuple[str, Path, ast.AST]]] = {}
+    for path, tree in trees.items():
+        if not path.is_relative_to(ROOT / PACKAGE):
+            continue
+        module = ".".join(path.relative_to(ROOT).with_suffix("").parts)
+        module = module.removesuffix(".__init__")
+        for node in tree.body:
+            if (
+                isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+                and not node.name.startswith(("_", "q_"))
+            ):
+                defs.setdefault(node.name, []).append((f"{module}.{node.name}", path, node))
+    refs: dict[str, list[tuple[Path, int]]] = {}
+    for path, tree in trees.items():
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Name):
+                name, line = node.id, node.lineno
+            elif isinstance(node, ast.Attribute):
+                name, line = node.attr, node.lineno
+            elif isinstance(node, ast.ImportFrom):
+                for alias in node.names:
+                    if alias.name in defs:
+                        refs.setdefault(alias.name, []).append((path, node.lineno))
+                continue
+            else:
+                continue
+            if name in defs:
+                refs.setdefault(name, []).append((path, line))
+    dead = set()
+    for name, sites in defs.items():
+        for dotted, path, node in sites:
+            # every reference (if any) lies in the def's own body
+            if all(
+                p == path and node.lineno <= line <= node.end_lineno
+                for p, line in refs.get(name, [])
+            ):
+                dead.add(dotted)
+    return dead
+
+
+def test_no_unreached_public_defs():
+    dead = unreached_defs()
+    new = sorted(dead - set(ALLOWED))
+    assert not new, (
+        f"{len(new)} public def(s) that nothing calls; delete them (and "
+        "any test that only covers them) or call them:\n  " + "\n  ".join(new)
+    )
+    stale = sorted(set(ALLOWED) - dead)
+    assert not stale, f"allowlisted defs that are now called or gone: {stale}"

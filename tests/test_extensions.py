@@ -90,16 +90,6 @@ def test_quality_score_range(docs):
 # --------------------------------------------------------------- dedup ----
 
 
-def test_exact_dedup(docs):
-    groups = DD.exact_duplicates(docs).collect()
-    assert len(groups) == 1
-    assert groups[0]["n_docs"] == 2
-    assert groups[0]["keeper_id"] == 0
-    kept = DD.dedup_exact(docs)
-    assert kept.count() == docs.count() - 1
-    assert kept.filter(F.col("doc_id") == 1).count() == 0
-
-
 def test_minhash_signatures_identical_for_dups(docs):
     sig = DD.minhash_signatures(docs, num_hashes=8)
     rows = {r["doc_id"]: [r[f"sig_{i}"] for i in range(8)] for r in sig.collect()}
@@ -167,14 +157,12 @@ def test_pairwise_topk_ranks(vecs):
 
 
 def test_lsh_topk_subset_of_bruteforce(spark, sf_dir):
+    from clickhouse_forecasting_spark.queries import SPARK_QUERIES
+
     emb = read_table(spark, sf_dir, "embeddings")
-    query = list(emb.filter(F.col("vec_id") == 0).first()["embedding"])
-    approx = SIM.lsh_topk(emb, [float(x) for x in query], k=5, n_planes=4)
-    exact = SIM.brute_force_topk(emb, [float(x) for x in query], k=emb.count())
-    approx_ids = {r["vec_id"] for r in approx.collect()}
-    exact_ranks = {r["vec_id"]: i for i, r in enumerate(exact.collect())}
+    approx_ids = {r["vec_id"] for r in SPARK_QUERIES["similarity_lsh_topk"](spark, sf_dir).collect()}
     # every approx hit is a real vector; the query's own bucket contains it
-    assert approx_ids <= set(exact_ranks)
+    assert approx_ids <= {r["vec_id"] for r in emb.select("vec_id").collect()}
     assert 0 in approx_ids  # identical vector always shares the bucket
 
 
@@ -219,25 +207,27 @@ def test_hyperplane_bucket_occupancy_guard_passes_healthy(spark, sf_dir):
 def test_ivf_full_probe_equals_bruteforce(spark, sf_dir):
     emb = read_table(spark, sf_dir, "embeddings")
     query = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
-    assigned, centroids = SIM.ivf_index(emb, n_clusters=8)
-    full = SIM.ivf_topk(assigned, centroids, query, k=5, n_probe=8).collect()
+    assigned, cents = SIM.ivf_exact_cells(emb, n_cells=8)
+    # probing every learned cell scores every vector: exact top-k
+    every = assigned.filter(F.col("cell").isin(list(range(len(cents)))))
+    full = SIM.brute_force_topk(every, query, k=5).collect()
     exact = SIM.brute_force_topk(emb, query, k=5).collect()
     assert [r["vec_id"] for r in full] == [r["vec_id"] for r in exact]
-    # partial probe returns k results from probed clusters only
-    part = SIM.ivf_topk(assigned, centroids, query, k=5, n_probe=2).collect()
-    assert len(part) == 5
-    assert part[0]["vec_id"] == 0  # the query vector's own cluster is probed first
+    # probing only the query vector's own cell finds it first
+    own = assigned.filter(F.col("vec_id") == 0).first()["cell"]
+    part = SIM.brute_force_topk(assigned.filter(F.col("cell") == own), query, k=5).collect()
+    assert part[0]["vec_id"] == 0
 
 
 def test_multiprobe_recall_dominates_single_probe(spark, sf_dir):
+    from clickhouse_forecasting_spark.queries import SPARK_QUERIES
+
     emb = read_table(spark, sf_dir, "embeddings")
     query = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
     exact = {r["vec_id"] for r in SIM.brute_force_topk(emb, query, k=10).collect()}
-    single = {r["vec_id"] for r in SIM.lsh_topk(emb, query, k=10, n_planes=6).collect()}
-    multi = {
-        r["vec_id"]
-        for r in SIM.lsh_topk(emb, query, k=10, n_planes=6, n_probes=4).collect()
-    }
+    # both queries: top-10 over 6 seed-42 planes, 1 and 4 probed buckets
+    single = {r["vec_id"] for r in SPARK_QUERIES["similarity_lsh_topk"](spark, sf_dir).collect()}
+    multi = {r["vec_id"] for r in SPARK_QUERIES["similarity_multiprobe_topk"](spark, sf_dir).collect()}
     # probing strictly more buckets can only improve recall vs brute force
     assert len(multi & exact) >= len(single & exact)
     assert 0 in multi
@@ -246,23 +236,6 @@ def test_multiprobe_recall_dominates_single_probe(spark, sf_dir):
     probes = SIM.multi_probe_buckets(query, planes, 4)
     assert len(probes) == len(set(probes)) == 4
     assert all(bin(probes[0] ^ p).count("1") == 1 for p in probes[1:])
-
-
-def test_ivf_persisted_index_prunes_partitions(spark, sf_dir, tmp_path):
-    from clickhouse_forecasting_spark.plans import plan_summary
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    query = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
-    assigned, centroids = SIM.ivf_index(emb, n_clusters=8)
-    path = str(tmp_path / "ivf_index")
-    SIM.ivf_write_index(assigned, path)
-    probed = SIM.ivf_probe_persisted(spark, path, centroids, query, k=5, n_probe=2)
-    # the cluster IN-list must reach the scan as a partition filter...
-    plan = probed._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "cluster" in plan.split("PartitionFilters")[1][:200]
-    # ...and the persisted probe must agree with the in-memory probe
-    mem = SIM.ivf_topk(assigned, centroids, query, k=5, n_probe=2).collect()
-    assert [r["vec_id"] for r in probed.collect()] == [r["vec_id"] for r in mem]
 
 
 # ----------------------------------------------------------- multimodal ----
@@ -293,19 +266,6 @@ def test_frame_sampling_shape(docs):
     for doc_id, rows in by_doc.items():
         assert [r["frame_idx"] for r in sorted(rows, key=lambda r: r["frame_idx"])] == [0, 1, 2]
         assert all(len(r["frame_checksum"]) == 32 for r in rows)
-
-
-def test_resize_payloads(docs):
-    mm = MM.attach_payload(docs)
-    out = {r["doc_id"]: r for r in MM.resize_payloads(mm, target_bytes=16).collect()}
-    assert len(out[0]["payload"]) == 16 and out[0]["resized"]
-    assert not out[6]["resized"]  # empty payload passes through unresized
-
-
-def test_media_stats(docs):
-    stats = MM.media_stats(MM.attach_payload(docs)).collect()
-    assert len(stats) == 1
-    assert stats[0]["n_items"] == docs.count()
 
 
 # ------------------------------------------------------------ streaming ----
@@ -377,52 +337,6 @@ def test_stateful_sessionization_matches_batch(spark, sf_dir, tmp_path):
         r["user_id"]: r["n_sessions"] for r in spark.table("sessions_test").collect()
     }
     assert got == batch
-
-
-def test_transform_with_state_running_stats(spark, sf_dir, tmp_path):
-    """Spark 4 transformWithStateInPandas: running per-user stats after an
-    availableNow replay equal the batch aggregation."""
-    from clickhouse_forecasting_spark.streaming.running_stats import (
-        HAVE_TWS_DEPS,
-        running_stats_stream,
-    )
-
-    if not HAVE_TWS_DEPS:
-        pytest.skip("transformWithState needs google.protobuf (absent in this env)")
-
-    events = read_table(spark, sf_dir, "events")
-    batch = {
-        r["user_id"]: (r["n"], r["s"], r["mn"], r["mx"])
-        for r in events.groupBy("user_id")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum("value").alias("s"),
-            F.min("value").alias("mn"),
-            F.max("value").alias("mx"),
-        )
-        .collect()
-    }
-    src = str(tmp_path / "events_stats")
-    events.write.parquet(src)
-    stream = spark.readStream.schema(events.schema).parquet(src)
-    q = (
-        running_stats_stream(stream)
-        .writeStream.format("memory")
-        .queryName("stats_test")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(180), 'stream did not finish in 180s'
-    got = {
-        r["user_id"]: (r["n_events"], r["total_value"], r["min_value"], r["max_value"])
-        for r in spark.table("stats_test").collect()
-    }
-    assert set(got) == set(batch)
-    for u, (n, s, mn, mx) in batch.items():
-        gn, gs, gmn, gmx = got[u]
-        assert gn == n and gmn == mn and gmx == mx
-        assert gs == pytest.approx(s, rel=1e-9)
 
 
 def test_streaming_checkpoint_resume(spark, sf_dir, tmp_path):
@@ -593,28 +507,3 @@ def test_quantized_topk_recall_vs_exact(spark, sf_dir):
     recall = len(exact & approx) / len(exact)
     assert recall >= 0.8, (recall, exact, approx)
     assert 0 in approx  # the query vector itself is its own best match
-
-
-def test_pq_topk_recall_vs_exact(spark, sf_dir):
-    from clickhouse_forecasting_spark.functions.similarity import (
-        brute_force_topk,
-        pq_encode,
-        pq_topk,
-        pq_train,
-        with_normalized,
-    )
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    nemb = with_normalized(emb).cache()
-    books = pq_train(nemb, m=8, k=32)
-    assert books.shape == (8, 32, 8)
-    encoded = pq_encode(nemb, books)
-    codes = encoded.select(*[f"code_{s}" for s in range(8)]).head()
-    assert all(0 <= c <= 31 for c in codes)
-    raw_query = [float(x) for x in emb.filter(F.col("vec_id") == 0).head().embedding]
-    nquery = [float(x) for x in nemb.filter(F.col("vec_id") == 0).head().nvec]
-    exact = {r.vec_id for r in brute_force_topk(emb, raw_query, k=10).collect()}
-    approx = {r.vec_id for r in pq_topk(encoded, nquery, books, topk=30).collect()}
-    recall = len(exact & approx) / len(exact)
-    assert recall >= 0.6, (recall, sorted(exact), sorted(approx))
-    nemb.unpersist()

@@ -13,7 +13,6 @@ from clickhouse_forecasting_spark.streaming.kafka_shape import (
     KAFKA_WIRE_SCHEMA,
     events_to_wire,
     parse_events_payload,
-    stream_wire_files,
 )
 from clickhouse_forecasting_spark.streaming.rollup import daily_rollup_stream
 
@@ -78,7 +77,7 @@ def test_kafka_shaped_stream_feeds_shared_rollup(spark, sf_dir, tmp_path):
     replayed with availableNow, complete mode == the batch rollup."""
     events, src = _wire_dir(spark, sf_dir, tmp_path, "wire_rollup")
     rolled = daily_rollup_stream(
-        parse_events_payload(stream_wire_files(spark, src))
+        parse_events_payload(spark.readStream.schema(KAFKA_WIRE_SCHEMA).parquet(src))
     )
     q = (
         rolled.writeStream.format("memory")
@@ -102,7 +101,7 @@ def test_kafka_shaped_stream_feeds_shared_rollup(spark, sf_dir, tmp_path):
 def test_kafka_shaped_append_mode_emits_closed_days(spark, sf_dir, tmp_path):
     events, src = _wire_dir(spark, sf_dir, tmp_path, "wire_append")
     rolled = daily_rollup_stream(
-        parse_events_payload(stream_wire_files(spark, src))
+        parse_events_payload(spark.readStream.schema(KAFKA_WIRE_SCHEMA).parquet(src))
     )
     q = (
         rolled.writeStream.format("memory")

@@ -3,7 +3,7 @@
 The encoder is pinned byte-for-byte against a hand-assembled 2x2 BMP (so
 encoder+decoder can't be wrong together), the checked-in fixture decodes
 to an independently recomputed gradient, and the Spark-side mapInPandas
-operators (extract_features, resize_images) are verified on real pixels.
+operator (extract_features) is verified on real pixels.
 """
 
 from __future__ import annotations
@@ -130,28 +130,6 @@ def test_extract_features_real_pixels_in_spark(spark):
     assert rows[1].feat_dim == 4
     assert rows[2].feat_mean is not None  # stub fallback still works
     assert rows[3].feat_mean is None  # corrupt row isolated, not failed
-
-
-def test_resize_images_pixel_accurate_in_spark(spark):
-    payload = open(FIXTURE, "rb").read()
-    src_rgb = _gradient_rgb()
-    df = spark.createDataFrame(
-        [(1, bytearray(payload)), (2, bytearray(b"opaque"))],
-        "doc_id long, payload binary",
-    )
-    rows = {r.doc_id: r for r in MM.resize_images(df, 3, 2).collect()}
-    assert rows[1].resized and (rows[1].width, rows[1].height) == (3, 2)
-    w, h, got = MM.decode_bmp(bytes(rows[1].payload))
-    assert (w, h) == (3, 2)
-    assert got == MM.resize_rgb(src_rgb, 6, 4, 3, 2)
-    # and the expected pixels, recomputed independently: (x*6//3, y*4//2)
-    expected = bytearray()
-    for y in range(2):
-        for x in range(3):
-            sx, sy = x * 2, y * 2
-            expected += src_rgb[(sy * 6 + sx) * 3 : (sy * 6 + sx) * 3 + 3]
-    assert got == bytes(expected)
-    assert not rows[2].resized and bytes(rows[2].payload) == b"opaque"
 
 
 # ---------------------------------------------------------------------------

@@ -1,6 +1,7 @@
 """Property-based tests (SURVEY §5.2): pivot∘unpivot identity on random
-wide frames, outer-join NULL-fill vs DuckDB, C6 name derivation on random
-prefixes, minhash signature invariance under shingle-set permutation.
+wide frames, the pivot's outer-join NULL-fill vs DuckDB, C6 name derivation
+on random prefixes, star connected components vs union-find, and the
+ranking primitives vs their window formulations.
 """
 
 from __future__ import annotations
@@ -83,10 +84,14 @@ def test_outer_join_matches_duckdb(spark, frame):
         return
     schema = "date date, " + ", ".join(f"{m} double" for m in metrics)
     df = spark.createDataFrame(rows, schema)
-    a = df.select(F.col("date").alias("ds"), "m0").filter(F.col("m0").isNotNull())
-    b = df.select(F.col("date").alias("ds"), "m1").filter(F.col("m1").isNotNull())
+    # one long forecast frame holding each metric's non-NULL rows; the
+    # pivot must rebuild the reference's per-metric full outer join
+    long_df = R.unpivot_metrics(df, ["m0", "m1"]).filter(F.col("y").isNotNull()).select(
+        "ds", "metric", *[F.col("y").alias(c) for c in ("yhat", "yhat_lower", "yhat_upper")]
+    )
     ours = {
-        r["ds"]: (r["m0"], r["m1"]) for r in R.outer_join_on_date([a, b]).collect()
+        r["date"]: (r["m0"], r["m1"])
+        for r in R.pivot_forecasts_wide(long_df, ["m0", "m1"]).collect()
     }
     con = duckdb.connect()
     con.execute("CREATE TABLE t (ds DATE, m0 DOUBLE, m1 DOUBLE)")

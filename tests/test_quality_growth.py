@@ -8,10 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entry
-from clickhouse_forecasting_spark.functions.quality import (
-    check_expectations,
-    duplicate_keys,
-)
+from clickhouse_forecasting_spark.functions.quality import check_expectations
 from clickhouse_forecasting_spark.sources import read_table
 
 
@@ -38,18 +35,9 @@ def test_expectations_single_scan_and_null_as_violation(spark):
     assert plan.count("Scan ") <= 1
 
 
-def test_duplicate_keys_finds_multiplicity(spark):
-    df = spark.createDataFrame(
-        [(1, "a"), (1, "b"), (2, "c"), (3, "d"), (3, "e"), (3, "f")],
-        ["k", "x"],
-    )
-    dups = {r.k: r.multiplicity for r in duplicate_keys(df, ["k"]).collect()}
-    assert dups == {1: 2, 3: 3}
-
-
 def test_orders_keys_unique_in_fixture(spark, sf_dir):
     orders = read_table(spark, sf_dir, "orders")
-    assert duplicate_keys(orders, ["o_orderkey"]).isEmpty()
+    assert orders.groupBy("o_orderkey").count().filter(F.col("count") > 1).isEmpty()
 
 
 def test_growth_accounting_identities(spark, sf_dir):

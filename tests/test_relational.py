@@ -15,32 +15,6 @@ def _daily(spark, n=10, start=dt.date(2024, 1, 1)):
     return spark.createDataFrame(rows)
 
 
-def test_scan_metrics_projects_and_sorts(spark):
-    df = _daily(spark)
-    out = R.scan_metrics(df, ["a"])
-    assert out.columns == ["date", "a"]
-    dates = [r.date for r in out.collect()]
-    assert dates == sorted(dates)
-
-
-def test_is_empty_guard(spark):
-    df = _daily(spark)
-    assert not R.is_empty(df)
-    assert R.is_empty(df.filter(F.col("a") < 0))
-
-
-def test_cast_axis_to_date_coerces(spark):
-    df = spark.createDataFrame([Row(date="2024-01-02"), Row(date="garbage")])
-    out = R.cast_axis_to_date(df).collect()
-    assert out[0].date == dt.date(2024, 1, 2)
-    assert out[1].date is None  # errors='coerce' parity (forecast_script.py:181)
-
-
-def test_last_known_date(spark):
-    df = _daily(spark, n=5)
-    assert R.last_known_date(df) == dt.date(2024, 1, 5)
-
-
 def test_unpivot_roundtrip_pivot(spark):
     # property: pivot(unpivot(wide)) == wide (SURVEY §5.2 property test)
     df = _daily(spark, n=6)
@@ -134,10 +108,18 @@ def test_only_future_strictness(spark):
 
 
 def test_outer_join_null_fill(spark):
-    # R11/R12: k-way full outer join keeps all dates, gaps are NULL
-    f1 = spark.createDataFrame([Row(ds=dt.date(2024, 1, 1), a=1.0), Row(ds=dt.date(2024, 1, 2), a=2.0)])
-    f2 = spark.createDataFrame([Row(ds=dt.date(2024, 1, 2), b=20.0), Row(ds=dt.date(2024, 1, 3), b=30.0)])
-    out = {r.ds: (r.a, r.b) for r in R.outer_join_on_date([f1, f2]).collect()}
+    # R11/R12: the reference's k-way full outer join keeps all dates and
+    # leaves gaps NULL; the pivot does the same in one aggregation
+    long_df = spark.createDataFrame(
+        [
+            (dt.date(2024, 1, 1), "a", 1.0),
+            (dt.date(2024, 1, 2), "a", 2.0),
+            (dt.date(2024, 1, 2), "b", 20.0),
+            (dt.date(2024, 1, 3), "b", 30.0),
+        ],
+        "ds date, metric string, yhat double",
+    ).select("ds", "metric", "yhat", F.col("yhat").alias("yhat_lower"), F.col("yhat").alias("yhat_upper"))
+    out = {r.date: (r.a, r.b) for r in R.pivot_forecasts_wide(long_df, ["a", "b"]).collect()}
     assert out[dt.date(2024, 1, 1)] == (1.0, None)
     assert out[dt.date(2024, 1, 2)] == (2.0, 20.0)
     assert out[dt.date(2024, 1, 3)] == (None, 30.0)

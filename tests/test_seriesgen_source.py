@@ -75,74 +75,3 @@ def test_feeds_the_forecaster(spark):
     assert len(rows) == 7
     for r in rows:
         assert r.s0_min <= r.s0 <= r.s0_max
-
-
-# ------------------------------------------------------- streaming (r4)
-
-
-def test_stream_reader_offsets_replay_exactly():
-    """The WAL-recovery contract: readBetweenOffsets must regenerate
-    precisely the rows read() emitted for the same offset range."""
-    from clickhouse_forecasting_spark.sources.seriesgen import (
-        SeriesGenStreamReader,
-    )
-
-    r = SeriesGenStreamReader(
-        {"series": "4", "batch_days": "6", "max_days": "30"}
-    )
-    off = r.initialOffset()
-    assert off == {"day": 0}
-    rows1, off1 = r.read(off)
-    assert off1 == {"day": 6} and len(rows1) == 4 * 6
-    assert r.readBetweenOffsets(off, off1) == rows1
-    rows2, off2 = r.read(off1)
-    assert off2 == {"day": 12}
-    assert r.readBetweenOffsets(off1, off2) == rows2
-    # the bound: reads past max_days emit empty batches, offset pinned
-    rows_end, off_end = r.read({"day": 30})
-    assert rows_end == [] and off_end == {"day": 30}
-
-
-def test_streaming_source_matches_batch_generator(spark):
-    """readStream.format('seriesgen') must emit bit-identical rows to
-    the batch reader over the same day range — the same-options,
-    same-table determinism contract, now across BOTH halves of the
-    DataSource API."""
-    import time
-
-    seriesgen.register(spark)
-    df = (
-        spark.readStream.format("seriesgen")
-        .option("series", "3")
-        .option("batch_days", "5")
-        .option("max_days", "20")
-        .load()
-    )
-    assert df.isStreaming
-    q = (
-        df.writeStream.format("memory")
-        .queryName("sg_stream_parity")
-        .outputMode("append")
-        .trigger(processingTime="200 milliseconds")
-        .start()
-    )
-    try:
-        deadline = time.time() + 120
-        while time.time() < deadline:
-            if spark.table("sg_stream_parity").count() >= 60:
-                break
-            time.sleep(0.5)
-    finally:
-        q.stop()
-    got = sorted(map(tuple, spark.table("sg_stream_parity").collect()))
-    want = sorted(
-        map(
-            tuple,
-            spark.read.format("seriesgen")
-            .option("series", "3")
-            .option("days", "20")
-            .load()
-            .collect(),
-        )
-    )
-    assert got == want

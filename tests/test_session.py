@@ -1,0 +1,35 @@
+"""Driver heap sizing of build_session (no Spark: the sizing is pure)."""
+
+from __future__ import annotations
+
+import os
+
+import pytest
+
+from clickhouse_forecasting_spark.session import default_driver_memory
+
+_PAGE = 4096
+
+
+def _host(monkeypatch, gib: int) -> None:
+    pages = {"SC_PAGE_SIZE": _PAGE, "SC_PHYS_PAGES": gib * 2**30 // _PAGE}
+    monkeypatch.setattr(os, "sysconf", lambda name: pages[name])
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+
+
+@pytest.mark.parametrize(
+    "gib, want",
+    [
+        (15, "6144m"),  # 40% of a 15 GiB host
+        (256, "24g"),  # the 24g ceiling
+    ],
+)
+def test_driver_memory_follows_host_memory(monkeypatch, gib, want):
+    _host(monkeypatch, gib)
+    assert default_driver_memory() == want
+
+
+def test_driver_memory_env_overrides(monkeypatch):
+    _host(monkeypatch, 15)
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "2g")
+    assert default_driver_memory() == "2g"

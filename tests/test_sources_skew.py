@@ -1,39 +1,12 @@
-"""Tests: format readers/writers roundtrip; salted aggregation equivalence."""
+"""Tests: sink writer, partition-scoped upsert, salted aggregation, AQE skew splitting."""
 
 from __future__ import annotations
-
-import pytest
 
 from pyspark.sql import functions as F
 
 from clickhouse_forecasting_spark.functions.skew import salted_agg, with_salt
 from clickhouse_forecasting_spark.sources import read_table
-from clickhouse_forecasting_spark.sources.formats import read_csv, read_jsonl, write_table
-
-
-def test_csv_roundtrip(spark, sf_dir, tmp_path):
-    nation = read_table(spark, sf_dir, "nation")
-    path = str(tmp_path / "nation_csv")
-    nation.write.option("header", "true").csv(path)
-    back = read_csv(spark, path, schema="n_nationkey int, n_name string, n_regionkey int")
-    assert sorted(tuple(r) for r in back.collect()) == sorted(
-        tuple(r) for r in nation.collect()
-    )
-
-
-def test_csv_requires_schema(spark, tmp_path):
-    with pytest.raises(ValueError):
-        read_csv(spark, str(tmp_path), schema=None)
-
-
-def test_jsonl_roundtrip(spark, sf_dir, tmp_path):
-    region = read_table(spark, sf_dir, "region")
-    path = str(tmp_path / "region_json")
-    region.write.json(path)
-    back = read_jsonl(spark, path, schema="r_regionkey int, r_name string")
-    assert sorted(tuple(r) for r in back.select("r_regionkey", "r_name").collect()) == sorted(
-        tuple(r) for r in region.collect()
-    )
+from clickhouse_forecasting_spark.sources.formats import write_table
 
 
 def test_write_table_partitioned_sorted(spark, sf_dir, tmp_path):
@@ -89,33 +62,6 @@ def test_orc_roundtrip(spark, sf_dir, tmp_path):
     assert sorted(tuple(r) for r in back.collect()) == sorted(
         tuple(r) for r in region.collect()
     )
-
-
-def test_bucketed_join_eliminates_shuffle(spark, sf_dir, tmp_path):
-    """Both sides bucketed on the join key -> the join plans with ZERO
-    exchanges (the pay-the-shuffle-once-at-write-time strategy)."""
-    from clickhouse_forecasting_spark.plans import plan_summary
-    from clickhouse_forecasting_spark.sources.formats import write_bucketed_table
-
-    orders = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    li = read_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
-    write_bucketed_table(orders, "orders_b", "o_orderkey", 8, path=str(tmp_path / "ob"))
-    write_bucketed_table(li, "lineitem_b", "l_orderkey", 8, path=str(tmp_path / "lb"))
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = spark.table("lineitem_b").join(
-            spark.table("orders_b"),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        s = plan_summary(joined)
-        n = joined.count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.sql("DROP TABLE IF EXISTS orders_b")
-        spark.sql("DROP TABLE IF EXISTS lineitem_b")
-    assert s["exchanges"] == 0 and s["sortmerge_joins"] == 1
-    assert n == read_table(spark, sf_dir, "lineitem").count()
 
 
 def test_upsert_partitioned_rewrites_only_touched_partitions(spark, tmp_path):
@@ -174,48 +120,10 @@ def test_approx_distinct_error_bound(spark, sf_dir):
         assert rows[t]["approx_within_5pct"], (t, n)
 
 
-def test_compact_files_reduces_count_preserves_data(spark, sf_dir, tmp_path):
-    from clickhouse_forecasting_spark.sources.formats import compact_files
-
-    path = str(tmp_path / "fragmented")
-    orders = read_table(spark, sf_dir, "orders")
-    orders.repartition(24).write.parquet(path)
-    assert len(spark.read.parquet(path).inputFiles()) == 24
-    before = orders.count()
-
-    n = compact_files(spark, path, target_files=2, sort_within="o_orderdate")
-    assert n == 2
-    after = spark.read.parquet(path)
-    assert after.count() == before
-    assert after.select(F.sum("o_orderkey")).first()[0] == orders.select(F.sum("o_orderkey")).first()[0]
-
-
-def test_salted_join_equals_direct(spark, sf_dir):
-    from clickhouse_forecasting_spark.functions.skew import salted_join
-
-    orders = read_table(spark, sf_dir, "orders").withColumnRenamed("o_custkey", "c_custkey")
-    cust = read_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    direct = (
-        orders.join(cust, "c_custkey")
-        .groupBy("c_mktsegment").agg(F.count("*").alias("n"), F.sum("o_orderkey").alias("s"))
-    )
-    salted = (
-        salted_join(orders, cust, "c_custkey", n_salts=8)
-        .groupBy("c_mktsegment").agg(F.count("*").alias("n"), F.sum("o_orderkey").alias("s"))
-    )
-    assert {tuple(r) for r in direct.collect()} == {tuple(r) for r in salted.collect()}
-    # left join keeps unmatched fact rows
-    some = cust.filter(F.col("c_custkey") < 100)
-    left = salted_join(orders, some, "c_custkey", n_salts=8, how="left")
-    assert left.count() == orders.count()
-    with pytest.raises(ValueError):
-        salted_join(orders, cust, "c_custkey", how="full")
-
-
 def test_aqe_splits_skewed_join(spark):
     """AQE skew-join: a key holding ~half the fact rows must be split into
-    multiple tasks at runtime (skew=true in the final plan). This is the
-    first line of defense salted_join generalizes."""
+    multiple tasks at runtime (skew=true in the final plan) — the first
+    line of defense against a hot join key."""
     import pyspark.sql.functions as SF
 
     confs = {
@@ -240,35 +148,3 @@ def test_aqe_splits_skewed_join(spark):
     finally:
         for k, v in old.items():
             spark.conf.set(k, v)
-
-
-def test_orc_roundtrip_with_pushdown(spark, sf_dir, tmp_path):
-    from clickhouse_forecasting_spark.sources.formats import read_orc
-
-    nation = read_table(spark, sf_dir, "nation")
-    path = str(tmp_path / "nation_orc")
-    nation.write.orc(path)
-    back = read_orc(spark, path)
-    assert sorted(tuple(r) for r in back.collect()) == sorted(
-        tuple(r) for r in nation.collect()
-    )
-    # predicate pushdown reaches the ORC scan
-    plan = (
-        back.filter(F.col("n_regionkey") == 1)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "PushedFilters" in plan and "n_regionkey" in plan
-
-
-def test_text_lines_reader(spark, tmp_path):
-    from clickhouse_forecasting_spark.sources.formats import read_text_lines
-
-    p = tmp_path / "corpus.txt"
-    p.write_text("alpha beta\ngamma\n\ndelta epsilon zeta\n")
-    df = read_text_lines(spark, str(p))
-    rows = [r.value for r in df.collect()]
-    assert sorted(rows) == sorted(["alpha beta", "gamma", "", "delta epsilon zeta"])
-    # LineAsString shape: exactly one string column named `value`
-    assert df.schema.simpleString() == "struct<value:string>"
