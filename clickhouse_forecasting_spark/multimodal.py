@@ -36,15 +36,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-MEDIA_STRUCT = T.StructType(
-    [
-        T.StructField("kind", T.StringType()),
-        T.StructField("mime", T.StringType()),
-        T.StructField("byte_len", T.LongType()),
-        T.StructField("checksum", T.StringType()),
-    ]
-)
-
 FEATURE_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),

@@ -24,8 +24,9 @@ three steps:
    writes submitted from a thread pool of min(#tables, defaultParallelism)
    whose threads inherit the caller's Spark local properties.
 
-Per table that is the input's schema read plus the write's two jobs (the
-pivot's one shuffle and the write); per run, the fit's one aggregate. No
+Per table that is the write's two jobs (the pivot's one shuffle and the
+write); per run, the fit's one aggregate. Vetting reads each input's
+schema from its parquet footer (``catalog.read_parquet``), with no job. No
 emptiness probe and no readback of the written table run.
 
 Differences by design (all documented in SURVEY §7.5 / §2.5):

@@ -12,6 +12,7 @@ import logging
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..catalog import parquet_files
 from ..functions import text as TX
 from ..functions.text import STOPWORDS
 from ..operators import ranking as RK
@@ -1410,14 +1411,6 @@ FROM calc
 """
 
 
-def _parquet_files(path: str) -> list[str]:
-    """Data files of a parquet dataset: the file itself, or every part
-    file of a directory (`_`/`.`-prefixed markers skipped)."""
-    import pyarrow.dataset as ds
-
-    return ds.dataset(path, format="parquet").files
-
-
 def _parquet_key_bounds(path: str, column: str) -> tuple[int, int] | None:
     """(min, max) of an integer column from the parquet FOOTER statistics
     — the same row-group stats predicate pushdown reads, folded across
@@ -1429,7 +1422,7 @@ def _parquet_key_bounds(path: str, column: str) -> tuple[int, int] | None:
 
     mn = mx = None
     try:
-        for f in _parquet_files(path):
+        for f in parquet_files(path):
             meta = pq.read_metadata(f)
             idx = {
                 meta.schema.column(i).name: i for i in range(meta.num_columns)
@@ -1488,7 +1481,7 @@ def q_encoding_advisor_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
         mn, mx = bounds
         mb = float(_os.environ.get("SPARK_GRAFT_RUNPASS_MB", "2"))
         try:
-            src_bytes = sum(_os.path.getsize(f) for f in _parquet_files(src))
+            src_bytes = sum(_os.path.getsize(f) for f in parquet_files(src))
         except OSError:
             src_bytes = 0
         n_parts = max(4, int(src_bytes / (mb * 1024 * 1024)) + 1)

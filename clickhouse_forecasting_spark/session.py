@@ -11,7 +11,12 @@ our equivalent session primitive is a SparkSession with scale-aware defaults:
   (required for DuckDB oracle parity, and the right default anyway);
 - Arrow enabled for every pandas exchange (applyInPandas / mapInPandas);
 - parquet pushdown/pruning left at defaults (on) — correctness of our
-  operators never depends on them, speed does.
+  operators never depends on them, speed does;
+- PySpark's DataFrame debugging off: with it on (the 4.x default) every
+  ``F.*`` and Column call walks the Python stack and makes extra py4j
+  round trips to record its call site, a driver cost paid on every frame
+  built. Errors keep their error class (``DIVIDE_BY_ZERO`` etc.); they lose
+  only the Python call-site context.
 """
 
 from __future__ import annotations
@@ -78,6 +83,7 @@ def build_session(
         .config("spark.sql.parquet.aggregatePushdown", "true")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", default_driver_memory())
     )
     for k, v in (extra_conf or {}).items():

@@ -18,6 +18,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..catalog import read_parquet
+
 # event-time columns to normalize to TimestampType, per table. Fixture
 # generations have shipped both TIMESTAMP(NANOS) (read as int64 under
 # nanosAsLong) and TIMESTAMP(MICROS) without isAdjustedToUTC (read as
@@ -28,7 +30,7 @@ _NANO_TS_COLUMNS = {"events": ["ts"]}
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read ``<sf_dir>/<name>.parquet`` with timestamp normalization."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
     for col in _NANO_TS_COLUMNS.get(name, []):
         field = df.schema[col] if col in df.columns else None
         if field is not None and isinstance(field.dataType, T.LongType):

@@ -1,12 +1,13 @@
 """Guard against library code that nothing calls.
 
-Every public module-level def (function or class) of the package must be
-referenced from the package, ``bench.py``, ``__spark_entry__.py``,
-``tools/`` or ``perfbench/``. A reference is a name or attribute in the
-source (an import counts); string constants and docstrings do not, and
-neither does a def's own body. Tests are not callers: a def only a test
-reaches is dead code with a test attached. ``q_*`` functions are reached
-through the query registry, which collects them by prefix.
+Every public module-level def (function or class) and UPPER_CASE constant
+of the package must be referenced from the package, ``bench.py``,
+``__spark_entry__.py``, ``tools/`` or ``perfbench/``. A reference is a name
+or attribute in the source (an import counts); string constants and
+docstrings do not, and neither does a def's own body or a constant's own
+assignment. Tests are not callers: a def only a test reaches is dead code
+with a test attached. ``q_*`` functions are reached through the query
+registry, which collects them by prefix.
 
 No Spark: the check reads source files only.
 """
@@ -19,7 +20,7 @@ from pathlib import Path
 ROOT = Path(__file__).resolve().parent.parent
 PACKAGE = "clickhouse_forecasting_spark"
 
-# unreached defs that stay on purpose, each with its reason
+# unreached defs and constants that stay on purpose, each with its reason
 ALLOWED = {
     f"{PACKAGE}.functions.similarity.brute_force_topk":
         "exact verifier of the approximate top-k tests (test_quantized_topk_recall_vs_exact)",
@@ -31,6 +32,9 @@ ALLOWED = {
         "scan ReadSchema audit of projection pushdown (test_plans)",
     f"{PACKAGE}.telemetry.assert_runtime_single_partitions_bounded":
         "runtime single-partition audit (test_runtime_singlepart)",
+    f"{PACKAGE}.streaming.kafka_shape.KAFKA_WIRE_SCHEMA":
+        "the kafka source's wire schema; test_kafka_shape checks the file-backed "
+        "wire double against it and streams the double with it",
 }
 
 
@@ -40,6 +44,23 @@ def _caller_files() -> list[Path]:
     for d in ("tools", "perfbench"):
         files += sorted((ROOT / d).rglob("*.py"))
     return files
+
+
+def _public_names(node: ast.stmt) -> list[str]:
+    """Public names a module-level statement defines: a function or class
+    not named ``_*``/``q_*``, or an UPPER_CASE constant."""
+    if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        return [] if node.name.startswith(("_", "q_")) else [node.name]
+    if isinstance(node, ast.Assign):
+        targets = node.targets
+    elif isinstance(node, ast.AnnAssign):
+        targets = [node.target]
+    else:
+        return []
+    return [
+        t.id for t in targets
+        if isinstance(t, ast.Name) and t.id.isupper() and not t.id.startswith("_")
+    ]
 
 
 def unreached_defs() -> set[str]:
@@ -53,11 +74,8 @@ def unreached_defs() -> set[str]:
         module = ".".join(path.relative_to(ROOT).with_suffix("").parts)
         module = module.removesuffix(".__init__")
         for node in tree.body:
-            if (
-                isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
-                and not node.name.startswith(("_", "q_"))
-            ):
-                defs.setdefault(node.name, []).append((f"{module}.{node.name}", path, node))
+            for name in _public_names(node):
+                defs.setdefault(name, []).append((f"{module}.{name}", path, node))
     refs: dict[str, list[tuple[Path, int]]] = {}
     for path, tree in trees.items():
         for node in ast.walk(tree):
@@ -90,8 +108,8 @@ def test_no_unreached_public_defs():
     dead = unreached_defs()
     new = sorted(dead - set(ALLOWED))
     assert not new, (
-        f"{len(new)} public def(s) that nothing calls; delete them (and "
-        "any test that only covers them) or call them:\n  " + "\n  ".join(new)
+        f"{len(new)} public def(s) or constant(s) that nothing references; delete "
+        "them (and any test that only covers them) or use them:\n  " + "\n  ".join(new)
     )
     stale = sorted(set(ALLOWED) - dead)
     assert not stale, f"allowlisted defs that are now called or gone: {stale}"

@@ -361,6 +361,14 @@ def test_extra_table_adds_at_most_three_jobs(spark, tmp_path):
     assert four - two <= 2 * 3, (two, four)
 
 
+def test_extra_table_adds_at_most_two_jobs(spark, tmp_path):
+    """A table adds its two sink jobs (the pivot's one exchange and the
+    write) and nothing else: its schema comes from the parquet footer."""
+    two = _run_jobs_and_compiles(spark, _write_catalog(spark, tmp_path / "c2", 2, 2, 60), "jobs2-2")[0]
+    four = _run_jobs_and_compiles(spark, _write_catalog(spark, tmp_path / "c4", 4, 2, 60), "jobs2-4")[0]
+    assert four - two <= 2 * 2, (two, four)
+
+
 def test_wide_table_rerun_compiles_no_new_classes(spark, tmp_path):
     """A 128-metric table is wider than ``spark.sql.codegen.maxFields``, so
     its stages run without whole-stage codegen. The reshapes must not

@@ -1,10 +1,13 @@
-"""Driver heap sizing of build_session (no Spark: the sizing is pure)."""
+"""build_session: driver heap sizing (pure, no Spark) and the session's
+DataFrame-debugging setting."""
 
 from __future__ import annotations
 
 import os
 
 import pytest
+from pyspark.errors import ArithmeticException
+from pyspark.sql import functions as F
 
 from clickhouse_forecasting_spark.session import default_driver_memory
 
@@ -33,3 +36,12 @@ def test_driver_memory_env_overrides(monkeypatch):
     _host(monkeypatch, 15)
     monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "2g")
     assert default_driver_memory() == "2g"
+
+
+def test_dataframe_debugging_off_errors_keep_their_class(spark):
+    """Column calls capture no Python call site, and a failing expression
+    still raises Spark's named error."""
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    with pytest.raises(ArithmeticException) as err:
+        spark.range(1).select(F.lit(1) / F.col("id")).collect()
+    assert err.value.getCondition() == "DIVIDE_BY_ZERO"
