@@ -379,9 +379,7 @@ def main() -> None:
     docs = read_table(spark, sf_dir, "documents")
     emb = read_table(spark, sf_dir, "embeddings")
     n_docs = docs.count()
-    minhash_cand = DD.minhash_lsh_candidates(
-        docs, num_hashes=16, bands=4, cache_key=sf_dir
-    ).count()
+    minhash_cand = DD.minhash_lsh_candidates(docs, cache_key=sf_dir).count()
     verified = DD.lsh_verified_pairs(
         docs, threshold=0.8, cache_key=sf_dir
     ).count()

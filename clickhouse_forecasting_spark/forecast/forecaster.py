@@ -144,19 +144,17 @@ class SeriesForecaster:
 
         return long_df.repartition(n_parts, *groups).mapInPandas(_partition, schema=schema)
 
-    def watermarks(self, long_df: DataFrame, group_cols: list[str] | None = None) -> DataFrame:
-        """Per-series fit watermark: (group..., metric, last_max_ds). Persist
+    def watermarks(self, long_df: DataFrame) -> DataFrame:
+        """Per-series fit watermark: (metric, last_max_ds). Persist
         this tiny frame alongside the forecast output to enable incremental
         refits — it is a partial-aggregated max, one row per series."""
-        groups = (group_cols or []) + ["metric"]
-        return long_df.groupBy(*groups).agg(F.max("ds").alias("last_max_ds"))
+        return long_df.groupBy("metric").agg(F.max("ds").alias("last_max_ds"))
 
     def transform_long_incremental(
         self,
         long_df: DataFrame,
         prior_forecasts: DataFrame | None,
         prior_watermarks: DataFrame | None,
-        group_cols: list[str] | None = None,
     ) -> tuple[DataFrame, DataFrame]:
         """Incremental refit: only series whose max(ds) advanced past their
         stored watermark are re-fitted; unchanged series reuse their prior
@@ -172,10 +170,10 @@ class SeriesForecaster:
         Returns (forecasts, new_watermarks); pass new_watermarks back in on
         the next run. With prior_* = None everything is stale (first run).
         """
-        groups = (group_cols or []) + ["metric"]
-        current = self.watermarks(long_df, group_cols)
+        groups = ["metric"]
+        current = self.watermarks(long_df)
         if prior_forecasts is None or prior_watermarks is None:
-            return self.transform_long(long_df, group_cols), current
+            return self.transform_long(long_df), current
         stale_keys = (
             current.withColumnRenamed("last_max_ds", "cur_max_ds")
             .join(prior_watermarks, groups, "left")
@@ -186,17 +184,12 @@ class SeriesForecaster:
             .select(*groups)
         )
         refreshed = self.transform_long(
-            long_df.join(F.broadcast(stale_keys), groups, "left_semi"), group_cols
+            long_df.join(F.broadcast(stale_keys), groups, "left_semi")
         )
         reused = prior_forecasts.join(F.broadcast(stale_keys), groups, "left_anti")
         return reused.unionByName(refreshed), current
 
-    def backtest(
-        self,
-        long_df: DataFrame,
-        cutoffs: list[str],
-        group_cols: list[str] | None = None,
-    ) -> DataFrame:
+    def backtest(self, long_df: DataFrame, cutoffs: list[str]) -> DataFrame:
         """Rolling-origin evaluation: for every cutoff, fit on history
         <= cutoff, predict the next `interval` days, and score predictions
         against the held-out actuals.
@@ -209,11 +202,11 @@ class SeriesForecaster:
         scoring join. A 10-cutoff backtest costs one extra in-worker pass
         per cutoff over already-local data.
 
-        Returns one row per (group..., metric, cutoff): n_scored, mae,
+        Returns one row per (metric, cutoff): n_scored, mae,
         rmse, mape (zero-actual days excluded), and interval coverage
         (fraction of actuals inside [yhat_lower, yhat_upper]).
         """
-        groups = (group_cols or []) + ["metric"]
+        groups = ["metric"]
         # ONE keyed repartition of the RAW history — the cutoff axis fans
         # out INSIDE the worker (r9 VERDICT #3). Each partition holds
         # whole series (the same hash repartition transform_long uses),
@@ -321,22 +314,20 @@ class SeriesForecaster:
             *groups, "cutoff"
         )
 
-    def transform(self, df: DataFrame, axis: str = DATE_AXIS_COLUMN) -> DataFrame:
+    def transform(self, df: DataFrame) -> DataFrame:
         """Forecast a wide daily table -> wide forecast table in sink column
         order (date, m..., m_min..., m_max...), the reference's per-table
         output (forecast_script.py:134-145 schema, :187-194 pivot)."""
-        metrics = metric_columns(df.schema, axis=axis)
+        metrics = metric_columns(df.schema)
         if not metrics:
             raise ValueError("no forecastable metric columns")
-        forecasts = self.transform_long(wide_to_long(df, metrics, axis))
+        forecasts = self.transform_long(wide_to_long(df, metrics))
         return pivot_forecasts_wide(forecasts, metrics)
 
 
-def wide_to_long(
-    df: DataFrame, metrics: list[str], axis: str = DATE_AXIS_COLUMN, keys: tuple[Column, ...] = ()
-) -> DataFrame:
+def wide_to_long(df: DataFrame, metrics: list[str], keys: tuple[Column, ...] = ()) -> DataFrame:
     """A wide daily table as the fitter's long input (*keys, ds, metric, y):
     rows without a date dropped, then one projection that casts the axis to
     a date and unpivots every metric (relational.unpivot_metrics)."""
-    ds = F.to_date(F.col(sql_ident(axis)))
+    ds = F.to_date(F.col(sql_ident(DATE_AXIS_COLUMN)))
     return unpivot_metrics(df.filter(ds.isNotNull()), metrics, ds=ds, keys=keys)

@@ -49,6 +49,9 @@ INTERVAL_HI_Q = 0.90
 # tiny ridge term: numerical conditioning only (lstsq handles the rest);
 # anything large visibly shrinks trend/seasonal amplitudes
 _RIDGE_ALPHA = 1e-6
+# Fourier orders of the seasonalities: Prophet's defaults
+WEEKLY_ORDER = 3
+YEARLY_ORDER = 10
 
 logger = logging.getLogger("clickhouse_forecasting_spark")
 
@@ -127,9 +130,7 @@ class AdditiveForecastModel:
     history span like Prophet: weekly needs >=14 days, yearly >=370 days.
     """
 
-    def __init__(self, weekly_order: int = 3, yearly_order: int = 10):
-        self.weekly_order = weekly_order
-        self.yearly_order = yearly_order
+    def __init__(self):
         self._beta: np.ndarray | None = None
         self._t0: pd.Timestamp | None = None
         self._scale_days: float = 1.0
@@ -143,12 +144,12 @@ class AdditiveForecastModel:
         t = days / self._scale_days
         cols = [np.ones_like(t), t]
         if self._weekly_on:
-            for k in range(1, self.weekly_order + 1):
+            for k in range(1, WEEKLY_ORDER + 1):
                 w = 2.0 * np.pi * k * days / 7.0
                 cols.append(np.sin(w))
                 cols.append(np.cos(w))
         if self._yearly_on:
-            for k in range(1, self.yearly_order + 1):
+            for k in range(1, YEARLY_ORDER + 1):
                 w = 2.0 * np.pi * k * days / 365.25
                 cols.append(np.sin(w))
                 cols.append(np.cos(w))

@@ -31,10 +31,15 @@ from pyspark.sql import functions as F
 
 from .text import char_shingles_of_norm, fingerprint, normalize_text, tokens
 
+# Every text operator here reads the documents table layout (doc_id, text).
+# The LSH index: 16 numeric MinHash values cut into 4 bands of 4 rows, so a
+# pair with Jaccard j collides with probability 1-(1-j^4)^4 (~0.97 at
+# j=0.8, ~0.04 at j=0.3).
+NUM_HASHES = 16
+BANDS = 4
 
-def _exploded_shingles(
-    df: DataFrame, text_col: str, id_col: str, shingle_size: int
-) -> DataFrame:
+
+def _exploded_shingles(df: DataFrame) -> DataFrame:
     """(id, shingle) rows with the normalization materialized once per doc
     (a separate projection under the Generate node), not once per element.
 
@@ -43,12 +48,10 @@ def _exploded_shingles(
     string into every offset row (~60x the bytes through the Generate node)
     before the substring projection — measured 3-5x slower than paying the
     interpreted per-element substring inside the array transform."""
-    base = df.select(
-        F.col(id_col), normalize_text(F.col(text_col)).alias("_norm")
-    )
+    base = df.select(F.col("doc_id"), normalize_text(F.col("text")).alias("_norm"))
     return base.select(
-        F.col(id_col),
-        F.explode(char_shingles_of_norm(F.col("_norm"), shingle_size)).alias("sh"),
+        F.col("doc_id"),
+        F.explode(char_shingles_of_norm(F.col("_norm"))).alias("sh"),
     )
 
 # --------------------------------------------------------------------------
@@ -56,14 +59,8 @@ def _exploded_shingles(
 # --------------------------------------------------------------------------
 
 
-def minhash_signatures(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_size: int = 5,
-    num_hashes: int = 16,
-) -> DataFrame:
-    """Per-doc MinHash signature as columns sig_0..sig_{k-1} — the scale path.
+def minhash_signatures(df: DataFrame) -> DataFrame:
+    """Per-doc MinHash signature as columns sig_0..sig_3 — the scale path.
 
     explode(shingles) -> one md5 per (doc, shingle, hash-index) -> groupBy-min.
     Everything is built-in + codegen'd; the shuffle carries (id, k mins) after
@@ -72,12 +69,12 @@ def minhash_signatures(
     shingles — the permutation-free MinHash construction; md5 hex strings
     compare lexicographically identically in any engine, which keeps the
     DuckDB twin exact."""
-    sh = _exploded_shingles(df, text_col, id_col, shingle_size)
+    sh = _exploded_shingles(df)
     aggs = [
         F.min(F.md5(F.concat(F.lit(str(i)), F.col("sh")))).alias(f"sig_{i}")
-        for i in range(num_hashes)
+        for i in range(4)
     ]
-    return sh.groupBy(id_col).agg(*aggs)
+    return sh.groupBy("doc_id").agg(*aggs)
 
 
 # Hash family for the numeric MinHash: h_i(x) = (a_i*x + b_i) mod P, with
@@ -114,15 +111,8 @@ def minhash_params(num_hashes: int) -> list[tuple[int, int]]:
 from ..runtime_cache import cached_frame as _cached_stage  # noqa: E402
 
 
-def numeric_signatures(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_size: int = 5,
-    num_hashes: int = 16,
-    cache_key=None,
-) -> DataFrame:
-    """(id, h0..h{k-1}) numeric MinHash signature frame — the un-banded
+def numeric_signatures(df: DataFrame, cache_key=None) -> DataFrame:
+    """(id, h0..h15) numeric MinHash signature frame — the un-banded
     signature table (what a 100 TB pipeline would materialize once and
     index many ways). explode shingles -> ONE md5 per (doc, shingle),
     k multiply-mod hashes derived from it -> partial-aggregated
@@ -132,50 +122,31 @@ def numeric_signatures(
 
     def _build() -> DataFrame:
         p = F.lit(MINHASH_PRIME)
-        sh = _exploded_shingles(df, text_col, id_col, shingle_size)
+        sh = _exploded_shingles(df)
         x = F.conv(F.substring(F.md5("sh"), 1, 15), 16, 10).cast("long") % p
-        params = minhash_params(num_hashes)
+        params = minhash_params(NUM_HASHES)
         hashed = sh.select(
-            F.col(id_col),
+            F.col("doc_id"),
             *[((F.lit(a) * x + F.lit(b)) % p).alias(f"h{i}") for i, (a, b) in enumerate(params)],
         )
-        return hashed.groupBy(id_col).agg(
-            *[F.min(f"h{i}").alias(f"h{i}") for i in range(num_hashes)]
+        return hashed.groupBy("doc_id").agg(
+            *[F.min(f"h{i}").alias(f"h{i}") for i in range(NUM_HASHES)]
         )
 
-    key = None
-    if cache_key is not None:
-        key = ("numsig", cache_key, text_col, id_col, shingle_size, num_hashes)
+    key = None if cache_key is None else ("numsig", cache_key)
     return _cached_stage(df, key, _build)
 
 
-def banded_signatures(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_size: int = 5,
-    num_hashes: int = 16,
-    bands: int = 4,
-    cache_key=None,
-) -> DataFrame:
+def banded_signatures(df: DataFrame, cache_key=None) -> DataFrame:
     """(id, band-key) frame — the LSH index build pass.
 
     Reads the (cached) numeric signature stage and explodes b band keys.
     With cache_key set both stages persist and are shared across the
     dedup family — one corpus pass per run, not one per query."""
-    if bands < 1 or num_hashes % bands != 0:
-        # bands > num_hashes would make every band key degenerate (all docs
-        # collide -> O(n^2)); a non-dividing bands would silently drop the
-        # remainder hashes. Both are configuration errors, not choices.
-        raise ValueError(
-            f"bands ({bands}) must be >= 1 and divide num_hashes ({num_hashes})"
-        )
 
     def _build() -> DataFrame:
-        rows_per_band = num_hashes // bands
-        sig = numeric_signatures(
-            df, text_col, id_col, shingle_size, num_hashes, cache_key
-        )
+        rows_per_band = NUM_HASHES // BANDS
+        sig = numeric_signatures(df, cache_key)
         band_keys = F.array(
             *[
                 F.concat_ws(
@@ -183,39 +154,29 @@ def banded_signatures(
                     F.lit(str(b)),
                     *[F.col(f"h{b * rows_per_band + r}") for r in range(rows_per_band)],
                 )
-                for b in range(bands)
+                for b in range(BANDS)
             ]
         )
-        return sig.select(F.col(id_col), F.explode(band_keys).alias("band"))
+        return sig.select(F.col("doc_id"), F.explode(band_keys).alias("band"))
 
-    key = None
-    if cache_key is not None:
-        key = ("banded", cache_key, text_col, id_col, shingle_size, num_hashes, bands)
+    key = None if cache_key is None else ("banded", cache_key)
     return _cached_stage(df, key, _build)
 
 
-def shingle_sets(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_size: int = 5,
-    cache_key=None,
-) -> DataFrame:
+def shingle_sets(df: DataFrame, cache_key=None) -> DataFrame:
     """(id, shingle-set) frame — the exact-verification side. Cached the
     same way as banded_signatures (both verify joins of a family run read
     it twice each)."""
 
     def _build() -> DataFrame:
         return df.select(
-            F.col(id_col), normalize_text(F.col(text_col)).alias("_norm")
+            F.col("doc_id"), normalize_text(F.col("text")).alias("_norm")
         ).select(
-            F.col(id_col),
-            char_shingles_of_norm(F.col("_norm"), shingle_size).alias("sh_set"),
+            F.col("doc_id"),
+            char_shingles_of_norm(F.col("_norm")).alias("sh_set"),
         )
 
-    key = None
-    if cache_key is not None:
-        key = ("sets", cache_key, text_col, id_col, shingle_size)
+    key = None if cache_key is None else ("sets", cache_key)
     return _cached_stage(df, key, _build)
 
 
@@ -231,14 +192,7 @@ MAX_BAND_OCCUPANCY = 10_000
 
 
 def minhash_lsh_candidates(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_size: int = 5,
-    num_hashes: int = 16,
-    bands: int = 4,
-    cache_key=None,
-    max_band_occupancy: int = MAX_BAND_OCCUPANCY,
+    df: DataFrame, cache_key=None, max_band_occupancy: int = MAX_BAND_OCCUPANCY
 ) -> DataFrame:
     """Candidate near-dup pairs (id_a < id_b) sharing >=1 LSH band.
 
@@ -247,40 +201,27 @@ def minhash_lsh_candidates(
     occupancy window plus guard projection — so Spark reuses a single
     exchange in the uncached path (and a single persisted stage when
     cache_key is set) rather than computing/shuffling the banded
-    signatures twice.  With b bands of r rows the collision probability of
-    a pair with Jaccard j is 1-(1-j^r)^b (b=4, r=4: ~0.97 at j=0.8,
-    ~0.04 at j=0.3).
+    signatures twice.
 
     The guard: a per-band occupancy count (a window over the same band
     partitioning the join shuffles on — no extra exchange) feeds an
     in-plan assert_true capping it at ``max_band_occupancy``: a degenerate
     hot bucket fails loudly before emitting its n² candidate rows."""
-    banded = banded_signatures(
-        df, text_col, id_col, shingle_size, num_hashes, bands, cache_key
-    )
+    banded = banded_signatures(df, cache_key)
 
     def build() -> DataFrame:
-        return _lsh_candidates_from_banded(
-            banded, id_col, max_band_occupancy
-        )
+        return _lsh_candidates_from_banded(banded, max_band_occupancy)
 
     # r8: the candidate stage itself joins the family cache — the scale
     # audit (and any consumer pairing a candidate count with verification)
     # was paying the band self-join + DISTINCT twice per run. O(n) rows by
     # the measured linear-growth law; at 100 TB this is the materialized
     # candidate table every dedup pipeline persists anyway.
-    key = None
-    if cache_key is not None:
-        key = (
-            "cand", cache_key, text_col, id_col, shingle_size,
-            num_hashes, bands, int(max_band_occupancy),
-        )
+    key = None if cache_key is None else ("cand", cache_key, int(max_band_occupancy))
     return _cached_stage(banded, key, build)
 
 
-def _lsh_candidates_from_banded(
-    banded: DataFrame, id_col: str, max_band_occupancy: int
-) -> DataFrame:
+def _lsh_candidates_from_banded(banded: DataFrame, max_band_occupancy: int) -> DataFrame:
     occ = F.count("*").over(Window.partitionBy("band"))
     guarded_band = F.when(
         F.assert_true(
@@ -294,28 +235,17 @@ def _lsh_candidates_from_banded(
         F.col("band"),
     )
     guarded = banded.withColumn("__band_occ", occ).select(
-        guarded_band.alias("band"), F.col(id_col)
+        guarded_band.alias("band"), F.col("doc_id")
     )
     return (
         guarded.alias("a").join(guarded.alias("b"), "band")
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
+        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
+        .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
         .distinct()
     )
 
 
-def lsh_verified_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_size: int = 5,
-    num_hashes: int = 16,
-    bands: int = 4,
-    threshold: float = 0.8,
-    cache_key=None,
-) -> DataFrame:
+def lsh_verified_pairs(df: DataFrame, threshold: float = 0.8, cache_key=None) -> DataFrame:
     """Near-dup pairs: LSH candidate generation + exact Jaccard verification.
 
     This is the 100 TB dedup pipeline: an all-pairs shingle join never runs.
@@ -324,12 +254,10 @@ def lsh_verified_pairs(
     array_intersect — cost is O(candidate pairs), independent of corpus
     size, and immune to hot stop-shingles (which blow up any shingle-keyed
     self-join: a shingle shared by n docs contributes n² join rows)."""
-    cand = minhash_lsh_candidates(
-        df, text_col, id_col, shingle_size, num_hashes, bands, cache_key
-    )
-    sets = shingle_sets(df, text_col, id_col, shingle_size, cache_key)
-    sa = sets.select(F.col(id_col).alias("id_a"), F.col("sh_set").alias("sh_a"))
-    sb = sets.select(F.col(id_col).alias("id_b"), F.col("sh_set").alias("sh_b"))
+    cand = minhash_lsh_candidates(df, cache_key)
+    sets = shingle_sets(df, cache_key)
+    sa = sets.select(F.col("doc_id").alias("id_a"), F.col("sh_set").alias("sh_a"))
+    sb = sets.select(F.col("doc_id").alias("id_b"), F.col("sh_set").alias("sh_b"))
     common = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
     return (
         cand.join(sa, "id_a")
@@ -343,16 +271,7 @@ def lsh_verified_pairs(
     )
 
 
-def containment_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_size: int = 5,
-    num_hashes: int = 16,
-    bands: int = 4,
-    threshold_ppm: int = 600_000,
-    cache_key=None,
-) -> DataFrame:
+def containment_pairs(df: DataFrame, cache_key=None) -> DataFrame:
     """Containment near-dup pairs: doc-inside-doc detection Jaccard misses.
 
     A short doc quoted verbatim inside a long one has tiny Jaccard (the
@@ -362,20 +281,18 @@ def containment_pairs(
     cache_key is set — zero extra corpus passes); only the verification
     formula differs. Both directions are emitted as exact integer ppm
     (common * 1e6 div |side|), and the pair is kept when either direction
-    clears ``threshold_ppm``. ``contained`` labels the more-contained side.
+    reaches 600,000 ppm (60% of a side's shingles). ``contained`` labels the more-contained side.
 
     Scale: cost is O(LSH candidate pairs), independent of corpus size —
     identical profile to lsh_verified_pairs. Note the LSH recall bias:
     bands are tuned for Jaccard, so an extreme containment pair with low
-    Jaccard may not collide; raising num_hashes/bands (or banding on the
-    short side's signature only) trades cost for recall.
+    Jaccard may not collide; more hashes per band index (or banding on
+    the short side's signature only) trades cost for recall.
     """
-    cand = minhash_lsh_candidates(
-        df, text_col, id_col, shingle_size, num_hashes, bands, cache_key
-    )
-    sets = shingle_sets(df, text_col, id_col, shingle_size, cache_key)
-    sa = sets.select(F.col(id_col).alias("id_a"), F.col("sh_set").alias("sh_a"))
-    sb = sets.select(F.col(id_col).alias("id_b"), F.col("sh_set").alias("sh_b"))
+    cand = minhash_lsh_candidates(df, cache_key)
+    sets = shingle_sets(df, cache_key)
+    sa = sets.select(F.col("doc_id").alias("id_a"), F.col("sh_set").alias("sh_a"))
+    sb = sets.select(F.col("doc_id").alias("id_b"), F.col("sh_set").alias("sh_b"))
     common = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
     return (
         cand.join(sa, "id_a")
@@ -390,7 +307,7 @@ def containment_pairs(
             F.expr("common * 1000000 div size(sh_b)").cast("bigint"),
         )
         .filter(
-            F.greatest("cont_a_in_b_ppm", "cont_b_in_a_ppm") >= F.lit(threshold_ppm)
+            F.greatest("cont_a_in_b_ppm", "cont_b_in_a_ppm") >= F.lit(600_000)
         )
         .withColumn(
             "contained",
@@ -495,27 +412,16 @@ def connected_components(
     return labels
 
 
-def dedup_near(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_size: int = 5,
-    num_hashes: int = 16,
-    bands: int = 4,
-    threshold: float = 0.8,
-    cache_key=None,
-) -> DataFrame:
+def dedup_near(df: DataFrame, cache_key=None) -> DataFrame:
     """The end-to-end near-dedup projection a training pipeline ships:
-    corpus minus near-duplicates. A doc is dropped iff some verified pair
-    links it to a lower-id doc — the min-id member of every duplicate
+    corpus minus near-duplicates. A doc is dropped iff some pair verified
+    at Jaccard >= 0.8 links it to a lower-id doc — the min-id member of every duplicate
     cluster survives (pairwise rule; transitive chains keep any member
     that has no lower-id partner, the standard greedy approximation that
     avoids an iterative connected-components pass)."""
-    pairs = lsh_verified_pairs(
-        df, text_col, id_col, shingle_size, num_hashes, bands, threshold, cache_key
-    )
-    drop = pairs.select(F.col("id_b").alias(id_col)).distinct()
-    return df.join(drop, id_col, "left_anti")
+    pairs = lsh_verified_pairs(df, 0.8, cache_key)
+    drop = pairs.select(F.col("id_b").alias("doc_id")).distinct()
+    return df.join(drop, "doc_id", "left_anti")
 
 
 # --------------------------------------------------------------------------
@@ -556,9 +462,7 @@ def simhash32(text_col: Column) -> Column:
     )
 
 
-def simhash_signatures(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def simhash_signatures(df: DataFrame) -> DataFrame:
     """Per-doc 32-bit SimHash — the scale path (explode + codegen'd groupBy).
 
     Value-identical to :func:`simhash32` (same md5-derived token hashes,
@@ -567,11 +471,11 @@ def simhash_signatures(
     aggregation means the shuffle carries 32 longs per doc. Docs with no
     tokens get simhash 0 (explode_outer keeps them; NULL tokens vote 0)."""
     tok = df.select(
-        F.col(id_col), F.explode_outer(tokens(F.col(text_col))).alias("tok")
+        F.col("doc_id"), F.explode_outer(tokens(F.col("text"))).alias("tok")
     ).select(
         # materialize the md5-derived hash ONCE per token row; referencing
         # the md5 expression from all 32 vote aggregates would re-hash 32x
-        F.col(id_col),
+        F.col("doc_id"),
         F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10).cast("long").alias("h"),
     )
     votes = [
@@ -584,14 +488,14 @@ def simhash_signatures(
         ).alias(f"v{i}")
         for i in range(32)
     ]
-    agg = tok.groupBy(id_col).agg(*votes)
+    agg = tok.groupBy("doc_id").agg(*votes)
     sig = None
     for i in range(32):
         term = F.when(F.col(f"v{i}") > 0, F.lit(1 << i).cast("long")).otherwise(
             F.lit(0).cast("long")
         )
         sig = term if sig is None else sig + term
-    return agg.select(F.col(id_col), sig.alias("simhash"))
+    return agg.select(F.col("doc_id"), sig.alias("simhash"))
 
 
 # --------------------------------------------------------------------------
@@ -612,39 +516,31 @@ def cosine_similarity(a: Column, b: Column) -> Column:
     return dot / (na * nb)
 
 
-def embedding_near_dup_pairs(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    threshold: float = 0.95,
-    block_mod: int | None = None,
-) -> DataFrame:
-    """Pairs with cosine >= threshold.
+def embedding_near_dup_pairs(df: DataFrame) -> DataFrame:
+    """Pairs of embeddings with cosine >= 0.3, among the ids of a
+    deterministic 1/5 sample (vec_id % 5 == 0).
 
-    Brute-force path (block_mod=None) is O(n²) — verification-scale only.
-    With block_mod, ids are restricted to a deterministic 1/block_mod sample
-    (id % block_mod == 0): the pattern for spot-audits at scale. The scale
-    path for full corpora is similarity.hyperplane_lsh_candidates."""
-    base = df.select(F.col(id_col), F.col(vec_col))
-    if block_mod:
-        base = base.filter(F.col(id_col) % block_mod == 0)
+    The pair join is O(n²) in the sample — the pattern for spot-audits at
+    scale. The scale path for full corpora is
+    similarity.hyperplane_lsh_candidates."""
+    base = df.select("vec_id", "embedding").filter(F.col("vec_id") % 5 == 0)
     # per-vector norm computed once before the pair join (identical fold
     # to cosine_similarity's — dot/(na·nb) is bit-identical, 1 fold per
     # pair instead of 3)
     nrm = F.sqrt(
         F.aggregate(
-            F.col(vec_col),
+            F.col("embedding"),
             F.lit(0.0),
             lambda acc, v: acc + v.cast("double") * v.cast("double"),
         )
     )
     base = base.withColumn("__nrm", nrm)
     a = base.select(
-        F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"),
+        F.col("vec_id").alias("id_a"), F.col("embedding").alias("va"),
         F.col("__nrm").alias("__na"),
     )
     b = base.select(
-        F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"),
+        F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb"),
         F.col("__nrm").alias("__nb"),
     )
     dot = F.aggregate(
@@ -659,6 +555,6 @@ def embedding_near_dup_pairs(
         a.crossJoin(b)
         .filter(F.col("id_a") < F.col("id_b"))
         .withColumn("cosine", dot / (F.col("__na") * F.col("__nb")))
-        .filter(F.col("cosine") >= threshold)
+        .filter(F.col("cosine") >= 0.3)
         .select("id_a", "id_b", "cosine")
     )

@@ -30,9 +30,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 
-def misra_gries_candidates(
-    df: DataFrame, key: str, k_sketch: int = 256
-) -> DataFrame:
+def misra_gries_candidates(df: DataFrame, key: str, k_sketch: int) -> DataFrame:
     """Per-partition Misra-Gries candidate keys (distinct, unioned)."""
 
     def summarize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -59,9 +57,7 @@ def misra_gries_candidates(
     ).distinct()
 
 
-def frequent_above_support(
-    df: DataFrame, key: str, k_sketch: int = 4096
-) -> DataFrame:
+def frequent_above_support(df: DataFrame, key: str, k_sketch: int = 32768) -> DataFrame:
     """EXACT counts of every key whose frequency exceeds n / k_sketch —
     the support-threshold heavy-hitter contract that is provably
     complete under ANY key distribution: a key absent from every

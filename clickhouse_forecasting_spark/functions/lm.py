@@ -25,17 +25,15 @@ from .dedup import _cached_stage
 from .text import tokens
 
 
-def bigrams(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """(id, source, w1, w2) — one row per in-document bigram, built with a
+def bigrams(df: DataFrame) -> DataFrame:
+    """(doc_id, source, w1, w2) — one row per in-document bigram, built with a
     row-local zip of the token array against its own tail (docs with < 2
     tokens contribute nothing)."""
     toks = df.select(
-        F.col(id_col), F.col("source"), tokens(F.col(text_col)).alias("toks")
+        F.col("doc_id"), F.col("source"), tokens(F.col("text")).alias("toks")
     ).filter(F.size("toks") >= 2)
     return toks.select(
-        F.col(id_col),
+        F.col("doc_id"),
         "source",
         F.explode(
             F.expr(
@@ -44,48 +42,38 @@ def bigrams(
                 " (x, y) -> struct(x AS w1, y AS w2))"
             )
         ).alias("b"),
-    ).select(F.col(id_col), "source", "b.w1", "b.w2")
+    ).select(F.col("doc_id"), "source", "b.w1", "b.w2")
 
 
-def bigram_model(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    cache_key=None,
-) -> DataFrame:
+def bigram_model(df: DataFrame, cache_key=None) -> DataFrame:
     """(w1, w2, p_ppm) — the trained model table, persisted per run when
     cache_key is set. c1 derives from c2 (Σ_w2), so training is exactly
     one corpus pass; checkpointing would be redundant under the persist."""
 
     def _build() -> DataFrame:
-        bg = bigrams(df, text_col, id_col)
+        bg = bigrams(df)
         c2 = bg.groupBy("w1", "w2").agg(F.count("*").alias("c2"))
         c1 = c2.groupBy("w1").agg(F.sum("c2").alias("c1"))
         return c2.join(c1, "w1").select(
             "w1", "w2", F.expr("c2 * 1000000 div c1").cast("bigint").alias("p_ppm")
         )
 
-    key = ("lm_model", cache_key, text_col, id_col) if cache_key is not None else None
+    key = ("lm_model", cache_key) if cache_key is not None else None
     return _cached_stage(df, key, _build)
 
 
-def doc_scores(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    cache_key=None,
-) -> DataFrame:
-    """(id, source, n_bigrams, sum_ppm, mean_ppm) — every document scored
+def doc_scores(df: DataFrame, cache_key=None) -> DataFrame:
+    """(doc_id, source, n_bigrams, sum_ppm, mean_ppm) — every document scored
     by its mean bigram probability, exact integer ppm. Cached per run:
     the score join (bigrams ⋈ model) happens once even when several
     queries consume the scores."""
 
     def _build() -> DataFrame:
-        bg = bigrams(df, text_col, id_col)
-        model = bigram_model(df, text_col, id_col, cache_key)
+        bg = bigrams(df)
+        model = bigram_model(df, cache_key)
         return (
             bg.join(model, ["w1", "w2"])
-            .groupBy(id_col, "source")
+            .groupBy("doc_id", "source")
             .agg(
                 F.count("*").cast("bigint").alias("n_bigrams"),
                 F.sum("p_ppm").cast("bigint").alias("sum_ppm"),
@@ -93,5 +81,5 @@ def doc_scores(
             .withColumn("mean_ppm", F.expr("sum_ppm div n_bigrams").cast("bigint"))
         )
 
-    key = ("lm_scores", cache_key, text_col, id_col) if cache_key is not None else None
+    key = ("lm_scores", cache_key) if cache_key is not None else None
     return _cached_stage(df, key, _build)

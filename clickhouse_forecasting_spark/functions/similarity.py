@@ -48,51 +48,42 @@ def cosine_with_literal(vec_col: Column, query: list[float]) -> Column:
     return dot_with_literal(vec_col, query) / (vnorm * F.lit(qnorm))
 
 
-def brute_force_topk(
-    df: DataFrame,
-    query: list[float],
-    k: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
+def brute_force_topk(df: DataFrame, query: list[float], k: int) -> DataFrame:
     """Exact cosine top-k for one query vector. Deterministic tie-break on
     id so results are stable across partitionings/engines."""
     scored = df.select(
-        F.col(id_col), cosine_with_literal(F.col(vec_col), query).alias("cosine")
+        F.col("vec_id"), cosine_with_literal(F.col("embedding"), query).alias("cosine")
     )
-    return scored.orderBy(F.col("cosine").desc(), F.col(id_col)).limit(k)
+    return scored.orderBy(F.col("cosine").desc(), F.col("vec_id")).limit(k)
 
 
-def with_normalized(
-    df: DataFrame, vec_col: str = "embedding", out_col: str = "nvec"
-) -> DataFrame:
-    """Add an L2-normalized copy of the vector column. The norm is
+def with_normalized(df: DataFrame) -> DataFrame:
+    """Add ``nvec``, an L2-normalized copy of ``embedding``. The norm is
     materialized in its own projection first so the per-element divide
     does not re-evaluate the aggregate subtree (interpreted higher-order
     functions re-run argument trees per element)."""
     norm = F.sqrt(
         F.aggregate(
-            F.transform(F.col(vec_col), lambda x: x.cast("double") * x),
+            F.transform(F.col("embedding"), lambda x: x.cast("double") * x),
             F.lit(0.0),
             lambda acc, v: acc + v,
         )
     )
     return df.withColumn("_norm", F.greatest(norm, F.lit(1e-12))).withColumn(
-        out_col,
-        F.transform(F.col(vec_col), lambda x: x.cast("double") / F.col("_norm")),
+        "nvec",
+        F.transform(F.col("embedding"), lambda x: x.cast("double") / F.col("_norm")),
     ).drop("_norm")
 
 
-def quantization_stats(
-    df: DataFrame, vec_col: str = "embedding"
-) -> tuple[list[float], list[float]]:
-    """Per-dimension (min, scale) for asymmetric int8 quantization.
+def quantization_stats(df: DataFrame) -> tuple[list[float], list[float]]:
+    """Per-dimension (min, scale) of ``nvec`` for asymmetric int8
+    quantization.
 
     posexplode -> groupBy(pos): the shuffle carries dims × partials, the
     driver collects exactly `dim` rows (constants thereafter, shipped in
     the plan as literals — the classic train-tiny/apply-everywhere split)."""
     stats = (
-        df.select(F.posexplode(vec_col).alias("pos", "v"))
+        df.select(F.posexplode("nvec").alias("pos", "v"))
         .groupBy("pos")
         .agg(F.min("v").alias("lo"), F.max("v").alias("hi"))
         .orderBy("pos")
@@ -118,15 +109,9 @@ def quantize(vec_col: Column, mins: list[float], scales: list[float]) -> Column:
 
 
 def quantized_topk(
-    df: DataFrame,
-    query: list[float],
-    mins: list[float],
-    scales: list[float],
-    k: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
+    df: DataFrame, query: list[float], mins: list[float], scales: list[float]
 ) -> DataFrame:
-    """Approximate COSINE top-k over int8-quantized vectors via asymmetric
+    """Approximate COSINE top-20 over int8-quantized vectors via asymmetric
     distance computation (ADC, the FAISS SQ8 scheme): only the CORPUS is
     quantized; the float query folds into per-dim weights. With
     reconstruction x̂_d = min_d + scale_d·code_d,
@@ -134,34 +119,27 @@ def quantized_topk(
         dot(x̂, q) = Σ min_d·q_d  (rank-constant)  +  Σ code_d·(scale_d·q_d)
 
     so ranking needs just the integer codes x a precomputed weight array.
-    Callers pass an L2-NORMALIZED corpus column + query (with_normalized)
-    so dot ranks like cosine. Corpus memory/bandwidth drop 4x — at 100 TB
-    of embeddings the difference between in-memory and spilled; recall is
-    pinned in tests (only corpus-side quantization error remains)."""
+    The corpus column is ``nvec``, L2-NORMALIZED like the query
+    (with_normalized), so dot ranks like cosine. Corpus memory/bandwidth
+    drop 4x — at 100 TB of embeddings the difference between in-memory
+    and spilled; recall is pinned in tests (only corpus-side quantization
+    error remains)."""
     w = F.array(*[F.lit(float(sc * qd)) for sc, qd in zip(scales, query)])
-    codes = quantize(F.col(vec_col), mins, scales)
+    codes = quantize(F.col("nvec"), mins, scales)
     score = F.aggregate(
         F.zip_with(codes, w, lambda c, wd: c.cast("double") * wd),
         F.lit(0.0),
         lambda acc, v: acc + v,
     )
     return (
-        df.select(F.col(id_col), F.round(score, 6).alias("qscore"))
-        .orderBy(F.col("qscore").desc(), F.col(id_col))
-        .limit(k)
+        df.select(F.col("vec_id"), F.round(score, 6).alias("qscore"))
+        .orderBy(F.col("qscore").desc(), F.col("vec_id"))
+        .limit(20)
     )
 
 
-def pairwise_topk(
-    df: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    q_vec_col: str = "embedding",
-    q_id_col: str = "vec_id",
-) -> DataFrame:
-    """Top-k neighbors for EVERY query row (small query side, broadcast).
+def pairwise_topk(df: DataFrame, queries: DataFrame) -> DataFrame:
+    """Top-3 neighbors for EVERY query row (small query side, broadcast).
 
     corpus x broadcast(queries) -> cosine -> per-query window top-k. The
     cross join is size |corpus| x |queries| rows but never materializes:
@@ -169,23 +147,23 @@ def pairwise_topk(
     from pyspark.sql import Window
 
     q = queries.select(
-        F.col(q_id_col).alias("query_id"), F.col(q_vec_col).alias("qvec")
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
     )
     scored = (
-        df.select(F.col(id_col), F.col(vec_col))
+        df.select(F.col("vec_id"), F.col("embedding"))
         .crossJoin(F.broadcast(q))
-        .withColumn("cosine", cosine_similarity(F.col(vec_col), F.col("qvec")))
+        .withColumn("cosine", cosine_similarity(F.col("embedding"), F.col("qvec")))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col(id_col))
+    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", F.col(id_col).alias("neighbor_id"), "cosine", "rank")
+        .filter(F.col("rank") <= 3)
+        .select("query_id", F.col("vec_id").alias("neighbor_id"), "cosine", "rank")
     )
 
 
-def random_hyperplanes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
-    rng = np.random.default_rng(seed)
+def random_hyperplanes(dim: int, n_planes: int) -> np.ndarray:
+    rng = np.random.default_rng(42)
     return rng.standard_normal((n_planes, dim))
 
 
@@ -202,22 +180,15 @@ def hyperplane_signature(vec_col: Column, planes: np.ndarray) -> Column:
     return out
 
 
-def lsh_bucket_assignments(
-    df: DataFrame,
-    dim: int,
-    n_planes: int = 8,
-    seed: int = 42,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
+def lsh_bucket_assignments(df: DataFrame, dim: int, n_planes: int) -> DataFrame:
     """Assign every vector to its LSH bucket (the ANN index build pass).
     Writing this out partitioned-by-bucket is the 100 TB index layout:
     queries read only their bucket's files."""
-    planes = random_hyperplanes(dim, n_planes, seed)
+    planes = random_hyperplanes(dim, n_planes)
     return df.select(
-        F.col(id_col),
-        F.col(vec_col),
-        hyperplane_signature(F.col(vec_col), planes).alias("bucket"),
+        F.col("vec_id"),
+        F.col("embedding"),
+        hyperplane_signature(F.col("embedding"), planes).alias("bucket"),
     )
 
 
@@ -237,9 +208,6 @@ def hyperplane_near_dup_pairs(
     dim: int,
     threshold: float = 0.9,
     n_planes: int = 12,
-    seed: int = 42,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     max_bucket_occupancy: int = MAX_BUCKET_OCCUPANCY,
 ) -> DataFrame:
     """Full-corpus embedding near-dup pairs, LSH-bucketed — the scale path.
@@ -261,7 +229,7 @@ def hyperplane_near_dup_pairs(
     blow-up."""
     from pyspark.sql import Window
 
-    bucketed = lsh_bucket_assignments(df, dim, n_planes, seed, vec_col, id_col)
+    bucketed = lsh_bucket_assignments(df, dim, n_planes)
     occ = F.count("*").over(Window.partitionBy("bucket"))
     guarded_bucket = F.when(
         F.assert_true(
@@ -280,24 +248,24 @@ def hyperplane_near_dup_pairs(
     # pair instead of 3 (same treatment as ivf_near_dup_pairs)
     nrm = F.sqrt(
         F.aggregate(
-            F.col(vec_col),
+            F.col("embedding"),
             F.lit(0.0),
             lambda acc, v: acc + v.cast("double") * v.cast("double"),
         )
     )
     guarded = bucketed.withColumn("__bucket_occ", occ).select(
         guarded_bucket.alias("bucket"),
-        F.col(id_col),
-        F.col(vec_col),
+        F.col("vec_id"),
+        F.col("embedding"),
         nrm.alias("__nrm"),
     )
     a = guarded.select(
-        F.col("bucket"), F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("va"), F.col("__nrm").alias("__na"),
+        F.col("bucket"), F.col("vec_id").alias("id_a"),
+        F.col("embedding").alias("va"), F.col("__nrm").alias("__na"),
     )
     b = guarded.select(
-        F.col("bucket"), F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("vb"), F.col("__nrm").alias("__nb"),
+        F.col("bucket"), F.col("vec_id").alias("id_b"),
+        F.col("embedding").alias("vb"), F.col("__nrm").alias("__nb"),
     )
     dot = F.aggregate(
         F.zip_with(
@@ -417,26 +385,29 @@ def _assign_cells_arrow(
 # runtime_cache.release(cache_key) drops both together. Opt-in via
 # cache_key — training is deterministic, so caching cannot change values.
 
+# IVF quantizes each dimension onto the integer grid round(x * SCALE); the
+# grid is a geometry choice, and _exactness_guard checks it keeps distances
+# exact for the vectors at hand.
+SCALE = 1000
 
-def _quantized_base(df: DataFrame, vec_col: str, id_col: str, scale: int) -> DataFrame:
+
+def _quantized_base(df: DataFrame, scale: int) -> DataFrame:
     """(id, vec, __iv): the integer-quantized projection every IVF step
     reads — round(x*scale) per dimension, exact for the audit corpora."""
     iv = F.transform(
-        F.col(vec_col),
+        F.col("embedding"),
         lambda x: F.round(x.cast("double") * scale).cast("bigint"),
     )
-    return df.select(F.col(id_col), F.col(vec_col)).withColumn("__iv", iv)
+    return df.select(F.col("vec_id"), F.col("embedding")).withColumn("__iv", iv)
 
 
-def _assigned_from_cents(
-    df: DataFrame, cents: list[list[int]], vec_col: str, id_col: str, scale: int
-) -> DataFrame:
+def _assigned_from_cents(df: DataFrame, cents: list[list[int]], scale: int) -> DataFrame:
     """Row-local cell assignment against literal centroids — the final
     (train-free) step of ivf_exact_cells, shared by the miss path and the
     cache-hit rebuild (ADVICE r8: the hit path must be able to
     reconstruct the assigned frame from the centroids alone, not assume
     the frame store still holds it)."""
-    base = _quantized_base(df, vec_col, id_col, scale)
+    base = _quantized_base(df, scale)
     dim = len(cents[0])
     return base.withColumn(
         "cell",
@@ -450,9 +421,7 @@ def _assigned_from_cents(
 def ivf_exact_cells(
     df: DataFrame,
     n_cells: int = 16,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    scale: int = 1000,
+    scale: int = SCALE,
     lloyd_iters: int = 1,
     cache_key=None,
 ) -> tuple[DataFrame, list[list[int]]]:
@@ -477,10 +446,7 @@ def ivf_exact_cells(
 
     ck = None
     if cache_key is not None:
-        ck = (
-            "ivfcells", cache_key, int(n_cells), vec_col, id_col,
-            int(scale), int(lloyd_iters),
-        )
+        ck = ("ivfcells", cache_key, int(n_cells), int(scale), int(lloyd_iters))
         hit = _rc.get_value(df, ck)
         if hit is not None:
             # centroids are the durable artifact: the build lambda can
@@ -491,13 +457,13 @@ def ivf_exact_cells(
                 _cached_stage(
                     df,
                     ck,
-                    lambda: _assigned_from_cents(df, hit, vec_col, id_col, scale),
+                    lambda: _assigned_from_cents(df, hit, scale),
                 ),
                 hit,
             )
-    base = _quantized_base(df, vec_col, id_col, scale)
+    base = _quantized_base(df, scale)
     seed_rows = (
-        base.orderBy(id_col).limit(int(n_cells)).select(id_col, "__iv").collect()
+        base.orderBy("vec_id").limit(int(n_cells)).select("vec_id", "__iv").collect()
     )
     cents = [
         [int(v) for v in r["__iv"]]
@@ -519,20 +485,14 @@ def ivf_exact_cells(
             new[r["c"]][r["p"]] = r["s"] // r["n"]
         cents = new
     final_cents = cents
-    assigned = _assigned_from_cents(df, final_cents, vec_col, id_col, scale)
+    assigned = _assigned_from_cents(df, final_cents, scale)
     if ck is not None:
         assigned = _cached_stage(df, ck, lambda: assigned)
         _rc.put_value(df, ck, final_cents)
     return assigned, final_cents
 
 
-def assign_to_cells(
-    df: DataFrame,
-    centroids: list[list[int]],
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    scale: int = 1000,
-) -> DataFrame:
+def assign_to_cells(df: DataFrame, centroids: list[list[int]]) -> DataFrame:
     """Assign vectors to FROZEN learned cells (the centroids from a prior
     ivf_exact_cells fit) — the incremental-admission primitive: a new
     batch quantizes and argmin-assigns against the trained index without
@@ -540,11 +500,11 @@ def assign_to_cells(
     the plan), deterministic, and SQL-replayable like the trainer; the
     same float64-exactness guard wraps the cell column."""
     iv = F.transform(
-        F.col(vec_col),
-        lambda x: F.round(x.cast("double") * scale).cast("bigint"),
+        F.col("embedding"),
+        lambda x: F.round(x.cast("double") * SCALE).cast("bigint"),
     )
     dim = len(centroids[0])
-    base = df.select(F.col(id_col), F.col(vec_col)).withColumn("__iv", iv)
+    base = df.select(F.col("vec_id"), F.col("embedding")).withColumn("__iv", iv)
     return base.withColumn(
         "cell",
         F.when(
@@ -558,9 +518,6 @@ def ivf_near_dup_pairs(
     df: DataFrame,
     n_cells: int = 16,
     threshold: float = 0.9,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    scale: int = 1000,
     max_cell_occupancy: int = MAX_BUCKET_OCCUPANCY,
     n_assign: int = 1,
     cache_key=None,
@@ -590,19 +547,16 @@ def ivf_near_dup_pairs(
     masked argmin == ROW_NUMBER ORDER BY (d, j) ≤ k)."""
     from pyspark.sql import Window
 
-    assigned, cents = ivf_exact_cells(
-        df, n_cells=n_cells, vec_col=vec_col, id_col=id_col, scale=scale,
-        cache_key=cache_key,
-    )
+    assigned, cents = ivf_exact_cells(df, n_cells=n_cells, cache_key=cache_key)
     if int(n_assign) > 1:
         iv = F.transform(
-            F.col(vec_col),
-            lambda x: F.round(x.cast("double") * scale).cast("bigint"),
+            F.col("embedding"),
+            lambda x: F.round(x.cast("double") * SCALE).cast("bigint"),
         )
 
         def _build_multi() -> DataFrame:
             return (
-                df.select(F.col(id_col), F.col(vec_col))
+                df.select(F.col("vec_id"), F.col("embedding"))
                 .withColumn("__iv", iv)
                 .withColumn(
                     "__cells",
@@ -623,10 +577,7 @@ def ivf_near_dup_pairs(
 
         mk = None
         if cache_key is not None:
-            mk = (
-                "ivfmulti", cache_key, int(n_cells), vec_col, id_col,
-                int(scale), int(n_assign),
-            )
+            mk = ("ivfmulti", cache_key, int(n_cells), int(n_assign))
         assigned = _cached_stage(df, mk, _build_multi)
     occ = F.count("*").over(Window.partitionBy("cell"))
     guarded_cell = F.when(
@@ -646,27 +597,27 @@ def ivf_near_dup_pairs(
     # pair instead of 3)
     nrm = F.sqrt(
         F.aggregate(
-            F.col(vec_col),
+            F.col("embedding"),
             F.lit(0.0),
             lambda acc, v: acc + v.cast("double") * v.cast("double"),
         )
     )
     guarded = assigned.withColumn("__cell_occ", occ).select(
         guarded_cell.alias("cell"),
-        F.col(id_col),
-        F.col(vec_col),
+        F.col("vec_id"),
+        F.col("embedding"),
         nrm.alias("__nrm"),
     )
     a = guarded.select(
         "cell",
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("va"),
+        F.col("vec_id").alias("id_a"),
+        F.col("embedding").alias("va"),
         F.col("__nrm").alias("__na"),
     )
     b = guarded.select(
         "cell",
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("vb"),
+        F.col("vec_id").alias("id_b"),
+        F.col("embedding").alias("vb"),
         F.col("__nrm").alias("__nb"),
     )
     dot = F.aggregate(

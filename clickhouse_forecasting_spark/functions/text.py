@@ -63,7 +63,7 @@ def stopword_hits(col: Column, lang: str) -> Column:
     return F.size(F.filter(tokens(col), lambda t: t.isin(*words)))
 
 
-def stopword_ratio(col: Column, lang: str = "en") -> Column:
+def stopword_ratio(col: Column, lang: str) -> Column:
     return stopword_hits(col, lang) / F.greatest(token_count(col), F.lit(1))
 
 
@@ -73,14 +73,14 @@ def mean_word_length(col: Column) -> Column:
     return total / F.greatest(F.size(toks), F.lit(1))
 
 
-def quality_score(col: Column, lang: str = "en") -> Column:
+def quality_score(col: Column) -> Column:
     """Composite [0,1] quality heuristic: length sweet-spot, low punctuation
-    noise, natural stopword density. Mirrors the shape of public web-corpus
+    noise, natural English stopword density. Mirrors the shape of public web-corpus
     quality filters (length/punct/stopword ratios)."""
     n_tok = token_count(col)
     length_ok = F.when((n_tok >= 5) & (n_tok <= 5000), F.lit(1.0)).otherwise(F.lit(0.0))
     punct_ok = F.when(punct_ratio(col) < 0.2, F.lit(1.0)).otherwise(F.lit(0.0))
-    stop_ok = F.when(stopword_ratio(col, lang) > 0.05, F.lit(1.0)).otherwise(F.lit(0.0))
+    stop_ok = F.when(stopword_ratio(col, "en") > 0.05, F.lit(1.0)).otherwise(F.lit(0.0))
     return (length_ok + punct_ok + stop_ok) / F.lit(3.0)
 
 
@@ -128,22 +128,22 @@ def fingerprint(col: Column) -> Column:
     return F.md5(normalize_text(col))
 
 
-def char_shingles_of_norm(norm: Column, n: int = 5) -> Column:
-    """Distinct character n-grams of an ALREADY-normalized string column.
+def char_shingles_of_norm(norm: Column) -> Column:
+    """Distinct character 5-grams of an ALREADY-normalized string column.
 
     Pass a materialized column (``.withColumn("norm", normalize_text(...))``
     in a separate projection) rather than the normalize expression itself:
     higher-order-function lambdas are interpreted, so an inlined expression
     tree would re-run the regexp normalization once per shingle element."""
-    idx = F.sequence(F.lit(1), F.greatest(F.length(norm) - (n - 1), F.lit(1)))
-    return F.array_distinct(F.transform(idx, lambda i: F.substring(norm, i, n)))
+    idx = F.sequence(F.lit(1), F.greatest(F.length(norm) - 4, F.lit(1)))
+    return F.array_distinct(F.transform(idx, lambda i: F.substring(norm, i, 5)))
 
 
-def word_shingles(col: Column, n: int = 3) -> Column:
-    """Distinct word n-grams (joined by single spaces)."""
+def word_shingles(col: Column) -> Column:
+    """Distinct word 4-grams (joined by single spaces)."""
     toks = tokens(col)
-    count = F.greatest(F.size(toks) - (n - 1), F.lit(1))
+    count = F.greatest(F.size(toks) - 3, F.lit(1))
     idx = F.sequence(F.lit(1), count)
     return F.array_distinct(
-        F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, n)))
+        F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, 4)))
     )

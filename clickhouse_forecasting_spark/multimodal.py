@@ -46,13 +46,13 @@ FEATURE_SCHEMA = T.StructType(
 )
 
 
-def attach_payload(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def attach_payload(df: DataFrame) -> DataFrame:
     """Build a multimodal frame from the documents fixture: the text bytes
     stand in for an encoded media payload; metadata is computed JVM-side
     (octet_length/md5 — never pulls bytes into Python)."""
-    payload = F.encode(F.col(text_col), "utf-8")
+    payload = F.encode(F.col("text"), "utf-8")
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         payload.alias("payload"),
         F.struct(
             F.lit("image").alias("kind"),
@@ -571,7 +571,7 @@ def _decode_payload(payload: bytes) -> list[float]:
     return _decode_stub_features(payload)
 
 
-def extract_features(df: DataFrame, batch_hint: int | None = None) -> DataFrame:
+def extract_features(df: DataFrame) -> DataFrame:
     """Feature-extract every payload via mapInPandas — the canonical decode
     pattern: per-partition Arrow batches in, small feature rows out, payload
     bytes never shuffled. Corrupt payloads yield NULL features instead of
@@ -611,20 +611,20 @@ FRAME_SCHEMA = T.StructType(
 )
 
 
-def _sample_frames(payload: bytes, n_frames: int) -> list[bytes]:
+def _sample_frames(payload: bytes) -> list[bytes]:
     """STUB — deterministic fake frame sampler. A real deployment replaces
     this with libav/pyav keyframe extraction; the dataflow (1 video row ->
-    n frame rows) is what's under test. Fake frames are byte-slices so
+    4 frame rows) is what's under test. Fake frames are byte-slices so
     frame count/sizes are deterministic."""
     if not payload:
         raise ValueError("empty payload")
-    step = max(len(payload) // n_frames, 1)
-    return [payload[i * step : (i + 1) * step] or payload[-step:] for i in range(n_frames)]
+    step = max(len(payload) // 4, 1)
+    return [payload[i * step : (i + 1) * step] or payload[-step:] for i in range(4)]
 
 
-def sample_frames(df: DataFrame, n_frames: int = 4) -> DataFrame:
+def sample_frames(df: DataFrame) -> DataFrame:
     """Frame sampling via mapInPandas — the 1:N batch shape (one media row
-    yields n frame rows). Payload bytes stay within the partition; any
+    yields 4 frame rows). Payload bytes stay within the partition; any
     downstream grouping runs on (doc_id, frame_idx) + checksum, never on
     frame bytes. Corrupt payloads are skipped (fault isolation), visible as
     missing doc_ids."""
@@ -635,7 +635,7 @@ def sample_frames(df: DataFrame, n_frames: int = 4) -> DataFrame:
             out = []
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 try:
-                    frames = _sample_frames(bytes(payload), n_frames)
+                    frames = _sample_frames(bytes(payload))
                 except Exception:
                     continue
                 for i, fr in enumerate(frames):

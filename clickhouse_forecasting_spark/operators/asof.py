@@ -10,7 +10,7 @@ Spark has no native as-of join. The textbook formulations both fail at
   a single straggler owns the whole timeline.
 
 This implementation keeps the union-timeline idea but splits it into
-time buckets (default: month), making it a two-pass algorithm:
+month buckets, making it a two-pass algorithm:
 
 1. **in-bucket pass** — window partitioned by (keys, bucket): last right
    value at-or-before each row *within its bucket*. Fully parallel; state
@@ -31,14 +31,8 @@ value wins — both passes use the same (t, value) order so they agree.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def _month_bucket(c: Column) -> Column:
-    return F.date_trunc("month", c)
 
 
 def asof_join(
@@ -49,7 +43,6 @@ def asof_join(
     right_value: str,
     keys: list[str] | None = None,
     out_col: str | None = None,
-    bucket_fn: Callable[[Column], Column] = _month_bucket,
     strategy: str = "bucketed",
 ) -> DataFrame:
     """Attach ``right_value`` of the latest right row with
@@ -57,10 +50,10 @@ def asof_join(
     left row. Left rows with no earlier right row get NULL.
 
     strategy='bucketed' (default) is the 100 TB path described above.
-    strategy='global' uses one window over the whole (per-key) timeline —
-    fewer stages, right choice when the inputs are already small (e.g.
-    daily-aggregated series), wrong at raw-event scale where an
-    unpartitioned timeline is a single task."""
+    strategy='global' uses one window over the whole (per-key) timeline:
+    the reference formulation the bucketed path is tested against (wrong
+    at raw-event scale, where an unpartitioned timeline is a single
+    task)."""
     keys = keys or []
     out_col = out_col or f"asof_{right_value}"
     rv_type = right.schema[right_value].dataType
@@ -94,7 +87,7 @@ def asof_join(
             .select("_lrow.*", out_col)
         )
 
-    u = l2.unionByName(r2).withColumn("_b", bucket_fn(F.col("_t")))
+    u = l2.unionByName(r2).withColumn("_b", F.date_trunc("month", F.col("_t")))
 
     w_in = (
         Window.partitionBy(*keys, "_b")
@@ -104,7 +97,7 @@ def asof_join(
     u = u.withColumn("_in_bucket", F.last("_rv", ignorenulls=True).over(w_in))
 
     bucket_last = (
-        r2.withColumn("_b", bucket_fn(F.col("_t")))
+        r2.withColumn("_b", F.date_trunc("month", F.col("_t")))
         .groupBy(*keys, "_b")
         .agg(F.max_by("_rv", F.struct("_t", "_rv")).alias("_bl"))
     )
@@ -142,25 +135,21 @@ def asof_join_directional(
     left_ts: str,
     right_ts: str,
     right_value: str,
-    keys: list[str] | None = None,
     direction: str = "backward",
-    tolerance_seconds: int | None = None,
     out_col: str | None = None,
     out_ts_col: str | None = None,
-    strategy: str = "bucketed",
 ) -> DataFrame:
-    """pandas ``merge_asof``-style direction + tolerance on top of the
-    bucketed backward operator.
+    """pandas ``merge_asof``-style direction on top of the bucketed
+    backward operator, per ``user_id``.
 
     direction='backward' (default): latest right row at-or-before;
     'forward': earliest right row at-or-after (the backward pass run on
     the time-negated axis — one reflection, same two-pass plan);
     'nearest': both passes, smaller absolute gap wins, ties go backward.
-    ``tolerance_seconds`` NULLs any match farther than the bound (the
-    merge_asof contract). The matched right timestamp is exposed via
-    ``out_ts_col`` when given. All variants keep the operator's
-    bucket-parallel shape — 'nearest' costs exactly two passes."""
-    keys = keys or []
+    The matched right timestamp is exposed via ``out_ts_col`` when given.
+    All variants keep the operator's bucket-parallel shape — 'nearest'
+    costs exactly two passes."""
+    keys = ["user_id"]
     out_col = out_col or f"asof_{right_value}"
     rp = right.select(
         *keys,
@@ -168,18 +157,10 @@ def asof_join_directional(
         F.col(right_value).alias("_mv"),
     ).select(*keys, "_mt", F.struct("_mt", "_mv").alias("_pack"))
 
-    def _gap_ok(match: Column, lts: Column) -> Column:
-        if tolerance_seconds is None:
-            return F.lit(True)
-        gap = F.abs(
-            F.unix_micros(lts.cast("timestamp")) - F.unix_micros(match["_mt"])
-        )
-        return gap <= F.lit(int(tolerance_seconds) * 1_000_000)
-
     def _backward(ldf: DataFrame, col: str) -> DataFrame:
         return asof_join(
             ldf, rp, left_ts=left_ts, right_ts="_mt",
-            right_value="_pack", keys=keys, out_col=col, strategy=strategy,
+            right_value="_pack", keys=keys, out_col=col,
         )
 
     def _forward(ldf: DataFrame, col: str) -> DataFrame:
@@ -189,15 +170,13 @@ def asof_join_directional(
         )
         return asof_join(
             l2, r2, left_ts="_neg_lt", right_ts="_neg_rt",
-            right_value="_pack", keys=keys, out_col=col, strategy=strategy,
+            right_value="_pack", keys=keys, out_col=col,
         ).drop("_neg_lt")
 
     lts = F.col(left_ts)
     if direction in ("backward", "forward"):
         j = (_backward if direction == "backward" else _forward)(left, "_m")
-        m = F.when(
-            F.col("_m").isNotNull() & _gap_ok(F.col("_m"), lts), F.col("_m")
-        )
+        m = F.when(F.col("_m").isNotNull(), F.col("_m"))
     elif direction == "nearest":
         j = _forward(_backward(left, "_mb"), "_mf")
         gb = F.abs(
@@ -212,7 +191,7 @@ def asof_join_directional(
             F.col("_mf").isNull() | (gb <= gf)
         )
         m0 = F.when(pick_b, F.col("_mb")).otherwise(F.col("_mf"))
-        m = F.when(m0.isNotNull() & _gap_ok(m0, lts), m0)
+        m = F.when(m0.isNotNull(), m0)
         j = j.withColumn("_m", m).drop("_mb", "_mf")
         m = F.col("_m")
     else:

@@ -22,18 +22,17 @@ from pyspark.sql import DataFrame, functions as F
 
 from .ranking import probe_rows
 
+# PageRank runs a fixed 10-round power iteration with the textbook damping
+# factor; both paths (driver and distributed) use the same literals.
+ITERATIONS = 10
+DAMPING = 0.85
 
-def bfs_distances(
-    edges: DataFrame,
-    source,
-    *,
-    src: str = "src",
-    dst: str = "dst",
-    max_hops: int = 10,
-) -> DataFrame:
-    """Minimum-hop BFS distances from ``source`` over a directed edge list.
 
-    Returns ``(node, dist)`` for every node reachable within ``max_hops``
+def bfs_distances(edges: DataFrame, source) -> DataFrame:
+    """Minimum-hop BFS distances from ``source`` over a directed (src, dst)
+    edge list.
+
+    Returns ``(node, dist)`` for every node reachable within 4 hops
     (the source itself at dist 0). Classic frontier expansion: each round
     is one join (frontier ⋈ edges) + one anti-join against the visited
     set — both shuffle on the node key, so a round costs O(|frontier
@@ -41,13 +40,13 @@ def bfs_distances(
     ``localCheckpoint`` (same k²-analysis-blowup fix as pagerank above).
     """
     spark = edges.sparkSession
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).persist()
+    e = edges.select(F.col("src").alias("src"), F.col("dst").alias("dst")).persist()
     visited = spark.createDataFrame(
-        [(source, 0)], f"node {edges.schema[src].dataType.simpleString()}, dist int"
+        [(source, 0)], f"node {edges.schema['src'].dataType.simpleString()}, dist int"
     )
     frontier = visited.select("node")
     try:
-        for hop in range(1, max_hops + 1):
+        for hop in range(1, 5):
             nxt = (
                 frontier.join(e, frontier.node == e.src)
                 .select(F.col("dst").alias("node"))
@@ -68,19 +67,13 @@ def bfs_distances(
 def pagerank(
     edges: DataFrame,
     *,
-    src: str = "src",
-    dst: str = "dst",
-    weight: str | None = None,
-    iterations: int = 10,
-    damping: float = 0.85,
-    checkpoint_interval: int = 2,
     max_driver_nodes: int = 10_000,
     max_driver_edges: int = 1_000_000,
 ) -> DataFrame:
-    """Weighted PageRank over a directed edge list.
+    """PageRank over a directed (src, dst, volume) edge list, weighted by
+    volume.
 
     Returns a DataFrame ``(node, rank)`` with ranks summing to 1.
-    ``weight=None`` treats every edge as weight 1 (plain PageRank).
 
     Size-adaptive dispatch (r9 VERDICT #1): a BOUNDED graph — node and
     edge counts under ``max_driver_nodes`` / ``max_driver_edges``, the
@@ -99,9 +92,10 @@ def pagerank(
     tests/test_graph.py). Set ``max_driver_nodes=0`` to force the
     distributed loop; large graphs route there automatically.
     """
-    w = F.col(weight).cast("double") if weight else F.lit(1.0)
     e = edges.select(
-        F.col(src).alias("src"), F.col(dst).alias("dst"), w.alias("w")
+        F.col("src").alias("src"),
+        F.col("dst").alias("dst"),
+        F.col("volume").cast("double").alias("w"),
     ).persist()
 
     # NOT persisted yet: the bounded fast path touches it exactly once
@@ -135,9 +129,7 @@ def pagerank(
         # the complete normalized edge list is on the driver
         edge_rows = probe_rows(norm, max_driver_edges)
         if edge_rows is not None:
-            result = _pagerank_bounded(
-                nodes, probe, edge_rows, iterations=iterations, damping=damping
-            )
+            result = _pagerank_bounded(nodes, probe, edge_rows)
             e.unpersist()
             return result
 
@@ -179,14 +171,13 @@ def pagerank(
     hint = F.broadcast if small_state else (lambda df: df)
     round_persists: list[DataFrame] = []
     try:
-        for it in range(iterations):
+        for it in range(ITERATIONS):
             if n_dangling:
                 # the dangling-mass aggregate references `ranks` a SECOND
                 # time each round; persist the round's input so both
                 # references share one materialization — without this the
                 # un-checkpointed subplan recomputes ~2^interval times
-                # between lineage cuts (ADVICE r9), silently punishing any
-                # user-raised checkpoint_interval on sink-bearing graphs.
+                # between lineage cuts (ADVICE r9).
                 ranks = ranks.persist()
                 round_persists.append(ranks)
             contribs = (
@@ -215,16 +206,15 @@ def pagerank(
             ranks = joined.select(
                 "node",
                 (
-                    F.lit((1.0 - damping) / n)
-                    + F.lit(damping)
+                    F.lit((1.0 - DAMPING) / n)
+                    + F.lit(DAMPING)
                     * (F.coalesce(F.col("c"), F.lit(0.0)) + dangling_term)
                 ).alias("rank"),
             )
-            # lineage cut every `checkpoint_interval` rounds (and on the
-            # last): plan depth stays bounded while paying one
-            # materialization job per `checkpoint_interval` rounds instead
-            # of one per round. Interval 1 = the original per-round cut.
-            if (it + 1) % checkpoint_interval == 0 or it == iterations - 1:
+            # lineage cut every 2 rounds (and on the last): plan depth
+            # stays bounded while paying one materialization job per 2
+            # rounds instead of one per round.
+            if (it + 1) % 2 == 0 or it == ITERATIONS - 1:
                 ranks = ranks.localCheckpoint(eager=True)
                 # the cut materialized everything upstream; the per-round
                 # persists are dead weight from here on
@@ -241,14 +231,7 @@ def pagerank(
     return ranks
 
 
-def _pagerank_bounded(
-    nodes: DataFrame,
-    probe: list,
-    edge_rows: list,
-    *,
-    iterations: int,
-    damping: float,
-) -> DataFrame:
+def _pagerank_bounded(nodes: DataFrame, probe: list, edge_rows: list) -> DataFrame:
     """Driver power iteration for BOUNDED graphs (see pagerank docstring):
     the dispatch probe already collected the flagged node list and the
     normalized edge list; k numpy rounds with the same per-element float
@@ -278,12 +261,12 @@ def _pagerank_bounded(
     dst_i = np.fromiter((idx[r.dst] for r in edge_rows), dtype=np.int64, count=m)
     frac = np.fromiter((r.frac for r in edge_rows), dtype=np.float64, count=m)
     rank = np.full(n, 1.0 / n)
-    base = (1.0 - damping) / n  # same Python-float literal as the plan's F.lit
-    for _ in range(iterations):
+    base = (1.0 - DAMPING) / n  # same Python-float literal as the plan's F.lit
+    for _ in range(ITERATIONS):
         dm = float(rank[dangling_mask].sum()) if n_dangling else 0.0
         contrib = np.zeros(n)
         np.add.at(contrib, dst_i, rank[src_i] * frac)
-        rank = base + damping * (contrib + dm / float(n))
+        rank = base + DAMPING * (contrib + dm / float(n))
     schema = StructType(
         [
             StructField("node", node_field.dataType, node_field.nullable),
@@ -319,15 +302,11 @@ def _free_local_checkpoint(df: DataFrame) -> None:
 
 
 def connected_components_star(
-    pairs: DataFrame,
-    *,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_rounds: int = 50,
+    pairs: DataFrame, *, max_rounds: int = 50
 ) -> tuple[DataFrame, int]:
-    """Connected components via alternating large-star / small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-    the O(log n)-round algorithm for graphs whose DIAMETER is too large
+    """Connected components of an (id_a, id_b) pair list via alternating
+    large-star / small-star (Kiveris et al., "Connected Components in
+    MapReduce and Beyond") — the O(log n)-round algorithm for graphs whose DIAMETER is too large
     for per-hop label propagation (functions/dedup.connected_components
     moves the min ONE hop per round, so a k-long dup chain costs k
     rounds; the star steps hang whole subtrees under the local min, so
@@ -349,7 +328,7 @@ def connected_components_star(
     from pyspark import StorageLevel
 
     e = (
-        pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
+        pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
         .where(F.col("u") != F.col("v"))
         .distinct()
         .localCheckpoint(eager=True)

@@ -8,9 +8,8 @@ equi-join on the bucket key followed by the exact interval filter. Cost is
 O(n * interval_span/bucket + matches) with a shuffle Catalyst handles like
 any other equi-join (AQE skew-split applies to hot buckets).
 
-Bucket granularity trades fan-out vs selectivity: pick it near the typical
-interval length (day-granularity for day-scale windows), so each interval
-explodes into a handful of rows.
+Buckets are days, the granularity of the day-scale windows this joins, so
+each interval explodes into a handful of rows.
 """
 
 from __future__ import annotations
@@ -19,47 +18,34 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-_GRANULARITY_INTERVAL = {
-    "hour": "1 hour",
-    "day": "1 day",
-    "week": "1 week",
-    "month": "1 month",
-}
-
-
 def range_join_points(
     left: DataFrame,
     right: DataFrame,
     start_col: str,
     end_col: str,
     point_col: str,
-    granularity: str = "day",
 ) -> DataFrame:
     """Inner-join left rows to right rows with
     ``left.start_col <= right.point_col < left.end_col``.
 
     Returns left columns + right columns (name collisions must be resolved
-    by the caller beforehand). ``granularity`` (hour/day/week/month) sets
-    the bucket unit on BOTH sides — left intervals step their bucket
-    sequence by one unit and right points truncate to the same unit, so
-    the equi-join keys always align."""
-    if granularity not in _GRANULARITY_INTERVAL:
-        raise ValueError(f"granularity must be one of {sorted(_GRANULARITY_INTERVAL)}")
-    step = _GRANULARITY_INTERVAL[granularity]
+    by the caller beforehand). Both sides bucket by day: left intervals
+    step their bucket sequence by one day and right points truncate to
+    the day, so the equi-join keys always align."""
     lb = left.withColumn(
         "_bucket",
         F.explode(
             F.sequence(
-                F.date_trunc(granularity, F.col(start_col)),
+                F.date_trunc("day", F.col(start_col)),
                 # end is exclusive, but a point in the same bucket as `end`
                 # can still precede it; include end's bucket and rely on
                 # the exact filter below
-                F.date_trunc(granularity, F.col(end_col)),
-                F.expr(f"interval {step}"),
+                F.date_trunc("day", F.col(end_col)),
+                F.expr("interval 1 day"),
             )
         ),
     )
-    rb = right.withColumn("_bucket", F.date_trunc(granularity, F.col(point_col)))
+    rb = right.withColumn("_bucket", F.date_trunc("day", F.col(point_col)))
     return (
         lb.join(rb, "_bucket")
         .filter(

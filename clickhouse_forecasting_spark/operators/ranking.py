@@ -98,8 +98,7 @@ def _order_cols(order_by: Sequence) -> list[Column]:
 def _ordered_cols_with_asc(
     order_by: Sequence, ascending: Sequence[bool] | None
 ) -> list[Column]:
-    """Order columns with optional per-key direction flags (the
-    global_rank convention, extended to the other global primitives so
+    """Order columns with optional per-key direction flags (so global
     dispatch call sites can stay plain-name + flags): with ``ascending``
     every entry must be a plain column name; without it, entries pass
     through ``_order_cols`` untouched (str -> asc, Column -> as built)."""
@@ -206,7 +205,6 @@ def global_row_number(
     col_name: str = "rn",
     num_partitions: int | None = None,
     dispatch: bool = False,
-    ascending: Sequence[bool] | None = None,
 ) -> DataFrame:
     """df + a global 1-based row_number over ``order_by`` — the distributed
     equivalent of ``row_number() OVER (ORDER BY ...)``.  For a deterministic
@@ -222,15 +220,12 @@ def global_row_number(
     result, but it lets the ranged shuffle split the tied run across
     partitions.  Pinned by test_ranking.test_tied_keys_split_with_tiebreak.
 
-    ``dispatch``: see the module docstring.  ``ascending`` gives per-key
-    direction for plain-name order keys (the global_rank convention)."""
-    fast = _dispatched(df, dispatch, (), order_by, ascending, "global_row_number")
+    ``dispatch``: see the module docstring."""
+    fast = _dispatched(df, dispatch, (), order_by, None, "global_row_number")
     if fast is not None:
         guarded, w = fast
         return guarded.withColumn(col_name, F.row_number().over(w).cast("bigint"))
-    local = ranged_with_local_index(
-        df, _ordered_cols_with_asc(order_by, ascending), num_partitions
-    )
+    local = ranged_with_local_index(df, _order_cols(order_by), num_partitions)
     off = partition_offsets(local)
     return (
         local.join(F.broadcast(off), _PID)
@@ -295,20 +290,17 @@ def global_rank(
     col_name: str = "rank",
     dense: bool = False,
     num_partitions: int | None = None,
-    ascending: Sequence[bool] | None = None,
     dispatch: bool = False,
 ) -> DataFrame:
     """df + SQL RANK() (gaps after ties) or DENSE_RANK() over a global
-    order — distributed: global_row_number with an arbitrary tie order,
+    ascending order — distributed: global_row_number with an arbitrary tie order,
     then the tie-insensitive reduction per key group (min rn for RANK; a
     dense index from the ordered distinct-key frame for DENSE_RANK). The
     per-key windows are PARTITIONED by the full order tuple — parallel by
     construction; the dense path re-ranks only the distinct-key frame.
 
     ``order_by`` must be plain column names (rank semantics group back on
-    them); per-key direction comes from ``ascending`` (default all-ASC),
-    e.g. ``global_rank(df, ["n"], ascending=[False])`` for
-    ``RANK() OVER (ORDER BY n DESC)``.
+    them).
 
     ``dispatch`` (see the module docstring) applies to the internal
     per-key frames — the per-key count aggregate / the distinct-key
@@ -316,14 +308,8 @@ def global_rank(
     keys = [c for c in order_by if isinstance(c, str)]
     if len(keys) != len(list(order_by)):
         # Column expressions (e.g. F.desc) have no stable name to group
-        # back on; callers pass plain column names + `ascending` flags
-        raise ValueError(
-            "global_rank requires plain column names (pass direction via "
-            "ascending=[...])"
-        )
-    asc = list(ascending) if ascending is not None else [True] * len(keys)
-    if len(asc) != len(keys):
-        raise ValueError("ascending must match order_by length")
+        # back on
+        raise ValueError("global_rank requires plain column names")
     if not dense:
         # RANK is key-grain: rank(v) = 1 + count of strictly-preceding
         # rows. Aggregate to per-key counts FIRST (the hash shuffle
@@ -336,7 +322,7 @@ def global_rank(
         vals = df.groupBy(*keys).agg(F.count("*").alias("__rk_kc"))
         cum = global_running_sum(
             vals, keys, ["__rk_kc"], ["__rk_kcum"],
-            num_partitions=num_partitions, ascending=asc, dispatch=dispatch,
+            num_partitions=num_partitions, dispatch=dispatch,
         )
         ranks = cum.select(
             *keys,
@@ -350,7 +336,7 @@ def global_rank(
     distinct_keys = df.select(*keys).distinct()
     dense_idx = global_row_number(
         distinct_keys, keys, col_name=col_name,
-        num_partitions=num_partitions, ascending=asc, dispatch=dispatch,
+        num_partitions=num_partitions, dispatch=dispatch,
     )
     return _join_back_null_safe(df, dense_idx, keys)
 
@@ -599,16 +585,16 @@ def bounded_rows_row_number(
     df: DataFrame,
     group_by: Sequence[str],
     order_by: Sequence,
-    col_name: str = "rn",
     caller: str = "bounded_rows_row_number",
 ) -> DataFrame:
-    """Plain ``row_number() OVER (PARTITION BY groups ORDER BY order)``
+    """df + ``rk``, the plain
+    ``row_number() OVER (PARTITION BY groups ORDER BY order)``
     over a frame PROVEN small at execution time — the grouped fast path,
     for callers that route several primitives off one ``dispatch_small``
     probe.  Calling it on a frame over ``FASTPATH_MAX_ROWS`` is the
     negative control: the in-plan assert fires."""
     guarded, w = _fastpath(df, list(group_by), order_by, None, caller)
-    return guarded.withColumn(col_name, F.row_number().over(w).cast("bigint"))
+    return guarded.withColumn("rk", F.row_number().over(w).cast("bigint"))
 
 
 def bounded_rows_running_sum(
@@ -872,7 +858,6 @@ def global_running_max(
     num_partitions: int | None = None,
     exclusive: bool = False,
     dispatch: bool = False,
-    ascending: Sequence[bool] | None = None,
 ) -> DataFrame:
     """df + running max of ``value_col`` over the global ``order_by`` —
     max is associative, so the stitch is: per-partition running max +
@@ -887,16 +872,14 @@ def global_running_max(
 
     ``dispatch``: see the module docstring."""
     hi = -1 if exclusive else 0
-    fast = _dispatched(df, dispatch, (), order_by, ascending, "global_running_max")
+    fast = _dispatched(df, dispatch, (), order_by, None, "global_running_max")
     if fast is not None:
         guarded, w = fast
         return guarded.withColumn(
             col_name,
             F.max(value_col).over(w.rowsBetween(Window.unboundedPreceding, hi)),
         )
-    local = ranged_with_local_index(
-        df, _ordered_cols_with_asc(order_by, ascending), num_partitions
-    )
+    local = ranged_with_local_index(df, _order_cols(order_by), num_partitions)
     pmax = local.groupBy(_PID).agg(F.max(value_col).alias("__rk_pm"))
     wp = Window.orderBy(_PID).rowsBetween(Window.unboundedPreceding, -1)
     pre = pmax.select(_PID, F.max("__rk_pm").over(wp).alias("__rk_prem"))

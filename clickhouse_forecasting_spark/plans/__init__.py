@@ -13,11 +13,8 @@ import re
 from pyspark.sql import DataFrame
 
 
-def physical_plan(df: DataFrame, run: bool = False) -> str:
-    """The executed-plan string; with run=True, executes first so AQE's
-    final plan (with whole-stage-codegen spans) is what's rendered."""
-    if run:
-        df.collect()
+def physical_plan(df: DataFrame) -> str:
+    """The executed-plan string (before execution: AQE's initial plan)."""
     return df._jdf.queryExecution().executedPlan().toString()
 
 
@@ -26,10 +23,10 @@ def scan_read_schemas(df: DataFrame) -> list[str]:
     return re.findall(r"ReadSchema: (\S+)", physical_plan(df))
 
 
-def plan_summary(df: DataFrame, run: bool = False) -> dict[str, int]:
+def plan_summary(df: DataFrame) -> dict[str, int]:
     """Operator census of the physical plan — the numbers to watch when
     reviewing an operator for 100 TB viability."""
-    plan = physical_plan(df, run=run)
+    plan = physical_plan(df)
     return {
         "exchanges": plan.count("Exchange"),
         "reused_exchanges": plan.count("ReusedExchange"),
@@ -599,14 +596,14 @@ def _enum_key(expr: str, ctx: str, depth: int = 0) -> bool:
     return False
 
 
-def bounded_key_fanins(df: DataFrame, run: bool = False) -> list[str]:
+def bounded_key_fanins(df: DataFrame) -> list[str]:
     """Window nodes whose EVERY partition key is a fixed-small-domain
     enum while the input frame is data-proportional: the whole fact fans
     into ≤|domain| tasks (e.g. 5 market segments) no matter how large the
     cluster — the per-key cousin of the single-partition collapse. Empty
     means every enum-partitioned window runs over a provably bounded
     frame (usually an aggregate at that grain)."""
-    plan = physical_plan(df, run=run)
+    plan = physical_plan(df)
     flagged: list[str] = []
 
     def walk(node: _PlanNode) -> None:
@@ -625,12 +622,12 @@ def bounded_key_fanins(df: DataFrame, run: bool = False) -> list[str]:
     return flagged
 
 
-def single_partition_collapses(df: DataFrame, run: bool = False) -> list[str]:
+def single_partition_collapses(df: DataFrame) -> list[str]:
     """Exchange SinglePartition nodes fed by an unbounded frame — the
     global-sort anti-pattern census (must be empty for every registered
     query; enforced by tests/test_plans.py and the PLANS.md `1part` column).
     """
-    plan = physical_plan(df, run=run)
+    plan = physical_plan(df)
     flagged: list[str] = []
 
     def walk(node: _PlanNode) -> None:

@@ -214,7 +214,7 @@ def q_r2_type_skip_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """R2 as data: which events columns survive the type skip-list
     (event_type/props are string-typed -> skipped)."""
     schema = _t(spark, sf_dir, "events").schema
-    cols = metric_columns(schema, axis="date")
+    cols = metric_columns(schema)
     return spark.createDataFrame([(c,) for c in cols], "column_name string")
 
 

@@ -4418,11 +4418,11 @@ def q_asof_join_directions(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id", "ts", F.col("event_id").alias("view_id")
     )
     r = AsOf.asof_join_directional(
-        p, v, "ts", "ts", "view_id", keys=["user_id"],
+        p, v, "ts", "ts", "view_id",
         direction="backward", out_col="b_id", out_ts_col="b_ts",
     )
     r = AsOf.asof_join_directional(
-        r, v, "ts", "ts", "view_id", keys=["user_id"],
+        r, v, "ts", "ts", "view_id",
         direction="forward", out_col="f_id", out_ts_col="f_ts",
     )
     # nearest derives from the two matches already attached (the same
@@ -4648,7 +4648,7 @@ def q_streaming_window_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
     counts = sliding_type_counts(ev)
     return (
-        topk_per_window(counts, k=3)
+        topk_per_window(counts)
         .select(
             F.col("window_start").cast("timestamp").alias("window_start"),
             "rnk",
@@ -5063,7 +5063,7 @@ def _replay_closed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
-    counts = sliding_type_counts(stream, watermark="1 day")
+    counts = sliding_type_counts(stream)
     name = "closed_counts_replay"
     with pinned_state_partitions(spark):
         q = (
@@ -5126,7 +5126,7 @@ def q_streaming_closed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     drained = _replay_closed_counts(spark, sf_dir)
     return (
-        topk_per_window(drained, k=3)
+        topk_per_window(drained)
         .select(
             F.col("window_start").cast("timestamp").alias("window_start"),
             "rnk",

@@ -47,7 +47,6 @@ def q_skew_salted_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n_events").alias("n_events"),
             F.sum("cents").alias("cents"),
         ],
-        n_salts=16,
     )
     return out.orderBy("event_type")
 
@@ -352,7 +351,7 @@ def q_corpus_pack_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     how many straddle in from the previous window, and its fill. One
     window cumsum per shard + a bounded explode — closed-form, fully
     codegen'd, identical SQL on the oracle side."""
-    return PK.pack_concat_chunks(_t(spark, sf_dir, "documents"), budget=256)
+    return PK.pack_concat_chunks(_t(spark, sf_dir, "documents"))
 
 
 _PACK_CHUNKS_SQL = r"""
@@ -391,7 +390,7 @@ def q_corpus_pack_firstfit(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequential, so Spark runs it as applyInPandas (one scan per source
     shard); the oracle replays the identical recurrence with a recursive
     CTE that advances every shard one document per step."""
-    return PK.pack_first_fit(_t(spark, sf_dir, "documents"), budget=256)
+    return PK.pack_first_fit(_t(spark, sf_dir, "documents"))
 
 
 _PACK_FIRSTFIT_SQL = r"""
@@ -423,9 +422,7 @@ def q_corpus_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     index amplification a vector store pays for the overlap. Per-doc
     window sums fold row-locally (aggregate over the index sequence), so
     the only shuffle is the per-shard rollup."""
-    return PK.chunk_overlap_manifest(
-        _t(spark, sf_dir, "documents"), chunk=128, stride=64
-    )
+    return PK.chunk_overlap_manifest(_t(spark, sf_dir, "documents"))
 
 
 _CHUNK_OVERLAP_SQL = r"""
@@ -464,8 +461,8 @@ def q_minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     SAME persisted signature/shingle-set stages as the dedup family —
     zero extra corpus passes."""
     docs = _t(spark, sf_dir, "documents")
-    cand = DD.minhash_lsh_candidates(docs, num_hashes=16, bands=4, cache_key=sf_dir)
-    sig = DD.numeric_signatures(docs, num_hashes=16, cache_key=sf_dir)
+    cand = DD.minhash_lsh_candidates(docs, cache_key=sf_dir)
+    sig = DD.numeric_signatures(docs, cache_key=sf_dir)
     exact = DD.lsh_verified_pairs(docs, threshold=0.0, cache_key=sf_dir).select(
         "id_a", "id_b", "jaccard"
     )

@@ -46,7 +46,7 @@ _SHINGLES_SQL = (
 
 def q_dedup_minhash_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
-    return DD.minhash_signatures(docs, num_hashes=4)
+    return DD.minhash_signatures(docs)
 
 
 _MINHASH_SIG_SQL = f"""
@@ -64,7 +64,7 @@ def q_dedup_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     # cache_key shares the persisted banded-signature stage with the
     # other three dedup-family queries: one corpus pass per run, not four
-    return DD.minhash_lsh_candidates(docs, num_hashes=16, bands=4, cache_key=sf_dir)
+    return DD.minhash_lsh_candidates(docs, cache_key=sf_dir)
 
 
 _P = DD.MINHASH_PRIME
@@ -148,7 +148,7 @@ def q_dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     verification formula is the only new work, so the marginal cost is one
     O(candidate-pairs) join. Both directions emitted as exact integer ppm."""
     docs = _t(spark, sf_dir, "documents")
-    return DD.containment_pairs(docs, threshold_ppm=600_000, cache_key=sf_dir)
+    return DD.containment_pairs(docs, cache_key=sf_dir)
 
 
 _CONTAIN_SQL = f"""
@@ -403,7 +403,7 @@ def ann_scale_audit_frame(spark: SparkSession, n_vecs: int) -> DataFrame:
         )
     )
     bucketed = (
-        SIM.lsh_bucket_assignments(emb, _ANN_SCALE_DIM, n_planes, seed=42)
+        SIM.lsh_bucket_assignments(emb, _ANN_SCALE_DIM, n_planes)
         .withColumn("__nrm", nrm)
         .localCheckpoint(eager=True)
     )
@@ -758,9 +758,7 @@ def ann_ivf_scale_audit_frame(spark: SparkSession, n_vecs: int) -> DataFrame:
     assignment feeds the occupancy probe and both join sides."""
     k = _ivf_cells_for(n_vecs)
     emb = synth_embedding_corpus(spark, n_vecs)
-    assigned, _ = SIM.ivf_exact_cells(
-        emb, n_cells=k, scale=1000, cache_key=("ann_ivf_scale", n_vecs)
-    )
+    assigned, _ = SIM.ivf_exact_cells(emb, n_cells=k, cache_key=("ann_ivf_scale", n_vecs))
     # per-vector norm BEFORE the checkpoint: the fold is identical to
     # cosine_similarity's, so dot/(na·nb) is bit-identical to the
     # inline form while the O(candidates) verify pays 1 fold per pair
@@ -967,9 +965,7 @@ def q_ivf_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     makes this row hash-gateable end-to-end (MLlib KMeans centroids
     depend on sampling/parallelism, so no SQL twin could replay them)."""
     emb = _t(spark, sf_dir, "embeddings")
-    pairs = SIM.ivf_near_dup_pairs(
-        emb, n_cells=16, threshold=0.3, scale=1000, cache_key=sf_dir
-    )
+    pairs = SIM.ivf_near_dup_pairs(emb, n_cells=16, threshold=0.3, cache_key=sf_dir)
     return pairs.withColumn("cosine", F.round("cosine", 6))
 
 
@@ -1025,8 +1021,7 @@ def q_ivf_near_dup_pairs_probe2(
     ROW_NUMBER ORDER BY (d, j) ≤ 2."""
     emb = _t(spark, sf_dir, "embeddings")
     pairs = SIM.ivf_near_dup_pairs(
-        emb, n_cells=16, threshold=0.3, scale=1000, n_assign=2,
-        cache_key=sf_dir,
+        emb, n_cells=16, threshold=0.3, n_assign=2, cache_key=sf_dir
     )
     return pairs.withColumn("cosine", F.round("cosine", 6))
 
@@ -1048,17 +1043,13 @@ def q_ann_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     base = emb.filter(F.col("vec_id") % 5 != 0)
     batch = emb.filter(F.col("vec_id") % 5 == 0)
-    assigned_base, cents = SIM.ivf_exact_cells(
-        base, n_cells=16, scale=1000, cache_key=("incr_base", sf_dir)
-    )
+    assigned_base, cents = SIM.ivf_exact_cells(base, n_cells=16, cache_key=("incr_base", sf_dir))
     # materialize the batch assignment ONCE (r12): it feeds BOTH the
     # in-cell verify join and the final per-vector join-back, and
     # assign_to_cells is a pandas-UDF pass over the batch — without the
     # checkpoint the Python assignment stage executes twice (no shared
     # exchange between the two consumers). |batch| = |corpus|/5 rows.
-    assigned_batch = SIM.assign_to_cells(
-        batch, cents, scale=1000
-    ).localCheckpoint(eager=True)
+    assigned_batch = SIM.assign_to_cells(batch, cents).localCheckpoint(eager=True)
     nrm = F.sqrt(
         F.aggregate(
             F.col("embedding"),
@@ -1124,9 +1115,7 @@ def q_stream_ann_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb_static = _t(spark, sf_dir, "embeddings")
     base = emb_static.filter(F.col("vec_id") % 5 != 0)
-    assigned_base, cents = SIM.ivf_exact_cells(
-        base, n_cells=16, scale=1000, cache_key=("incr_base", sf_dir)
-    )
+    assigned_base, cents = SIM.ivf_exact_cells(base, n_cells=16, cache_key=("incr_base", sf_dir))
     nrm = F.sqrt(
         F.aggregate(
             F.col("embedding"),
@@ -1146,7 +1135,7 @@ def q_stream_ann_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(sf_dir)
         .filter(F.col("vec_id") % 5 == 0)
     )
-    q = SIM.assign_to_cells(stream, cents, scale=1000).select(
+    q = SIM.assign_to_cells(stream, cents).select(
         "cell", F.col("vec_id").alias("batch_id"),
         F.col("embedding").alias("qv"), nrm.alias("__nq"),
     )
@@ -1183,9 +1172,7 @@ def q_stream_ann_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.max("cosine"), 6).alias("max_cosine"),
         )
     )
-    batch_static = SIM.assign_to_cells(
-        emb_static.filter(F.col("vec_id") % 5 == 0), cents, scale=1000
-    )
+    batch_static = SIM.assign_to_cells(emb_static.filter(F.col("vec_id") % 5 == 0), cents)
     return (
         batch_static.select(
             F.col("vec_id"), F.col("cell").cast("int").alias("cell")
@@ -1310,7 +1297,7 @@ FROM per_doc GROUP BY source ORDER BY source
 def q_dedup_near_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The shipped artifact: corpus minus near-dups (min-id keeper rule)."""
     docs = _t(spark, sf_dir, "documents")
-    return DD.dedup_near(docs, threshold=0.8, cache_key=sf_dir).select(
+    return DD.dedup_near(docs, cache_key=sf_dir).select(
         "doc_id", "lang", "source"
     )
 
@@ -1398,7 +1385,7 @@ def q_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     quality filter + near-dedup, emitting the surviving corpus with its
     metadata. This is the composition a 100 TB pipeline ships nightly."""
     docs = _t(spark, sf_dir, "documents")
-    kept = DD.dedup_near(docs, threshold=0.8)
+    kept = DD.dedup_near(docs)
     return (
         kept.withColumn("lang_pred", TX.lang_id(F.col("text")))
         .withColumn("quality", TX.quality_score(F.col("text")))
@@ -1469,7 +1456,7 @@ def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates) — this row is the audit baseline it is verified
     against."""
     emb = _t(spark, sf_dir, "embeddings")
-    pairs = DD.embedding_near_dup_pairs(emb, threshold=0.3, block_mod=5)
+    pairs = DD.embedding_near_dup_pairs(emb)
     return pairs.withColumn("cosine", F.round("cosine", 6))
 
 

@@ -90,10 +90,10 @@ def q_forecast_multi_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
     )
     long = unpivot_metrics(
-        orders_daily, ["order_count", "total_revenue"], axis="date"
+        orders_daily, ["order_count", "total_revenue"]
     ).withColumn("table", F.lit("orders_daily")).unionByName(
         unpivot_metrics(
-            events_daily, ["event_count", "total_value"], axis="date"
+            events_daily, ["event_count", "total_value"]
         ).withColumn("table", F.lit("events_daily"))
     )
     fc = SeriesForecaster(interval=7, backend="fourier_ridge")
@@ -111,7 +111,7 @@ def q_forecast_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..relational import unpivot_metrics
 
     daily = _orders_daily(spark, sf_dir)
-    long_all = unpivot_metrics(daily, ["order_count", "total_revenue"], axis="date")
+    long_all = unpivot_metrics(daily, ["order_count", "total_revenue"])
     cut = long_all.filter(F.col("ds") < "2000-01-01")
     grown = cut.unionByName(
         long_all.filter((F.col("ds") >= "2000-01-01") & (F.col("metric") == "order_count"))
@@ -198,7 +198,7 @@ def q_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..relational import unpivot_metrics
 
     daily = _orders_daily(spark, sf_dir)
-    long_all = unpivot_metrics(daily, ["order_count", "total_revenue"], axis="date")
+    long_all = unpivot_metrics(daily, ["order_count", "total_revenue"])
     fc = SeriesForecaster(interval=7, backend="fourier_ridge")
     return fc.backtest(long_all, cutoffs=["2000-06-01", "2000-09-01"])
 

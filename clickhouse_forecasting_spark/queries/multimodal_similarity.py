@@ -46,9 +46,7 @@ def q_similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     import math
 
     emb = _t(spark, sf_dir, "embeddings")
-    assigned, cents = SIM.ivf_exact_cells(
-        emb, n_cells=16, scale=1000, cache_key=sf_dir
-    )
+    assigned, cents = SIM.ivf_exact_cells(emb, n_cells=16, cache_key=sf_dir)
     query = [
         float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]
     ]
@@ -309,7 +307,7 @@ def q_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1:N frame sampling over media payloads (rows-only: frame bytes are
     stub-decoded engine-side; shape and checksums tested)."""
     docs = _t(spark, sf_dir, "documents")
-    return MM.sample_frames(MM.attach_payload(docs), n_frames=4)
+    return MM.sample_frames(MM.attach_payload(docs))
 
 
 def q_multimodal_frames_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -320,7 +318,7 @@ def q_multimodal_frames_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     text is pure ASCII (dtype test pins it), so char slicing == byte
     slicing; the binary frames themselves stay in the rows-only query."""
     docs = _t(spark, sf_dir, "documents")
-    fr = MM.sample_frames(MM.attach_payload(docs), n_frames=4)
+    fr = MM.sample_frames(MM.attach_payload(docs))
     return fr.select(
         "doc_id", "frame_idx", "frame_checksum",
         F.octet_length("frame_payload").cast("bigint").alias("frame_bytes"),

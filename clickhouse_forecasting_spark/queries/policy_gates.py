@@ -468,9 +468,10 @@ def q_embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pca_power_sql(d: int = _PCA_DIMS, iters: int = _PCA_ITERS) -> str:
+def _pca_power_sql() -> str:
     """Unrolled power-iteration twin of q_embedding_pca_power: identical
     decimal power sums, identical per-round rounding grids."""
+    d, iters = _PCA_DIMS, _PCA_ITERS
     dim_cols = ", ".join(
         f"CAST(embedding[{i + 1}] AS DOUBLE) AS x{i}" for i in range(d)
     )
@@ -724,7 +725,7 @@ def q_dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(batch x collisions), independent of index self-pairs. Output: one
     admission row per batch doc with its verified index duplicates."""
     docs = _t(spark, sf_dir, "documents")
-    banded = DD.banded_signatures(docs, num_hashes=16, bands=4, cache_key=sf_dir)
+    banded = DD.banded_signatures(docs, cache_key=sf_dir)
     idx = banded.filter(F.col("doc_id") % 2 == 0)
     new = banded.filter(F.col("doc_id") % 2 == 1)
     cand = (

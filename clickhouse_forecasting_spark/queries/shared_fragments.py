@@ -16,7 +16,7 @@ _EMB_DIM = 64
 def _planes_cte(n_planes: int, dim: int = _EMB_DIM) -> str:
     """VALUES CTE of the seed-42 hyperplanes (repr round-trips doubles
     exactly, so both engines see bit-identical plane constants)."""
-    planes = SIM.random_hyperplanes(dim, n_planes, seed=42)
+    planes = SIM.random_hyperplanes(dim, n_planes)
     rows = ",\n    ".join(
         "({}, [{}]::DOUBLE[])".format(
             i, ", ".join(repr(float(v)) for v in plane)

@@ -97,7 +97,7 @@ def q_similarity_pairwise_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 neighbors for each of the first 3 vectors (excluding self)."""
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 3)
-    out = SIM.pairwise_topk(emb.filter(F.col("vec_id") >= 3), queries, k=3)
+    out = SIM.pairwise_topk(emb.filter(F.col("vec_id") >= 3), queries)
     return out.withColumn("cosine", F.round("cosine", 6))
 
 
@@ -136,9 +136,9 @@ def _lsh_probe_topk(
     TakeOrderedAndProject, never a global window over the candidates."""
     emb = _t(spark, sf_dir, "embeddings")
     query = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
-    planes = SIM.random_hyperplanes(len(query), n_planes, seed=42)
+    planes = SIM.random_hyperplanes(len(query), n_planes)
     probes = SIM.multi_probe_buckets(query, planes, n_probes)
-    bucketed = SIM.lsh_bucket_assignments(emb, len(query), n_planes, seed=42)
+    bucketed = SIM.lsh_bucket_assignments(emb, len(query), n_planes)
     qrow = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qvec"))
     scored = (
         bucketed.filter(F.col("bucket").isin(probes))

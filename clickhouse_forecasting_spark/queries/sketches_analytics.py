@@ -343,8 +343,8 @@ def q_similarity_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     if qrow is None:
         raise ValueError("embeddings table has no vec_id=0 query row")
     query = [float(x) for x in qrow.nvec]
-    mins, scales = SIM.quantization_stats(emb, vec_col="nvec")
-    return SIM.quantized_topk(emb, query, mins, scales, k=20, vec_col="nvec")
+    mins, scales = SIM.quantization_stats(emb)
+    return SIM.quantized_topk(emb, query, mins, scales)
 
 
 # The quantizer's "learned" state is all deterministic data (per-dim
@@ -389,12 +389,12 @@ def q_decontaminate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     bench_grams = (
         docs.filter(F.col("doc_id") % 97 == 0)
-        .select(F.explode(TX.word_shingles(F.col("text"), 4)).alias("g"))
+        .select(F.explode(TX.word_shingles(F.col("text"))).alias("g"))
         .distinct()
     )
     corpus = docs.filter(F.col("doc_id") % 97 != 0)
     contaminated = (
-        corpus.select("doc_id", "source", F.explode(TX.word_shingles(F.col("text"), 4)).alias("g"))
+        corpus.select("doc_id", "source", F.explode(TX.word_shingles(F.col("text"))).alias("g"))
         .join(F.broadcast(bench_grams), "g")
         .select("doc_id", "source")
         .distinct()
@@ -1429,17 +1429,19 @@ def q_pagerank_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(_dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("volume"))
     )
-    pr = pagerank(edges, weight="volume", iterations=10, damping=0.85)
+    pr = pagerank(edges)
     return pr.select(
         F.col("node").alias("nationkey"), F.round("rank", 6).alias("rank")
     )
 
 
-def _pagerank_sql(iterations: int = 10) -> str:
+def _pagerank_sql() -> str:
     """Unrolled power-iteration twin of operators/graph.pagerank: one CTE
     trio (dangling mass, contributions, new ranks) per round, mirroring
     the operator's float algebra — (1.0 - 0.85) evaluates to the same
     IEEE double in both engines, and all cross-row sums feed a 6dp round."""
+    from ..operators.graph import ITERATIONS as iterations
+
     stages = []
     for k in range(1, iterations + 1):
         prev = f"r{k - 1}"
@@ -1478,7 +1480,7 @@ SELECT node AS nationkey, round(rank, 6) AS rank FROM r{iterations}
 """
 
 
-_PAGERANK_SQL = _pagerank_sql(10)
+_PAGERANK_SQL = _pagerank_sql()
 
 
 def q_pagerank_trade_graph_distributed(
@@ -1508,9 +1510,7 @@ def q_pagerank_trade_graph_distributed(
         )
         .agg(_dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("volume"))
     )
-    pr = pagerank(
-        edges, weight="volume", iterations=10, damping=0.85, max_driver_nodes=0
-    )
+    pr = pagerank(edges, max_driver_nodes=0)
     return pr.select(
         F.col("node").alias("nationkey"), F.round("rank", 6).alias("rank")
     )
@@ -2552,7 +2552,7 @@ def q_khop_nation_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     for r in edge_rows:
         out_deg[r.src] = out_deg.get(r.src, 0) + 1
     hub = min(out_deg, key=lambda k: (-out_deg[k], k)) if out_deg else 0
-    return bfs_distances(edges, hub, max_hops=4).orderBy("dist", "node")
+    return bfs_distances(edges, hub).orderBy("dist", "node")
 
 
 _KHOP_SQL = """
@@ -2823,8 +2823,7 @@ def q_pareto_revenue_concentration(spark: SparkSession, sf_dir: str) -> DataFram
     # its bound in-plan via the rowcap assert)
     if RK.dispatch_small(per_cust, caller="pareto_revenue_concentration"):
         rked = RK.bounded_rows_row_number(
-            per_cust, ["n_name"], order, "rk",
-            caller="pareto_revenue_concentration",
+            per_cust, ["n_name"], order, caller="pareto_revenue_concentration",
         )
         cum = RK.bounded_rows_running_sum(
             rked, ["n_name"], order, ["cents"], ["cum"],
@@ -4145,7 +4144,7 @@ def q_lorenz_curve_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     # single count routes both primitives (see pareto_revenue_concentration)
     if RK.dispatch_small(per_cust, caller="lorenz_curve_points"):
         rked = RK.bounded_rows_row_number(
-            per_cust, ["r_name"], order, "rk", caller="lorenz_curve_points"
+            per_cust, ["r_name"], order, caller="lorenz_curve_points"
         )
         cum = RK.bounded_rows_running_sum(
             rked, ["r_name"], order, ["cents"], ["cum"],
@@ -4605,7 +4604,7 @@ def q_frequent_parts_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.frequent import frequent_above_support
 
     li = _t(spark, sf_dir, "lineitem")
-    return frequent_above_support(li, "l_partkey", k_sketch=32768)
+    return frequent_above_support(li, "l_partkey")
 
 
 _FREQ_SUPPORT_SQL = """

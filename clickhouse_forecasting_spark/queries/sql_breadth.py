@@ -1102,7 +1102,7 @@ def q_gap_fill_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("order_count").cast("double").alias("order_count"),
         "total_revenue",
     )
-    filled = gap_fill(daily, ["order_count", "total_revenue"], axis="date")
+    filled = gap_fill(daily, ["order_count", "total_revenue"])
     return filled.select(
         "date", F.round("order_count", 6).alias("order_count"),
         F.round("total_revenue", 4).alias("total_revenue"),

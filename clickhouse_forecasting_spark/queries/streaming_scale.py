@@ -109,9 +109,7 @@ def q_streaming_state_bound_audit(spark: SparkSession, sf_dir: str) -> DataFrame
 
         with pinned_state_partitions(spark):
             q = (
-                sessionize_stream(
-                    stream, gap_seconds=1800, ttl_seconds=86_400
-                )
+                sessionize_stream(stream, ttl_seconds=86_400)
                 .writeStream.format("memory")
                 .queryName(name)
                 .outputMode("update")
@@ -691,14 +689,14 @@ def q_jl_projection_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _jl_sql(n_planes: int = 8) -> str:
+def _jl_sql() -> str:
     projs = ", ".join(
         f"""list_sum(list_transform(generate_series(1, len(embedding)),
       i -> embedding[i]::DOUBLE *
         (CASE WHEN ('0x' || substr(md5('jl_{p}_' || CAST(i AS VARCHAR)),
              1, 2))::BIGINT % 2 = 0 THEN 1.0 ELSE -1.0 END)))
       / sqrt(8.0)"""
-        for p in range(n_planes)
+        for p in range(8)
     )
     return f"""
 WITH pr AS (
@@ -1648,6 +1646,10 @@ FROM b ORDER BY doc_id
 """
 
 
+# the audited Count-Min sketch: 4 hashed rows of 16 cells
+_CMS_DEPTH, _CMS_WIDTH = 4, 16
+
+
 def q_countmin_error_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-Min sketch accuracy audit: a deterministic 4×16 CMS (row
     hashes from md5, no RNG) over event types — per key the exact
@@ -1659,7 +1661,7 @@ def q_countmin_error_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     are ≥0 by construction (the test pins the one-sided error
     guarantee)."""
     ev = _t(spark, sf_dir, "events")
-    depth, width = 4, 16
+    depth, width = _CMS_DEPTH, _CMS_WIDTH
 
     def col_for(r, key):
         return (
@@ -1722,7 +1724,9 @@ def q_countmin_error_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("event_type")
 
 
-def _countmin_sql(depth: int = 4, width: int = 16) -> str:
+def _countmin_sql() -> str:
+    depth, width = _CMS_DEPTH, _CMS_WIDTH
+
     def col_for(r, key):
         return (
             f"('0x' || substr(md5('cms{r}_' || {key}), 1, 8))::BIGINT"
@@ -1759,6 +1763,10 @@ FROM est ORDER BY event_type
 _COUNTMIN_SQL = _countmin_sql()
 
 
+# the audited Bloom filter: 4 hash functions over 256 bits
+_BLOOM_K, _BLOOM_M = 4, 256
+
+
 def q_bloom_filter_fpr_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bloom-filter false-positive audit from first principles: a
     deterministic 256-bit / 4-hash filter (md5-derived bit positions,
@@ -1771,7 +1779,7 @@ def q_bloom_filter_fpr_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     256-row bit table (broadcast)."""
     o = _t(spark, sf_dir, "orders")
     yr = F.year("o_orderdate")
-    k, m = 4, 256
+    k, m = _BLOOM_K, _BLOOM_M
     a = o.where(yr == 1996).select(F.col("o_custkey").alias("c")).distinct()
     b = o.where(yr == 1997).select(F.col("o_custkey").alias("c")).distinct()
     probes = b.join(a, "c", "left_anti")
@@ -1835,7 +1843,9 @@ def q_bloom_filter_fpr_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bloom_sql(k: int = 4, m: int = 256) -> str:
+def _bloom_sql() -> str:
+    k, m = _BLOOM_K, _BLOOM_M
+
     def bit(r):
         return (
             f"('0x' || substr(md5('bf{r}_' || CAST(c AS VARCHAR)), 1, 8))"

@@ -37,14 +37,13 @@ def sql_string(value: str) -> str:
 def unpivot_metrics(
     df: DataFrame,
     metrics: list[str],
-    axis: str = DATE_AXIS_COLUMN,
     ds: Column | None = None,
     keys: tuple[Column, ...] = (),
 ) -> DataFrame:
     """Wide table -> long (*keys, ds, metric, y) in ONE projection whose
     ``stack`` generator emits a (metric, CAST(metric AS DOUBLE)) row per
     metric; values never pass through Python and NULL cells are kept.
-    ``ds`` replaces the plain axis column (e.g. a date cast); ``keys`` are
+    ``ds`` replaces the plain date column (e.g. a date cast); ``keys`` are
     leading columns of the same projection (e.g. a table literal).
 
     Spark's built-in ``unpivot`` plans an ``Expand``, which outside
@@ -58,18 +57,18 @@ def unpivot_metrics(
     pairs = ", ".join(f"{sql_string(m)}, CAST({sql_ident(m)} AS DOUBLE)" for m in metrics)
     return df.select(
         *keys,
-        (F.col(sql_ident(axis)) if ds is None else ds).alias("ds"),
+        (F.col(sql_ident(DATE_AXIS_COLUMN)) if ds is None else ds).alias("ds"),
         F.expr(f"stack({len(metrics)}, {pairs}) AS (metric, y)"),
     )
 
 
 # R7 — date-axis generation (forecast_script.py:174, make_future_dataframe):
 # observed history dates ∪ a generated daily future axis of `periods` days.
-def future_date_axis(df: DataFrame, periods: int, axis: str = DATE_AXIS_COLUMN) -> DataFrame:
+def future_date_axis(df: DataFrame, periods: int) -> DataFrame:
     """Distinct observed dates plus `periods` generated days after max(date).
     sequence+explode generates on the executors; no driver loop."""
-    history = df.select(F.col(axis).alias("ds")).distinct()
-    future = df.agg(F.max(axis).alias("d0")).select(
+    history = df.select(F.col(DATE_AXIS_COLUMN).alias("ds")).distinct()
+    future = df.agg(F.max(DATE_AXIS_COLUMN).alias("d0")).select(
         F.explode(
             F.sequence(
                 F.date_add(F.col("d0"), 1),
@@ -117,12 +116,17 @@ def pivot_forecasts_wide(long_df: DataFrame, metrics: list[str]) -> DataFrame:
 
 # R13 — ordered sink projection: date, all cols, all _min, all _max
 # (forecast_script.py:204). The reference's INSERT column order.
-def sink_column_order(metrics: list[str], axis: str = DATE_AXIS_COLUMN) -> list[str]:
-    return [axis, *metrics, *[f"{m}_min" for m in metrics], *[f"{m}_max" for m in metrics]]
+def sink_column_order(metrics: list[str]) -> list[str]:
+    return [
+        DATE_AXIS_COLUMN,
+        *metrics,
+        *[f"{m}_min" for m in metrics],
+        *[f"{m}_max" for m in metrics],
+    ]
 
 
-def ordered_for_sink(df: DataFrame, metrics: list[str], axis: str = DATE_AXIS_COLUMN) -> DataFrame:
-    cols = sink_column_order(metrics, axis)
+def ordered_for_sink(df: DataFrame, metrics: list[str]) -> DataFrame:
+    cols = sink_column_order(metrics)
     return df if df.columns == cols else df.selectExpr(*map(sql_ident, cols))
 
 
@@ -136,25 +140,20 @@ def daily_rollup(df: DataFrame, ts_col: str, aggs: list[Column]) -> DataFrame:
     )
 
 
-def date_spine(df: DataFrame, axis: str = DATE_AXIS_COLUMN) -> DataFrame:
+def date_spine(df: DataFrame) -> DataFrame:
     """Complete daily axis min(date)..max(date) — sequence+explode on the
     executors (one 2-value aggregate feeds it; no driver loop)."""
+    axis = DATE_AXIS_COLUMN
     return df.agg(F.min(axis).alias("d0"), F.max(axis).alias("d1")).select(
         F.explode(F.sequence("d0", "d1", F.expr("interval 1 day"))).alias(axis)
     )
 
 
-def gap_fill(
-    df: DataFrame,
-    value_cols: list[str],
-    axis: str = DATE_AXIS_COLUMN,
-    method: str = "interpolate",
-) -> DataFrame:
+def gap_fill(df: DataFrame, value_cols: list[str]) -> DataFrame:
     """Fill missing dates of a daily series: join against the full date
-    spine, then per value column either carry the last observation forward
-    (``method='ffill'``) or linearly interpolate between the neighboring
-    observations (``method='interpolate'``; trailing/leading gaps fall back
-    to the nearest observed value).
+    spine, then per value column linearly interpolate between the
+    neighboring observations (trailing/leading gaps fall back to the
+    nearest observed value).
 
     A time-series store's gap-filling operator (ClickHouse's WITH FILL /
     timescale's time_bucket_gapfill). All window passes share ONE
@@ -162,7 +161,8 @@ def gap_fill(
     date bucket (year) to bound task state."""
     from pyspark.sql import Window
 
-    spine = date_spine(df, axis)
+    axis = DATE_AXIS_COLUMN
+    spine = date_spine(df)
     joined = spine.join(df, axis, "left").withColumn(
         "_day", F.datediff(F.col(axis), F.lit("1970-01-01"))
     )
@@ -172,9 +172,6 @@ def gap_fill(
     out = joined
     for c in value_cols:
         prev_v = F.last(c, ignorenulls=True).over(wprev)
-        if method == "ffill":
-            out = out.withColumn(c, F.coalesce(F.col(c), prev_v))
-            continue
         next_v = F.first(c, ignorenulls=True).over(wnext)
         prev_d = F.last(
             F.when(F.col(c).isNotNull(), F.col("_day")), ignorenulls=True

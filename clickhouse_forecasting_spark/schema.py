@@ -41,32 +41,32 @@ def is_forecastable_type(dt: T.DataType) -> bool:
     return not isinstance(dt, _SKIP_SPARK_TYPES)
 
 
-def metric_columns(schema: T.StructType, axis: str = DATE_AXIS_COLUMN) -> list[str]:
+def metric_columns(schema: T.StructType) -> list[str]:
     """R2: metric columns = non-axis columns passing the type filter.
 
     Reference: get_columns_and_types, forecast_script.py:106-117. The axis
     column is excluded by name (:112), skipped columns are dropped silently
     here (the pipeline layer logs them, matching :115-116).
     """
-    return [f.name for f in schema.fields if f.name != axis and is_forecastable_type(f.dataType)]
+    return [
+        f.name
+        for f in schema.fields
+        if f.name != DATE_AXIS_COLUMN and is_forecastable_type(f.dataType)
+    ]
 
 
-def skipped_columns(schema: T.StructType, axis: str = DATE_AXIS_COLUMN) -> list[tuple[str, str]]:
+def skipped_columns(schema: T.StructType) -> list[tuple[str, str]]:
     """(name, type) pairs rejected by the filter — for telemetry parity
     with the reference's skip log line (forecast_script.py:115-116)."""
     return [
         (f.name, f.dataType.simpleString())
         for f in schema.fields
-        if f.name != axis and not is_forecastable_type(f.dataType)
+        if f.name != DATE_AXIS_COLUMN and not is_forecastable_type(f.dataType)
     ]
 
 
-def forecast_output_schema(
-    metrics: list[str],
-    source_types: dict[str, T.DataType] | None = None,
-    inherit_types: bool = False,
-) -> T.StructType:
-    """C5 derived schema: date + (m, m_min, m_max) per metric.
+def forecast_output_schema(metrics: list[str]) -> T.StructType:
+    """C5 derived schema: date + DOUBLE (m, m_min, m_max) per metric.
 
     Column order matches the reference sink order: date, all cols, all _min,
     all _max (forecast_script.py:204) is the *insert* order; the *table*
@@ -75,10 +75,7 @@ def forecast_output_schema(
     """
     fields = [T.StructField(DATE_AXIS_COLUMN, T.DateType(), False)]
     for m in metrics:
-        dt: T.DataType = T.DoubleType()
-        if inherit_types and source_types is not None:
-            dt = source_types.get(m, T.DoubleType())
-        fields.append(T.StructField(m, dt, True))
-        fields.append(T.StructField(f"{m}_min", dt, True))
-        fields.append(T.StructField(f"{m}_max", dt, True))
+        fields.append(T.StructField(m, T.DoubleType(), True))
+        fields.append(T.StructField(f"{m}_min", T.DoubleType(), True))
+        fields.append(T.StructField(f"{m}_max", T.DoubleType(), True))
     return T.StructType(fields)

@@ -28,7 +28,12 @@ _NANO_TS_COLUMNS = {"events": ["ts"]}
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read ``<sf_dir>/<name>.parquet`` with timestamp normalization."""
+    """Read ``<sf_dir>/<name>.parquet`` with timestamp normalization.
+
+    Sets ``spark.sql.legacy.parquet.nanosAsLong`` on every read, although
+    ``session.build_session`` sets it too: ``__spark_entry__.queries()``
+    runs in the caller's own session, which sets only the time zone, and
+    without the flag Spark refuses to read a TIMESTAMP(NANOS) column."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
     for col in _NANO_TS_COLUMNS.get(name, []):

@@ -63,7 +63,7 @@ def parse_events_payload(raw: DataFrame) -> DataFrame:
     return parsed.select("e.*", "broker_ts", "kafka_partition", "kafka_offset")
 
 
-def events_to_wire(events: DataFrame, topic: str = "events") -> DataFrame:
+def events_to_wire(events: DataFrame) -> DataFrame:
     """Batch helper: encode canonical events AS the Kafka wire schema —
     the file-backed test double. key = user_id bytes (the partition key
     a real producer would use), value = JSON payload, offset = event_id
@@ -81,7 +81,7 @@ def events_to_wire(events: DataFrame, topic: str = "events") -> DataFrame:
         )
         .cast("binary")
         .alias("value"),
-        F.lit(topic).alias("topic"),
+        F.lit("events").alias("topic"),
         F.pmod(F.col("user_id"), F.lit(8)).cast("int").alias("partition"),
         F.col("event_id").alias("offset"),
         F.col("ts").alias("timestamp"),

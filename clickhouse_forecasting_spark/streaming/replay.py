@@ -38,12 +38,12 @@ STATE_PARTS_ENV = "SPARK_GRAFT_STREAM_STATE_PARTS"
 
 
 @contextmanager
-def pinned_state_partitions(spark: SparkSession, default: int = 8):
+def pinned_state_partitions(spark: SparkSession):
     """Scope ``spark.sql.shuffle.partitions`` to the watermark-bounded
     state width for the duration of a ``writeStream.start()`` call.
     Restores the session value immediately — see module contract for the
     single-threaded-session assumption."""
-    state_parts = os.environ.get(STATE_PARTS_ENV, str(int(default)))
+    state_parts = os.environ.get(STATE_PARTS_ENV, "8")
     old_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", state_parts)
     try:

@@ -31,14 +31,11 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 OUTPUT_SCHEMA = "user_id long, n_sessions long, n_events long"
 STATE_SCHEMA = "n_sessions long, n_events long, last_ts double"
+# a gap of more than 30 minutes between a user's events opens a new session
+GAP_SECONDS = 1800
 
 
-def sessionize_stream(
-    events: DataFrame,
-    gap_seconds: int = 1800,
-    ttl_seconds: int | None = None,
-    watermark_delay: str = "1 second",
-) -> DataFrame:
+def sessionize_stream(events: DataFrame, ttl_seconds: int | None = None) -> DataFrame:
     """Per-user running session counts over a stream of (user_id, ts, ...).
 
     Emits one row per user per micro-batch with the updated totals
@@ -51,7 +48,7 @@ def sessionize_stream(
     bounded-state trade every long-running sessionizer makes.
     """
     if ttl_seconds is not None:
-        events = events.withWatermark("ts", watermark_delay)
+        events = events.withWatermark("ts", "1 second")
 
     def update(
         key: tuple[Any, ...],
@@ -71,7 +68,7 @@ def sessionize_stream(
         all_ts = pd.concat(chunks) if chunks else pd.Series([], dtype="datetime64[ns]")
         for ts in all_ts.sort_values():
             t = ts.timestamp()
-            if last_ts is None or t - last_ts > gap_seconds:
+            if last_ts is None or t - last_ts > GAP_SECONDS:
                 n_sessions += 1
             n_events += 1
             last_ts = t

@@ -21,13 +21,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def sliding_type_counts(
-    events: DataFrame,
-    window: str = "6 hours",
-    slide: str = "3 hours",
-    watermark: str = "1 day",
-) -> DataFrame:
-    """Watermarked sliding-window (window, slide) counts per event_type.
+def sliding_type_counts(events: DataFrame, watermark: str = "1 day") -> DataFrame:
+    """Watermarked sliding-window counts per event_type: 6-hour windows
+    sliding by 3 hours.
 
     Works on both streaming and batch frames (the batch twin simply
     skips the watermark), emitting (window_start, window_end,
@@ -37,7 +33,7 @@ def sliding_type_counts(
     if events.isStreaming:
         src = events.withWatermark("ts", watermark)
     return (
-        src.groupBy(F.window("ts", window, slide).alias("w"), "event_type")
+        src.groupBy(F.window("ts", "6 hours", "3 hours").alias("w"), "event_type")
         .agg(F.count("*").alias("n"))
         .select(
             F.col("w.start").alias("window_start"),
@@ -48,15 +44,15 @@ def sliding_type_counts(
     )
 
 
-def topk_per_window(counts: DataFrame, k: int = 3) -> DataFrame:
-    """Rank the (already closed/drained) window counts to top-k rows per
+def topk_per_window(counts: DataFrame) -> DataFrame:
+    """Rank the (already closed/drained) window counts to top-3 rows per
     window — count desc, event_type as the total-order tie-break."""
     w = Window.partitionBy("window_start").orderBy(
         F.desc("n"), "event_type"
     )
     return (
         counts.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
+        .where(F.col("rnk") <= 3)
         .select(
             "window_start",
             "window_end",

@@ -13,6 +13,7 @@ the counters disjoint and report plain counts.
 from __future__ import annotations
 
 import logging
+import os
 import sys
 import time
 from dataclasses import dataclass, field
@@ -25,12 +26,16 @@ LOG_DATEFMT = "%d.%m.%Y %H:%M:%S"
 def configure_logging(log_path: str = "forecast.log", level: int = logging.INFO) -> logging.Logger:
     """O1: rotating file log, 50 MB max, 3 backups (forecast_script.py:59-61).
 
-    Idempotent: repeated calls (multiple runs in one process, tests) must
-    not stack handlers, or every record is written once per call."""
+    Idempotent per log file: repeated calls (multiple runs in one process,
+    tests) must not stack handlers, or every record is written once per
+    call. The file is matched by absolute path, so a call from another
+    working directory, or for another file whose name ends the same way,
+    gets its own handler."""
     logger = logging.getLogger("clickhouse_forecasting_spark")
     logger.setLevel(level)
+    path = os.path.abspath(log_path)
     already = any(
-        isinstance(h, RotatingFileHandler) and h.baseFilename.endswith(log_path)
+        isinstance(h, RotatingFileHandler) and h.baseFilename == path
         for h in logger.handlers
     )
     if not already:

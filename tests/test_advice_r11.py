@@ -79,12 +79,12 @@ def test_pagerank_null_frac_edges_match_across_paths(spark):
     df = spark.createDataFrame(edges, "src int, dst int, volume double")
     fast = {
         r.node: r.rank
-        for r in pagerank(df, weight="volume", iterations=8).collect()
+        for r in pagerank(df).collect()
     }
     dist = {
         r.node: r.rank
         for r in pagerank(
-            df, weight="volume", iterations=8, max_driver_nodes=0
+            df, max_driver_nodes=0
         ).collect()
     }
     assert set(fast) == set(dist) == {0, 1, 2, 3}
@@ -104,7 +104,7 @@ def test_pagerank_forced_distributed_empty_graph_no_persist_leak(spark):
     jsc = spark.sparkContext._jsc
     empty = spark.createDataFrame([], "src int, dst int, volume double")
     before_ids = {int(k) for k in jsc.getPersistentRDDs().keySet().toArray()}
-    out = pagerank(empty, weight="volume", iterations=3, max_driver_nodes=0)
+    out = pagerank(empty, max_driver_nodes=0)
     assert out.count() == 0
     after_ids = {int(k) for k in jsc.getPersistentRDDs().keySet().toArray()}
     leaked = after_ids - before_ids

@@ -54,7 +54,7 @@ def test_ivf_exactness_guard_passes_in_bounds(spark):
         [(i, [float(i % 3) / 10, 0.5]) for i in range(12)],
         "vec_id long, embedding array<double>",
     )
-    assigned, _ = SIM.ivf_exact_cells(ok, n_cells=2, scale=1000)
+    assigned, _ = SIM.ivf_exact_cells(ok, n_cells=2)
     rows = assigned.collect()
     assert len(rows) == 12 and all(r.cell is not None for r in rows)
 

@@ -263,7 +263,7 @@ def test_ann_incremental_admission_semantics(spark):
     base = spark.createDataFrame(
         base_rows, "vec_id long, embedding array<double>"
     )
-    assigned, cents = SIM.ivf_exact_cells(base, n_cells=4, scale=1000)
+    assigned, cents = SIM.ivf_exact_cells(base, n_cells=4)
     # batch: vec 100 duplicates base vec 1; vec 101 points far away
     dup_of_1 = base_rows[0][1]
     far = [-1.0] * 8
@@ -271,7 +271,7 @@ def test_ann_incremental_admission_semantics(spark):
         [(100, dup_of_1), (101, far)],
         "vec_id long, embedding array<double>",
     )
-    ab = SIM.assign_to_cells(batch, cents, scale=1000)
+    ab = SIM.assign_to_cells(batch, cents)
     cell_of_1 = {
         r.vec_id: r.cell for r in assigned.filter("vec_id = 1").collect()
     }[1]

@@ -91,8 +91,8 @@ def test_quality_score_range(docs):
 
 
 def test_minhash_signatures_identical_for_dups(docs):
-    sig = DD.minhash_signatures(docs, num_hashes=8)
-    rows = {r["doc_id"]: [r[f"sig_{i}"] for i in range(8)] for r in sig.collect()}
+    sig = DD.minhash_signatures(docs)
+    rows = {r["doc_id"]: [r[f"sig_{i}"] for i in range(4)] for r in sig.collect()}
     assert rows[0] == rows[1]  # exact dups -> identical signatures
     # near dup differs in few slots, unrelated doc in many
     near = sum(a != b for a, b in zip(rows[0], rows[2]))
@@ -150,9 +150,9 @@ def test_brute_force_topk(vecs):
 
 
 def test_pairwise_topk_ranks(vecs):
-    out = SIM.pairwise_topk(vecs.filter(F.col("vec_id") >= 2), vecs.filter(F.col("vec_id") == 0), k=2)
+    out = SIM.pairwise_topk(vecs.filter(F.col("vec_id") >= 2), vecs.filter(F.col("vec_id") == 0))
     rows = out.orderBy("rank").collect()
-    assert [r["neighbor_id"] for r in rows] == [4, 2]
+    assert [r["neighbor_id"] for r in rows] == [4, 2, 3]
     assert rows[0]["rank"] == 1
 
 
@@ -167,12 +167,10 @@ def test_lsh_topk_subset_of_bruteforce(spark, sf_dir):
 
 
 def test_hyperplane_near_dup_pairs_subset_of_bruteforce(spark, sf_dir):
-    emb = read_table(spark, sf_dir, "embeddings")
+    # the brute-force pairs cover the vec_id % 5 == 0 audit sample
+    emb = read_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") % 5 == 0)
     dim = len(emb.first()["embedding"])
-    brute = {
-        (r["id_a"], r["id_b"])
-        for r in DD.embedding_near_dup_pairs(emb, threshold=0.3).collect()
-    }
+    brute = {(r["id_a"], r["id_b"]) for r in DD.embedding_near_dup_pairs(emb).collect()}
     lsh = {
         (r["id_a"], r["id_b"])
         for r in SIM.hyperplane_near_dup_pairs(emb, dim, threshold=0.3, n_planes=4).collect()
@@ -258,13 +256,13 @@ def test_multimodal_attach_and_features(docs):
 
 def test_frame_sampling_shape(docs):
     mm = MM.attach_payload(docs)
-    frames = MM.sample_frames(mm, n_frames=3).collect()
+    frames = MM.sample_frames(mm).collect()
     by_doc = {}
     for r in frames:
         by_doc.setdefault(r["doc_id"], []).append(r)
     assert 6 not in by_doc  # empty payload -> fault-isolated skip
     for doc_id, rows in by_doc.items():
-        assert [r["frame_idx"] for r in sorted(rows, key=lambda r: r["frame_idx"])] == [0, 1, 2]
+        assert [r["frame_idx"] for r in sorted(rows, key=lambda r: r["frame_idx"])] == [0, 1, 2, 3]
         assert all(len(r["frame_checksum"]) == 32 for r in rows)
 
 
@@ -454,14 +452,14 @@ def test_sessionize_event_time_ttl_expires_idle_state(spark, tmp_path):
             .parquet(src)
         )
         q = (
-            sessionize_stream(stream, gap_seconds=1800, ttl_seconds=24 * 3600)
+            sessionize_stream(stream, ttl_seconds=24 * 3600)
             .writeStream.format("memory")
             .queryName(name)
             .outputMode("update")
             .trigger(availableNow=True)
             .start()
         ) if ttl else (
-            sessionize_stream(stream, gap_seconds=1800)
+            sessionize_stream(stream)
             .writeStream.format("memory")
             .queryName(name)
             .outputMode("update")
@@ -495,13 +493,13 @@ def test_quantized_topk_recall_vs_exact(spark, sf_dir):
     emb = read_table(spark, sf_dir, "embeddings")
     nemb = with_normalized(emb)
     query = [float(x) for x in nemb.filter(F.col("vec_id") == 0).head().nvec]
-    mins, scales = quantization_stats(nemb, vec_col="nvec")
+    mins, scales = quantization_stats(nemb)
     # quantized values are valid int8-range codes
     codes = nemb.select(quantize(F.col("nvec"), mins, scales).alias("q")).head().q
     assert all(0 <= c <= 255 for c in codes)
     raw_query = [float(x) for x in emb.filter(F.col("vec_id") == 0).head().embedding]
     exact = {r.vec_id for r in brute_force_topk(emb, raw_query, k=10).collect()}
-    approx = {r.vec_id for r in quantized_topk(nemb, query, mins, scales, k=20, vec_col="nvec").collect()}
+    approx = {r.vec_id for r in quantized_topk(nemb, query, mins, scales).collect()}
     # 8-bit asymmetric quantization: the exact top-10 must survive into
     # the quantized top-20 at high recall
     recall = len(exact & approx) / len(exact)

@@ -42,9 +42,9 @@ def test_pagerank_matches_numpy_power_iteration(spark):
     df = spark.createDataFrame(edges, "src int, dst int, volume double")
     got = {
         r.node: r.rank
-        for r in pagerank(df, weight="volume", iterations=12).collect()
+        for r in pagerank(df).collect()
     }
-    want = _numpy_pagerank(edges, {0, 1, 2, 3, 4}, 12, 0.85)
+    want = _numpy_pagerank(edges, {0, 1, 2, 3, 4}, 10, 0.85)
     assert set(got) == set(want)
     for v in want:
         assert got[v] == pytest.approx(want[v], abs=1e-9)
@@ -68,10 +68,10 @@ def test_pagerank_distributed_path_matches_numpy(spark):
     got = {
         r.node: r.rank
         for r in pagerank(
-            df, weight="volume", iterations=12, max_driver_nodes=0
+            df, max_driver_nodes=0
         ).collect()
     }
-    want = _numpy_pagerank(edges, {0, 1, 2, 3, 4}, 12, 0.85)
+    want = _numpy_pagerank(edges, {0, 1, 2, 3, 4}, 10, 0.85)
     for v in want:
         assert got[v] == pytest.approx(want[v], abs=1e-9)
     assert sum(got.values()) == pytest.approx(1.0, abs=1e-9)
@@ -87,12 +87,12 @@ def test_pagerank_bounded_dispatch_matches_distributed(spark):
     edges.append((0, 9, 1.0))  # 9 is dangling (never a src)
     df = spark.createDataFrame(edges, "src int, dst int, volume double")
     fast = {
-        r.node: r.rank for r in pagerank(df, weight="volume", iterations=10).collect()
+        r.node: r.rank for r in pagerank(df).collect()
     }
     dist = {
         r.node: r.rank
         for r in pagerank(
-            df, weight="volume", iterations=10, max_driver_nodes=0
+            df, max_driver_nodes=0
         ).collect()
     }
     assert set(fast) == set(dist)
@@ -116,9 +116,9 @@ def test_pagerank_bounded_dispatch_routes_by_size(spark, monkeypatch):
     monkeypatch.setattr(G, "_pagerank_bounded", spy)
     edges = [(i, (i + 1) % 6, 1.0) for i in range(6)]
     df = spark.createDataFrame(edges, "src int, dst int, volume double")
-    fast = pagerank(df, weight="volume", iterations=3)
+    fast = pagerank(df)
     assert len(calls) == 1
-    slow = pagerank(df, weight="volume", iterations=3, max_driver_edges=2)
+    slow = pagerank(df, max_driver_edges=2)
     assert len(calls) == 1  # over the edge cap: bounded path NOT taken
     got_f = {r.node: r.rank for r in fast.collect()}
     got_s = {r.node: r.rank for r in slow.collect()}
@@ -129,7 +129,7 @@ def test_pagerank_bounded_dispatch_routes_by_size(spark, monkeypatch):
 def test_pagerank_uniform_on_symmetric_cycle(spark):
     cyc = [(i, (i + 1) % 4, 1.0) for i in range(4)]
     df = spark.createDataFrame(cyc, "src int, dst int, volume double")
-    ranks = [r.rank for r in pagerank(df, weight="volume", iterations=20).collect()]
+    ranks = [r.rank for r in pagerank(df).collect()]
     for r in ranks:
         assert r == pytest.approx(0.25, abs=1e-12)
 

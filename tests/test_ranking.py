@@ -182,28 +182,6 @@ def test_global_rank_rejects_expression_order(spark, docs):
 
     with _pt.raises(ValueError):
         RK.global_rank(docs, [F.desc("n_chars")])
-    with _pt.raises(ValueError):
-        RK.global_rank(docs, ["n_chars"], ascending=[True, False])
-
-
-def test_global_rank_descending_matches_window(spark, docs):
-    d = docs.select("doc_id", (F.col("n_chars") % 50).alias("v"))
-    got = RK.global_rank(d, ["v"], "rank", ascending=[False])
-    ref = d.withColumn(
-        "rank", F.rank().over(Window.orderBy(F.desc("v"))).cast("bigint")
-    )
-    assert (
-        got.alias("a").join(ref.alias("b"), "doc_id")
-        .filter("a.rank <> b.rank").count() == 0
-    )
-    gotd = RK.global_rank(d, ["v"], "drank", dense=True, ascending=[False])
-    refd = d.withColumn(
-        "drank", F.dense_rank().over(Window.orderBy(F.desc("v"))).cast("bigint")
-    )
-    assert (
-        gotd.alias("a").join(refd.alias("b"), "doc_id")
-        .filter("a.drank <> b.drank").count() == 0
-    )
 
 
 def test_tied_keys_split_with_tiebreak(spark):
@@ -321,10 +299,10 @@ def test_bounded_rows_fastpath_matches_grouped(spark, docs):
     from clickhouse_forecasting_spark.plans import bounded_key_fanins
 
     d = docs.select("doc_id", "lang", "n_chars")
-    fast = RK.bounded_rows_row_number(d, ["lang"], ["n_chars", "doc_id"], "rn")
-    slow = RK.grouped_row_number(d, ["lang"], ["n_chars", "doc_id"], "rn")
+    fast = RK.bounded_rows_row_number(d, ["lang"], ["n_chars", "doc_id"])
+    slow = RK.grouped_row_number(d, ["lang"], ["n_chars", "doc_id"], "rk")
     ref = d.withColumn(
-        "rn",
+        "rk",
         F.row_number()
         .over(Window.partitionBy("lang").orderBy("n_chars", "doc_id"))
         .cast("bigint"),
@@ -333,7 +311,7 @@ def test_bounded_rows_fastpath_matches_grouped(spark, docs):
         assert (
             got.alias("a")
             .join(ref.alias("b"), "doc_id")
-            .filter("a.rn <> b.rn")
+            .filter("a.rk <> b.rk")
             .count()
             == 0
         )
@@ -357,7 +335,7 @@ def test_bounded_rows_fastpath_refuses_oversized_input(spark, monkeypatch):
     with pytest.raises(Exception, match="max_rows"):
         bad.collect()
     with pytest.raises(Exception, match="max_rows"):
-        bad.select("rn").collect()
+        bad.select("rk").collect()
 
 
 def _dispatch_log(caplog) -> list[str]:
@@ -500,10 +478,8 @@ def test_global_primitives_dispatch_route_by_size(spark, monkeypatch):
     by_k = Window.orderBy("k")
     cases = [
         (
-            lambda df: RK.global_row_number(
-                df, ["v", "k"], "rn", ascending=[False, True], dispatch=True,
-            ),
-            F.row_number().over(by_v_desc).cast("bigint"),
+            lambda df: RK.global_row_number(df, ["v", "k"], "rn", dispatch=True),
+            F.row_number().over(Window.orderBy("v", "k")).cast("bigint"),
             "rn",
         ),
         (
@@ -564,18 +540,18 @@ def test_bounded_global_running_sum_null_semantics(spark):
 def test_global_rank_dispatch_matches_window(spark):
     """global_rank(dispatch=True) threads dispatch into its
     internal per-key aggregate frames — values identical to the
-    undispatched form and to the SQL window, both rank flavors, DESC."""
+    undispatched form and to the SQL window, both rank flavors."""
     df = spark.range(400).select(
         F.col("id").alias("k"), (F.col("id") % 9).alias("n")
     )
     for dense in (False, True):
         disp = RK.global_rank(
-            df, ["n"], "r", dense=dense, ascending=[False], dispatch=True,
+            df, ["n"], "r", dense=dense, dispatch=True,
         )
         ref = df.withColumn(
             "r",
             (F.dense_rank() if dense else F.rank())
-            .over(Window.orderBy(F.desc("n")))
+            .over(Window.orderBy("n"))
             .cast("bigint"),
         )
         a = {r.k: r.r for r in disp.collect()}

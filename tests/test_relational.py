@@ -144,16 +144,5 @@ def test_gap_fill_interpolate(spark):
     assert out[dt.date(2024, 1, 3)] == pytest.approx(30.0)
     assert out[dt.date(2024, 1, 5)] == pytest.approx(50.0)
     assert out[dt.date(2024, 1, 1)] == 10.0 and out[dt.date(2024, 1, 6)] == 60.0
-
-
-def test_gap_fill_ffill_and_edges(spark):
-    df = spark.createDataFrame(
-        [
-            Row(date=dt.date(2024, 1, 2), v=10.0),
-            Row(date=dt.date(2024, 1, 5), v=40.0),
-        ]
-    )
-    ff = {r.date: r.v for r in R.gap_fill(df, ["v"], method="ffill").collect()}
-    assert ff[dt.date(2024, 1, 3)] == 10.0 and ff[dt.date(2024, 1, 4)] == 10.0
-    # spine starts at min(date): no leading synthetic dates
-    assert min(ff) == dt.date(2024, 1, 2) and max(ff) == dt.date(2024, 1, 5)
+    # the spine spans min(date)..max(date): no synthetic dates outside it
+    assert min(out) == dt.date(2024, 1, 1) and max(out) == dt.date(2024, 1, 6)

@@ -41,6 +41,3 @@ def test_forecast_output_schema_interleaved_trios():
     s = forecast_output_schema(["a", "b"])
     assert [f.name for f in s.fields] == ["date", "a", "a_min", "a_max", "b", "b_min", "b_max"]
     assert all(isinstance(f.dataType, T.DoubleType) for f in s.fields[1:])
-    # inherit_types reproduces the reference's source-typed columns (§7.5)
-    s2 = forecast_output_schema(["a"], {"a": T.LongType()}, inherit_types=True)
-    assert isinstance(s2.fields[1].dataType, T.LongType)

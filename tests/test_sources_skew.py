@@ -48,10 +48,10 @@ def test_salted_agg_equals_direct(spark, sf_dir):
 
 def test_salt_is_deterministic(spark, sf_dir):
     nation = read_table(spark, sf_dir, "nation")
-    a = {tuple(r) for r in with_salt(nation, 8).collect()}
-    b = {tuple(r) for r in with_salt(nation, 8).collect()}
+    a = {tuple(r) for r in with_salt(nation).collect()}
+    b = {tuple(r) for r in with_salt(nation).collect()}
     assert a == b
-    assert all(0 <= r[-1] < 8 for r in a)
+    assert all(0 <= r[-1] < 16 for r in a)
 
 
 def test_orc_roundtrip(spark, sf_dir, tmp_path):

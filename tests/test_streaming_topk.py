@@ -32,13 +32,13 @@ def test_streaming_topk_matches_batch(spark, sf_dir, tmp_path):
     drained = spark.table("topk_counts")
     got = sorted(
         tuple(r)
-        for r in topk_per_window(drained, k=3)
+        for r in topk_per_window(drained)
         .select("window_start", "rnk", "event_type", "n")
         .collect()
     )
     want = sorted(
         tuple(r)
-        for r in topk_per_window(sliding_type_counts(events), k=3)
+        for r in topk_per_window(sliding_type_counts(events))
         .select("window_start", "rnk", "event_type", "n")
         .collect()
     )
