@@ -15,8 +15,9 @@ three steps:
    columns — schema only);
 2. unpivot every candidate table, union the long frames keyed by
    ``table`` and fit them in ONE keyed ``mapInPandas`` stage
-   (``SeriesForecaster.transform_long(group_cols=["table"])``); the
-   result is persisted, and one aggregate over it both materialises it
+   (``SeriesForecaster.transform_long(group_cols=["table"])``) as wide as
+   ``series_proportional_fanout`` of the run's series; the result is
+   persisted, and one aggregate over it both materialises it
    and yields the per-(table, metric) forecast counts. Each table's
    input row count is observed (``DataFrame.observe``) on its source
    branch in the same job;
@@ -24,8 +25,9 @@ three steps:
    writes submitted from a thread pool of min(#tables, defaultParallelism)
    whose threads inherit the caller's Spark local properties.
 
-Per table that is the write's two jobs (the pivot's one shuffle and the
-write); per run, the fit's one aggregate. Vetting reads each input's
+Per table that is at most the write's two jobs: the write, and the pivot's
+one shuffle, which a one-partition fit output (up to 192 series) does not
+need; per run, the fit's one aggregate. Vetting reads each input's
 schema from its parquet footer (``catalog.read_parquet``), with no job. No
 emptiness probe and no readback of the written table run.
 
@@ -49,7 +51,7 @@ from pyspark.util import inheritable_thread_target
 
 from .catalog import ParquetCatalog, forecast_table_name, is_forecast_output
 from .forecast import SeriesForecaster
-from .forecast.forecaster import wide_to_long
+from .forecast.forecaster import series_proportional_fanout, wide_to_long
 from .relational import ordered_for_sink, pivot_forecasts_wide
 from .schema import DATE_AXIS_COLUMN, metric_columns, skipped_columns
 from .telemetry import RunCounters
@@ -160,7 +162,6 @@ def run_forecast_pipeline(
     (``-`` when none). The run leaves ``runtime_cache`` untouched."""
     counters = RunCounters()
     tables = specific_tables if specific_tables else catalog.list_tables()
-    forecaster = SeriesForecaster(interval=interval, only_future=only_future, backend=backend)
 
     # R15 exact-membership selection happens in the `tables` assignment
     # above (the reference's substring-membership quirk at :231 is a
@@ -177,6 +178,14 @@ def run_forecast_pipeline(
     failed_metrics: dict[str, list[str]] = {}  # per table to write
     existed: dict[str, bool] = {}
     if candidates:
+        forecaster = SeriesForecaster(
+            interval=interval,
+            only_future=only_future,
+            backend=backend,
+            fanout_partitions=series_proportional_fanout(
+                sum(len(metrics) for _, metrics in candidates.values())
+            ),
+        )
         forecasts, observed = _catalog_forecasts(forecaster, candidates)
         forecasts.persist()
         try:

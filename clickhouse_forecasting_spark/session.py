@@ -16,7 +16,13 @@ our equivalent session primitive is a SparkSession with scale-aware defaults:
   ``F.*`` and Column call walks the Python stack and makes extra py4j
   round trips to record its call site, a driver cost paid on every frame
   built. Errors keep their error class (``DIVIDE_BY_ZERO`` etc.); they lose
-  only the Python call-site context.
+  only the Python call-site context;
+- Python workers started through ``worker_daemon``, which runs them on the
+  installed, bytecode-cached pyspark the driver runs when its
+  ``version.py`` matches ``pyspark.zip``'s: Spark's path order imports
+  pyspark from the zip, which has no bytecode, so each fresh worker
+  compiled pyspark again, and each task re-read the zip and jar
+  directories (0.12-0.25 s per task on 4 vCPU, under 0.1 ms without them).
 """
 
 from __future__ import annotations
@@ -24,6 +30,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+from . import worker_daemon
 
 DEFAULT_APP_NAME = "clickhouse_forecasting_spark"
 
@@ -84,6 +92,7 @@ def build_session(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        .config("spark.python.daemon.module", worker_daemon.__name__)
         .config("spark.driver.memory", default_driver_memory())
     )
     for k, v in (extra_conf or {}).items():

@@ -1,10 +1,9 @@
-from .dedup_stream import dedup_stream, dedup_stream_exact
+from .dedup_stream import dedup_stream
 from .join import attribution_join
 from .rollup import (
     daily_rollup_stream,
     enrich_with_static_dim,
     stream_upsert_daily,
-    streaming_daily_events,
 )
 from .topk import sliding_type_counts, topk_per_window
 
@@ -12,10 +11,8 @@ __all__ = [
     "attribution_join",
     "daily_rollup_stream",
     "dedup_stream",
-    "dedup_stream_exact",
     "enrich_with_static_dim",
     "sliding_type_counts",
     "stream_upsert_daily",
-    "streaming_daily_events",
     "topk_per_window",
 ]

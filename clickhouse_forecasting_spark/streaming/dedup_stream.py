@@ -2,18 +2,15 @@
 extension, streaming tier).
 
 Batch dedup (functions/dedup.py) sees the whole corpus; a stream cannot —
-dedup state must persist across micro-batches yet stay bounded. Two
-built-in strategies, both pure DataFrame (no Python in the hot path):
-
-- ``dedup_stream`` — ``dropDuplicatesWithinWatermark``: keeps the first
-  arrival of each key and suppresses re-deliveries that arrive within the
-  event-time watermark. State for keys older than the watermark is dropped,
-  so state size is bounded by (keys/interval x watermark), not stream
-  lifetime — the at-least-once-source -> effectively-once-sink repair
-  idiom at 100 TB/day.
-- ``dedup_stream_exact`` — plain ``dropDuplicates``: exact forever-dedup;
-  state grows with distinct keys (viable only for bounded key domains —
-  documented contrast, not the default).
+dedup state must persist across micro-batches yet stay bounded.
+``dedup_stream`` is pure DataFrame (no Python in the hot path):
+``dropDuplicatesWithinWatermark`` keeps the first arrival of each key and
+suppresses re-deliveries that arrive within the event-time watermark. State
+for keys older than the watermark is dropped, so state size is bounded by
+(keys/interval x watermark), not stream lifetime — the
+at-least-once-source -> effectively-once-sink repair idiom at 100 TB/day.
+Plain ``dropDuplicates`` would be exact forever, but its state grows with
+the distinct keys.
 """
 
 from __future__ import annotations
@@ -31,8 +28,3 @@ def dedup_stream(
     return events.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
         keys or ["event_id"]
     )
-
-
-def dedup_stream_exact(events: DataFrame, keys: list[str] | None = None) -> DataFrame:
-    """Exact streaming dedup (unbounded state — bounded key domains only)."""
-    return events.dropDuplicates(keys or ["event_id"])

@@ -53,16 +53,6 @@ def daily_rollup_stream(events: DataFrame, watermark: str = "1 day") -> DataFram
     )
 
 
-def streaming_daily_events(
-    spark: SparkSession, path: str, watermark: str = "1 day"
-) -> DataFrame:
-    """readStream over a parquet directory -> daily rollup. With
-    trigger(availableNow=True) this processes the backlog and stops —
-    the batch-replay entry point used in tests."""
-    stream = spark.readStream.schema(EVENTS_SCHEMA).parquet(path)
-    return daily_rollup_stream(stream, watermark)
-
-
 def enrich_with_static_dim(
     stream: DataFrame, dim: DataFrame, on: str | list[str], how: str = "left"
 ) -> DataFrame:

@@ -18,10 +18,7 @@ from clickhouse_forecasting_spark.functions import similarity as SIM
 from clickhouse_forecasting_spark.functions import text as TX
 from clickhouse_forecasting_spark import multimodal as MM
 from clickhouse_forecasting_spark.sources import read_table
-from clickhouse_forecasting_spark.streaming.rollup import (
-    daily_rollup_stream,
-    streaming_daily_events,
-)
+from clickhouse_forecasting_spark.streaming.rollup import EVENTS_SCHEMA, daily_rollup_stream
 from clickhouse_forecasting_spark.streaming.sessionize import sessionize_stream
 
 
@@ -279,7 +276,7 @@ def test_streaming_rollup_matches_batch(spark, sf_dir, tmp_path):
     # backlog then stops); complete-mode memory sink holds the final state
     src = str(tmp_path / "events_stream")
     events.write.parquet(src)
-    stream_df = streaming_daily_events(spark, src)
+    stream_df = daily_rollup_stream(spark.readStream.schema(EVENTS_SCHEMA).parquet(src))
     q = (
         stream_df.writeStream.format("memory")
         .queryName("rollup_test")

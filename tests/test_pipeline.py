@@ -323,11 +323,34 @@ def _write_catalog(spark, root, n_tables: int, n_metrics: int, days: int) -> Par
 
 
 def test_extra_table_adds_at_most_two_jobs(spark, tmp_path):
-    """A table adds its two sink jobs (the pivot's one exchange and the
-    write) and nothing else: its schema comes from the parquet footer."""
+    """A table adds at most its two sink jobs (the write, and the pivot's
+    one exchange when the fit output has more than one partition) and
+    nothing else: its schema comes from the parquet footer."""
     two = _run_jobs_and_compiles(spark, _write_catalog(spark, tmp_path / "c2", 2, 2, 60), "jobs2-2")[0]
     four = _run_jobs_and_compiles(spark, _write_catalog(spark, tmp_path / "c4", 4, 2, 60), "jobs2-4")[0]
     assert four - two <= 2 * 2, (two, four)
+
+
+def test_fit_width_follows_series_count(spark, tmp_path, monkeypatch):
+    """The fit stage is as wide as ``series_proportional_fanout`` of the
+    run's series: 9 series fit in one partition, whose pivots need no
+    exchange, so the run takes fewer jobs than a fit as wide as the
+    session's parallelism, and writes the same rows."""
+    import clickhouse_forecasting_spark.pipeline as pl
+
+    assert pl.series_proportional_fanout(3 * 3) == 1
+    proportional = _write_catalog(spark, tmp_path / "proportional", 3, 3, 60)
+    narrow_jobs = _run_jobs_and_compiles(spark, proportional, "width-proportional")[0]
+    parallelism = max(2, spark.sparkContext.defaultParallelism)
+    monkeypatch.setattr(pl, "series_proportional_fanout", lambda n: parallelism)
+    session_wide = _write_catalog(spark, tmp_path / "session_wide", 3, 3, 60)
+    wide_jobs = _run_jobs_and_compiles(spark, session_wide, "width-session")[0]
+    assert narrow_jobs < wide_jobs, (narrow_jobs, wide_jobs)
+    for t in ("t0", "t1", "t2"):
+        got, want = (
+            sorted(c.table(forecast_table_name(t)).collect()) for c in (proportional, session_wide)
+        )
+        assert len(got) == 67 and got == want, t
 
 
 def test_wide_table_rerun_compiles_no_new_classes(spark, tmp_path):

@@ -1,15 +1,17 @@
-"""build_session: driver heap sizing (pure, no Spark) and the session's
-DataFrame-debugging setting."""
+"""build_session: driver heap sizing (pure, no Spark), the session's
+DataFrame-debugging setting and the pyspark its Python workers run."""
 
 from __future__ import annotations
 
 import os
 
+import pyspark
 import pytest
 from pyspark.errors import ArithmeticException
 from pyspark.sql import functions as F
 
 from clickhouse_forecasting_spark.session import default_driver_memory
+from clickhouse_forecasting_spark.worker_daemon import _is_spark_entry
 
 _PAGE = 4096
 
@@ -45,3 +47,25 @@ def test_dataframe_debugging_off_errors_keep_their_class(spark):
     with pytest.raises(ArithmeticException) as err:
         spark.range(1).select(F.lit(1) / F.col("id")).collect()
     assert err.value.getCondition() == "DIVIDE_BY_ZERO"
+
+
+def test_python_workers_run_the_installed_pyspark(spark):
+    """A Python task runs the pyspark the driver runs, not the one in
+    Spark's source zip: no Spark zip or jar is on its ``sys.path``, and no
+    zipimporter is left for a task's ``importlib.invalidate_caches()`` to
+    re-read."""
+
+    def probe(_):
+        import sys
+        import zipimport
+
+        import pyspark
+
+        cache = sys.path_importer_cache
+        zipped = [k for k, v in cache.items() if isinstance(v, zipimport.zipimporter)]
+        yield pyspark.__file__, list(sys.path), zipped
+
+    [(file, path, zipped)] = spark.sparkContext.parallelize([0], 1).mapPartitions(probe).collect()
+    assert file == pyspark.__file__ and ".zip" not in file
+    assert [p for p in path if _is_spark_entry(p)] == []
+    assert zipped == []

@@ -3,9 +3,13 @@
 Usage: python tools/dump_plans.py <tag> <suffix> <query> [query ...]
        (sf_dir from $SPARK_GRAFT_SF_DIR, default /root/testdata/sf0.1)
 
-Exchange ids are written as ``plan_id=N``: Spark numbers them from a
-session-wide counter, so the raw value shifts with whatever ran earlier in
-the session and two dumps of one plan would not compare equal with ``cmp``.
+Exchange ids are written as ``plan_id=N`` and expression ids as ``#N``:
+Spark numbers both from session-wide counters, so the raw values shift with
+whatever ran earlier in the session and two dumps of one plan would not
+compare equal with ``cmp``. A plan with several DISTINCT aggregates still
+differs between two builds: Spark numbers its Expand groups in the hash
+order of id-bearing expressions (e.g. ``dau_wau_stickiness``), so such
+dumps compare equal only up to that group order.
 """
 
 from __future__ import annotations
@@ -15,6 +19,12 @@ import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+
+def plan_text(df) -> str:
+    """``df``'s formatted plan with its session-counter ids normalized."""
+    txt = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+    return re.sub(r"#\d+", "#N", re.sub(r"plan_id=\d+", "plan_id=N", txt))
 
 
 def main() -> None:
@@ -44,10 +54,7 @@ def main() -> None:
             continue
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         try:
-            df = qs[name](spark, sf_dir)
-            txt = df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted"
-            )
+            txt = plan_text(qs[name](spark, sf_dir))
         except Exception as exc:
             # Only a genuinely plan-less result (streaming replays whose
             # memory-sink frame outlived the query, Py4J explain errors on
@@ -61,7 +68,6 @@ def main() -> None:
                 failures.append(name)
                 continue
             txt = f"<no batch plan: {exc}>\n"
-        txt = re.sub(r"plan_id=\d+", "plan_id=N", txt)
         with open(path, "w") as fh:
             fh.write(f"# {name} @ {sf_dir} ({suffix})\n{txt}")
         print(f"wrote {path}", file=sys.stderr)
